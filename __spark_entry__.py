@@ -799,9 +799,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # duplicate clusters = connected components over exact-Jaccard
         # near-dup pairs (exact pairs here for full SQL oracle-ability; at
         # 100 TB feed minhash_lsh_pairs as the edge list — CC is agnostic
-        # to the pair generator). Deliberately runs the DISTRIBUTED iterative
-        # hash-min + pointer-jumping loop (small_graph_edges=0), so the
-        # at-scale CC path itself is hash-verified against an independent
+        # to the pair generator). Deliberately runs the DISTRIBUTED
+        # contraction rounds to an empty edge set (small_graph_edges=0), so
+        # the at-scale CC path itself is hash-verified against an independent
         # DuckDB recursive-CTE transitive closure (min reachable node).
         # doc ids are zero-padded to width 12 before CC so the operator's
         # lexicographic min equals numeric min.
@@ -995,7 +995,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def code_components(spark, sf_dir):
         # connected components over the call-file graph — the DISTRIBUTED
-        # hash-min + pointer-jumping path (small_graph_edges=0), verified
+        # contraction rounds (small_graph_edges=0), verified
         # against an independent recursive-CTE transitive closure (same
         # posture as doc_dup_clusters)
         from palladian_spark.operators.canonicalize import connected_components

@@ -128,7 +128,9 @@ def classify(
         probability = model.prior(category)
         if log_space:
             probability = math.log(probability)
-        for name in learned:
+        # sorted: float summation order must not follow set iteration
+        # order, which varies with PYTHONHASHSEED
+        for name in sorted(learned):
             value = feats.get(name)
             if value is None:
                 continue

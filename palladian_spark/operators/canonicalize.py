@@ -1,19 +1,19 @@
 """Entity canonicalization at scale: MinHash-LSH blocking -> pairwise metric
-re-scoring -> iterative hash-min connected components -> canonical ids.
+re-scoring -> connected components by contraction -> canonical ids.
 
 North-rule stage (BASELINE.json): upgrades the reference's implicit
 canonicalization (dictionary override T11, WordDB synonym sets) to an
 explicit scalable pipeline. Blocking bounds the candidate-pair space to
 O(n·bands) instead of O(n²); the exact string metric
 (kernels.similarity.jaro_winkler_similarity, golden-tested) only runs inside
-blocks; components converge in O(log d) hash-min iterations with
-localCheckpoint per iteration to cut lineage.
+blocks; components come from random-priority local contraction rounds that
+shrink the edge set until it fits on the driver, where union-find finishes.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 
@@ -193,93 +193,91 @@ def _union_find(edge_rows) -> dict[str, str]:
     return {v: find(v) for v in list(parent)}
 
 
+def _closed_min(node: str, nbr: str, salt: int):
+    """Over arcs (node, nbr): the node of minimum priority
+    (xxhash64(v, salt), v) in node's closed neighbourhood."""
+
+    def prio(c: str):
+        return F.struct(F.xxhash64(c, F.lit(salt)).alias("h"), F.col(c).alias("n"))
+
+    return F.least(prio(node), F.min(prio(nbr)).over(Window.partitionBy(node)))["n"]
+
+
 def connected_components(
-    edges: DataFrame, max_iterations: int = 20, small_graph_edges: int = 200_000
+    edges: DataFrame, small_graph_edges: int = 200_000
 ) -> DataFrame:
     """Connected components over an undirected edge list.
 
-    edges: (left_value, right_value). Returns (value, component) where
-    component is the lexicographic-min value reachable.
+    edges: (left_value, right_value). Returns (value, component) for every
+    endpoint of an edge whose two ends differ; component is the
+    lexicographic-min value of the value's component. A value seen only in
+    self-loops (or beside a null) is not a node.
 
-    Physical strategy mirrors broadcast-join planning: when the edge list
-    fits comfortably on the driver (<= small_graph_edges; edges are already
-    a similarity-thresholded, deduplicated set — orders of magnitude smaller
-    than the corpus), union-find runs locally in one job instead of ~4 jobs
-    per propagation round. Above the threshold, iterative hash-min label
-    propagation with pointer jumping runs over DataFrames (O(log d) rounds,
-    localCheckpoint per round to cut lineage) — the GraphFrames-style
-    pattern from SURVEY.md §2.7 that scales to billions of edges.
+    One path at every size: contract the graph until its edge set fits on
+    the driver (<= small_graph_edges), then finish with union-find there. A
+    contraction round maps every node to the node of minimum priority
+    (xxhash64(node, round), node) in its closed neighbourhood — a fresh
+    pseudo-random order each round — and rewrites
+    each edge to its two representatives — the random-priority local
+    contraction of Łącki et al., "Connected Components at Scale via Local
+    Contractions" (2018). A component's min-priority node absorbs all of
+    its neighbours, so every round strictly shrinks the edge set and the
+    loop needs no cap. The priority must be a hash: under lex-min priority
+    a sorted near-duplicate chain loses only one node per round. A graph
+    already at or below the gate runs zero rounds.
     """
-    sym = edges.select(
-        F.col("left_value").alias("src"), F.col("right_value").alias("dst")
-    ).unionByName(
-        edges.select(
-            F.col("right_value").alias("src"), F.col("left_value").alias("dst")
-        )
-    )
-    sym = sym.persist()
+    spark = edges.sparkSession
 
-    n_sym = sym.count()
-    if n_sym <= 2 * small_graph_edges:
-        spark = edges.sparkSession
-        mapping = _union_find(
-            (r["src"], r["dst"]) for r in sym.where(F.col("src") < F.col("dst")).collect()
+    def cut(pairs: DataFrame, a: str, b: str) -> DataFrame:
+        # (least, greatest), no self-loops, distinct; the lazy cut is
+        # materialized by the caller's count, so the plan above runs once
+        return (
+            pairs.select(F.least(a, b).alias("src"), F.greatest(a, b).alias("dst"))
+            .where(F.col("src") < F.col("dst"))
+            .distinct()
+            .localCheckpoint(eager=False)
         )
-        sym.unpersist()
-        if not mapping:
-            return spark.createDataFrame([], "value string, component string")
-        return spark.createDataFrame(
-            list(mapping.items()), "value string, component string"
-        )
-    labels = (
-        sym.select(F.col("src").alias("value"))
-        .distinct()
-        .withColumn("component", F.col("value"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iterations):
-        # candidate label per node = min over neighbors' labels and own
-        neighbor_min = (
-            sym.join(labels, sym.dst == labels.value)
-            .groupBy("src")
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        stepped = labels.join(
-            neighbor_min, labels.value == neighbor_min.src, "left"
-        ).select(
-            "value",
-            F.least(
-                F.col("component"), F.coalesce("nbr_component", F.col("component"))
-            ).alias("component"),
-            F.col("component").alias("_old"),
-        )
-        # pointer jump: component <- label(component). Label propagation
-        # alone needs O(diameter) rounds (long near-duplicate chains are
-        # common); jumping through the representative's own label doubles
-        # the propagation distance per round -> O(log d) convergence.
-        parents = labels.select(
-            F.col("value").alias("component"), F.col("component").alias("_parent")
-        )
-        new_labels = (
-            stepped.join(parents, "component", "left")
+
+    e = cut(edges, "left_value", "right_value")
+    n_edges = e.count()
+    node_of = None  # (value, node): each value's representative so far
+    rnd = 0
+    while n_edges > small_graph_edges:
+        rnd += 1
+        # windows, not joins: the static size estimate of an inner join is
+        # the product of its sides, and checkpoints carry it forward, so a
+        # join per round grows the estimate's digits geometrically
+        arcs = (
+            e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
             .select(
-                "value",
-                F.least(
-                    F.col("component"), F.coalesce("_parent", F.col("component"))
-                ).alias("component"),
-                "_old",
+                "src",
+                "dst",
+                _closed_min("src", "dst", rnd).alias("rs"),
+                _closed_min("dst", "src", rnd).alias("rd"),
             )
-            # checkpoint BEFORE the changed-count so the iteration
-            # materializes exactly once (the count then reads checkpointed
-            # rows instead of re-running the join)
-            .localCheckpoint()
+            .localCheckpoint(eager=False)
         )
-        changed = new_labels.where(F.col("component") != F.col("_old")).limit(1).count()
-        labels = new_labels.drop("_old")
-        if changed == 0:
-            break
-    sym.unpersist()
-    return labels
+        e = cut(arcs.where(F.col("src") < F.col("dst")), "rs", "rd")
+        n_edges = e.count()
+        rep = arcs.select(F.col("src").alias("v"), F.col("rs").alias("r")).distinct()
+        node_of = (
+            rep.toDF("value", "node")
+            if node_of is None
+            else node_of.join(rep, node_of.node == rep.v, "left").select(
+                "value", F.coalesce("r", "node").alias("node")
+            )
+        )
+
+    roots = _union_find((r["src"], r["dst"]) for r in e.collect())
+    if node_of is None:
+        return spark.createDataFrame(list(roots.items()), "value string, component string")
+    root_of = spark.createDataFrame(list(roots.items()), "node string, root string")
+    node_of = node_of.join(F.broadcast(root_of), "node", "left").select(
+        "value", F.coalesce("root", "node").alias("node")
+    )
+    return node_of.select(
+        "value", F.min("value").over(Window.partitionBy("node")).alias("component")
+    )
 
 
 def _local_canonicalize(
@@ -420,8 +418,8 @@ def canonicalize_values(
     corpus (entity surface forms repeat), so when it fits on the driver
     (<= small_values) the whole block/score/union-find runs locally in one
     collect instead of ~10 distributed jobs whose fixed costs dominate.
-    Above the gate, the LSH + pandas-UDF + iterative-CC DataFrame path runs
-    — that is the 10^12-file shape.
+    Above the gate, the LSH + pandas-UDF + contraction-CC DataFrame path
+    runs — that is the 10^12-file shape.
     """
     # one pass over the (possibly expensive) upstream: frequencies + the
     # distinct value set are both tiny, so cut lineage here and let every
@@ -475,8 +473,6 @@ def canonicalize_values(
         "component",
         F.coalesce("freq", F.lit(1)).alias("freq"),
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("component").orderBy(
         F.desc("freq"), F.desc(F.length("member")), F.asc("member")
     )

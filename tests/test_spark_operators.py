@@ -259,8 +259,9 @@ def test_connected_components_chain(spark):
 
 
 def test_connected_components_distributed_path_matches_local(spark):
-    """The iterative hash-min DataFrame loop (scale path) must agree with
-    the driver-side union-find fast path on the same graph."""
+    """Contraction rounds down to an empty edge set (gate 0, the scale
+    path) must agree with zero rounds (driver union-find) on the same
+    graph."""
     from palladian_spark.operators.canonicalize import connected_components
 
     rows = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(0, 40, 2)] + [
@@ -277,6 +278,60 @@ def test_connected_components_distributed_path_matches_local(spark):
         for r in connected_components(edges, small_graph_edges=0).collect()
     }
     assert local == dist
+
+
+def _cc(spark, rows, gate):
+    from palladian_spark.operators.canonicalize import connected_components
+
+    edges = spark.createDataFrame(rows, "left_value string, right_value string")
+    return {
+        r["value"]: r["component"]
+        for r in connected_components(edges, small_graph_edges=gate).collect()
+    }
+
+
+@pytest.mark.parametrize("gate", [0, 64])
+def test_connected_components_sorted_chain(spark, gate):
+    """A lexicographically sorted path is the worst case for lex-min
+    priority (one node absorbed per round); hash priority contracts it by
+    a constant factor per round, so 5,001 nodes take a handful of rounds."""
+    rows = [(f"n{i:05d}", f"n{i + 1:05d}") for i in range(5000)]
+    comp = _cc(spark, rows, gate)
+    assert len(comp) == 5001
+    assert set(comp.values()) == {"n00000"}
+
+
+@pytest.mark.parametrize("gate", [0, 10, 200_000])
+def test_connected_components_random_graphs_match_union_find(spark, gate):
+    import random
+
+    from palladian_spark.operators.canonicalize import _union_find
+
+    rng = random.Random(20181)
+    rows = []
+    for c in range(24):
+        nodes = [f"{rng.randrange(10**6):06d}" for _ in range(rng.randint(2, 18))]
+        shape = c % 4
+        if shape == 0:  # clique
+            rows += [(a, b) for i, a in enumerate(nodes) for b in nodes[i + 1 :]]
+        elif shape == 1:  # star
+            rows += [(nodes[0], b) for b in nodes[1:]]
+        elif shape == 2:  # chain
+            rows += list(zip(nodes, nodes[1:]))
+        else:  # random edges
+            rows += [(rng.choice(nodes), rng.choice(nodes)) for _ in nodes]
+    rows += rows[:30] + [(b, a) for a, b in rows[::3]]  # duplicate, reversed
+    rng.shuffle(rows)
+    expect = _union_find([(a, b) for a, b in rows if a != b])
+    assert _cc(spark, rows, gate) == expect
+
+
+@pytest.mark.parametrize("gate", [0, 200_000])
+def test_connected_components_node_set(spark, gate):
+    """Nodes are the endpoints of edges whose ends differ: a value seen only
+    in a self-loop or beside a null is not in the output."""
+    rows = [("b", "a"), ("a", "a"), ("c", "c"), ("d", None), (None, "e"), ("x", "y")]
+    assert _cc(spark, rows, gate) == {"a": "a", "b": "a", "x": "x", "y": "x"}
 
 
 def test_canonicalize_distributed_path_matches_local(spark):

@@ -1,6 +1,8 @@
 """Local stand-in for the driver's correctness check: runs every
 queries()[name] on Spark and the matching oracle_sql()[name] on DuckDB at
 sf0.01, compares row count, column names, and order-insensitive values.
+Runs on local[$SPARK_GRAFT_CPUS] (default: the cores this process may use)
+with as many shuffle partitions.
 
 Usage: python tools/check_contract.py [sf_dir] [query ...]
 """
@@ -50,7 +52,8 @@ def main() -> int:
     import __spark_entry__ as ent
     from palladian_spark.sources.session import get_spark
 
-    spark = get_spark("contract-check", master="local[8]", shuffle_partitions=8)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    spark = get_spark("contract-check", master=f"local[{cpus}]", shuffle_partitions=cpus)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

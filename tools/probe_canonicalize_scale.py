@@ -10,6 +10,7 @@ distributed path end-to-end and reports wall time, pair volume, and
 component stats.
 
 Usage: python tools/probe_canonicalize_scale.py [n_base] [cpus]
+(cpus defaults to $SPARK_GRAFT_CPUS, else the cores this process may use)
 """
 
 from __future__ import annotations
@@ -24,7 +25,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     n_base = int(sys.argv[1]) if len(sys.argv) > 1 else 220_000
-    cpus = sys.argv[2] if len(sys.argv) > 2 else os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(
+        sys.argv[2]
+        if len(sys.argv) > 2
+        else os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
 
     from pyspark.sql import functions as F
 
@@ -36,7 +41,7 @@ def main() -> None:
     from palladian_spark.sources.session import get_spark
 
     spark = get_spark(
-        "canon-scale-probe", master=f"local[{cpus}]", shuffle_partitions=64
+        "canon-scale-probe", master=f"local[{cpus}]", shuffle_partitions=2 * cpus
     )
 
     # prefix alphabet: 'hex' (16 chars -> only 256 two-char blocks; the
