@@ -558,9 +558,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from palladian_spark.kernels.fileformats import get_text_from_column
         from palladian_spark.kernels.ner import tag_text, train_english
         from palladian_spark.kernels.tagging import Annotation
+        from palladian_spark.sources.reference import reference_path
 
         base = _os.path.dirname(_os.path.abspath(__file__))
-        ref_dir = "/root/reference/palladian-core/src/test/resources/ner"
+        # raises ReferenceTreeAbsent on a host without the reference tree
+        ref_dir = reference_path("src", "test", "resources", "ner")
         with open(_os.path.join(ref_dir, "training.txt"), encoding="utf-8") as f:
             model = train_english(f.read())
 

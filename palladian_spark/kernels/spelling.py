@@ -51,9 +51,30 @@ import re
 import unicodedata
 
 # Java: Pattern.compile("[\\w\\p{L}-]+") over the LOWERCASED line.
-# Python re has no \p{L}; [^\W\d_] with the Unicode flag is exactly
-# "Unicode letter", so the union below equals Java's class.
+# Python re has no \p{L}; [^\W\d_] with the Unicode flag is "Unicode
+# letter" plus the number characters of categories Nl/No (Ⅻ, ²), which
+# \p{L} excludes — _dict_tokens splits those out of each match.
 _DICT_TOKEN_RE = re.compile(r"(?:[A-Za-z0-9_\-]|[^\W\d_])+", re.UNICODE)
+
+
+def _dict_tokens(line: str):
+    """Java's [\\w\\p{L}-]+ tokens of `line`, in order."""
+    for m in _DICT_TOKEN_RE.finditer(line):
+        tok = m.group()
+        if tok.isascii():
+            yield tok
+            continue
+        part = []
+        for c in tok:
+            if unicodedata.category(c) in ("Nl", "No"):
+                if part:
+                    yield "".join(part)
+                part = []
+            else:
+                part.append(c)
+        if part:
+            yield "".join(part)
+
 
 # Java: "[0-9" + Pattern.quote("<>=-*'#/+'&.") + "]"
 _NO_CORRECTION_RE = re.compile(r"[0-9<>=\-*'#/+&.]")
@@ -143,8 +164,7 @@ def build_dictionary(lines, ignore_diacritics: bool = False):
                 if unicodedata.category(c) != "Mn"
             )
         last = None
-        for m in _DICT_TOKEN_RE.finditer(line.lower()):
-            tok = m.group()
+        for tok in _dict_tokens(line.lower()):
             words[tok] = words.get(tok, 0) + 1
             if last is not None:
                 key = last + "_" + tok

@@ -76,11 +76,16 @@ def _minhash_bands(
     ).where(F.col("band_hash").isNotNull())
 
 
-@F.pandas_udf(DoubleType())
-def _jw_udf(left: pd.Series, right: pd.Series) -> pd.Series:
+def _jw(left: pd.Series, right: pd.Series) -> pd.Series:
     return pd.Series(
         [jaro_winkler_similarity(a or "", b or "") for a, b in zip(left, right)]
     )
+
+
+# Marked nondeterministic only to pin it in place: a deterministic UDF
+# lets Catalyst push `sim >= threshold` through the projection, which
+# evaluates the UDF twice — once in the filter, once for the sim column.
+_jw_udf = F.pandas_udf(_jw, DoubleType()).asNondeterministic()
 
 
 def candidate_pairs(
@@ -105,6 +110,9 @@ def candidate_pairs(
     same cap _local_canonicalize applies, so the two paths block
     identically, and a skewed bucket (e.g. a hub 2-char prefix) can never
     turn the join quadratic at scale.
+
+    The result is a lazy local checkpoint: whatever filters the caller
+    adds run over the distinct pairs, not over the raw collisions.
     """
     bands = _minhash_bands(values, value_col, num_hashes, band_size, shingle_n)
     prefix_band = values.select(
@@ -141,7 +149,10 @@ def candidate_pairs(
         )
         .dropDuplicates(["left_value", "right_value"])
     )
-    return pairs
+    # plan barrier: score_pairs' filters name only the dedup keys, so
+    # Catalyst would push them (Jaro-Winkler UDF included) below the
+    # dedup into the self-join and score every raw band collision
+    return pairs.localCheckpoint(eager=False)
 
 
 def score_pairs(pairs: DataFrame, threshold: float = 0.9) -> DataFrame:

@@ -93,9 +93,11 @@ def nb_scores(
             F.col("cnt").alias(f"cnt_{c}"),
         )
         scored = scored.join(F.broadcast(counts), [f"v_{c}", "category"], "left")
+        # a NULL value adds no term: the reference skips missing features
         terms.append(
-            f"ln((coalesce(cnt_{c}, 0) + {LAPLACE})"
-            f" / (n_c + {LAPLACE} * {k}))"
+            f"case when v_{c} is null then 0.0 else"
+            f" ln((coalesce(cnt_{c}, 0) + {LAPLACE})"
+            f" / (n_c + {LAPLACE} * {k})) end"
         )
 
     for c in numeric_cols:
@@ -192,8 +194,9 @@ def nb_scored_with_clause(
             f" on c_{c}.v_{c} = r.v_{c} and c_{c}.category = p.category"
         )
         terms.append(
-            f"ln((coalesce(c_{c}.cnt_{c}, 0) + {LAPLACE})"
-            f" / (p.n_c + {LAPLACE} * (select k from nb_k)))"
+            f"case when r.v_{c} is null then 0.0 else"
+            f" ln((coalesce(c_{c}.cnt_{c}, 0) + {LAPLACE})"
+            f" / (p.n_c + {LAPLACE} * (select k from nb_k))) end"
         )
     num_ctes, num_joins = [], []
     for c in numeric_cols:

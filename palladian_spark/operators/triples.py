@@ -10,7 +10,7 @@ co-occurrence, CoOccurrenceRetriever.java:27-110), `synonym-of`
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 N_SALT = 64  # salt fan-out for mega-repo skew (north rule requirement)
@@ -106,9 +106,12 @@ def dedup_triples(triples: DataFrame) -> DataFrame:
 def with_partition_keys(triples: DataFrame, repo_col: str = "subj") -> DataFrame:
     """repo_hash bucket + salt column for skew-safe partitioned writes.
 
-    The salt spreads a mega-repo's rows over N_SALT writer tasks; readers
-    prune on repo_hash alone (salt is physical only) — the explicit skew
-    handling the north rule asks for beyond AQE.
+    The salt spreads a mega-repo's rows over up to N_SALT writer tasks;
+    readers prune on repo_hash alone (salt is physical only) — the
+    explicit skew handling the north rule asks for beyond AQE.
+    write_triples range-partitions on (repo_hash, salt): a writer task
+    owns a contiguous run of buckets, and a bucket heavier than one
+    task's share splits between tasks at salt boundaries.
     """
     return triples.withColumn(
         "repo_hash", F.pmod(F.xxhash64(F.col(repo_col)), F.lit(256)).cast("int")
@@ -117,12 +120,35 @@ def with_partition_keys(triples: DataFrame, repo_col: str = "subj") -> DataFrame
     )
 
 
+def sink_size(spark: SparkSession, path: str) -> tuple[int, int]:
+    """(part files, bytes) of a written sink, listed through the path's
+    Hadoop FileSystem (local, HDFS or S3A alike)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    files = size = 0
+    it = fs.listFiles(jpath, True)
+    while it.hasNext():
+        status = it.next()
+        if status.getPath().getName().startswith("part-"):
+            files += 1
+            size += status.getLen()
+    return files, size
+
+
 def write_triples(triples: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Partitioned parquet sink (Iceberg writeTo on a real cluster: same
-    partitioning spec — repo_hash buckets, salt for write parallelism)."""
+    partitioning spec — repo_hash buckets, salt for write parallelism).
+
+    Range-partitioned on (repo_hash, salt), not hash-partitioned: each
+    writer task owns a contiguous key range, so the sink holds about
+    (non-empty buckets + tasks) files instead of one per task and bucket,
+    while a mega-repo's salt values still spread over several tasks.
+    The range bounds come from one extra sampling job over `triples`,
+    so pass a cheap-to-rescan input — every pipeline caller hands in a
+    StageStore re-read."""
     (
         with_partition_keys(triples)
-        .repartition("repo_hash", "salt")
+        .repartitionByRange("repo_hash", "salt")
         .write.mode(mode)
         .partitionBy("repo_hash")
         .parquet(path)

@@ -22,8 +22,9 @@ from palladian_spark.kernels.classifiers_misc import (
     train_nominal,
     train_zeror,
 )
+from palladian_spark.sources.reference import REFERENCE_ROOT
 
-REF = "/root/reference/palladian-core/src/test/resources/classifier"
+REF = os.path.join(REFERENCE_ROOT, "src/test/resources/classifier")
 
 
 def test_nominal_classifier_reference_golden():

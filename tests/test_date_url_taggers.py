@@ -13,6 +13,8 @@ check OVERWRITES the start check (DateParser.java:229-231).
 import os
 from collections import defaultdict
 
+from palladian_spark.sources.reference import REFERENCE_ROOT
+
 FIXDIR = os.path.join(os.path.dirname(__file__), "fixtures", "reference")
 TEXTS = os.path.join(FIXDIR, "date_texts.txt")
 GOLDEN = os.path.join(FIXDIR, "date_url_annotations.tsv")
@@ -61,7 +63,7 @@ def test_t14_url_date_augmentation_parity():
     the ACTUAL reference (T14GoldenDriver on a trained English model)."""
     import pytest
 
-    TRAIN = "/root/reference/palladian-core/src/test/resources/ner/training.txt"
+    TRAIN = os.path.join(REFERENCE_ROOT, "src/test/resources/ner/training.txt")
     if not os.path.exists(TRAIN):
         pytest.skip("reference corpus not available")
 

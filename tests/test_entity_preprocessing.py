@@ -7,8 +7,10 @@ import os
 
 import pytest
 
-CASE_DICT = "/root/reference/palladian-core/src/main/resources/caseDictionary.csv"
-TEST_TEXT = "/root/reference/palladian-core/src/test/resources/testText.txt"
+from palladian_spark.sources.reference import REFERENCE_ROOT
+
+CASE_DICT = os.path.join(REFERENCE_ROOT, "src/main/resources/caseDictionary.csv")
+TEST_TEXT = os.path.join(REFERENCE_ROOT, "src/test/resources/testText.txt")
 
 pytestmark = pytest.mark.skipif(
     not os.path.exists(CASE_DICT), reason="reference resources not available"

@@ -1,5 +1,5 @@
 """Evaluation golden: the full EvaluationResultTest.java:20-128 fixture
-(XML gold + XML result under /root/reference test resources)."""
+(XML gold + XML result under the reference tree's test resources)."""
 
 import os
 
@@ -18,8 +18,9 @@ from palladian_spark.kernels.evaluation import (
     evaluate,
 )
 from palladian_spark.kernels.fileformats import get_annotations_from_xml_text
+from palladian_spark.sources.reference import REFERENCE_ROOT
 
-FIXTURE_DIR = "/root/reference/palladian-core/src/test/resources/ner/evaluation"
+FIXTURE_DIR = os.path.join(REFERENCE_ROOT, "src/test/resources/ner/evaluation")
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(FIXTURE_DIR), reason="reference fixtures not available"

@@ -15,8 +15,9 @@ from palladian_spark.kernels.featsel import (
     mdlp_boundaries,
     mdlp_boundaries_weighted,
 )
+from palladian_spark.sources.reference import REFERENCE_ROOT
 
-REF = "/root/reference/palladian-core/src/test/resources/classifier"
+REF = os.path.join(REFERENCE_ROOT, "src/test/resources/classifier")
 
 
 def _load_csv(path, numeric):

@@ -18,8 +18,9 @@ from palladian_spark.operators.featsel import (
     mdlp_discretize,
     mdlp_fit_boundaries,
 )
+from palladian_spark.sources.reference import REFERENCE_ROOT
 
-REF = "/root/reference/palladian-core/src/test/resources/classifier"
+REF = os.path.join(REFERENCE_ROOT, "src/test/resources/classifier")
 
 
 @pytest.fixture(scope="module")

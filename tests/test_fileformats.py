@@ -11,8 +11,9 @@ from palladian_spark.kernels.fileformats import (
     get_annotations_from_xml_text,
     get_text_from_column,
 )
+from palladian_spark.sources.reference import REFERENCE_ROOT
 
-TRAINING = "/root/reference/palladian-core/src/test/resources/ner/training.txt"
+TRAINING = os.path.join(REFERENCE_ROOT, "src/test/resources/ner/training.txt")
 
 pytestmark = pytest.mark.skipif(
     not os.path.isfile(TRAINING), reason="reference corpus not available"

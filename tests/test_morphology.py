@@ -102,7 +102,9 @@ def test_german_morphology():
 
     import pytest
 
-    tsv = "/root/reference/palladian-core/src/main/resources/germanSingularPluralNouns.tsv"
+    from palladian_spark.sources.reference import REFERENCE_ROOT
+
+    tsv = os.path.join(REFERENCE_ROOT, "src/main/resources/germanSingularPluralNouns.tsv")
     if not os.path.exists(tsv):
         pytest.skip("reference German noun data not available")
     from palladian_spark.kernels.morphology import GermanMorphology

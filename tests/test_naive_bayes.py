@@ -9,8 +9,9 @@ import os
 import pytest
 
 from palladian_spark.kernels.naive_bayes import classify, most_likely, train
+from palladian_spark.sources.reference import REFERENCE_ROOT
 
-REF = "/root/reference/palladian-core/src/test/resources/classifier"
+REF = os.path.join(REFERENCE_ROOT, "src/test/resources/classifier")
 
 PLAY = [
     ({"outlook": "sunny", "temp": "hot", "humidity": "high", "windy": "false"}, "no"),

@@ -40,3 +40,40 @@ def test_nb_spark_matches_kernel(spark):
         else:
             assert abs(milli - want_milli) <= 1, (i, milli, want_milli)
     assert mismatch_pred == 0
+
+
+def test_nb_null_nominal_adds_no_term(spark):
+    """A NULL nominal value is skipped, as the reference skips missing
+    features: the Spark scores follow the kernel, and the DuckDB twin
+    (nb_classify_sql) follows Spark exactly."""
+    import random
+
+    import duckdb
+
+    from palladian_spark.operators.naive_bayes import nb_classify_sql
+
+    rng = random.Random(5)
+    rows = []
+    for i in range(200):
+        cat = rng.choice(["en", "de"])
+        src = None if i % 7 == 0 else rng.choice(["web", "book", "code"])
+        rows.append((i, cat, src, rng.randint(1, 50) + (30 if cat == "de" else 0)))
+    df = spark.createDataFrame(
+        rows, "doc_id long, lang string, source string, n_chars long"
+    )
+    got = {
+        r["doc_id"]: (r["predicted"], r["score_milli"])
+        for r in nb_classify(df, "lang", "doc_id", ["source"], ["n_chars"]).collect()
+    }
+    model = train([({"source": s, "n_chars": n}, c) for _, c, s, n in rows])
+    for i, _cat, s, n in rows:
+        scores = classify({"source": s, "n_chars": n}, model)
+        want = most_likely(scores)
+        assert got[i][0] == want, i
+        assert abs(got[i][1] - math.floor(1000 * scores[want] + 0.5)) <= 1, i
+
+    sql = nb_classify_sql("lang", "doc_id", {"source": "source"}, ["n_chars"])
+    with duckdb.connect() as con:
+        con.register("documents", df.toPandas())
+        oracle = {r[0]: (r[1], r[2]) for r in con.execute(sql).fetchall()}
+    assert oracle == got

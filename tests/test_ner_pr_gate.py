@@ -26,8 +26,10 @@ import os
 
 import pytest
 
-TRAIN = "/root/reference/palladian-core/src/test/resources/ner/training.txt"
-TEST = "/root/reference/palladian-core/src/test/resources/ner/test.txt"
+from palladian_spark.sources.reference import REFERENCE_ROOT
+
+TRAIN = os.path.join(REFERENCE_ROOT, "src/test/resources/ner/training.txt")
+TEST = os.path.join(REFERENCE_ROOT, "src/test/resources/ner/test.txt")
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures", "reference")
 
 # the reference's own self-tag scores on training.txt (harness output)

@@ -10,6 +10,7 @@ from palladian_spark.kernels.fileformats import (
     get_text_from_column,
 )
 from palladian_spark.kernels.tagging import Annotation
+from palladian_spark.sources.reference import REFERENCE_ROOT
 
 # A small self-authored CoNLL-style corpus (PER/LOC/ORG) used as the training
 # fixture; sentences follow the shapes Palladian's StringTagger detects.
@@ -100,7 +101,7 @@ def test_distributed_evaluation_matches_kernel(spark):
     from palladian_spark.kernels.fileformats import get_annotations_from_xml_text
     from palladian_spark.operators.evaluate import evaluate_documents
 
-    fixture_dir = "/root/reference/palladian-core/src/test/resources/ner/evaluation"
+    fixture_dir = os.path.join(REFERENCE_ROOT, "src/test/resources/ner/evaluation")
     if not os.path.isdir(fixture_dir):
         pytest.skip("reference fixtures not available")
     with open(os.path.join(fixture_dir, "goldStandardXml.txt"), encoding="utf-8") as f:

@@ -354,6 +354,39 @@ def test_canonicalize_distributed_path_matches_local(spark):
     assert local == dist
 
 
+def _plan_nodes(node, below_agg=False):
+    """(node name, has an aggregate above it) over an executed plan,
+    through adaptive-execution wrappers and query stages."""
+    name = node.nodeName()
+    yield name, below_agg
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        kids = [node.executedPlan()]
+    elif cls.endswith("QueryStageExec"):
+        kids = [node.plan()]
+    else:
+        cs = node.children()
+        kids = [cs.apply(i) for i in range(cs.size())]
+    for kid in kids:
+        yield from _plan_nodes(kid, below_agg or "Aggregate" in name)
+
+
+def test_jw_scores_each_distinct_pair_once(spark):
+    """score_pairs over candidate_pairs runs the Jaro-Winkler UDF once,
+    over the deduplicated pairs: no Python evaluation below the dedup
+    aggregate (the raw band collisions), and none repeated for the sim
+    column after the threshold filter."""
+    from palladian_spark.operators.canonicalize import candidate_pairs, score_pairs
+
+    names = [f"Name{i // 3}{'xyz'[i % 3]}" for i in range(300)]
+    values = spark.createDataFrame([(v,) for v in names], "value string")
+    scored = score_pairs(candidate_pairs(values))
+    assert scored.count() > 0
+    nodes = list(_plan_nodes(scored._jdf.queryExecution().executedPlan()))
+    python = [below for name, below in nodes if "EvalPython" in name]
+    assert python == [False], nodes
+
+
 def test_similarity_search(spark):
     from palladian_spark.operators.similarity_search import brute_force_topk, lsh_topk
 
@@ -1041,3 +1074,54 @@ def test_salted_write_spreads_mega_repo(spark, tmp_path):
         back.where("repo_hash = %d and subj = 'mega-repo'" % mega_hash).count()
         == 9000
     )
+
+
+def test_sink_layout_one_file_per_bucket(spark, tmp_path):
+    """With P writer tasks the sink holds at most (non-empty buckets + P)
+    part files — each task owns a contiguous run of buckets instead of
+    writing a file into almost every bucket — and the rows round-trip."""
+    import glob
+    import os
+
+    from palladian_spark.operators.triples import (
+        sink_size,
+        with_partition_keys,
+        write_triples,
+    )
+
+    schema = (
+        "subj string, pred string, obj string, content_sha256 string, support long"
+    )
+    rows = [
+        (f"repo{i % 400}", "mentioned-in", f"o{i}", f"s{i}", i % 3 + 1)
+        for i in range(8000)
+    ]
+    df = spark.createDataFrame(rows, schema)
+    out = str(tmp_path / "triples")
+
+    # as in test_salted_write_spreads_mega_repo: keep AQE from coalescing
+    # the toy shuffle to one task, so P writer tasks really run
+    p = 8
+    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
+    shuffle_key = "spark.sql.shuffle.partitions"
+    prev_coalesce = spark.conf.get(coalesce_key)
+    prev_shuffle = spark.conf.get(shuffle_key)
+    spark.conf.set(coalesce_key, "false")
+    spark.conf.set(shuffle_key, str(p))
+    try:
+        write_triples(df, out)
+    finally:
+        spark.conf.set(coalesce_key, prev_coalesce)
+        spark.conf.set(shuffle_key, prev_shuffle)
+
+    buckets = with_partition_keys(df).select("repo_hash").distinct().count()
+    part_files = glob.glob(f"{out}/repo_hash=*/part-*")
+    assert buckets > 100
+    assert len(part_files) <= buckets + p, (len(part_files), buckets)
+    assert sink_size(spark, out) == (
+        len(part_files),
+        sum(os.path.getsize(f) for f in part_files),
+    )
+
+    back = spark.read.parquet(out).select(*df.columns)
+    assert sorted(back.collect()) == sorted(df.collect())

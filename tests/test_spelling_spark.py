@@ -51,6 +51,23 @@ def test_dictionary_and_context_parity(dict_docs, kernel):
     assert ctx == kernel.context
 
 
+def test_dictionary_parity_on_number_characters(spark):
+    """Java's [\\w\\p{L}-]+ splits at Unicode Nl/No number characters
+    (roman numerals, superscripts, circled digits) — the kernel's
+    tokenizer must split there too, not treat them as letters."""
+    from palladian_spark.kernels.spelling import build_dictionary
+
+    lines = ["Chapter Ⅻ and x² plus ③rd", "abc²def ⅷ über-all_1 ½cup", "x² plus"]
+    docs = spark.createDataFrame(list(enumerate(lines)), "doc_id long, text string")
+    words, ctx = build_dictionary(lines)
+    assert "x" in words and "x²" not in words
+    assert {r["word"]: r["count"] for r in corpus_dictionary(docs).collect()} == words
+    assert {
+        r["left"] + "_" + r["word"]: r["count"]
+        for r in corpus_context(docs).collect()
+    } == ctx
+
+
 def test_edits1_parity(spark):
     from palladian_spark.kernels.spelling import edits
 

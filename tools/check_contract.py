@@ -1,6 +1,8 @@
 """Local stand-in for the driver's correctness check: runs every
 queries()[name] on Spark and the matching oracle_sql()[name] on DuckDB at
 sf0.01, compares row count, column names, and order-insensitive values.
+A query that needs the absent reference tree reports ABSENT: it is
+neither verified nor a failure.
 Runs on local[$SPARK_GRAFT_CPUS] (default: the cores this process may use)
 with as many shuffle partitions.
 
@@ -50,6 +52,7 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as ent
+    from palladian_spark.sources.reference import ReferenceTreeAbsent
     from palladian_spark.sources.session import get_spark
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
@@ -68,6 +71,7 @@ def main() -> int:
         print(f"FAILURES: unknown query names {sorted(unknown)}")
         return 1
     failures = []
+    absent = []  # needs the reference tree: neither verified nor failed
     results: dict[str, dict] = {}
     for name, fn in qs.items():
         if only and name not in only:
@@ -75,6 +79,11 @@ def main() -> int:
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir).toPandas()
+        except ReferenceTreeAbsent as e:
+            absent.append(name)
+            results[name] = {"status": "reference_absent", "err": str(e)[:300]}
+            print(f"ABSENT {name}: {e}")
+            continue
         except Exception as e:
             failures.append(name)
             results[name] = {"status": "FAIL", "err": f"spark: {e}"[:300]}
@@ -141,7 +150,9 @@ def main() -> int:
                     "n_rows_only": sum(
                         1 for r in results.values() if r["status"] == "rows_only"
                     ),
+                    "n_reference_absent": len(absent),
                     "failures": failures,
+                    "reference_absent": absent,
                     "queries": results,
                 },
                 f,
@@ -156,6 +167,8 @@ def main() -> int:
         n = res.count()
         print(f"entry: {n} rows ({time.time() - t0:.1f}s), schema={res.schema.simpleString()}")
     spark.stop()
+    if absent:
+        print("REFERENCE TREE ABSENT (not verified):", absent)
     print("FAILURES:", failures or "none")
     return 1 if failures else 0
 

@@ -22,10 +22,17 @@ Behavior:
 - Per-row lineage: sha256(content) attached at ingest and carried to the
   triples; verify_lineage() anti-joins triples back against the source and
   the job fails loudly on any violation.
-- Sink: parquet partitioned by repo_hash with salt-spread writer tasks
-  (triples.write_triples) — the skew-safe layout for mega-repos.
+- Sink: parquet partitioned by repo_hash (triples.write_triples),
+  range-partitioned on (repo_hash, salt): each writer task owns a
+  contiguous run of buckets, so the sink holds about (non-empty buckets +
+  tasks) files, while a mega-repo's salt values still spread over several
+  tasks. The range bounds cost one sampling job over the StageStore
+  re-read of the triples.
 - Metrics: each stage writes a `<stage>_metrics` parquet (per-partition
   row counts) plus a manifest JSON (row count, schema, lineage hash).
+- Summary: one JSON line with the triple count, throughput, lineage
+  violations, the sink's part files and bytes (`sink_files`,
+  `sink_bytes`) and the row count of every stage.
 """
 
 from __future__ import annotations
@@ -54,7 +61,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from palladian_spark.operators.triples import write_triples
+    from palladian_spark.operators.triples import sink_size, write_triples
     from palladian_spark.pipeline import (
         documents_as_source,
         extract_triples,
@@ -117,8 +124,11 @@ def main() -> None:
     secs = time.perf_counter() - t0
 
     violations = verify_lineage(source, written)
+    sink_files, sink_bytes = sink_size(spark, args.output)
     summary = {
         "triples": n_triples,
+        "sink_files": sink_files,
+        "sink_bytes": sink_bytes,
         "secs": round(secs, 2),
         "triples_per_sec": round(n_triples / secs, 1),
         "lineage_violations": violations,
