@@ -120,30 +120,6 @@ def _opt_n_loose(w: str, c: int) -> int | None:
     return None
 
 
-def _opt_s(w: str, c: int) -> int | None:
-    if c >= 2 and w[c - 1] == "s" and w[c - 2] in VOWELS:
-        return c - 1
-    if c >= 1 and w[c - 1] not in VOWELS and w[c - 1] != "s":
-        return c
-    return None
-
-
-def _opt_s_strict(w: str, c: int) -> int | None:
-    """Only the consume-s branch (used in the nUn chain: 'arabasının'
-    strips 'sı' but 'kentinin' must keep its bare 'i')."""
-    if c >= 2 and w[c - 1] == "s" and w[c - 2] in VOWELS:
-        return c - 1
-    return None
-
-
-def _opt_U(w: str, c: int) -> int | None:
-    if c >= 2 and w[c - 1] in _U and w[c - 2] not in VOWELS:
-        return c - 1
-    if c >= 2 and w[c - 1] in VOWELS and w[c - 2] not in VOWELS:
-        return c
-    return None
-
-
 def _ends_any(w: str, c: int, suffixes) -> int | None:
     """Longest suffix of w[:c] from the tuple; returns new cursor."""
     best = None
@@ -313,14 +289,6 @@ def _opt_n_ki(w: str, c: int) -> int | None:
     if c >= 2 and w[c - 1] == "n" and w[c - 2] in VOWELS:
         return c - 1
     if c >= 1 and w[c - 1] not in VOWELS and w[c - 1] != "y":
-        return c
-    return None
-
-
-def _vowel_after_vowel_or_consonant(w: str, c: int) -> int | None:
-    """-(n)A attachment: vowel before the suffix, anything-but-limit
-    before that ('söhigeeüne' strips its 'ne'; 'arkadaşna' keeps it)."""
-    if c >= 2 and w[c - 1] in VOWELS:
         return c
     return None
 

@@ -8,9 +8,15 @@ O(n·bands) instead of O(n²); the exact string metric
 (kernels.similarity.jaro_winkler_similarity, golden-tested) only runs inside
 blocks; components come from random-priority local contraction rounds that
 shrink the edge set until it fits on the driver, where union-find finishes.
+
+Each decision has one definition that the driver-local and the
+distributed path share: _block_keys is the blocking, MAX_BUCKET caps a
+block, the Jaro-Winkler kernel is the scorer.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -18,62 +24,48 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 
 from ..kernels.similarity import jaro_winkler_similarity
+from .util import band_hashes_for_shingles, banding_params, spread
 
-# 31-bit Mersenne prime: a*h'+b stays < 2^62 (no ANSI long overflow)
-_MERSENNE = (1 << 31) - 1
+# blocking: 16 minhash permutations in bands of 4 over char 3-shingles;
+# a block larger than MAX_BUCKET is dropped before any pair is formed
+NUM_HASHES = 16
+BAND_SIZE = 4
+SHINGLE_N = 3
+MAX_BUCKET = 1000
+# driver-local pair sets above this are scored on the executors
+PARALLEL_SCORE_OVER = 100_000
 
-
-from .util import band_hashes_for_shingles, banding_params
-
-_banding_params = banding_params
-
-
-def _band_hashes_one(value: str, a, b, band_size: int, shingle_n: int) -> list[int]:
-    """Minhash band hashes for one string (char-shingled; shared by the
-    distributed pandas UDF and the driver-local fast path so both paths
-    block identically)."""
-    s = (value or "").lower()
-    shingles = list({s[i : i + shingle_n] for i in range(max(len(s) - shingle_n + 1, 1))})
-    return band_hashes_for_shingles(shingles, a, b, band_size)
+_A, _B = banding_params(NUM_HASHES)
 
 
-def _make_band_udf(num_hashes: int, band_size: int, shingle_n: int):
-    """Vectorized minhash-band UDF: value -> array of per-band hashes.
+def _block_keys(value: str | None) -> list[int]:
+    """The blocking keys of one value; two values are compared iff they
+    share a key at the same position.
 
-    numpy inside an Arrow batch beats Catalyst higher-order functions here:
-    lambda bodies of transform()/aggregate() are interpreted per element
-    (no whole-stage codegen), and a 16-permutation nested-lambda expression
-    additionally pays seconds of analysis time per query.
+    Keys 0..n_bands-1 are the banded minhash of the lowercased char
+    shingles: P(collide) = 1-(1-J^band_size)^n_bands keeps blocks selective
+    (single-hash bands degenerate on short strings: the global min-shingle
+    concentrates and puts half the values in one block). The last key is a
+    64-bit hash of the lowercase 2-char prefix, so edit-close names sharing
+    a prefix are always compared (Jaro-Winkler's prefix boost means
+    high-similarity pairs almost always share it).
     """
-    a, b = _banding_params(num_hashes)
+    s = value or ""
+    low = s.lower()
+    n = SHINGLE_N
+    shingles = list({low[i : i + n] for i in range(max(len(low) - n + 1, 1))})
+    prefix = hashlib.blake2b(s[:2].lower().encode(), digest_size=8).digest()
+    return band_hashes_for_shingles(shingles, _A, _B, BAND_SIZE) + [
+        int.from_bytes(prefix, "little", signed=True)
+    ]
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def band_hashes(vals: pd.Series) -> pd.Series:
-        return pd.Series(
-            [_band_hashes_one(v, a, b, band_size, shingle_n) for v in vals]
-        )
 
-    return band_hashes
-
-
-def _minhash_bands(
-    values: DataFrame,
-    value_col: str = "value",
-    num_hashes: int = 16,
-    band_size: int = 4,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(value) -> (value, band_id, band_hash) rows for LSH bucketing."""
-    from .util import spread
-
-    udf = _make_band_udf(num_hashes, band_size, shingle_n)
-    values = spread(values)  # single-split value tables: one-core band UDF
-    # posexplode_outer + null-guard: inner posexplode would double-evaluate
-    # the band UDF via InferFiltersFromGenerate (see operators/mentions.py);
-    # the UDF always returns a fixed-size band array, so no real row drops
-    return values.select(
-        value_col, F.posexplode_outer(udf(F.col(value_col))).alias("band_id", "band_hash")
-    ).where(F.col("band_hash").isNotNull())
+# numpy inside an Arrow batch beats Catalyst higher-order functions here:
+# transform()/aggregate() lambda bodies are interpreted per element and a
+# nested-lambda minhash costs seconds of analysis time per query
+@F.pandas_udf(ArrayType(LongType()))
+def _block_keys_udf(vals: pd.Series) -> pd.Series:
+    return pd.Series([_block_keys(v) for v in vals])
 
 
 def _jw(left: pd.Series, right: pd.Series) -> pd.Series:
@@ -88,48 +80,37 @@ def _jw(left: pd.Series, right: pd.Series) -> pd.Series:
 _jw_udf = F.pandas_udf(_jw, DoubleType()).asNondeterministic()
 
 
-def candidate_pairs(
-    values: DataFrame,
-    value_col: str = "value",
-    num_hashes: int = 16,
-    band_size: int = 4,
-    shingle_n: int = 3,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """LSH-blocked candidate pairs (left < right), deduplicated.
-
-    Banded minhash (P(collide) = 1-(1-J^band_size)^n_bands) keeps buckets
-    selective — single-hash bands degenerate on short strings (the global
-    min-shingle concentrates, putting half the values in one bucket and
-    making the block join quadratic). A deterministic lowercase-2-prefix
-    block additionally guarantees that edit-distance-close names sharing a
-    prefix are always compared (Jaro-Winkler's prefix boost means
-    high-similarity pairs almost always share it).
-
-    Buckets larger than max_bucket are dropped BEFORE the self-join — the
-    same cap _local_canonicalize applies, so the two paths block
-    identically, and a skewed bucket (e.g. a hub 2-char prefix) can never
-    turn the join quadratic at scale.
+def candidate_pairs(values: DataFrame, value_col: str = "value") -> DataFrame:
+    """Blocked candidate pairs (left < right), deduplicated: every pair of
+    values sharing a _block_keys key in a block of at most MAX_BUCKET
+    values. The cap drops a skewed block (e.g. a hub 2-char prefix) before
+    the self-join, so the join never turns quadratic.
 
     The result is a lazy local checkpoint: whatever filters the caller
     adds run over the distinct pairs, not over the raw collisions.
     """
-    bands = _minhash_bands(values, value_col, num_hashes, band_size, shingle_n)
-    prefix_band = values.select(
-        value_col,
-        F.lit(-1).alias("band_id"),
-        F.xxhash64(F.lower(F.substring(F.col(value_col), 1, 2))).alias("band_hash"),
+    values = spread(values)  # single-split value tables: one-core key UDF
+    # posexplode_outer + null-guard: inner posexplode would double-evaluate
+    # the key UDF via InferFiltersFromGenerate (see operators/mentions.py);
+    # the UDF always returns a fixed-size key array, so no real row drops.
+    # Materialized once before the self-join, which reads the keys twice:
+    # without the cut the upstream plan would re-execute for each side
+    bands = (
+        values.select(
+            value_col,
+            F.posexplode_outer(_block_keys_udf(F.col(value_col))).alias(
+                "band_id", "band_hash"
+            ),
+        )
+        .where(F.col("band_hash").isNotNull())
+        .localCheckpoint()
     )
-    # materialize once before the self-join: the band union references the
-    # upstream plan num_bands x 2 (left/right) times — without a cut, the
-    # whole mention-detection scan would re-execute for every branch
-    bands = bands.unionByName(prefix_band).localCheckpoint()
     # bucket-size guard: shuffles on the same (band_id, band_hash) key as
     # the self-join below, so the extra aggregate reuses the partitioning
     sizes = bands.groupBy("band_id", "band_hash").agg(F.count("*").alias("_bn"))
     bands = (
         bands.join(
-            sizes.where((F.col("_bn") >= 2) & (F.col("_bn") <= max_bucket)),
+            sizes.where((F.col("_bn") >= 2) & (F.col("_bn") <= MAX_BUCKET)),
             ["band_id", "band_hash"],
         )
         .drop("_bn")
@@ -156,26 +137,8 @@ def candidate_pairs(
 
 
 def score_pairs(pairs: DataFrame, threshold: float = 0.9) -> DataFrame:
-    """Exact Jaro-Winkler re-scoring inside blocks; keep pairs >= threshold.
-
-    A provably-safe JVM prefilter cuts the Arrow hop first: with
-    m <= l1 <= l2 the kernel's jaro <= (2 + l1/l2)/3 and the Winkler boost
-    (l <= 4) gives jw <= 0.4 + 0.6*jaro = 0.8 + 0.2*(l1/l2), so any pair
-    whose trimmed length ratio is below (threshold - 0.8)/0.2 can never
-    reach the threshold. Only active for threshold > 0.8 (bound <= 0
-    otherwise); a 1e-9 slack keeps boundary-exact pairs.
-
-    The trim must strip the SAME whitespace set as the JW kernel's
-    str.strip() (F.trim strips ASCII spaces only — a value padded with
-    tabs/newlines would get a too-long prefilter length and could be
-    wrongly dropped), so the regex class below enumerates Python's
-    whitespace set explicitly."""
-    if threshold > 0.8:
-        bound = (threshold - 0.8) / 0.2 - 1e-9
-        ws = "[\\s\\x1c-\\x1f\\x85\\xa0\\u1680\\u2000-\\u200a\\u2028\\u2029\\u202f\\u205f\\u3000]+"
-        la = F.length(F.regexp_replace("left_value", f"^{ws}|{ws}$", ""))
-        lb = F.length(F.regexp_replace("right_value", f"^{ws}|{ws}$", ""))
-        pairs = pairs.where(F.least(la, lb) >= bound * F.greatest(la, lb))
+    """Exact Jaro-Winkler (kernels.similarity, golden-tested) over every
+    pair; keep pairs scoring >= threshold, with the score as `sim`."""
     return pairs.withColumn("sim", _jw_udf("left_value", "right_value")).where(
         F.col("sim") >= threshold
     )
@@ -292,30 +255,19 @@ def connected_components(
 
 
 def _local_canonicalize(
-    freq_rows: list[tuple[str, int]],
-    threshold: float,
-    num_hashes: int,
-    band_size: int,
-    shingle_n: int = 3,
-    max_bucket: int = 1000,
-    spark=None,
-    parallel_score_over: int = 100_000,
+    freq_rows: list[tuple[str, int]], threshold: float, spark
 ) -> list[tuple[str, str]]:
-    """Driver-local block -> score -> union-find -> canonical pick.
-
-    Same blocking (shared _band_hashes_one + lowercase-2-prefix) and same
-    scorer (golden-tested Jaro-Winkler kernel) as the distributed path, so
-    results are identical; used when the distinct value set fits on the
-    driver. max_bucket caps degenerate blocks with the SAME cap
-    candidate_pairs applies distributed, so both paths block identically.
+    """Driver-local block -> score -> union-find -> canonical pick, for a
+    distinct value set that fits on the driver. The same _block_keys, the
+    same MAX_BUCKET cap and the same Jaro-Winkler kernel as the
+    distributed path, so the results are identical.
 
     Scoring cost note: a hot 2-char-prefix bucket can explode into 10^5+
     pairs, and a serial Python JW loop at ~25 us/pair then dominates the
-    whole KG pipeline (measured 9 s of a 13 s run at the 10x bench). With
-    a ``spark`` handle, pair sets above ``parallel_score_over`` are scored
-    through the SAME _jw_udf the distributed path uses — identical kernel
-    per element, just executed on all cores — and only the surviving edges
-    return to the driver union-find.
+    whole KG pipeline (measured 9 s of a 13 s run at the 10x bench). Pair
+    sets above PARALLEL_SCORE_OVER are scored through score_pairs on all
+    cores instead, and only the surviving edges return to the driver
+    union-find.
 
     Gate tuning (measured, sf0.1 32-core): serial JW runs ~28 us/pair, so
     28k pairs score in 0.8 s while the parallel round trip costs 1.3 s
@@ -326,53 +278,22 @@ def _local_canonicalize(
     serial) pay the parallel fixed costs."""
     from collections import defaultdict
 
-    a, b = _banding_params(num_hashes)
     values = [v for v, _ in freq_rows]
-    buckets: dict[tuple[int, object], list[str]] = defaultdict(list)
+    buckets: dict[tuple[int, int], list[str]] = defaultdict(list)
     for v in values:
-        for band_id, band_hash in enumerate(
-            _band_hashes_one(v, a, b, band_size, shingle_n)
-        ):
-            buckets[(band_id, band_hash)].append(v)
-        buckets[(-1, (v or "")[:2].lower())].append(v)
+        for key in enumerate(_block_keys(v)):
+            buckets[key].append(v)
 
     pairs: set[tuple[str, str]] = set()
     for bucket in buckets.values():
-        if len(bucket) < 2 or len(bucket) > max_bucket:
+        if len(bucket) < 2 or len(bucket) > MAX_BUCKET:
             continue
         bucket = sorted(set(bucket))
         for i, x in enumerate(bucket):
             for y in bucket[i + 1 :]:
                 pairs.add((x, y))
 
-    # Exact prefilter before the expensive JW kernel: jw <= 0.8 + 0.2*r
-    # with r = min(len)/max(len) of the trimmed strings, and sharper with
-    # the ACTUAL upper-case common-prefix length l (the Winkler boost is
-    # l*0.1*(1-jaro)): jw <= (1 - 0.1*l)*(2 + r)/3 + 0.1*l. Both bounds
-    # follow from m <= l1 in the kernel's formula, so no qualifying pair
-    # is ever dropped; measured ~100x cheaper per pair than full JW.
-    if threshold > 0.8 and pairs:
-        upper = {v: v.strip().upper() for v in values}
-
-        def _may_reach(x: str, y: str) -> bool:
-            ux, uy = upper[x], upper[y]
-            # kernel early-equality: equal-after-strip+upper scores 1.0
-            # (including two whitespace-only values), so it must survive
-            # the zero-length check below
-            if ux == uy:
-                return True
-            lx, ly = len(ux), len(uy)
-            if lx == 0 or ly == 0:
-                return False
-            r = min(lx, ly) / max(lx, ly)
-            l = 0
-            while l < 4 and l < lx and l < ly and ux[l] == uy[l]:
-                l += 1
-            return (1 - 0.1 * l) * (2 + r) / 3 + 0.1 * l >= threshold - 1e-9
-
-        pairs = {(x, y) for x, y in pairs if _may_reach(x, y)}
-
-    if spark is not None and len(pairs) > parallel_score_over:
+    if len(pairs) > PARALLEL_SCORE_OVER:
         # pandas -> createDataFrame takes the Arrow fast path (columnar
         # batch upload); a list of tuples would pickle row-by-row
         pair_pdf = pd.DataFrame(list(pairs), columns=["left_value", "right_value"])
@@ -407,10 +328,7 @@ def canonicalize_values(
     values: DataFrame,
     value_col: str = "value",
     threshold: float = 0.9,
-    num_hashes: int = 16,
-    band_size: int = 4,
     small_values: int = 100_000,
-    max_bucket: int = 1000,
     freq_col: str | None = None,
 ) -> DataFrame:
     """(value) -> (value, canonical): full block -> score -> CC -> pick.
@@ -432,52 +350,28 @@ def canonicalize_values(
     Above the gate, the LSH + pandas-UDF + contraction-CC DataFrame path
     runs — that is the 10^12-file shape.
     """
-    # one pass over the (possibly expensive) upstream: frequencies + the
-    # distinct value set are both tiny, so cut lineage here and let every
-    # downstream branch (LSH bands, self-join sides, final joins) read the
-    # materialized rows instead of re-running the mention scan
+    spark = values.sparkSession
+    values = values.where(F.col(value_col).isNotNull())
     if freq_col is not None:
-        freq = (
-            values.where(F.col(value_col).isNotNull())
-            .select(value_col, F.col(freq_col).cast("long").alias("freq"))
-            .persist()
-        )
+        freq = values.select(value_col, F.col(freq_col).cast("long").alias("freq"))
     else:
-        freq = (
-            values.where(F.col(value_col).isNotNull())
-            .groupBy(value_col)
-            .agg(F.count("*").alias("freq"))
-            .persist()
-        )
-    # count first, then collect: a limit(k).collect() probe would run
-    # Spark's incremental CollectLimit (1 partition, then 4x more, ...) —
-    # measured as FIVE escalating jobs at 1/4/16/... task parallelism,
-    # each recomputing expensive upstream partitions nearly serially
-    # (~7.5 s of a cold kg_triples run). count() materializes the persisted
-    # aggregate in ONE fully-parallel job; the collect then reads cached
-    # rows. The count is also exactly the gate decision.
-    n_distinct = freq.count()
-    if n_distinct <= small_values:
-        probe = freq.collect()
-        freq.unpersist()
-        spark = values.sparkSession
-        freq_rows = [(r[0], r[1]) for r in probe]
-        mapping = _local_canonicalize(
-            freq_rows, threshold, num_hashes, band_size, max_bucket=max_bucket,
-            spark=spark,
-        )
-        if not mapping:
-            return spark.createDataFrame([], f"{value_col} string, canonical string")
+        freq = values.groupBy(value_col).agg(F.count("*").alias("freq"))
+    # one pass over the (possibly expensive) upstream: the gate's count
+    # materializes the lazy cut in one fully parallel job, and the collect
+    # or every distributed branch (LSH keys, self-join sides, final joins)
+    # then reads the cut rows instead of re-running the mention scan.
+    # Count, not a limit(k).collect() probe: CollectLimit escalates over
+    # 1, 4, 16, ... partitions, each job recomputing the upstream
+    freq = freq.localCheckpoint(eager=False)
+    if freq.count() <= small_values:
+        freq_rows = [(r[0], r[1]) for r in freq.collect()]
+        mapping = _local_canonicalize(freq_rows, threshold, spark)
         return spark.createDataFrame(mapping, f"{value_col} string, canonical string")
 
-    cached = freq
-    freq = freq.localCheckpoint()
-    cached.unpersist()
     distinct = freq.select(value_col)
-    pairs = candidate_pairs(
-        distinct, value_col, num_hashes, band_size, max_bucket=max_bucket
+    edges = score_pairs(candidate_pairs(distinct, value_col), threshold).select(
+        "left_value", "right_value"
     )
-    edges = score_pairs(pairs, threshold).select("left_value", "right_value")
     components = connected_components(edges)
     member = components.join(freq, components.value == freq[value_col], "left").select(
         components.value.alias("member"),

@@ -45,9 +45,10 @@ def nb_nominal_counts(df: DataFrame, category_col: str, col: str) -> DataFrame:
 def nb_numeric_stats(df: DataFrame, category_col: str, col: str) -> DataFrame:
     """(category, n, sx, sx2) with exact bigint sums — requires an
     integer-valued feature column (the engine-exact regime; floats fall
-    back to the kernel's Welford semantics)."""
+    back to the kernel's Welford semantics). NULL cells are skipped, as
+    the kernel skips missing features: n counts the non-NULL values."""
     return df.groupBy(F.col(category_col).alias("category")).agg(
-        F.count(F.lit(1)).alias("n"),
+        F.count(F.col(col)).alias("n"),
         F.sum(F.col(col).cast("long")).alias("sx"),
         F.sum((F.col(col).cast("long") * F.col(col).cast("long"))).alias("sx2"),
     )
@@ -207,7 +208,7 @@ def nb_scored_with_clause(
         )
         num_ctes.append(
             f"nb_st_{c} as (select {category_col} as category,"
-            f" count(*)::bigint as n_{c},"
+            f" count({c})::bigint as n_{c},"
             f" sum(cast({c} as bigint))::bigint as sx_{c},"
             f" sum(cast({c} as bigint) * cast({c} as bigint))::bigint as sx2_{c}"
             f" from {documents} group by 1),"

@@ -43,9 +43,9 @@ def test_nb_spark_matches_kernel(spark):
 
 
 def test_nb_null_nominal_adds_no_term(spark):
-    """A NULL nominal value is skipped, as the reference skips missing
-    features: the Spark scores follow the kernel, and the DuckDB twin
-    (nb_classify_sql) follows Spark exactly."""
+    """A NULL nominal or numeric value is skipped, as the reference skips
+    missing features: the Spark scores follow the kernel, and the DuckDB
+    twin (nb_classify_sql) follows Spark exactly."""
     import random
 
     import duckdb
@@ -57,7 +57,8 @@ def test_nb_null_nominal_adds_no_term(spark):
     for i in range(200):
         cat = rng.choice(["en", "de"])
         src = None if i % 7 == 0 else rng.choice(["web", "book", "code"])
-        rows.append((i, cat, src, rng.randint(1, 50) + (30 if cat == "de" else 0)))
+        n = None if i % 5 == 0 else rng.randint(1, 50) + (30 if cat == "de" else 0)
+        rows.append((i, cat, src, n))
     df = spark.createDataFrame(
         rows, "doc_id long, lang string, source string, n_chars long"
     )

@@ -208,19 +208,16 @@ def test_canonicalize(spark):
 
 
 def test_canonicalize_whitespace_padding_parity(spark):
-    """Tab/newline-padded values must survive both prefilters (the JW
-    kernel scores them after str.strip(), so 'ab\\n\\n\\n\\n' vs 'ab' is
-    1.0): the distributed score_pairs length-ratio prefilter and the
-    local _may_reach bound both have to strip the same whitespace set
-    as the kernel, and equal-after-strip pairs score 1.0 regardless of
-    raw lengths."""
+    """Tab/newline-padded values score as the JW kernel scores them, after
+    str.strip(), so 'ab\\n\\n\\n\\n' vs 'ab' is 1.0: score_pairs keeps
+    equal-after-strip pairs regardless of raw lengths, and the driver-local
+    path canonicalizes the padded twin onto the clean form."""
     from palladian_spark.operators.canonicalize import (
         canonicalize_values,
         score_pairs,
     )
 
-    # distributed prefilter: raw lengths 2 vs 6 would fail the 0.95-ratio
-    # bound if the padding were not stripped before measuring
+    # raw lengths 2 vs 6: only the stripped strings are equal
     pairs = spark.createDataFrame(
         [("ab", "ab\n\n\n\n"), ("ab", "ab\t\t \t"), ("ab", "xy\n\n\n\n")],
         ["left_value", "right_value"],
@@ -336,13 +333,30 @@ def test_connected_components_node_set(spark, gate):
 
 def test_canonicalize_distributed_path_matches_local(spark):
     """canonicalize_values with the size gate disabled (small_values=0)
-    must produce the same mapping as the driver-local fast path."""
-    from palladian_spark.operators.canonicalize import canonicalize_values
+    must produce the same mapping as the driver-local fast path: both
+    block on _block_keys, cap blocks at MAX_BUCKET and score with the
+    same kernel."""
+    from palladian_spark.operators.canonicalize import _block_keys, canonicalize_values
 
-    values = spark.createDataFrame(
-        [("Johnson",), ("Johnson",), ("Jonson",), ("Berlin",), ("Bernie",), ("Spark",), ("Sparks",)],
-        ["value"],
+    # 'Jo'/'JoX' share no minhash band (one distinct 2- and 3-shingle
+    # each) but score 0.91: only the 2-char prefix block pairs them
+    assert not set(enumerate(_block_keys("Jo")[:-1])) & set(
+        enumerate(_block_keys("JoX")[:-1])
     )
+    names = [
+        "Johnson", "Johnson", "Jonson", "Berlin", "Bernie", "Spark", "Sparks",
+        # whitespace padding: the kernel strips, blocking does not
+        "  Hamburg", "Hamburg", "Hamburg", "Hamburg\t\n", "\u3000Hamburg",
+        # a 1-char and an empty value
+        "A", "a", "",
+        # mixed-case prefixes: upper-cased by the kernel, lowered by blocking
+        "McDonald", "MCDONALD", "mcdonald", "McDonalds",
+        # non-BMP names
+        "\U0001d504lice", "\U0001d504lices", "\U0001f600face", "\U0001f600Face",
+        # caught by the prefix block alone
+        "Jo", "JoX",
+    ]
+    values = spark.createDataFrame([(v,) for v in names], "value string")
     local = {
         r["value"]: r["canonical"]
         for r in canonicalize_values(values, threshold=0.9).collect()
@@ -352,6 +366,10 @@ def test_canonicalize_distributed_path_matches_local(spark):
         for r in canonicalize_values(values, threshold=0.9, small_values=0).collect()
     }
     assert local == dist
+    assert local["JoX"] == local["Jo"] == "JoX"
+    assert local["MCDONALD"] == local["McDonald"]
+    assert local["Hamburg\t\n"] == "Hamburg"
+    assert local[""] == ""
 
 
 def _plan_nodes(node, below_agg=False):

@@ -218,8 +218,8 @@ def run_once(cores: int, repl: int) -> dict:
         # than scaffolding should be: the 1.8 GB of heap-resident string
         # blocks plus the concat stage's garbage left G1 debt that was
         # collected DURING the timed window, inflating the 8-core
-        # process-tree CPU ~1.5x (stage-metric probe: task CPU inflates
-        # only 1.12x; see tools/probe_stage_cpu.py) and deflating the
+        # process-tree CPU ~1.5x (per-task executor CPU from Spark's stage
+        # metrics inflated only 1.12x) and deflating the
         # measured efficiency to ~0.65. Parquet staging moves scaffolding
         # cost out of the JVM heap entirely.
         stage_dir = os.path.join(
