@@ -47,6 +47,8 @@ from .util import spread
 # maximal lowercase-ASCII runs: engine-identical (no case folding, no
 # Unicode classes — RE2/Java/ICU all agree on [a-z]+)
 WORD_RE = "[a-z]+"
+# merge rounds between localCheckpoint lineage cuts (store-less training)
+CHECKPOINT_EVERY = 4
 
 
 def _word_freqs(docs: DataFrame, text_col: str) -> DataFrame:
@@ -113,7 +115,6 @@ def bpe_train(
     docs: DataFrame,
     n_merges: int = 8,
     text_col: str = "text",
-    checkpoint_every: int = 4,
     store=None,
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
     """Train ``n_merges`` BPE merges over the corpus. Returns the learned
@@ -188,7 +189,7 @@ def bpe_train(
             continue
         # truncate lineage periodically: n_merges chained Arrow UDFs
         # otherwise replay from round 1 on every downstream action
-        if rank % checkpoint_every == 0:
+        if rank % CHECKPOINT_EVERY == 0:
             nxt = nxt.localCheckpoint()
         nxt = nxt.persist()
         nxt.count()

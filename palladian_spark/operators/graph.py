@@ -32,7 +32,7 @@ Scale design (the part the judge should read):
   partial aggregation absorbs it; nothing ever materializes a hub's
   neighbor list in one task.
 - Rank lineage is truncated with ``localCheckpoint`` every
-  ``checkpoint_every`` iterations (the canonicalize.py CC loop's
+  ``PAGERANK_CHECKPOINT_EVERY`` iterations (the canonicalize.py CC loop's
   pattern) so long runs don't grow the plan unboundedly.
 - No driver-side data: the only ``collect``-like action is the node
   COUNT (a scalar) needed for the teleport term.
@@ -55,6 +55,9 @@ from pyspark.sql.window import Window
 
 DAMPING = 0.85
 TELEPORT = 0.15  # literal, deliberately not 1 - DAMPING (see module doc)
+# rounds between localCheckpoint lineage cuts (see module doc)
+PAGERANK_CHECKPOINT_EVERY = 4
+LABEL_PROPAGATION_CHECKPOINT_EVERY = 2
 
 
 def mention_edges(
@@ -123,7 +126,6 @@ def pagerank(
     iterations: int = 5,
     damping: float = DAMPING,
     teleport: float = TELEPORT,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Weighted PageRank over the undirected mention graph, fixed
     iteration count (deterministic — oracle-recomputable), returning
@@ -179,7 +181,7 @@ def pagerank(
                 (base + F.lit(damping) * F.col("_in")).alias("rank"),
             )
         )
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < iterations:
+        if (i + 1) % PAGERANK_CHECKPOINT_EVERY == 0 and (i + 1) < iterations:
             ranks = ranks.localCheckpoint(eager=True)
 
     result = ranks.select(
@@ -193,7 +195,6 @@ def pagerank(
 def label_propagation(
     edges: DataFrame,
     iterations: int = 4,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Synchronous weighted label propagation (Raghavan et al. 2007,
     public algorithm) over the undirected (src, dst, weight) graph:
@@ -239,7 +240,7 @@ def label_propagation(
             .where(F.col("_rn") == 1)
             .select("node", "label")
         )
-        if it % checkpoint_every == 0 and it < iterations:
+        if it % LABEL_PROPAGATION_CHECKPOINT_EVERY == 0 and it < iterations:
             labels = labels.localCheckpoint()
     # eager-materialize BEFORE unpersisting (pagerank's pattern): the
     # returned plan still references sym for every round after the last

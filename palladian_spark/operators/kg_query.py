@@ -708,11 +708,16 @@ def random_walks(
 ) -> DataFrame:
     """Fixed-length directed random walks from every node, with the
     successor at each step chosen by a PORTABLE deterministic hash:
-    idx = md5_60bit(walk_id || ':' || step) mod out_degree. Determinism
-    makes the walk corpus reproducible across reruns/resumes and lets
-    the DuckDB oracle recompute it exactly — the same reason the
-    corrupt-tail negative sampler (graph.link_training_pairs) and the
-    IVF codebook seed from hashes rather than RNGs.
+    idx = md5_60bit(walk_id || ':' || step) mod out_degree over the
+    dst-ordered distinct successors. Determinism makes the walk corpus
+    reproducible across reruns/resumes and lets the DuckDB oracle
+    recompute it exactly — the same reason the corrupt-tail negative
+    sampler (graph.link_training_pairs) and the IVF codebook seed from
+    hashes rather than RNGs.
+
+    This is :func:`weighted_random_walks` over the distinct edges with
+    weight 1: the cumulative interval [idx, idx+1) holds the pick exactly
+    when idx = pick mod out_degree.
 
     Walks that reach a sink node stop growing (the standard DeepWalk
     truncation). Output: (walk_id, path) with path the space-joined
@@ -720,59 +725,12 @@ def random_walks(
     of the corpus contract: node labels must not contain spaces — walk
     graphs with arbitrary labels should pre-encode nodes (e.g. the
     md5 ids from graph.export_nodes) before walking."""
-    # e feeds the index build AND both node-set projections — checkpoint
-    # so the upstream edge pipeline (call resolution etc.) runs once
-    e = (
-        edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
+    unit = (
+        edges.select(F.col(a_col).alias("subj"), F.col(b_col).alias("obj"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .withColumn("weight", F.lit(1))
     )
-    w = Window.partitionBy("src").orderBy("dst")
-    indexed = (
-        e.withColumn("idx", F.row_number().over(w) - F.lit(1))
-        .withColumn("deg", F.count(F.lit(1)).over(Window.partitionBy("src")))
-        .localCheckpoint(eager=False)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    reps = F.explode(
-        F.array(*[F.lit(j) for j in range(walks_per_node)])
-    ).alias("rep")
-    frontier = nodes.select("node", reps).select(
-        F.concat(F.col("node"), F.lit("#"), F.col("rep")).alias("walk_id"),
-        F.col("node").alias("cur"),
-        F.col("node").alias("path"),
-    )
-    for step in range(walk_length):
-        pick = F.pmod(
-            portable_token_hash(
-                F.concat(F.col("walk_id"), F.lit(f":{step}"))
-            ),
-            F.col("deg"),
-        )
-        frontier = (
-            frontier.join(
-                indexed,
-                (frontier["cur"] == indexed["src"]) & (indexed["idx"] == pick),
-                "left",
-            )
-            .select(
-                "walk_id",
-                F.coalesce(F.col("dst"), F.col("cur")).alias("cur"),
-                F.when(
-                    F.col("dst").isNotNull(),
-                    F.concat(F.col("path"), F.lit(" "), F.col("dst")),
-                )
-                .otherwise(F.col("path"))
-                .alias("path"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return frontier.select("walk_id", "path")
+    return weighted_random_walks(unit, walk_length, walks_per_node)
 
 
 def weighted_random_walks(
@@ -792,8 +750,8 @@ def weighted_random_walks(
 
     Per step: ONE left join keyed on the current node with an interval
     residual (exactly one edge matches). The cum-sum window is
-    (src)-partitioned — per-node adjacency grain, same as the uniform
-    variant. Output: (walk_id, path)."""
+    (src)-partitioned — per-node adjacency grain. Output: (walk_id,
+    path)."""
     # integer weights are a hard contract, not a docstring hint: Spark's
     # double->long cast truncates while DuckDB's ::bigint rounds, so a
     # fractional weight column would silently build DIFFERENT interval

@@ -14,12 +14,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 N_SALT = 64  # salt fan-out for mega-repo skew (north rule requirement)
+# co-occurrence cap per document: a quadratic-blowup guard (see
+# co_occurrence_triples); the kg_triples oracle applies the same cap
+MAX_PER_DOC = 100
 
 
-def with_lineage(df: DataFrame, content_col: str = "content") -> DataFrame:
+def with_lineage(df: DataFrame) -> DataFrame:
     """Attach the per-row invariant sha256(content) at ingest
     (BASELINE.json input hint). Built-in F.sha2 — stays in codegen."""
-    return df.withColumn("content_sha256", F.sha2(F.col(content_col), 256))
+    return df.withColumn("content_sha256", F.sha2(F.col("content"), 256))
 
 
 def instance_of_triples(mentions: DataFrame) -> DataFrame:
@@ -32,45 +35,43 @@ def instance_of_triples(mentions: DataFrame) -> DataFrame:
     )
 
 
-def mentioned_in_triples(mentions: DataFrame, doc_col: str = "doc_ref") -> DataFrame:
+def mentioned_in_triples(mentions: DataFrame) -> DataFrame:
     """(entity value, 'mentioned-in', repo/path) provenance edges."""
     return mentions.select(
         F.col("value").alias("subj"),
         F.lit("mentioned-in").alias("pred"),
-        F.col(doc_col).alias("obj"),
+        F.col("doc_ref").alias("obj"),
         "content_sha256",
     )
 
 
-def co_occurrence_triples(
-    mentions: DataFrame, doc_col: str = "doc_ref", max_per_doc: int = 100
-) -> DataFrame:
+def co_occurrence_triples(mentions: DataFrame) -> DataFrame:
     """(a, 'co-occurs-with', b) for entity pairs in the same document.
 
     Spark mapping of CoOccurrenceRetriever (DOCUMENT scope; SENTENCE and
     200-char-window scopes live in operators/cooccurrence.py): distinct
-    (doc, value) pairs, self-join on doc with a < b ordering. max_per_doc
+    (doc, value) pairs, self-join on doc with a < b ordering. MAX_PER_DOC
     caps pathological documents — a quadratic-blowup guard, NOT a silent
     semantic choice: docs whose distinct-mention count exceeds the cap
     lose their excess pairs, so raise the cap (or pre-filter boilerplate
     mentions) when a corpus legitimately has denser documents.
     """
     per_doc = (
-        mentions.select(doc_col, "value", "content_sha256")
-        .dropDuplicates([doc_col, "value"])
+        mentions.select("doc_ref", "value", "content_sha256")
+        .dropDuplicates(["doc_ref", "value"])
     )
     from pyspark.sql import Window
 
-    w = Window.partitionBy(doc_col).orderBy("value")
+    w = Window.partitionBy("doc_ref").orderBy("value")
     capped = per_doc.withColumn("_rn", F.row_number().over(w)).where(
-        F.col("_rn") <= max_per_doc
+        F.col("_rn") <= MAX_PER_DOC
     )
     a = capped.alias("a")
     b = capped.alias("b")
     return (
         a.join(
             b,
-            (F.col(f"a.{doc_col}") == F.col(f"b.{doc_col}"))
+            (F.col("a.doc_ref") == F.col("b.doc_ref"))
             & (F.col("a.value") < F.col("b.value")),
         )
         .select(
@@ -80,6 +81,14 @@ def co_occurrence_triples(
             F.col("a.content_sha256").alias("content_sha256"),
         )
     )
+
+
+def mention_triples(mentions: DataFrame, typed: bool = False) -> DataFrame:
+    """The mention edge families of one mention table: mentioned-in and
+    co-occurs-with, plus instance-of when the mentions carry NER tags
+    (``typed``). Batch and streaming pipelines both assemble through this."""
+    out = mentioned_in_triples(mentions).unionByName(co_occurrence_triples(mentions))
+    return out.unionByName(instance_of_triples(mentions)) if typed else out
 
 
 def synonym_triples(canonical_map: DataFrame) -> DataFrame:
@@ -103,7 +112,7 @@ def dedup_triples(triples: DataFrame) -> DataFrame:
     )
 
 
-def with_partition_keys(triples: DataFrame, repo_col: str = "subj") -> DataFrame:
+def with_partition_keys(triples: DataFrame) -> DataFrame:
     """repo_hash bucket + salt column for skew-safe partitioned writes.
 
     The salt spreads a mega-repo's rows over up to N_SALT writer tasks;
@@ -114,7 +123,7 @@ def with_partition_keys(triples: DataFrame, repo_col: str = "subj") -> DataFrame
     task's share splits between tasks at salt boundaries.
     """
     return triples.withColumn(
-        "repo_hash", F.pmod(F.xxhash64(F.col(repo_col)), F.lit(256)).cast("int")
+        "repo_hash", F.pmod(F.xxhash64(F.col("subj")), F.lit(256)).cast("int")
     ).withColumn(
         "salt", F.pmod(F.xxhash64(F.col("subj"), F.col("obj")), F.lit(N_SALT)).cast("int")
     )
@@ -135,7 +144,7 @@ def sink_size(spark: SparkSession, path: str) -> tuple[int, int]:
     return files, size
 
 
-def write_triples(triples: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_triples(triples: DataFrame, path: str) -> None:
     """Partitioned parquet sink (Iceberg writeTo on a real cluster: same
     partitioning spec — repo_hash buckets, salt for write parallelism).
 
@@ -149,7 +158,7 @@ def write_triples(triples: DataFrame, path: str, mode: str = "overwrite") -> Non
     (
         with_partition_keys(triples)
         .repartitionByRange("repo_hash", "salt")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("repo_hash")
         .parquet(path)
     )

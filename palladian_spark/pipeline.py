@@ -12,7 +12,7 @@ sha256(content) lineage flows source -> mentions -> triples.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .kernels.ner import NerModel
@@ -26,8 +26,6 @@ from .sources.checkpoint import StageStore
 def extract_triples(
     source: DataFrame,
     model: NerModel | None = None,
-    content_col: str = "content",
-    doc_ref_cols: tuple[str, ...] = ("repo", "path"),
     canonicalize: bool = True,
     store: StageStore | None = None,
     code: bool = False,
@@ -43,68 +41,53 @@ def extract_triples(
     plus repo-grain depends-on — operators/code.py); the code preds are
     disjoint from the mention preds, so the branch unions in after dedup
     with its own checkpointable stage and its own single content scan.
-    """
-    lineage = T.with_lineage(source, content_col)
-    lineage = lineage.withColumn("doc_ref", F.concat_ws("/", *[F.col(c) for c in doc_ref_cols]))
 
+    With a ``store`` every stage runs (or resumes) through
+    ``StageStore.run``; without one each stage is its plain build.
+    """
+
+    def stage(name: str, build, lineage_col: str | None = None) -> DataFrame:
+        if store is None:
+            return build()
+        return store.run(name, build, lineage_col=lineage_col)
+
+    lineage = T.with_lineage(source).withColumn(
+        "doc_ref", F.concat_ws("/", F.col("repo"), F.col("path"))
+    )
     keep = ["doc_ref", "content_sha256"]
 
     def build_mentions() -> DataFrame:
         if model is not None:
-            return tag_documents(lineage, model, text_col=content_col, keep_cols=keep)
-        return detect_mentions(lineage, text_col=content_col, keep_cols=keep)
+            return tag_documents(lineage, model, text_col="content", keep_cols=keep)
+        return detect_mentions(lineage, text_col="content", keep_cols=keep)
 
-    if store is not None:
-        mentions = store.run("mentions", build_mentions, lineage_col="content_sha256")
-    else:
-        # four downstream branches (mentioned-in, co-occurrence, instance-of,
-        # canonicalization) all consume mentions; without a cache each branch
-        # would re-run the regex-UDF scan over every content blob.
-        # localCheckpoint, not persist: repeated extract_triples calls in one
-        # session would otherwise pin mention caches forever (no unpersist
-        # placement exists — the returned plan is consumed lazily by the
-        # caller); checkpointed blocks are GC-reclaimed with the DataFrame.
-        mentions = build_mentions().localCheckpoint(eager=False)
+    mentions = stage("mentions", build_mentions, lineage_col="content_sha256")
+    if store is None:
+        # the mention edge families and canonicalization all consume
+        # mentions; without a cut each branch would re-run the regex-UDF
+        # scan over every content blob. localCheckpoint, not persist:
+        # repeated extract_triples calls in one session would otherwise pin
+        # mention caches forever (no unpersist placement exists — the
+        # returned plan is consumed lazily by the caller); checkpointed
+        # blocks are GC-reclaimed with the DataFrame.
+        mentions = mentions.localCheckpoint(eager=False)
 
-    parts = [T.mentioned_in_triples(mentions), T.co_occurrence_triples(mentions)]
-    if model is not None:
-        parts.append(T.instance_of_triples(mentions))
-
+    all_triples = T.mention_triples(mentions, typed=model is not None)
     if canonicalize:
-        def build_canonical() -> DataFrame:
-            return canonicalize_values(mentions.select("value"))
+        canonical_map = stage("canonical", lambda: canonicalize_values(mentions.select("value")))
+        all_triples = all_triples.unionByName(T.synonym_triples(canonical_map))
 
-        canonical_map = (
-            store.run("canonical", build_canonical) if store is not None else build_canonical()
-        )
-        parts.append(T.synonym_triples(canonical_map))
-
-    all_triples = parts[0]
-    for p in parts[1:]:
-        all_triples = all_triples.unionByName(p)
-
-    def build_triples() -> DataFrame:
-        return T.dedup_triples(all_triples)
-
-    if store is not None:
-        result = store.run("triples", build_triples, lineage_col="content_sha256")
-    else:
-        result = build_triples()
-
+    result = stage(
+        "triples", lambda: T.dedup_triples(all_triples), lineage_col="content_sha256"
+    )
     if code:
-        from .operators.code import code_triples as _code_triples
+        from .operators.code import code_triples
 
-        def build_code() -> DataFrame:
-            # lineage already carries content_sha256; code_triples
-            # recomputes the identical hash, so the per-row invariant holds
-            return _code_triples(source)
-
-        code_part = (
-            store.run("code_triples", build_code, lineage_col="content_sha256")
-            if store is not None
-            else build_code()
+        # code_triples recomputes the identical sha256(content), so the
+        # per-row lineage invariant holds for the code stage too
+        result = result.unionByName(
+            stage("code_triples", lambda: code_triples(source), lineage_col="content_sha256")
         )
-        result = result.unionByName(code_part)
     return result
 
 
@@ -131,7 +114,8 @@ def merge_triples(
     Equivalence to the batch path is machine-checked: the
     kg_triples_incremental contract query runs this over a two-way doc
     split and the driver compares it against the SAME DuckDB oracle as
-    kg_triples (full recomputation over the union).
+    kg_triples (full recomputation over the union). The streaming
+    compact_triples folds its append-only triple log through this too.
     """
     merged = parts[0]
     for p in parts[1:]:
@@ -157,11 +141,11 @@ def merge_triples(
     return merged.unionByName(T.dedup_triples(T.synonym_triples(canonical_map)))
 
 
-def verify_lineage(source: DataFrame, triples: DataFrame, content_col: str = "content") -> int:
+def verify_lineage(source: DataFrame, triples: DataFrame) -> int:
     """Per-row invariant check: every non-null triple lineage hash must
     exist in the source table's sha256 set. Returns violation count (0 =
     pass). Anti-join — no collect."""
-    source_hashes = T.with_lineage(source, content_col).select("content_sha256").distinct()
+    source_hashes = T.with_lineage(source).select("content_sha256").distinct()
     return (
         triples.where(F.col("content_sha256").isNotNull())
         .select("content_sha256")

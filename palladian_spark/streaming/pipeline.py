@@ -3,15 +3,14 @@
 The reference engine is batch-only; this is the Spark-native incremental
 twin of `palladian_spark.pipeline.extract_triples`: new document files
 landing in a directory stream through the SAME mention/triple operators
-(stateless per-document — mention detection, lineage hashing, and
-mentioned-in/co-occurrence edge emission are all row-local, so they run
+(stateless per-document — mention detection, lineage hashing, and the
+``triples.mention_triples`` edge assembly are all row-local, so they run
 unchanged inside the micro-batch plan) and append to a triples sink.
 
 Canonicalization is iterative (connected components) and therefore not
-expressible as a streaming operator; it runs per micro-batch via
-``foreachBatch`` against the union of previously-sunk triples when
-requested, or — the recommended 100 TB shape — as a periodic batch
-compaction job over the appended triple log (canonicalize-on-read).
+expressible as a streaming operator; it runs in the periodic batch
+compaction job over the appended triple log (``compact_triples``, the
+batch ``merge_triples`` fold — canonicalize-on-read).
 
 Local test recipe: ``trigger(availableNow=True)`` drains the directory
 and stops — used by tests/test_streaming.py.
@@ -68,37 +67,31 @@ def stream_triples(
     SQL oracle (gazetteer matching is SQL-expressible; the candidate
     lookaround regex is not).
 
+    Edges assemble through ``triples.mention_triples``, as in the batch
+    ``extract_triples``; ``foreachBatch`` hands this function plain batch
+    frames, so it serves both micro-batches and batch comparisons.
+
     ``support`` is per-micro-batch (append mode cannot re-aggregate
-    history); the downstream compaction job (dedup_triples over the sink)
-    folds support across batches — the same partial/final split a batch
+    history); the downstream compaction job (compact_triples over the
+    sink) folds support across batches — the same partial/final split a batch
     groupBy performs, materialized across time instead of across tasks.
     """
     from ..operators import triples as T
     from ..operators.mentions import detect_mentions, dictionary_mentions
     from ..pipeline import documents_as_source
 
-    source = documents_as_source(docs)
-    lineage = T.with_lineage(source, "content")
-    lineage = lineage.withColumn(
+    lineage = T.with_lineage(documents_as_source(docs)).withColumn(
         "doc_ref", F.concat_ws("/", F.col("repo"), F.col("path"))
     )
+    keep = ["doc_ref", "content_sha256"]
     if gazetteer is not None:
         mentions = dictionary_mentions(
-            lineage, gazetteer, text_col="content",
-            keep_cols=["doc_ref", "content_sha256"],
+            lineage, gazetteer, text_col="content", keep_cols=keep,
             case_sensitive=gazetteer_case_sensitive,
         )
     else:
-        mentions = detect_mentions(
-            lineage, text_col="content", keep_cols=["doc_ref", "content_sha256"]
-        )
-    parts = [
-        T.mentioned_in_triples(mentions),
-        T.co_occurrence_triples(mentions),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+        mentions = detect_mentions(lineage, text_col="content", keep_cols=keep)
+    out = T.mention_triples(mentions)
     # per-document dedup of (subj, pred, obj) — row-local w.r.t. lineage,
     # so it stays a stateless streaming projection/aggregate per batch
     return out.groupBy("subj", "pred", "obj", "content_sha256").agg(
@@ -142,7 +135,7 @@ def start_triple_stream(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         part = f"{output_dir}/ingest_batch={batch_id}"
         (
-            stream_triples_batch(
+            stream_triples(
                 batch_df, gazetteer=gazetteer,
                 gazetteer_case_sensitive=gazetteer_case_sensitive,
             )
@@ -190,41 +183,22 @@ def start_triple_stream(
     return writer.start()
 
 
-def stream_triples_batch(
-    docs: DataFrame,
-    gazetteer: dict[str, str] | None = None,
-    gazetteer_case_sensitive: bool = False,
-) -> DataFrame:
-    """Batch-DataFrame version of stream_triples (foreachBatch hands over
-    plain batch frames)."""
-    return stream_triples(
-        docs, gazetteer=gazetteer,
-        gazetteer_case_sensitive=gazetteer_case_sensitive,
-    )
-
-
 def compact_triples(
     spark: SparkSession, triple_log_dir: str, canonicalize: bool = False
 ) -> DataFrame:
-    """Fold the append-only triple log: sum support per (subj, pred, obj),
-    keep the lexicographically-first lineage hash — identical semantics to
-    the batch pipeline's dedup_triples.
+    """Fold the append-only triple log with the batch merge fold
+    (pipeline.merge_triples): sum support per (subj, pred, obj), keep the
+    lexicographically-first lineage hash — identical semantics to the
+    batch pipeline's dedup_triples.
 
-    canonicalize=True additionally runs the batch merge fold
-    (pipeline.merge_triples) so the compacted log gains the synonym-of
-    edges a full batch recompute would emit — canonicalization is
-    deferred to compaction because components can merge as new
-    micro-batches arrive (canonicalize-on-read).
+    canonicalize=True additionally emits the synonym-of edges a full
+    batch recompute would — canonicalization is deferred to compaction
+    because components can merge as new micro-batches arrive
+    (canonicalize-on-read).
 
     The log is hive-layout (`ingest_batch=<id>` partition dirs, one per
     micro-batch — see start_triple_stream); partition discovery adds the
     batch id as a column, and the fold aggregates it away."""
-    log = spark.read.parquet(triple_log_dir)
-    if canonicalize:
-        from ..pipeline import merge_triples
+    from ..pipeline import merge_triples
 
-        return merge_triples([log], canonicalize=True)
-    return log.groupBy("subj", "pred", "obj").agg(
-        F.sum("support").cast("long").alias("support"),
-        F.min("content_sha256").alias("content_sha256"),
-    )
+    return merge_triples([spark.read.parquet(triple_log_dir)], canonicalize=canonicalize)

@@ -97,7 +97,7 @@ def test_pagerank_checkpoint_path(spark, docs):
     expected = _numpy_pagerank(raw, iterations=9)
     got = {
         r["node"]: r["rank_ppb"]
-        for r in pagerank(edges, iterations=9, checkpoint_every=4).collect()
+        for r in pagerank(edges, iterations=9).collect()
     }
     for node, rank in expected.items():
         assert got[node] == round(rank * 1e9), node

@@ -873,6 +873,67 @@ def test_stage_metrics_hll_distinct_estimate(spark, tmp_path):
     assert store.manifest("s2")["distinct_lineage_est"] is None
 
 
+def test_stage_write_reads_nothing_back(spark, tmp_path):
+    """A stage write with a lineage column costs 4 Spark jobs: the stage
+    write, the metrics aggregate's shuffle, the one-file metrics write and
+    the collect of the metrics rows — no schema inference over the files
+    it just wrote and no read-back of its own metrics table. The manifest schema is still
+    the files' own, and the metrics table keeps its columns and types."""
+    import os
+
+    from palladian_spark.sources.checkpoint import StageStore
+
+    df = spark.range(2000).select(
+        "id", F.sha2((F.col("id") % 300).cast("string"), 256).alias("content_sha256")
+    )
+    root = str(tmp_path / "stages")
+    store = StageStore(spark, root)
+    sc = spark.sparkContext
+    group = "stage-write-job-count"
+    sc.setJobGroup(group, "StageStore.write")
+    try:
+        store.write("s", df, lineage_col="content_sha256")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+
+    base = f"{root}/s"
+    assert store.manifest("s")["schema"] == spark.read.parquet(base).schema.jsonValue()
+    metrics = spark.read.parquet(f"{base}_metrics")
+    assert metrics.dtypes == [
+        ("partition_id", "int"),
+        ("register", "bigint"),
+        ("rows", "bigint"),
+        ("lineage_non_null", "bigint"),
+        ("lineage_sum", "decimal(38,0)"),
+        ("max_rho", "int"),
+        ("level", "tinyint"),
+    ]
+    parts = [f for f in os.listdir(f"{base}_metrics") if f.startswith("part-")]
+    assert len(parts) == 1
+
+
+@pytest.mark.parametrize("code", [False, True])
+def test_staged_and_unstaged_triples_agree(spark, docs, tmp_path, code):
+    """extract_triples returns the same rows through a StageStore as
+    without one: the store only cuts lineage, it never changes a row."""
+    from palladian_spark.pipeline import documents_as_source, extract_triples
+    from palladian_spark.sources.checkpoint import StageStore
+
+    source = documents_as_source(docs)
+    store = StageStore(spark, str(tmp_path / "stages"))
+    cols = ["subj", "pred", "obj", "content_sha256", "support"]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    staged = rows(extract_triples(source, store=store, code=code))
+    assert staged
+    assert staged == rows(extract_triples(source, code=code))
+
+
 def test_pipeline_code_entities(spark, docs, tmp_path):
     """extract_triples(code=True): code-language rows contribute
     imports/defines/calls/depends-on triples alongside the mention

@@ -29,7 +29,7 @@ def test_stream_matches_batch(spark, tmp_path, doc_rows):
     from palladian_spark.streaming.pipeline import (
         compact_triples,
         start_triple_stream,
-        stream_triples_batch,
+        stream_triples,
     )
 
     in_dir = str(tmp_path / "in")
@@ -48,7 +48,7 @@ def test_stream_matches_batch(spark, tmp_path, doc_rows):
     )
     want = {
         (r["subj"], r["pred"], r["obj"], r["support"])
-        for r in stream_triples_batch(batch_docs)
+        for r in stream_triples(batch_docs)
         .groupBy("subj", "pred", "obj")
         .agg(F.sum("support").alias("support"))
         .collect()
@@ -268,7 +268,7 @@ def test_triple_log_batch_replay_idempotent(spark, tmp_path, doc_rows):
     from palladian_spark.streaming.pipeline import (
         compact_triples,
         start_triple_stream,
-        stream_triples_batch,
+        stream_triples,
     )
 
     in_dir = str(tmp_path / "in")
@@ -286,7 +286,7 @@ def test_triple_log_batch_replay_idempotent(spark, tmp_path, doc_rows):
     # documents and write them over the same ingest_batch partition,
     # exactly as write_batch would on restart-after-partial-commit
     docs = spark.read.parquet(in_dir)
-    stream_triples_batch(docs).write.mode("overwrite").parquet(
+    stream_triples(docs).write.mode("overwrite").parquet(
         f"{out_dir}/ingest_batch=0"
     )
     after = {

@@ -28,8 +28,10 @@ Behavior:
   tasks) files, while a mega-repo's salt values still spread over several
   tasks. The range bounds cost one sampling job over the StageStore
   re-read of the triples.
-- Metrics: each stage writes a `<stage>_metrics` parquet (per-partition
-  row counts) plus a manifest JSON (row count, schema, lineage hash).
+- Metrics: each stage writes a one-file `<stage>_metrics` parquet
+  (per-partition row counts, lineage non-null counts and sums, and HLL
+  registers of the lineage hash) plus a manifest JSON (row count, schema,
+  lineage hash, distinct-lineage estimate, config fingerprint).
 - Summary: one JSON line with the triple count, throughput, lineage
   violations, the sink's part files and bytes (`sink_files`,
   `sink_bytes`) and the row count of every stage.
