@@ -5,14 +5,15 @@ each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash -> CORRECTNESS_r{N}.json).
 
-Each query maps to an operator from SURVEY.md §2. Every query carries an
-oracle: SQL-expressible ops get real DuckDB reformulations (the SRP-LSH
-family is made expressible by deriving integer planes from md5 and
-projecting in fixed-point — _srp_buckets_sql); the remaining
-non-SQL-expressible deterministic ops (lookaround regex kernels,
-iterative connected components) are pinned by determinism-checked frozen
-fixtures (tools/freeze_fixtures.py) whose semantics are separately gated
-by reference goldens / parity / recall tests in pytest.
+The queries live in the ``contract`` package, one module per operator
+family (kg, code, doc, ann, relational, classify, media), each query
+registered beside its oracle by ``contract.query``; this module only
+serves that registry. Each query maps to an operator from SURVEY.md §2.
+Every query but ``media_colors`` (rows-only, a sequential per-image
+scan) carries an oracle that recomputes it independently in DuckDB;
+where the operator itself is not SQL-expressible, the oracle inlines
+only the part no SQL engine can compute (e.g. the POS vocabulary map),
+and that part is pinned separately by reference goldens in pytest.
 
 All oracle-verified outputs are integers/strings (or exact decimals as
 integer cents) so the value-hash never depends on float summation order
@@ -22,78 +23,18 @@ or rounding-mode differences between Spark and DuckDB.
 from __future__ import annotations
 
 import os
+import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 # make the package importable when the driver runs this file from /root/repo
-import sys
-
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-
-def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-# ---------------------------------------------------------------------------
-# Shared fixtures: gazetteer over the synthetic corpus vocabulary, and a
-# derived "code-like" corpus where marker words are capitalized so the
-# StringTagger candidate regex (uppercase-driven) has entities to find.
-# ---------------------------------------------------------------------------
-GAZETTEER = {
-    "spark": "ENGINE",
-    "vector": "ENGINE",
-    "stream": "ENGINE",
-    "table": "OBJECT",
-    "column": "OBJECT",
-    "row": "OBJECT",
-    "join": "OP",
-    "scan": "OP",
-    "filter": "OP",
-    "merge": "OP",
-    "sort": "OP",
-}
-
-_CAP_WORDS = ["spark", "vector", "stream", "table", "customer", "window"]
-
-# street-name stems for the doc_addresses derived corpus
-_ADDRESS_WORDS = ["Baker", "Cherry", "Oak", "Maple", "King", "Queen", "Garden", "Hill"]
-
-# term set for the scoped co-occurrence queries (substring semantics)
-_COOC_TERMS = ["filter", "join", "row", "spark", "table", "vector"]
-_BM25_QUERY = ("spark", "table", "vector")  # the fixed retrieval query
-
-# AnnotationRuleEngine fixture rules (reference grammar,
-# AnnotationRuleEngine.java:140-193): `X |` = suffix rule, matches the
-# 1-token LEFT context of a mention; CLASSIFY_THIS labels that mention.
-RULES_TEXT = "fast |\tCLASSIFY_THIS\tFAST_OP\nslow |\tCLASSIFY_THIS\tSLOW_OP"
-_RULE_OUTCOMES = [("fast", "FAST_OP"), ("slow", "SLOW_OP")]
-
-
-def _capitalized_corpus(docs: DataFrame) -> DataFrame:
-    """documents.text with marker words Title-Cased (deterministic derivation
-    of an entity-bearing corpus from the driver's synthetic table)."""
-    content = F.col("text")
-    for w in _CAP_WORDS:
-        content = F.regexp_replace(content, r"\b" + w + r"\b", w.capitalize())
-    return docs.select("doc_id", "lang", "source", content.alias("content"))
-
-
-def _doc_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gazetteer mentions over documents: (doc_id, start, end, value, tag)."""
-    from palladian_spark.operators.mentions import dictionary_mentions
-
-    docs = _read(spark, sf_dir, "documents")
-    # case_sensitive: the gazetteer is lowercase code tokens and the DuckDB
-    # oracles match \\bterm\\b case-sensitively — insensitive matching here
-    # would emit original-cased subjects the SQL side cannot reproduce on a
-    # corpus with case variants (latent divergence; none in the sf corpora)
-    return dictionary_mentions(
-        docs, GAZETTEER, text_col="text", keep_cols=["doc_id"], case_sensitive=True
-    )
+# importing a family module registers its queries
+from contract import REGISTRY, ann, classify, code, doc, kg, media, relational  # noqa: E402,F401
+from contract.common import _capitalized_corpus, _read  # noqa: E402
+from palladian_spark.pipeline import documents_as_source, extract_triples  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -101,4026 +42,24 @@ def _doc_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # provenance edges -> LSH-blocked canonicalization -> deduplicated triples).
 # ---------------------------------------------------------------------------
 def entry(spark: SparkSession) -> DataFrame:
-    from palladian_spark.pipeline import documents_as_source, extract_triples
-
     docs = _read(spark, "/root/testdata/sf0.001", "documents")
     source = documents_as_source(_capitalized_corpus(docs))
     return extract_triples(source, model=None, canonicalize=True)
 
 
-# ---------------------------------------------------------------------------
-# queries(): one entry per operator. Callables take (spark, sf_dir).
-# ---------------------------------------------------------------------------
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-    # ---- text analysis over documents (SURVEY §2.5 + curation ops) ----
-    def doc_token_counts(spark, sf_dir):
-        from palladian_spark.operators.textstats import token_counts
-
-        return token_counts(_read(spark, sf_dir, "documents"))
-
-    def doc_quality(spark, sf_dir):
-        from palladian_spark.operators.textstats import quality_counts
-
-        return quality_counts(_read(spark, sf_dir, "documents"))
-
-    def doc_language_id(spark, sf_dir):
-        from palladian_spark.operators.textstats import language_id
-
-        return language_id(_read(spark, sf_dir, "documents"))
-
-    def doc_fingerprints(spark, sf_dir):
-        from palladian_spark.operators.textstats import fingerprints
-
-        return fingerprints(_read(spark, sf_dir, "documents")).select(
-            "doc_id", "fingerprint_md5"
-        )
-
-    def doc_chunks(spark, sf_dir):
-        from palladian_spark.operators.curation import chunk_documents
-
-        out = chunk_documents(_read(spark, sf_dir, "documents"), size=500, stride=400)
-        # posexplode emits int ordinals; DuckDB generate_series emits bigint
-        return out.select("doc_id", F.col("chunk_id").cast("long").alias("chunk_id"), "chunk_text")
-
-    def doc_split(spark, sf_dir):
-        from palladian_spark.operators.curation import dataset_split
-
-        return dataset_split(_read(spark, sf_dir, "documents"))
-
-    def doc_pack_sequences(spark, sf_dir):
-        # next-fit sequence packing into 1024-token training sequences,
-        # bucket-local (md5(doc_id) shard) so the sequential fold
-        # parallelizes; full recursive-CTE DuckDB oracle
-        from palladian_spark.operators.curation import pack_sequences
-
-        return pack_sequences(_read(spark, sf_dir, "documents"), capacity=1024)
-
-    def doc_repetition(spark, sf_dir):
-        # Gopher-style within-doc repetition gate: dup-word and
-        # top-bigram fractions + keep/drop verdict, one Arrow hop
-        from palladian_spark.operators.curation import repetition_stats
-
-        return repetition_stats(_read(spark, sf_dir, "documents"))
-
-    def doc_pii_redact(spark, sf_dir):
-        # PII counts + full-masked-text hash over the deterministically
-        # PII-injected corpus (emails / ipv4 / phones planted by doc_id
-        # mod; production runs the same redactor on the raw corpus)
-        from palladian_spark.operators.curation import pii_redact, with_pii
-
-        return pii_redact(with_pii(_read(spark, sf_dir, "documents")))
-
-    def doc_term_corpus(spark, sf_dir):
-        # reference TermCorpus (AbstractTermCorpus.java idf store) as one
-        # distinct+count aggregate: (term, df, n_docs), min_df=2
-        from palladian_spark.operators.termcorpus import term_corpus
-
-        return term_corpus(_read(spark, sf_dir, "documents"))
-
-    def doc_bm25_topk(spark, sf_dir):
-        from palladian_spark.operators.termcorpus import bm25_topk
-
-        # ranked retrieval: BM25 top-k docs for the fixed query-term set
-        # (integer milli scoring — engine-exact ranking)
-        return bm25_topk(_read(spark, sf_dir, "documents"), _BM25_QUERY)
-
-    def doc_keywords(spark, sf_dir):
-        # top-3 keywords per doc by the integer tf/(df+1) rarity score
-        # (float tf-idf semantics are kernel-level, pytest-pinned against
-        # TfIdfSimilarity.java)
-        from palladian_spark.operators.termcorpus import doc_keywords as kw
-
-        return kw(_read(spark, sf_dir, "documents"))
-
-    def doc_spell_corrections(spark, sf_dir):
-        # Norvig-style spelling correction (PalladianSpellChecker.java
-        # twin): corpus-derived frequency dictionary + context bigrams,
-        # two deterministic typo families (middle-char deletion of top
-        # bigrams; double deletion of long words), corrected by the
-        # fully distributed explode+join decision procedure — distance-1
-        # with context boosts and the reference's last-put-wins
-        # tie-break, distance-2 fallback through <=10-char intermediates
-        from palladian_spark.operators.spelling import (
-            bigram_typos,
-            corpus_context,
-            corpus_dictionary,
-            correct_tokens,
-            double_deletion_typos,
-        )
-
-        docs = _read(spark, sf_dir, "documents")
-        t1 = bigram_typos(docs, top_k=150).select(
-            F.lit("bigram").alias("family"),
-            F.col("left"),
-            F.col("word").alias("orig"),
-            "token",
-        )
-        t2 = double_deletion_typos(docs).select(
-            F.lit("dist2").alias("family"),
-            F.lit(None).cast("string").alias("left"),
-            F.col("word").alias("orig"),
-            "token",
-        )
-        typos = t1.unionByName(t2)
-        res = correct_tokens(
-            typos, corpus_dictionary(docs), corpus_context(docs)
-        ).select(
-            F.col("token").alias("r_token"),
-            F.col("left").alias("r_left"),
-            "corrected",
-            "score",
-        )
-        return typos.join(
-            res,
-            (typos.token == res.r_token) & typos.left.eqNullSafe(res.r_left),
-            "left",
-        ).select(
-            "family",
-            F.col("left").alias("left_ctx"),
-            "orig",
-            "token",
-            "corrected",
-            F.col("score").cast("long").alias("score"),
-        )
-
-    def classifier_roc(spark, sf_dir):
-        # distributed ROC-AUC (RocCurves.java twin, reference unit
-        # golden) of the Naive Bayes posterior for class 'en': exact
-        # integer formulation AUC*P*N = sum over negatives of
-        # tp-so-far under the (score desc, doc asc) total order
-        from palladian_spark.operators.naive_bayes import nb_scores
-        from palladian_spark.operators.roc import roc_auc_exact
-
-        docs = _read(spark, sf_dir, "documents").withColumn(
-            "first_word", F.expr("element_at(split(text, ' '), 1)")
-        )
-        scores = nb_scores(
-            docs, "lang", "doc_id", ["source", "first_word"], ["n_chars"]
-        ).where(F.col("category") == "en")
-        labeled = scores.join(
-            docs.select("doc_id", (F.col("lang") == "en").alias("is_true")),
-            "doc_id",
-        ).select("doc_id", "is_true", F.col("score_milli").alias("score"))
-        return roc_auc_exact(labeled, "is_true", "score", "doc_id")
-
-    def nominal_classify(spark, sf_dir):
-        # co-occurrence nominal classifier (NominalClassifier.java twin,
-        # value-only count matrix incl. its cross-feature row-sharing
-        # quirk) over source + first_word, class = lang
-        from palladian_spark.operators.nominal import nominal_classify as nc
-
-        docs = _read(spark, sf_dir, "documents").withColumn(
-            "first_word", F.expr("element_at(split(text, ' '), 1)")
-        )
-        return nc(docs, "lang", "doc_id", ["source", "first_word"])
-
-    def media_pixel_colors(spark, sf_dir):
-        # nearest-named-color per sampled pixel of the real-PNG media
-        # table (ColorSpaceConverter + ImageHandler color matching
-        # twins): decode is the only Python hop; Lab + argmin run
-        # JVM-side with the same SQL expressions the oracle uses, and
-        # the oracle recomputes pixels analytically so a wrong decode
-        # fails the hash
-        from palladian_spark.operators.colors import media_pixel_colors as mpc
-        from palladian_spark.operators.multimodal import synthesize_media_table
-
-        media = synthesize_media_table(spark, _read(spark, sf_dir, "documents"))
-        return mpc(media)
-
-    def media_colors(spark, sf_dir):
-        # full detectColors greedy clustering (ImageHandler.java:977-1050
-        # twin, golden-tested kernel): top-3 distinct main colors per
-        # image; sequential per image by design -> no SQL oracle (rows
-        # check only), semantics pinned by tests/test_colors.py
-        from palladian_spark.operators.colors import detect_media_colors
-        from palladian_spark.operators.multimodal import synthesize_media_table
-
-        media = synthesize_media_table(spark, _read(spark, sf_dir, "documents"))
-        return detect_media_colors(media)
-
-    def nb_classify(spark, sf_dir):
-        # general Naive Bayes (nominal + Gaussian numeric; NaiveBayes
-        # Learner/Classifier/Model twins, reference-test-golden kernel):
-        # train on the documents table (class = lang; features source,
-        # first_word, n_chars) and classify every row; engine-exact via
-        # bigint sums + nano-int normalization + fixed-order log terms
-        from palladian_spark.operators.naive_bayes import nb_classify as nbc
-
-        docs = _read(spark, sf_dir, "documents").withColumn(
-            "first_word", F.expr("element_at(split(text, ' '), 1)")
-        )
-        return nbc(docs, "lang", "doc_id", ["source", "first_word"], ["n_chars"])
-
-    def doc_noun_phrases(spark, sf_dir):
-        # NP chunking (PhraseChunker.java interface, self-contained
-        # a?j*n+ rule over Brown tags from the Java-parity POS tagger),
-        # re-expressed as window functions; oracle mirrors the windows
-        # over the inlined token->tag map (doc_pos_tags de-pin pattern)
-        import os as _os
-
-        from palladian_spark.kernels.pos import train_pos_tagger
-        from palladian_spark.operators.chunking import noun_phrase_chunks
-        from palladian_spark.operators.pos_tagging import pos_tag_documents
-
-        corpus_path = _os.path.join(
-            _os.path.dirname(_os.path.abspath(__file__)),
-            "tests", "fixtures", "reference", "pos_train_corpus.txt",
-        )
-        with open(corpus_path, encoding="utf-8") as f:
-            model = train_pos_tagger(f.read())
-        docs = _read(spark, sf_dir, "documents")
-        tagged = pos_tag_documents(docs, model, keep_cols=["doc_id"])
-        return noun_phrase_chunks(tagged)
-
-    def feature_ranking(spark, sf_dir):
-        # chi-squared + information-gain feature rankers
-        # (ChiSquaredFeatureRanker/InformationGainFeatureRanker twins,
-        # reference-golden kernels) over three derived nominal features
-        # with lang as the target class; micro-integerized for
-        # engine-exact hashing
-        from palladian_spark.operators.featsel import feature_ranking as fr
-
-        docs = (
-            _read(spark, sf_dir, "documents")
-            .withColumn("first_word", F.expr("element_at(split(text, ' '), 1)"))
-            .withColumn("len_bucket", F.expr("length(bin(n_chars))"))
-        )
-        return fr(docs, "lang", ["source", "first_word", "len_bucket"])
-
-    def bpe_merges(spark, sf_dir):
-        # distributed BPE vocabulary training (Sennrich 2016): pair counts
-        # and merges run over the DISTINCT-WORD table, so per-round cost is
-        # vocabulary-sized, not corpus-sized; the argmax merge is a 1-row
-        # collect per round. Fully recomputed by an unrolled window-function
-        # CTE chain in DuckDB (greedy run semantics via gaps-and-islands).
-        from palladian_spark.operators.bpe import bpe_merges as _bpe
-
-        res = _bpe(_read(spark, sf_dir, "documents"), n_merges=8)
-        return res.select(
-            "merge_rank",
-            F.col("left").alias("lhs"),
-            F.col("right").alias("rhs"),
-            "pair_count",
-        )
-
-    def bpe_token_counts(spark, sf_dir):
-        # per-doc token counts under the trained 8-merge BPE vocabulary:
-        # encoding is a join against the trained word table, not a re-scan
-        from palladian_spark.operators.bpe import bpe_token_counts as _bpe_tc
-
-        return _bpe_tc(_read(spark, sf_dir, "documents"), n_merges=8)
-
-    def doc_token_hll(spark, sf_dir):
-        # per-language + max-merged ('*') HyperLogLog register tables over
-        # the token stream (2^8 registers; portable 60-bit md5 hash, rho
-        # via binary-string length — no float anywhere). The register
-        # table IS the sketch: output is bounded by langs * 256 regardless
-        # of corpus size; estimator accuracy is pytest-gated separately.
-        from palladian_spark.operators.sketches import token_hll_registers
-
-        return token_hll_registers(_read(spark, sf_dir, "documents"), p=8)
-
-    def doc_length_histogram(spark, sf_dir):
-        # log2-bucketed size profile per lang + merged '*' row - bounded
-        # output, integer bin-length buckets, one grouping-sets scan
-        from palladian_spark.operators.textstats import length_histogram
-
-        return length_histogram(_read(spark, sf_dir, "documents"))
-
-    def doc_token_cms(spark, sf_dir):
-        # count-min sketch of the token-frequency distribution: 4x1024
-        # exact counters (mergeable by sum); point-estimate accuracy is
-        # pytest-gated, the counter table is hash-verified
-        from palladian_spark.operators.sketches import token_cms
-
-        return token_cms(_read(spark, sf_dir, "documents"))
-
-    def doc_decon_bloom(spark, sf_dir):
-        # Bloom bitset over the benchmark split's 3-gram shingles - the
-        # broadcast-compact pre-filter for the decontamination gate (no
-        # false negatives; FP rate pytest-gated)
-        from palladian_spark.operators.sketches import benchmark_bloom_bits
-
-        return benchmark_bloom_bits(_read(spark, sf_dir, "documents"))
-
-    def doc_mixture_sample(spark, sf_dir):
-        # deterministic mixture sampling: per-source char budgets from
-        # integer weights (w = 1 + src_index % 3), selection = hash-ordered
-        # prefix per source. Spark runs the two-level bucket cut (no
-        # global window — see operators/mixture.py); the oracle recomputes
-        # the equivalent naive global-window formulation.
-        from palladian_spark.operators.mixture import mixture_sample
-
-        import hashlib
-
-        docs = _read(spark, sf_dir, "documents")
-        srcs = [r["source"] for r in docs.select("source").distinct().collect()]
-        # md5-derived weights: total over ARBITRARY source strings with NO
-        # parsing (review-caught: int() vs try_cast disagree on '1.5',
-        # out-of-int32 suffixes, ...). Null sources get no weight — the
-        # oracle's md5(NULL) is NULL, its wsum ignores it, and the
-        # using(source) join excludes null-source rows.
-        weights = {
-            s: 1 + int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % 3
-            for s in srcs
-            if s is not None
-        }
-        return mixture_sample(docs, weights, budget_fraction=0.4)
-
-    def doc_dup_spans(spark, sf_dir):
-        # exact substring-duplication spans (Lee et al. 2022 semantics,
-        # hash-blocked 40-grams, cross-doc only): per-doc span count +
-        # duplicated-char fraction
-        from palladian_spark.operators.curation import dup_span_stats
-
-        return dup_span_stats(_read(spark, sf_dir, "documents"))
-
-    def doc_decontaminate(spark, sf_dir):
-        # eval-leakage gate: train docs whose 3-gram shingle set is
-        # >=50% contained in a benchmark doc's (benchmark = doc_id%20==0,
-        # broadcast side — fixed-size in production)
-        from palladian_spark.operators.curation import benchmark_overlap
-
-        return benchmark_overlap(_read(spark, sf_dir, "documents"))
-
-    # ---- dedup family (SURVEY training-data ops) ----
-    def doc_exact_dedup(spark, sf_dir):
-        from palladian_spark.operators.dedup import exact_dedup
-
-        return exact_dedup(_read(spark, sf_dir, "documents")).select(
-            "doc_id", F.md5("text").alias("content_hash")
-        )
-
-    def doc_ngram_jaccard(spark, sf_dir):
-        from palladian_spark.operators.dedup import ngram_jaccard_pairs_exact
-
-        return ngram_jaccard_pairs_exact(
-            _read(spark, sf_dir, "documents"), n=3, threshold_num=1, threshold_den=5
-        )
-
-    def doc_minhash_pairs(spark, sf_dir):
-        # Oracled against EXACT shingle-Jaccard pairs: at the 0.2 threshold
-        # the banded-LSH candidate set provably contains every qualifying
-        # pair on this corpus (recall gate in pytest), and the verify step
-        # recomputes exact Jaccard, so the approximate path's output equals
-        # the exact oracle. ppm via round() (not cast-truncate) so the
-        # *1e6 of a 6-decimal double never lands one ulp below an integer.
-        from palladian_spark.operators.dedup import minhash_lsh_pairs
-
-        pairs = minhash_lsh_pairs(
-            _read(spark, sf_dir, "documents"), threshold=0.2
-        )
-        return pairs.select(
-            "doc_a",
-            "doc_b",
-            F.round(F.col("jaccard") * 1000000).cast("long").alias("jaccard_ppm"),
-        )
-
-    def doc_simhash(spark, sf_dir):
-        # portable 60-bit md5 token hash (not xxhash64) so DuckDB can
-        # recompute the identical bit votes — the xxhash64 fast path is the
-        # default in the operator and exercised by pytest.
-        from palladian_spark.operators.dedup import (
-            portable_token_hash,
-            simhash_signatures,
-        )
-
-        return simhash_signatures(
-            _read(spark, sf_dir, "documents"), bits=60, hash_fn=portable_token_hash
-        )
-
-    def doc_simhash_pairs(spark, sf_dir):
-        # banded hamming join (pigeonhole over max_hamming+1 bands, recall
-        # 1.0) — oracled against the exact all-pairs hamming filter.
-        from palladian_spark.operators.dedup import (
-            portable_token_hash,
-            simhash_pairs,
-            simhash_signatures,
-        )
-
-        # max_hamming=3 (the standard SimHash near-dup radius): pigeonhole
-        # banding splits the 60-bit signature into max_hamming+1 bands, so
-        # the band width is 60/(h+1) bits and bucket occupancy ~ n/2^width.
-        # h=6 gave 8-bit bands whose buckets hold n/256 docs — measured
-        # near-quadratic at the 10x bench (150s, 190k junk pairs); h=3
-        # gives 15-bit bands and a linear candidate regime.
-        sigs = simhash_signatures(
-            _read(spark, sf_dir, "documents"), bits=60, hash_fn=portable_token_hash
-        )
-        return simhash_pairs(sigs, max_hamming=3, bits=60)
-
-    def doc_simhash_wide_pairs(spark, sf_dir):
-        # 120-bit signature (two portable 60-bit md5-slice halves): the
-        # scale-safe variant — 4 bands x 30 bits give bucket capacity 2^30
-        # vs the 60-bit path's 2^15, so the within-bucket verify stays
-        # linear to ~10^9 docs per band value. Oracled against the exact
-        # all-pairs two-long hamming filter.
-        from palladian_spark.operators.dedup import (
-            simhash_pairs_wide,
-            simhash_signatures_wide,
-        )
-
-        sigs = simhash_signatures_wide(_read(spark, sf_dir, "documents"))
-        return simhash_pairs_wide(sigs, max_hamming=3)
-
-    # ---- mention detection (SURVEY §2.2) ----
-    def dict_mentions(spark, sf_dir):
-        return (
-            _doc_mentions(spark, sf_dir)
-            .groupBy("doc_id", "tag")
-            .agg(F.count("*").alias("n_mentions"))
-        )
-
-    def string_tagger_candidates(spark, sf_dir):
-        from palladian_spark.operators.mentions import detect_mentions
-
-        corpus = _capitalized_corpus(_read(spark, sf_dir, "documents"))
-        return detect_mentions(
-            corpus, text_col="content", tagger="candidates", keep_cols=["doc_id"]
-        )
-
-    def ner_reference_agreement(spark, sf_dir):
-        # The north-rule acceptance bar AS a contract query: train on the
-        # reference NER corpus, tag BOTH corpora, and score agreement
-        # against the FROZEN outputs of the actual Java reference tagger
-        # (tests/fixtures/reference/, produced by
-        # tools/reference_harness/build_and_run.sh). Values in basis
-        # points so the hash check pins them exactly; the oracle inlines
-        # the measured values (all >= 9975, far above the 9500 bar).
-        # Deliberately NOT a data-path operator: the corpus is a fixed-size
-        # acceptance fixture, so training/tagging runs single-threaded on
-        # the driver — the distributed twins live in operators/ner_pipeline.
-        import os as _os
-
-        from palladian_spark.kernels.evaluation import EXACT_MATCH, MUC, evaluate
-        from palladian_spark.kernels.fileformats import get_text_from_column
-        from palladian_spark.kernels.ner import tag_text, train_english
-        from palladian_spark.kernels.tagging import Annotation
-        from palladian_spark.sources.reference import reference_path
-
-        base = _os.path.dirname(_os.path.abspath(__file__))
-        # raises ReferenceTreeAbsent on a host without the reference tree
-        ref_dir = reference_path("src", "test", "resources", "ner")
-        with open(_os.path.join(ref_dir, "training.txt"), encoding="utf-8") as f:
-            model = train_english(f.read())
-
-        rows = []
-        for corpus, corpus_file, fixture in [
-            ("train", "training.txt", "ref_train_annotations.tsv"),
-            ("test", "test.txt", "ref_test_annotations.tsv"),
-        ]:
-            with open(_os.path.join(ref_dir, corpus_file), encoding="utf-8") as f:
-                text = get_text_from_column(f.read())
-            frozen = []
-            fixture_path = _os.path.join(
-                base, "tests", "fixtures", "reference", fixture
-            )
-            with open(fixture_path, encoding="utf-8") as f:
-                for line in f:
-                    s, _e, v, t = line.rstrip("\n").split("\t")
-                    frozen.append(Annotation(int(s), v, t))
-            r = evaluate(frozen, tag_text(text, model))
-            rows.append(
-                (
-                    corpus,
-                    int(r.precision(EXACT_MATCH) * 10000),
-                    int(r.recall(EXACT_MATCH) * 10000),
-                    int(r.precision(MUC) * 10000),
-                    int(r.recall(MUC) * 10000),
-                )
-            )
-        return spark.createDataFrame(
-            rows, ["corpus", "exact_p_bp", "exact_r_bp", "muc_p_bp", "muc_r_bp"]
-        )
-
-    def doc_pos_tags(spark, sf_dir):
-        # PalladianPosTagger over the documents table: model trained on the
-        # checked-in slash corpus (the same fixture the Java-parity gate
-        # uses), broadcast, one Arrow hop per batch. Tag distribution per
-        # (doc_id, tag). Oracle: inlined kernel-classified vocabulary map
-        # + independent SQL tokenize/count (see _pos_tag_map).
-        import os as _os
-
-        from palladian_spark.kernels.pos import train_pos_tagger
-        from palladian_spark.operators.pos_tagging import pos_tag_documents
-
-        corpus_path = _os.path.join(
-            _os.path.dirname(_os.path.abspath(__file__)),
-            "tests", "fixtures", "reference", "pos_train_corpus.txt",
-        )
-        with open(corpus_path, encoding="utf-8") as f:
-            model = train_pos_tagger(f.read())
-        docs = _read(spark, sf_dir, "documents")
-        return (
-            pos_tag_documents(docs, model, keep_cols=["doc_id"])
-            .groupBy("doc_id", "tag")
-            .agg(F.count("*").alias("n_tokens"))
-        )
-
-    # ---- co-occurrence edges (SURVEY §2.6, CoOccurrenceRetriever) ----
-    def doc_cooccur(spark, sf_dir):
-        # localCheckpoint: both sides of the pair self-join consume the
-        # mention UDF scan — lineage is cut so the Arrow pass runs once,
-        # and blocks are GC-reclaimed (persist would leak in CacheManager
-        # until an unpersist this lazy API cannot place)
-        m = (
-            _doc_mentions(spark, sf_dir)
-            .select("doc_id", "value")
-            .dropDuplicates()
-            .localCheckpoint(eager=False)
-        )
-        a = m.alias("a")
-        b = m.alias("b")
-        return (
-            a.join(
-                b,
-                (F.col("a.doc_id") == F.col("b.doc_id"))
-                & (F.col("a.value") < F.col("b.value")),
-            )
-            .groupBy(F.col("a.value").alias("subj"), F.col("b.value").alias("obj"))
-            .agg(F.count("*").alias("support"))
-        )
-
-    def doc_cooccur_sentence(spark, sf_dir):
-        # SENTENCE scope (CoOccurrenceRetriever.java:122-133) over the
-        # sentence-bearing derived corpus (same derivation as
-        # doc_structure); substring containment per reference semantics.
-        from palladian_spark.operators.cooccurrence import (
-            SENTENCE,
-            scoped_cooccurrences,
-        )
-
-        docs = _read(spark, sf_dir, "documents")
-        derived = docs.select(
-            "doc_id",
-            F.concat(
-                F.regexp_replace("text", " the ", ". The "),
-                F.lit(". Done"),
-            ).alias("text"),
-        )
-        return scoped_cooccurrences(derived, _COOC_TERMS, scope=SENTENCE)
-
-    def doc_cooccur_window(spark, sf_dir):
-        # CONTEXT_200_CHARS scope (CoOccurrenceRetriever.java:135-152):
-        # count of `a.{0,200}b` + `b.{0,200}a` regex matches.
-        from palladian_spark.operators.cooccurrence import (
-            CONTEXT_WINDOW,
-            scoped_cooccurrences,
-        )
-
-        docs = _read(spark, sf_dir, "documents")
-        return scoped_cooccurrences(docs, _COOC_TERMS, scope=CONTEXT_WINDOW, window=200)
-
-    # ---- full KG triples (north-rule pipeline; rows-only) ----
-    def kg_triples(spark, sf_dir):
-        from palladian_spark.pipeline import documents_as_source, extract_triples
-
-        docs = _read(spark, sf_dir, "documents")
-        source = documents_as_source(_capitalized_corpus(docs))
-        return extract_triples(source, model=None, canonicalize=True)
-
-    def kg_triples_incremental(spark, sf_dir):
-        # Incremental-ingest equivalence, machine-checked: build triples
-        # per disjoint document batch (canonicalize=False), merge with
-        # pipeline.merge_triples (additive supports + value-set
-        # re-canonicalization), and compare against the SAME full-
-        # recompute DuckDB oracle as kg_triples. The 100 TB daily-ingest
-        # shape: old content is never re-scanned.
-        from palladian_spark.pipeline import (
-            documents_as_source,
-            extract_triples,
-            merge_triples,
-        )
-
-        docs = _read(spark, sf_dir, "documents")
-        source = documents_as_source(_capitalized_corpus(docs))
-        parts = [
-            extract_triples(
-                source.where(F.pmod(F.xxhash64("path"), F.lit(2)) == i),
-                model=None,
-                canonicalize=False,
-            )
-            for i in (0, 1)
-        ]
-        return merge_triples(parts, canonicalize=True)
-
-    def doc_dates_normalized(spark, sf_dir):
-        # date normalization (reference extraction/date DateParserLogic
-        # semantics, golden-pinned kernel): a deterministic date-bearing
-        # corpus derived from doc_id runs through the FULL ordered
-        # find-and-mask tagger loop + per-format normalization; the
-        # DuckDB oracle re-derives the same strings arithmetically and
-        # normalizes them INDEPENDENTLY via strptime. Days are kept in
-        # 13..28 so the EU/USA/ISO family attribution is unambiguous.
-        from palladian_spark.operators.dates import normalize_dates
-
-        docs = _read(spark, sf_dir, "documents")
-        months = F.array(*[F.lit(m) for m in [
-            "January", "February", "March", "April", "May", "June",
-            "July", "August", "September", "October", "November", "December",
-        ]])
-        dd = (F.col("doc_id") % 16 + 13).cast("int")
-        mm = (F.col("doc_id") % 12 + 1).cast("int")
-        h = (F.col("doc_id") % 10).cast("int")
-        d4 = (F.col("doc_id") % 7 + 13).cast("int")
-        cyr = (F.col("doc_id") % 200 + 1900).cast("int")
-        derived = docs.select(
-            "doc_id",
-            F.format_string(
-                "released 2021-03-%02dT0%d:1%d:2%d then %02d/%02d/2022 "
-                "also %02d.%02d.1999 and %s %dth, 2005 in %d",
-                dd, h, h, h, mm, dd, dd, mm, F.element_at(months, mm), d4, cyr,
-            ).alias("content"),
-        )
-        out = normalize_dates(derived, text_col="content", keep_cols=["doc_id"])
-        return out.select(
-            "doc_id", "value", "fmt", "year", "month", "day",
-            "hour", "minute", "second", "ts",
-        )
-
-    def doc_coordinates(spark, sf_dir):
-        # geo-coordinate extraction (reference extraction/location/
-        # CoordinateTagger.java, kernel golden-pinned vs the reference's
-        # own CoordinateTaggerTest cases): a deterministic coordinate-
-        # bearing corpus derived from doc_id carries one decimal-degree
-        # pair and one DMS pair per doc; the DuckDB oracle re-derives the
-        # strings and converts to microdegrees INDEPENDENTLY (integer
-        # arithmetic for the decimal form, the same left-to-right IEEE
-        # double expression + portable floor(x*1e6 + 0.5) for DMS).
-        from palladian_spark.operators.geo import tag_coordinates
-
-        docs = _read(spark, sf_dir, "documents")
-        did = F.col("doc_id")
-        latd = (did % 90).cast("int")
-        latf = (did * 13 % 100).cast("int")
-        lngd = (did * 3 % 180).cast("int")
-        lngf = (did * 7 % 100).cast("int")
-        ns = F.when(did % 2 == 0, F.lit("N")).otherwise(F.lit("S"))
-        ew = F.when(did % 3 == 0, F.lit("W")).otherwise(F.lit("E"))
-        mm1 = (did % 60).cast("int")
-        ss1 = (did * 7 % 60).cast("int")
-        mm2 = (did * 11 % 60).cast("int")
-        ss2 = (did * 17 % 60).cast("int")
-        derived = docs.select(
-            "doc_id",
-            F.format_string(
-                "site %d.%02d%s %d.%02d%s near "
-                "%d°%d′%d″%s %d°%d′%d″%s end",
-                latd, latf, ns, lngd, lngf, ew,
-                latd, mm1, ss1, ns, lngd, mm2, ss2, ew,
-            ).alias("content"),
-        )
-        return tag_coordinates(derived, text_col="content", keep_cols=["doc_id"])
-
-    def doc_addresses(spark, sf_dir):
-        # street + house-number extraction (reference extraction/location/
-        # AddressTagger.java, kernel golden-pinned against the reference's
-        # own AddressTaggerTest incl. the XML fixture corpus): derived
-        # address-bearing corpus, arithmetic DuckDB oracle (the template
-        # makes every span position and value a pure function of doc_id).
-        from palladian_spark.operators.geo import tag_addresses
-
-        docs = _read(spark, sf_dir, "documents")
-        did = F.col("doc_id")
-        words = F.array(*[F.lit(w) for w in _ADDRESS_WORDS])
-        w1 = F.element_at(words, (did % 8 + 1).cast("int"))
-        w2 = F.element_at(words, ((did * 3 + 1) % 8 + 1).cast("int"))
-        n1 = (did % 400 + 1).cast("int")
-        n2 = (did * 7 % 90 + 1).cast("int")
-        derived = docs.select(
-            "doc_id",
-            F.format_string(
-                "visit %s Street %d and %d %s Road soon", w1, n1, n2, w2
-            ).alias("content"),
-        )
-        return tag_addresses(derived, text_col="content", keep_cols=["doc_id"])
-
-    def doc_dup_clusters(spark, sf_dir):
-        # duplicate clusters = connected components over exact-Jaccard
-        # near-dup pairs (exact pairs here for full SQL oracle-ability; at
-        # 100 TB feed minhash_lsh_pairs as the edge list — CC is agnostic
-        # to the pair generator). Deliberately runs the DISTRIBUTED
-        # contraction rounds to an empty edge set (small_graph_edges=0), so
-        # the at-scale CC path itself is hash-verified against an independent
-        # DuckDB recursive-CTE transitive closure (min reachable node).
-        # doc ids are zero-padded to width 12 before CC so the operator's
-        # lexicographic min equals numeric min.
-        from palladian_spark.operators.canonicalize import connected_components
-        from palladian_spark.operators.dedup import ngram_jaccard_pairs_exact
-
-        pairs = ngram_jaccard_pairs_exact(
-            _read(spark, sf_dir, "documents"), n=3, threshold_num=1, threshold_den=5
-        )
-        edges = pairs.select(
-            F.lpad(F.col("doc_a").cast("string"), 12, "0").alias("left_value"),
-            F.lpad(F.col("doc_b").cast("string"), 12, "0").alias("right_value"),
-        )
-        comp = connected_components(edges, small_graph_edges=0)
-        return comp.select(
-            F.col("value").cast("long").alias("doc_id"),
-            F.col("component").cast("long").alias("cluster"),
-        )
-
-    def doc_stratified_sample(spark, sf_dir):
-        from palladian_spark.operators.curation import stratified_sample
-
-        return stratified_sample(
-            _read(spark, sf_dir, "documents"), strata_col="source", k=10
-        )
-
-    def doc_curation_report(spark, sf_dir):
-        # the ship-it verdict table: every doc-side gate (quality,
-        # repetition, exact/near dedup, decontamination, PII counts)
-        # joined into one keep/drop row per document - the text twin of
-        # code_curation_report. Oracle composes the component gates'
-        # independent oracles verbatim (nested WITH subqueries).
-        from palladian_spark.operators.curation import curation_report
-
-        return curation_report(_read(spark, sf_dir, "documents"))
-
-    def doc_dedup_near(spark, sf_dir):
-        # the actual curation ACTION over doc_dup_clusters' output: keep
-        # the cluster-min representative + every unclustered doc. Uses the
-        # default size-gated (driver-local union-find) CC path, so between
-        # this query and doc_dup_clusters BOTH physical CC strategies are
-        # value-verified against independent SQL.
-        from palladian_spark.operators.curation import near_dup_kept
-
-        return near_dup_kept(_read(spark, sf_dir, "documents"))
-
-    # ---- KG graph analytics (graph-materialize consumers: degree /
-    # PageRank salience over the bipartite doc<->entity mention graph) ----
-    def kg_degree_stats(spark, sf_dir):
-        from palladian_spark.operators.graph import degree_stats, mention_edges
-
-        return degree_stats(
-            mention_edges(_read(spark, sf_dir, "documents"), list(GAZETTEER))
-        )
-
-    def kg_training_pairs(spark, sf_dir):
-        # deterministic corrupt-tail negative sampling over the mention
-        # graph's directed edges - the KG-embedding training-data step;
-        # hash-chosen tails make the sample a pure function of the graph
-        from palladian_spark.operators.graph import (
-            link_training_pairs,
-            mention_edges,
-        )
-
-        return link_training_pairs(
-            mention_edges(_read(spark, sf_dir, "documents"), list(GAZETTEER)),
-            k_negatives=3,
-        )
-
-    def kg_label_prop(spark, sf_dir):
-        # synchronous weighted label propagation (4 rounds) over the
-        # mention graph - community detection beside components/PageRank;
-        # deterministic (sync updates, integer vote sums, lexicographic
-        # ties), oracle = unrolled rounds over the same sym relation
-        from palladian_spark.operators.graph import (
-            label_propagation,
-            mention_edges,
-        )
-
-        return label_propagation(
-            mention_edges(_read(spark, sf_dir, "documents"), list(GAZETTEER)),
-            iterations=4,
-        )
-
-    def kg_pagerank(spark, sf_dir):
-        from palladian_spark.operators.graph import mention_edges, pagerank
-
-        return pagerank(
-            mention_edges(_read(spark, sf_dir, "documents"), list(GAZETTEER)),
-            iterations=5,
-        )
-
-    # ---- source-code entity extraction (north-rule input shape: the
-    # Iceberg source-code table; lang-dispatched pure-JVM regexp ops) ----
-    def code_imports(spark, sf_dir):
-        from palladian_spark.operators.code import code_corpus, extract_code_entities
-
-        ents = extract_code_entities(
-            code_corpus(_read(spark, sf_dir, "documents"))
-        )
-        return (
-            ents.where(F.col("pred") == "imports")
-            .groupBy("repo", "path", "lang", F.col("obj").alias("module"))
-            .agg(F.count(F.lit(1)).alias("n_refs"))
-        )
-
-    def code_defs(spark, sf_dir):
-        from palladian_spark.operators.code import code_corpus, extract_code_entities
-
-        ents = extract_code_entities(
-            code_corpus(_read(spark, sf_dir, "documents"))
-        )
-        return (
-            ents.where(F.col("pred").startswith("defines-"))
-            .groupBy(
-                "repo",
-                "path",
-                "lang",
-                F.expr("substring(pred, 9)").alias("kind"),
-                F.col("obj").alias("symbol"),
-            )
-            .agg(F.count(F.lit(1)).alias("n_refs"))
-        )
-
-    def code_triples(spark, sf_dir):
-        from palladian_spark.operators.code import code_corpus
-        from palladian_spark.operators.code import code_triples as _code_triples
-
-        return _code_triples(code_corpus(_read(spark, sf_dir, "documents")))
-
-    # ---- cross-file resolution over the code entity table: call graph,
-    # entity linking (north-rule stage 2 over code symbols), repo
-    # dependency similarity, and mention-graph triangles ----
-    def code_call_graph(spark, sf_dir):
-        from palladian_spark.operators.code import code_corpus, resolve_calls
-
-        return resolve_calls(code_corpus(_read(spark, sf_dir, "documents")))
-
-    def code_entity_link(spark, sf_dir):
-        from palladian_spark.operators.code import code_corpus, link_call_entities
-
-        return link_call_entities(code_corpus(_read(spark, sf_dir, "documents")))
-
-    def repo_shared_deps(spark, sf_dir):
-        from palladian_spark.operators.code import (
-            code_corpus,
-            repo_shared_deps as _repo_shared_deps,
-        )
-
-        return _repo_shared_deps(code_corpus(_read(spark, sf_dir, "documents")))
-
-    def kg_triangles(spark, sf_dir):
-        from palladian_spark.operators.graph import triangle_counts
-
-        # edges = the doc_cooccur entity co-occurrence projection (subj,
-        # obj); triangle_counts canonicalizes/dedups internally
-        return triangle_counts(doc_cooccur(spark, sf_dir))
-
-    q["code_imports"] = code_imports
-    q["code_defs"] = code_defs
-    q["code_triples"] = code_triples
-    def kg_link_prediction(spark, sf_dir):
-        from palladian_spark.operators.code import call_edges, code_corpus
-        from palladian_spark.operators.graph import common_neighbor_scores
-
-        # propose missing call-graph edges: non-adjacent files sharing
-        # >= 2 neighbors, scored by integer-thousandths Jaccard (the
-        # entity co-occurrence graph is near-complete at contract scale,
-        # so the sparse file graph is the meaningful edge source)
-        return common_neighbor_scores(
-            call_edges(code_corpus(_read(spark, sf_dir, "documents")))
-        )
-
-    def kg_neighborhood(spark, sf_dir):
-        from palladian_spark.operators.code import call_edges, code_corpus
-        from palladian_spark.operators.graph import k_hop_counts
-
-        # depth-2 neighborhood size per file node (WordDB traversal twin)
-        return k_hop_counts(
-            call_edges(code_corpus(_read(spark, sf_dir, "documents"))), k=2
-        )
-
-    q["code_call_graph"] = code_call_graph
-    q["code_entity_link"] = code_entity_link
-    q["repo_shared_deps"] = repo_shared_deps
-    q["kg_triangles"] = kg_triangles
-    def code_exact_dupes(spark, sf_dir):
-        from palladian_spark.operators.code import code_corpus, duplicate_files
-
-        return duplicate_files(code_corpus(_read(spark, sf_dir, "documents")))
-
-    def code_components(spark, sf_dir):
-        # connected components over the call-file graph — the DISTRIBUTED
-        # contraction rounds (small_graph_edges=0), verified
-        # against an independent recursive-CTE transitive closure (same
-        # posture as doc_dup_clusters)
-        from palladian_spark.operators.canonicalize import connected_components
-        from palladian_spark.operators.code import call_edges, code_corpus
-
-        e = call_edges(code_corpus(_read(spark, sf_dir, "documents")))
-        edges = e.select(
-            F.col("subj").alias("left_value"), F.col("obj").alias("right_value")
-        )
-        comp = connected_components(edges, small_graph_edges=0)
-        return comp.select(
-            F.col("value").alias("file"), F.col("component")
-        )
-
-    q["kg_link_prediction"] = kg_link_prediction
-    q["kg_neighborhood"] = kg_neighborhood
-    def code_triples_incremental(spark, sf_dir):
-        # incremental-ingest equivalence on the CODE side: per-batch
-        # code_triples over disjoint file sets merge additively
-        # (file-grain groups never straddle batches; repo-grain
-        # depends-on supports sum; lineage folds as min) — compared
-        # against the SAME full-recompute oracle as code_triples
-        from palladian_spark.operators.code import code_corpus
-        from palladian_spark.operators.code import code_triples as _code_triples
-
-        docs = _read(spark, sf_dir, "documents")
-        parts = [
-            _code_triples(code_corpus(docs.where(F.col("doc_id") % 2 == par)))
-            for par in (0, 1)
-        ]
-        return (
-            parts[0]
-            .unionByName(parts[1])
-            .groupBy("subj", "pred", "obj")
-            .agg(
-                F.min("content_sha256").alias("content_sha256"),
-                F.sum("support").alias("support"),
-            )
-        )
-
-    def kg_stats(spark, sf_dir):
-        # the per-predicate metrics roll-up a KG build reports (triple
-        # counts, entity cardinalities, support mass) over the flagship
-        # pipeline's output
-        return (
-            kg_triples(spark, sf_dir)
-            .groupBy("pred")
-            .agg(
-                F.count(F.lit(1)).alias("n_triples"),
-                F.countDistinct("subj").alias("n_subjects"),
-                F.countDistinct("obj").alias("n_objects"),
-                F.sum("support").alias("total_support"),
-            )
-        )
-
-    q["code_exact_dupes"] = code_exact_dupes
-    q["code_components"] = code_components
-    def kg_clustering(spark, sf_dir):
-        from palladian_spark.operators.code import call_edges, code_corpus
-        from palladian_spark.operators.graph import clustering_coefficients
-
-        # local clustering coefficient per file node over the call graph
-        return clustering_coefficients(
-            call_edges(code_corpus(_read(spark, sf_dir, "documents")))
-        )
-
-    def code_pagerank(spark, sf_dir):
-        from palladian_spark.operators.code import call_edges, code_corpus
-        from palladian_spark.operators.graph import pagerank
-
-        # file salience over the resolved call graph: weight = number of
-        # (caller fn -> defining file) resolutions between the file pair.
-        # Same iteration strategy as kg_pagerank (edge table partitioned
-        # once on src, rank vector the only per-iteration shuffle).
-        e = (
-            call_edges(code_corpus(_read(spark, sf_dir, "documents")))
-            .groupBy(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-            .agg(F.count(F.lit(1)).alias("weight"))
-        )
-        return pagerank(e, iterations=5)
-
-    # ---- code curation: type-2 clones, license gate, secret scan (the
-    # canonical pre-training curation stages over the code table; the
-    # license/secret content is injected deterministically by
-    # augment_corpus per BASELINE.json's synthesize-at-small-scale rule) ----
-    def _aug_corpus(spark, sf_dir):
-        from palladian_spark.operators.code import code_corpus
-        from palladian_spark.operators.code_curation import augment_corpus
-
-        return augment_corpus(code_corpus(_read(spark, sf_dir, "documents")))
-
-    def code_clone_groups(spark, sf_dir):
-        from palladian_spark.operators.code_curation import clone_groups
-
-        return clone_groups(_aug_corpus(spark, sf_dir))
-
-    def code_licenses(spark, sf_dir):
-        from palladian_spark.operators.code_curation import license_report
-
-        return license_report(_aug_corpus(spark, sf_dir))
-
-    def code_secret_hits(spark, sf_dir):
-        from palladian_spark.operators.code_curation import secret_hits
-
-        return secret_hits(_aug_corpus(spark, sf_dir))
-
-    def code_fork_pairs(spark, sf_dir):
-        # repo-level fork detection over the fork-injected corpus:
-        # blob-sha containment between repo pairs, boilerplate-blob
-        # degree cap mirrored in the oracle
-        from palladian_spark.operators.code import code_corpus
-        from palladian_spark.operators.code_curation import fork_pairs, with_forks
-
-        return fork_pairs(with_forks(code_corpus(_read(spark, sf_dir, "documents"))))
-
-    def code_curation_report(spark, sf_dir):
-        # per-repo keep/drop funnel over the fully augmented corpus
-        # (licenses + secrets + forks): exact dups, type-2 clones,
-        # secrets, copyleft files, verdict
-        from palladian_spark.operators.code_curation import (
-            curation_report,
-            with_forks,
-        )
-
-        return curation_report(with_forks(_aug_corpus(spark, sf_dir)))
-
-    def code_quality(spark, sf_dir):
-        # StarCoder-class per-file quality gates over the corpus with
-        # generated-banner and long-line injection: line stats, alnum
-        # fraction, keep/drop verdict
-        from palladian_spark.operators.code import code_corpus
-        from palladian_spark.operators.code_curation import (
-            code_quality as quality,
-        )
-        from palladian_spark.operators.code_curation import with_generated
-
-        return quality(with_generated(code_corpus(_read(spark, sf_dir, "documents"))))
-
-    def code_latest_snapshot(spark, sf_dir):
-        # Iceberg-style latest-snapshot view over the history-injected
-        # multi-commit table: one live row per (repo, path) with its
-        # superseded-version count — ONE (repo, path) window shuffle
-        from palladian_spark.operators.code import code_corpus
-        from palladian_spark.operators.code_curation import (
-            latest_snapshot,
-            with_history,
-        )
-
-        return latest_snapshot(
-            with_history(code_corpus(_read(spark, sf_dir, "documents")))
-        )
-
-    def code_near_clones(spark, sf_dir):
-        # type-3 near-clones (token-set Jaccard >= 0.6, prefix-filtered);
-        # the oracle twin is ALL-PAIRS, so a green row proves the Spark
-        # prefix filter lossless, not just self-consistent
-        from palladian_spark.operators.code import code_corpus
-        from palladian_spark.operators.code_curation import near_clone_pairs
-
-        return near_clone_pairs(code_corpus(_read(spark, sf_dir, "documents")))
-
-    def code_docstrings(spark, sf_dir):
-        # documented-by triples: doc comments injected on every DOC_MOD-th
-        # file, extracted by per-language patterns (python docstring,
-        # go Package comment, /*..*/ blocks) — zero-shuffle scan projection
-        from palladian_spark.operators.code import code_corpus
-        from palladian_spark.operators.code_enrich import (
-            doc_triples,
-            with_docstrings,
-        )
-
-        return doc_triples(with_docstrings(code_corpus(_read(spark, sf_dir, "documents"))))
-
-    def code_test_links(spark, sf_dir):
-        # tests triples: test twins injected for every TEST_MOD-th file,
-        # then linked back to their source file by the tests/test_<id>
-        # path convention (equi-join on (repo, file-id), unique per side)
-        from palladian_spark.operators.code import code_corpus
-        from palladian_spark.operators.code_enrich import test_links, with_tests
-
-        return test_links(with_tests(code_corpus(_read(spark, sf_dir, "documents"))))
-
-    def code_winnow_pairs(spark, sf_dir):
-        # MOSS winnowing (Schleimer et al. 2003): partial-copy pairs via
-        # shared window-min k-gram fingerprints; the oracle recomputes
-        # selection through an independent SQL window-function formulation
-        from palladian_spark.operators.code import code_corpus
-        from palladian_spark.operators.winnow import winnow_pairs
-
-        return winnow_pairs(code_corpus(_read(spark, sf_dir, "documents")))
-
-    def kg_export_nodes(spark, sf_dir):
-        # graph-materialize handoff: node dictionary with portable
-        # two-long (120-bit) md5 ids + in/out degree over the code
-        # triple graph (GraphFrames-style consumption shape)
-        from palladian_spark.operators.code import code_corpus, code_triples
-        from palladian_spark.operators.graph import export_nodes
-
-        return export_nodes(code_triples(code_corpus(_read(spark, sf_dir, "documents"))))
-
-    def kg_export_edges(spark, sf_dir):
-        # id-keyed edge list: ids recomputed per row (pure projection,
-        # no node-dictionary join), so the export never shuffles
-        from palladian_spark.operators.code import code_corpus, code_triples
-        from palladian_spark.operators.graph import export_edges
-
-        return export_edges(code_triples(code_corpus(_read(spark, sf_dir, "documents"))))
-
-    def code_api_usage(spark, sf_dir):
-        # cross-repo module popularity: per (lang, module) distinct-repo /
-        # distinct-file / total-mention counts — the dependency-entity
-        # ranking table (aggregate-only; no cross-repo join)
-        from palladian_spark.operators.code import code_corpus
-        from palladian_spark.operators.code_enrich import api_usage
-
-        return api_usage(code_corpus(_read(spark, sf_dir, "documents")))
-
-    q["code_triples_incremental"] = code_triples_incremental
-    q["kg_stats"] = kg_stats
-    q["kg_clustering"] = kg_clustering
-    q["code_pagerank"] = code_pagerank
-    q["code_clone_groups"] = code_clone_groups
-    q["code_near_clones"] = code_near_clones
-    q["code_fork_pairs"] = code_fork_pairs
-    q["code_curation_report"] = code_curation_report
-    q["code_quality"] = code_quality
-    q["code_latest_snapshot"] = code_latest_snapshot
-    q["code_docstrings"] = code_docstrings
-    q["code_test_links"] = code_test_links
-    q["code_api_usage"] = code_api_usage
-    q["code_winnow_pairs"] = code_winnow_pairs
-    q["kg_export_nodes"] = kg_export_nodes
-    q["kg_export_edges"] = kg_export_edges
-    q["code_licenses"] = code_licenses
-    q["code_secret_hits"] = code_secret_hits
-
-    # ---- KG query surface: BGP / shape validation / walk corpus ----
-    def _bgp_triples_df(spark, sf_dir):
-        # the BGP triple universe: code triples + the resolved call graph
-        # as 'calls-file' edges (single source of truth for kg_bgp_query
-        # and kg_path_query — mirrors the oracle's bgp_triples CTE)
-        from palladian_spark.operators.code import call_edges, code_corpus
-        from palladian_spark.operators.code import code_triples as _ct
-
-        corpus = code_corpus(_read(spark, sf_dir, "documents"))
-        return (
-            _ct(corpus)
-            .select("subj", "pred", "obj")
-            .unionByName(
-                call_edges(corpus).select(
-                    "subj", F.lit("calls-file").alias("pred"), "obj"
-                )
-            )
-        )
-
-    def kg_bgp_query(spark, sf_dir):
-        from palladian_spark.operators.kg_query import (
-            BGP_CALL_CHAIN,
-            BGP_CALL_CHAIN_NEQ,
-            bgp_query,
-        )
-
-        # the declarative read path over the materialized KG: triple
-        # patterns compiled to selectivity-ordered joins (SPARQL BGP
-        # semantics, distinct bindings)
-        return bgp_query(
-            _bgp_triples_df(spark, sf_dir),
-            BGP_CALL_CHAIN,
-            neq=BGP_CALL_CHAIN_NEQ,
-        )
-
-    def kg_validate(spark, sf_dir):
-        from palladian_spark.operators.code import code_corpus
-        from palladian_spark.operators.code import code_triples as _ct
-        from palladian_spark.operators.kg_query import (
-            KG_FUNCTIONAL_PREDS,
-            KG_LITERAL_SHAPES,
-            KG_REF_PREDS,
-            validate_triples,
-        )
-
-        # SHACL-lite shape report over the code KG: multi-class files
-        # (functional), unresolvable dependencies (dangling = external),
-        # malformed import identifiers
-        triples = _ct(code_corpus(_read(spark, sf_dir, "documents")))
-        return validate_triples(
-            triples.select("subj", "pred", "obj"),
-            functional=KG_FUNCTIONAL_PREDS,
-            ref=KG_REF_PREDS,
-            literal_shapes=KG_LITERAL_SHAPES,
-        )
-
-    def kg_walks(spark, sf_dir):
-        from palladian_spark.operators.code import call_edges, code_corpus
-        from palladian_spark.operators.kg_query import random_walks
-
-        # deterministic DeepWalk corpus over the call graph: successor at
-        # each step picked by a portable md5 hash, so the oracle (and any
-        # resumed run) regenerates the identical walk set
-        return random_walks(
-            call_edges(code_corpus(_read(spark, sf_dir, "documents"))),
-            walk_length=4,
-            walks_per_node=1,
-        )
-
-    def kg_snapshot_diff(spark, sf_dir):
-        from palladian_spark.operators.code import code_corpus
-        from palladian_spark.operators.code import code_triples as _ct
-        from palladian_spark.operators.kg_query import diff_triples
-
-        # incremental-maintenance delta between two ingest windows (75%
-        # overlap): added / removed / support-changed triples only — the
-        # per-batch report the merge_triples path emits alongside the
-        # additive fold
-        docs = _read(spark, sf_dir, "documents")
-        old = _ct(code_corpus(docs.where(F.col("doc_id") % 4 != 3)))
-        new = _ct(code_corpus(docs.where(F.col("doc_id") % 4 != 0)))
-        return diff_triples(
-            old.select("subj", "pred", "obj", "support"),
-            new.select("subj", "pred", "obj", "support"),
-        )
-
-    def _code_spo(spark, sf_dir):
-        from palladian_spark.operators.code import code_corpus
-        from palladian_spark.operators.code import code_triples as _ct
-
-        return _ct(code_corpus(_read(spark, sf_dir, "documents"))).select(
-            "subj", "pred", "obj"
-        )
-
-    def kg_node_types(spark, sf_dir):
-        from palladian_spark.operators.kg_query import infer_node_types
-
-        # ontology induction: majority predicate-participation vote per
-        # node with a deterministic tie-break (typed nodes for export)
-        return infer_node_types(_code_spo(spark, sf_dir))
-
-    def kg_schema(spark, sf_dir):
-        from palladian_spark.operators.kg_query import (
-            infer_node_types,
-            schema_graph,
-        )
-
-        # the induced schema summary: triples per (subj_type, pred,
-        # obj_type) under the inferred node typing
-        spo = _code_spo(spark, sf_dir)
-        return schema_graph(spo, infer_node_types(spo))
-
-    q["kg_bgp_query"] = kg_bgp_query
-    q["kg_validate"] = kg_validate
-    q["kg_walks"] = kg_walks
-    q["kg_snapshot_diff"] = kg_snapshot_diff
-    q["kg_node_types"] = kg_node_types
-    q["kg_schema"] = kg_schema
-
-    def kg_pmi_edges(spark, sf_dir):
-        from palladian_spark.operators.graph import pmi_edges
-
-        # PMI-weighted entity co-occurrence (marginal-normalized relation
-        # strength over the gazetteer mention presence table)
-        return pmi_edges(
-            _doc_mentions(spark, sf_dir).select("doc_id", "value"),
-            _read(spark, sf_dir, "documents"),
-        )
-
-    def kg_reachability(spark, sf_dir):
-        from palladian_spark.operators.code import call_edges, code_corpus
-        from palladian_spark.operators.graph import bfs_distances
-
-        # min-distance pairs to depth 3 over the directed call graph —
-        # the pair-grain traversal surface (WordDB getRelatedWords twin)
-        return bfs_distances(
-            call_edges(code_corpus(_read(spark, sf_dir, "documents"))),
-            max_hops=3,
-        )
-
-    def kg_triple_history(spark, sf_dir):
-        from palladian_spark.operators.code import code_corpus
-        from palladian_spark.operators.code import code_triples as _ct
-        from palladian_spark.operators.kg_query import triple_history
-
-        # temporal-KG fold: first-seen / last-seen / liveness per triple
-        # across three overlapping ingest generations (gen g drops the
-        # doc_id % 4 == g slice; gen 2 is live)
-        docs = _read(spark, sf_dir, "documents")
-        gens = [
-            (
-                g,
-                _ct(code_corpus(docs.where(F.col("doc_id") % 4 != g))).select(
-                    "subj", "pred", "obj"
-                ),
-            )
-            for g in (0, 1, 2)
-        ]
-        return triple_history(gens, last_gen=2)
-
-    def kg_describe(spark, sf_dir):
-        from palladian_spark.operators.kg_query import describe_hubs
-
-        # SPARQL-DESCRIBE for the top-5 hub nodes: full adjacency
-        # (direction, pred, counterpart, support), deterministic hub pick
-        return describe_hubs(_code_spo(spark, sf_dir), top_n=5)
-
-    def kg_path_query(spark, sf_dir):
-        from palladian_spark.operators.kg_query import (
-            BGP_PATH_QUERY,
-            BGP_PATH_QUERY_NEQ,
-            bgp_query,
-        )
-
-        # SPARQL 1.1 property path: `?a calls-file+ ?c . ?c
-        # defines-class ?k` — the transitive-closure pattern compiled to
-        # a bounded BFS scan joined like any other pattern
-        return bgp_query(
-            _bgp_triples_df(spark, sf_dir),
-            BGP_PATH_QUERY,
-            neq=BGP_PATH_QUERY_NEQ,
-            max_path_hops=3,
-        )
-
-    def kg_weighted_walks(spark, sf_dir):
-        from palladian_spark.operators.code import call_edges, code_corpus
-        from palladian_spark.operators.kg_query import weighted_random_walks
-
-        # node2vec-style weighted walk corpus: successor probability
-        # proportional to call count, chosen by the portable hash over
-        # cumulative-weight intervals — deterministic and oracle-exact
-        e = (
-            call_edges(code_corpus(_read(spark, sf_dir, "documents")))
-            .groupBy("subj", "obj")
-            .agg(F.count(F.lit(1)).alias("weight"))
-        )
-        return weighted_random_walks(e, walk_length=4, walks_per_node=1)
-
-    def kg_export_ntriples(spark, sf_dir):
-        from palladian_spark.operators.graph import export_ntriples
-
-        # RDF interchange: N-Triples lines with md5-minted IRIs + one
-        # escaped label literal per node
-        return export_ntriples(_code_spo(spark, sf_dir))
-
-    def kg_walk_pairs(spark, sf_dir):
-        from palladian_spark.operators.code import call_edges, code_corpus
-        from palladian_spark.operators.kg_query import (
-            random_walks,
-            walk_skipgram_pairs,
-        )
-
-        # node2vec training positives: skip-gram (center, context) pairs
-        # from the deterministic walk corpus, window 2
-        walks = random_walks(
-            call_edges(code_corpus(_read(spark, sf_dir, "documents"))),
-            walk_length=4,
-            walks_per_node=1,
-        )
-        return walk_skipgram_pairs(walks, window=2)
-
-    q["kg_pmi_edges"] = kg_pmi_edges
-    q["kg_reachability"] = kg_reachability
-    q["kg_triple_history"] = kg_triple_history
-    q["kg_describe"] = kg_describe
-    q["kg_path_query"] = kg_path_query
-    q["kg_weighted_walks"] = kg_weighted_walks
-    q["kg_export_ntriples"] = kg_export_ntriples
-    q["kg_walk_pairs"] = kg_walk_pairs
-
-    # ---- canonicalization (SURVEY §2.7; LSH + JW + connected components) ----
-    def canonicalize_mentions(spark, sf_dir):
-        from palladian_spark.operators.canonicalize import canonicalize_values
-
-        values = _doc_mentions(spark, sf_dir).select("value")
-        return canonicalize_values(values, threshold=0.85)
-
-    # ---- ANN / embeddings ----
-    def ann_topk(spark, sf_dir):
-        from palladian_spark.operators.similarity_search import brute_force_topk
-
-        emb = _read(spark, sf_dir, "embeddings").withColumn(
-            "embedding", F.col("embedding").cast("array<double>")
-        )
-        qset = emb.where(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        res = brute_force_topk(emb, qset, k=5)
-        return res.select("query_id", "vec_id", F.col("rank").alias("rnk"))
-
-    def ann_lsh_topk(spark, sf_dir):
-        # SRP-LSH bucketed top-k — the corpus-vs-corpus scale path; recall
-        # vs the exact baseline is gated in pytest
-        # (tests/test_spark_operators.py::test_lsh_topk_recall_vs_brute_force).
-        # The md5-derived integer plane family + fixed-point projection is
-        # fully SQL-expressible, so the oracle recomputes the whole operator
-        # independently (see _srp_buckets_sql).
-        from palladian_spark.operators.similarity_search import lsh_topk
-
-        emb = _read(spark, sf_dir, "embeddings").withColumn(
-            "embedding", F.col("embedding").cast("array<double>")
-        )
-        qset = emb.where(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        # The synthetic neighbors sit at cosine ~0.3 (near-random angle),
-        # so buckets are kept loose (b=3) and recall is bought with 16
-        # OR-amplified tables; real near-dup corpora run b=8+.
-        res = lsh_topk(emb, qset, k=5, n_planes=3, n_tables=16)
-        return res.select("query_id", "vec_id", F.col("rank").alias("rnk"))
-
-    def ann_ivf_topk(spark, sf_dir):
-        # IVF coarse-quantized top-k — the probe-limited ANN scale path.
-        # Seeded deterministic centroids (16 smallest-md5 vec_ids - a
-        # uniform sample; lowest-id seeds degenerate on id-clustered
-        # corpora) make the whole assignment+probe+search SQL-expressible,
-        # so unlike the SRP-LSH variant this one gets a full independent
-        # DuckDB oracle.
-        from palladian_spark.operators.similarity_search import ivf_topk
-
-        emb = _read(spark, sf_dir, "embeddings").withColumn(
-            "embedding", F.col("embedding").cast("array<double>")
-        )
-        qset = emb.where(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        res = ivf_topk(emb, qset, k=5, n_centroids=16, n_probe=4)
-        return res.select("query_id", "vec_id", F.col("rank").alias("rnk"))
-
-    def ann_pq_topk(spark, sf_dir):
-        # Product-quantization ANN in the production shape: int64 ADC code
-        # scan (m=4 table lookups per corpus row — a 64x byte cut vs float
-        # vectors) generates k*4 candidates per query, exact cosine rescores
-        # only that pool. Codebook = the 16 conforming vectors with the
-        # smallest md5(vec_id) (a deterministic uniform sample — diverse
-        # under id/topic correlation); all ADC arithmetic is int64 on a 2^20
-        # fixed-point grid, so the DuckDB oracle recomputes codebook, codes,
-        # ADC tables, candidate pool, and the round-6 rescore bit-
-        # identically. Pool recall vs the exact baseline is pytest-gated
-        # (tests/test_spark_operators.py).
-        from palladian_spark.operators.similarity_search import pq_topk
-
-        emb = _read(spark, sf_dir, "embeddings").withColumn(
-            "embedding", F.col("embedding").cast("array<double>")
-        )
-        qset = emb.where(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        res = pq_topk(emb, qset, k=5, n_cells=16, m=4, rescore_factor=4)
-        return res.select(
-            "query_id",
-            "vec_id",
-            F.round(F.col("score") * 1000000).cast("long").alias("cos_ppm"),
-            F.col("rank").alias("rnk"),
-        )
-
-    def ann_ivfpq_topk(spark, sf_dir):
-        # IVF-PQ composition - the 10^9-vector architecture: IVF cell
-        # restriction bounds WHICH rows are scanned, PQ-ADC bounds the
-        # bytes per scanned row, floats touched only for the rescore pool.
-        # Both codebooks seeded-deterministic, so the oracle recomputes
-        # assignment, probes, codes, ADC scores, pool, and rescore
-        # bit-identically.
-        from palladian_spark.operators.similarity_search import ivfpq_topk
-
-        emb = _read(spark, sf_dir, "embeddings").withColumn(
-            "embedding", F.col("embedding").cast("array<double>")
-        )
-        qset = emb.where(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        res = ivfpq_topk(
-            emb, qset, k=5, n_centroids=16, n_probe=4, n_cells=16, m=4,
-            rescore_factor=4,
-        )
-        return res.select(
-            "query_id",
-            "vec_id",
-            F.round(F.col("score") * 1000000).cast("long").alias("cos_ppm"),
-            F.col("rank").alias("rnk"),
-        )
-
-    def embedding_pq_codes(spark, sf_dir):
-        # the PQ storage artifact itself: m=4 cell codes per vector (the
-        # 64x-compressed ANN scan column) - same codebook/fixed-point
-        # grid as ann_pq_topk, exploded to (vec_id, s, code) rows
-        from palladian_spark.operators.similarity_search import pq_encode
-
-        emb = _read(spark, sf_dir, "embeddings").withColumn(
-            "embedding", F.col("embedding").cast("array<double>")
-        )
-        enc = pq_encode(emb, n_cells=16, m=4)
-        return enc.select(
-            "vec_id", F.posexplode("codes").alias("s", "code")
-        )
-
-    def embedding_quantize(spark, sf_dir):
-        # int8 scalar quantization (vec_id, pos, code) — pure JVM plan;
-        # floor(x+0.5) formulation is engine-portable (see operator doc).
-        from palladian_spark.operators.similarity_search import quantize_embeddings
-
-        emb = _read(spark, sf_dir, "embeddings").withColumn(
-            "embedding", F.col("embedding").cast("array<double>")
-        )
-        return quantize_embeddings(emb)
-
-    def embedding_near_dups(spark, sf_dir):
-        from palladian_spark.operators.similarity_search import embedding_near_duplicates
-
-        emb = _read(spark, sf_dir, "embeddings").withColumn(
-            "embedding", F.col("embedding").cast("array<double>")
-        )
-        pairs = embedding_near_duplicates(emb, threshold=0.3)
-        return pairs.select(
-            "id_a", "id_b", (F.col("cosine") * 1000000).cast("long").alias("cosine_ppm")
-        )
-
-    # ---- relational checklist over TPC-H-ish tables (SURVEY §2.8) ----
-    def tpch_pricing(spark, sf_dir):
-        li = _read(spark, sf_dir, "lineitem")
-        return (
-            li.where(F.col("l_shipdate") <= F.lit("2000-09-02"))
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(
-                F.sum("l_quantity").cast("long").alias("sum_qty"),
-                F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias(
-                    "sum_base_price_cents"
-                ),
-                F.sum(
-                    F.round(
-                        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100
-                    ).cast("long")
-                ).alias("sum_disc_price_cents"),
-                F.count("*").alias("count_order"),
-            )
-        )
-
-    def join_customer_orders(spark, sf_dir):
-        o = _read(spark, sf_dir, "orders")
-        c = F.broadcast(_read(spark, sf_dir, "customer"))
-        return (
-            o.join(c, o.o_custkey == c.c_custkey)
-            .groupBy("c_mktsegment")
-            .agg(
-                F.count("*").alias("n_orders"),
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                    "sum_total_cents"
-                ),
-            )
-        )
-
-    def anti_join_customers(spark, sf_dir):
-        # customers with no large order — the T2 blacklist anti-join shape
-        c = _read(spark, sf_dir, "customer")
-        o = _read(spark, sf_dir, "orders").where(F.col("o_totalprice") > 450000)
-        return c.join(
-            o.select(F.col("o_custkey").alias("c_custkey")), "c_custkey", "left_anti"
-        ).select("c_custkey", "c_name")
-
-    def semi_join_parts(spark, sf_dir):
-        p = _read(spark, sf_dir, "part")
-        li = _read(spark, sf_dir, "lineitem")
-        return (
-            p.join(
-                li.select(F.col("l_partkey").alias("p_partkey")), "p_partkey", "left_semi"
-            )
-            .groupBy("p_brand")
-            .agg(F.count("*").alias("n_parts"))
-        )
-
-    def events_seed_sample(spark, sf_dir):
-        ev = _read(spark, sf_dir, "events")
-        w = Window.partitionBy("event_type").orderBy("ts", "event_id")
-        return (
-            ev.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= 5)
-            .select("event_type", "event_id", "rn")
-        )
-
-    def events_windowed_counts(spark, sf_dir):
-        # tumbling 1-hour windows keyed off the corpus min timestamp
-        # (bucket = (us - min_us) div 3600e6): offset-invariant under the
-        # NTZ epoch-cast difference, so both engines bucket identically -
-        # the batch twin of the streaming pipeline's windowed aggregation
-        ev = _read(spark, sf_dir, "events").withColumn(
-            "us", F.unix_micros(F.col("ts").cast("timestamp"))
-        )
-        mn = F.broadcast(ev.agg(F.min("us").alias("_mn")))
-        return (
-            ev.crossJoin(mn)
-            .select(
-                "event_type",
-                F.expr("(us - _mn) div 3600000000").alias("window_id"),
-            )
-            .groupBy("event_type", "window_id")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-        )
-
-    def events_retention(spark, sf_dir):
-        # daily cohort-retention triangle: (cohort, offset, n_keys) over
-        # integer bucket differences - no global sort/window anywhere
-        from palladian_spark.operators.temporal import cohort_retention
-
-        ev = _read(spark, sf_dir, "events").withColumn(
-            "ts_us", F.unix_micros(F.col("ts").cast("timestamp"))
-        )
-        return cohort_retention(ev)
-
-    def events_funnel(spark, sf_dir):
-        # ordered funnel view -> click -> purchase per user: earliest
-        # strictly-increasing chain, inter-step gaps in microseconds
-        # (offset-invariant under the NTZ epoch cast)
-        from palladian_spark.operators.temporal import funnel_steps
-
-        ev = _read(spark, sf_dir, "events").withColumn(
-            "ts_us", F.unix_micros(F.col("ts").cast("timestamp"))
-        )
-        return funnel_steps(ev, ["view", "click", "purchase"])
-
-    def events_zorder(spark, sf_dir):
-        # Z-order (Morton) layout key over (user_id, ts): the write-side
-        # clustering column for two-dimensional file pruning (Delta
-        # OPTIMIZE ZORDER semantics). Pure codegen projection + one 1-row
-        # broadcast stats agg; envelope-tightness vs random layout is
-        # pytest-gated (tests/test_layout.py).
-        from palladian_spark.operators.layout import zorder_index
-
-        ev = _read(spark, sf_dir, "events").withColumn(
-            "ts_us", F.unix_micros(F.col("ts").cast("timestamp"))
-        )
-        res = zorder_index(
-            ev.select("event_id", "user_id", "ts_us"), "user_id", "ts_us"
-        )
-        return res.select("event_id", "qx", "qy", "zval", "zbucket")
-
-    def events_sessionize(spark, sf_dir):
-        # ts is TIMESTAMP_NTZ in the parquet; the tz-cast offset is constant,
-        # so gaps (differences) match DuckDB's naive epoch_us exactly.
-        ev = _read(spark, sf_dir, "events").withColumn(
-            "us", F.unix_micros(F.col("ts").cast("timestamp"))
-        )
-        w = Window.partitionBy("user_id").orderBy("us", "event_id")
-        gap = F.col("us") - F.lag("us").over(w)
-        sess = ev.withColumn(
-            "new_session",
-            F.when(gap.isNull() | (gap > 1800 * 1000 * 1000), 1).otherwise(0),
-        )
-        return sess.groupBy("user_id").agg(
-            F.sum("new_session").alias("n_sessions"), F.count("*").alias("n_events")
-        )
-
-    def events_asof(spark, sf_dir):
-        # scalable as-of join (union-scan + one window, zero joins): each
-        # purchase matched to the user's latest view at-or-before it,
-        # within a 1-hour tolerance. Emits the tz-free gap instead of
-        # absolute epochs (ts is TIMESTAMP_NTZ; the cast offset is
-        # session-tz-dependent but constant, so differences are exact).
-        from palladian_spark.operators.temporal import asof_join
-
-        ev = _read(spark, sf_dir, "events").withColumn(
-            "ts_us", F.unix_micros(F.col("ts").cast("timestamp"))
-        )
-        cols = ["user_id", "ts_us", "event_id", "value"]
-        out = asof_join(
-            ev.where(F.col("event_type") == "purchase").select(*cols),
-            ev.where(F.col("event_type") == "view").select(*cols),
-            key="user_id",
-            ts="ts_us",
-            tiebreak="event_id",
-            right_cols=["value"],
-            tolerance=3_600_000_000,
-        )
-        return out.select(
-            "event_id",
-            "user_id",
-            "asof_event_id",
-            "asof_value",
-            (F.col("ts_us") - F.col("asof_ts_us")).alias("gap_us"),
-        )
-
-    def events_range_join(spark, sf_dir):
-        # banded range join (bucket = ts div radius, right side replicated
-        # to +/-1 buckets -> pure equi join + residual filter): per
-        # purchase, how many views by the same user within +/-15 min.
-        # max() not sum() over the double column — float-order-independent,
-        # so the cross-engine hash compare is exact.
-        from palladian_spark.operators.temporal import range_join
-
-        ev = _read(spark, sf_dir, "events").withColumn(
-            "ts_us", F.unix_micros(F.col("ts").cast("timestamp"))
-        )
-        pairs = range_join(
-            ev.where(F.col("event_type") == "purchase").select(
-                "event_id", "user_id", "ts_us"
-            ),
-            ev.where(F.col("event_type") == "view").select(
-                "user_id", "ts_us", "event_id", "value"
-            ),
-            key="user_id",
-            ts="ts_us",
-            radius=900_000_000,
-            right_cols=["event_id", "value"],
-            how="left_outer",
-        )
-        return pairs.groupBy("event_id", "user_id").agg(
-            F.count("r_event_id").alias("n_matches"),
-            F.max("r_value").alias("max_match_value"),
-        )
-
-    def events_topk(spark, sf_dir):
-        ev = _read(spark, sf_dir, "events")
-        counts = ev.groupBy("event_type").agg(F.count("*").alias("n"))
-        w = Window.orderBy(F.desc("n"), F.asc("event_type"))
-        return (
-            counts.withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= 5)
-            .select("event_type", "n", "rnk")
-        )
-
-    # ---- pattern-based relation extraction (SURVEY §2.6) ----
-    def rule_engine_tags(spark, sf_dir):
-        from palladian_spark.operators.relations import classified_mention_counts
-
-        return classified_mention_counts(
-            _read(spark, sf_dir, "documents"), GAZETTEER, RULES_TEXT
-        )
-
-    def rule_triples(spark, sf_dir):
-        from palladian_spark.operators.relations import rule_instance_triples
-
-        return rule_instance_triples(
-            _read(spark, sf_dir, "documents"), GAZETTEER, RULES_TEXT
-        )
-
-    def pattern_mining(spark, sf_dir):
-        from palladian_spark.operators.relations import mine_context_patterns
-
-        return mine_context_patterns(
-            _read(spark, sf_dir, "documents"), list(GAZETTEER), top_k=20
-        )
-
-    def fpgrowth_itemsets(spark, sf_dir):
-        from palladian_spark.operators.relations import frequent_itemsets
-
-        return frequent_itemsets(
-            _read(spark, sf_dir, "documents"), GAZETTEER, min_support=0.2
-        )
-
-    def fpgrowth_rules(spark, sf_dir):
-        from palladian_spark.operators.relations import association_rules
-
-        return association_rules(
-            _read(spark, sf_dir, "documents"),
-            GAZETTEER,
-            min_support=0.2,
-            min_confidence=0.5,
-        )
-
-    # ---- url/date taggers + masked sentence detection (SURVEY §2.2/2.5) ----
-    def doc_structure(spark, sf_dir):
-        from palladian_spark.operators.textstats import structure_stats
-
-        docs = _read(spark, sf_dir, "documents")
-        derived = docs.select(
-            "doc_id",
-            F.concat(
-                F.regexp_replace("text", " the ", ". The "),
-                F.lit(" visit https://ex"),
-                (F.col("doc_id") % 50).cast("string"),
-                F.lit(".org/a on March "),
-                (F.col("doc_id") % 28 + 1).cast("string"),
-                F.lit(", "),
-                (F.col("doc_id") % 25 + 2000).cast("string"),
-                F.lit(". Done"),
-            ).alias("text"),
-        )
-        return structure_stats(derived)
-
-    # ---- scoring join: DefaultScorer as broadcast dictionary join ----
-    def classify_docs(spark, sf_dir):
-        from palladian_spark.operators.scoring import classify_documents_relational
-
-        return classify_documents_relational(_read(spark, sf_dir, "documents"))
-
-    # ---- multimodal: REAL PNG decode (stdlib codec), oracled ----
-    def media_features(spark, sf_dir):
-        # synthesize_media_table encodes a real PNG whose dimensions are a
-        # pure function of doc_id; image_features must DECODE those bytes
-        # (stdlib PNG codec, interop-tested vs Java ImageIO), so the SQL
-        # oracle predicting the dimensions verifies the decode end-to-end.
-        from palladian_spark.operators.multimodal import (
-            image_features,
-            synthesize_media_table,
-        )
-
-        media = synthesize_media_table(spark, _read(spark, sf_dir, "documents"))
-        return image_features(media).select("media_id", "width", "height")
-
-    # ---- streaming surface: foreachBatch triple log + compaction ----
-    def streaming_triples(spark, sf_dir):
-        # Two file drops -> >=2 micro-batches through the REAL
-        # writeStream/foreachBatch/checkpoint path (streaming/pipeline.py);
-        # the compacted append-log is verified against an independent
-        # DuckDB recomputation (gazetteer mentioned-in + co-occurs-with
-        # edges, per-doc sha256 lineage). Exercises the one surface the
-        # round-2 contract did not: exactly-once batch append + compaction.
-        import shutil
-        import tempfile
-
-        from palladian_spark.streaming.pipeline import (
-            compact_triples,
-            start_triple_stream,
-        )
-
-        tmp = tempfile.mkdtemp(prefix="spark_graft_stream_")
-        in_dir = os.path.join(tmp, "in")
-        out_dir = os.path.join(tmp, "out")
-        ckpt = os.path.join(tmp, "ckpt")
-        docs = _read(spark, sf_dir, "documents").select(
-            "doc_id", "text", "lang", "source"
-        )
-        for parity in (0, 1):  # two drops -> two micro-batches
-            (
-                docs.where(F.col("doc_id") % 2 == parity)
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(in_dir)
-            )
-        query = start_triple_stream(
-            spark, in_dir, out_dir, ckpt,
-            max_files_per_trigger=1, gazetteer=GAZETTEER,
-            # match the \\bterm\\b case-sensitive DuckDB oracle exactly
-            gazetteer_case_sensitive=True,
-        )
-        # awaitTermination(timeout) returns False WITHOUT raising when the
-        # stream has not finished — compacting a partial log and rmtree'ing
-        # dirs under a live query would corrupt the result, so fail loudly
-        # (and stop the orphaned query) instead
-        finished = query.awaitTermination(300)
-        if not finished:
-            query.stop()
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise TimeoutError("streaming_triples: stream not done in 300s")
-        out = (
-            compact_triples(spark, out_dir)
-            .select(
-                "subj", "pred", "obj", "content_sha256",
-                F.col("support").cast("long").alias("support"),
-            )
-            # materialize into Spark block storage so the temp parquet
-            # dirs can be deleted before the driver collects the result
-            .localCheckpoint(eager=True)
-        )
-        shutil.rmtree(tmp, ignore_errors=True)
-        return out
-
-    def doc_lm_quality(spark, sf_dir):
-        from palladian_spark.operators.textstats import lm_quality
-
-        # CCNet-style unigram-LM scoring: the model trains and scores in
-        # one plan (token aggregate + broadcast totals + token equi-join)
-        return lm_quality(_read(spark, sf_dir, "documents"))
-
-    q.update(
-        doc_lm_quality=doc_lm_quality,
-        doc_token_counts=doc_token_counts,
-        doc_quality=doc_quality,
-        doc_language_id=doc_language_id,
-        doc_fingerprints=doc_fingerprints,
-        doc_chunks=doc_chunks,
-        doc_split=doc_split,
-        doc_pack_sequences=doc_pack_sequences,
-        doc_repetition=doc_repetition,
-        doc_pii_redact=doc_pii_redact,
-        doc_dup_spans=doc_dup_spans,
-        doc_term_corpus=doc_term_corpus,
-        doc_keywords=doc_keywords,
-        doc_bm25_topk=doc_bm25_topk,
-        bpe_merges=bpe_merges,
-        bpe_token_counts=bpe_token_counts,
-        doc_token_hll=doc_token_hll,
-        kg_label_prop=kg_label_prop,
-        kg_training_pairs=kg_training_pairs,
-        doc_mixture_sample=doc_mixture_sample,
-        doc_curation_report=doc_curation_report,
-        doc_token_cms=doc_token_cms,
-        doc_length_histogram=doc_length_histogram,
-        doc_decon_bloom=doc_decon_bloom,
-        events_zorder=events_zorder,
-        events_windowed_counts=events_windowed_counts,
-        events_funnel=events_funnel,
-        events_retention=events_retention,
-        doc_decontaminate=doc_decontaminate,
-        doc_exact_dedup=doc_exact_dedup,
-        doc_ngram_jaccard=doc_ngram_jaccard,
-        doc_dup_clusters=doc_dup_clusters,
-        doc_dedup_near=doc_dedup_near,
-        doc_stratified_sample=doc_stratified_sample,
-        doc_minhash_pairs=doc_minhash_pairs,
-        doc_simhash=doc_simhash,
-        doc_simhash_pairs=doc_simhash_pairs,
-        doc_simhash_wide_pairs=doc_simhash_wide_pairs,
-        doc_dates_normalized=doc_dates_normalized,
-        doc_coordinates=doc_coordinates,
-        doc_addresses=doc_addresses,
-        dict_mentions=dict_mentions,
-        string_tagger_candidates=string_tagger_candidates,
-        ner_reference_agreement=ner_reference_agreement,
-        doc_pos_tags=doc_pos_tags,
-        doc_cooccur=doc_cooccur,
-        doc_cooccur_sentence=doc_cooccur_sentence,
-        doc_cooccur_window=doc_cooccur_window,
-        kg_triples=kg_triples,
-        kg_triples_incremental=kg_triples_incremental,
-        kg_degree_stats=kg_degree_stats,
-        kg_pagerank=kg_pagerank,
-        canonicalize_mentions=canonicalize_mentions,
-        ann_topk=ann_topk,
-        ann_lsh_topk=ann_lsh_topk,
-        ann_ivf_topk=ann_ivf_topk,
-        ann_pq_topk=ann_pq_topk,
-        ann_ivfpq_topk=ann_ivfpq_topk,
-        embedding_pq_codes=embedding_pq_codes,
-        embedding_quantize=embedding_quantize,
-        embedding_near_dups=embedding_near_dups,
-        tpch_pricing=tpch_pricing,
-        join_customer_orders=join_customer_orders,
-        anti_join_customers=anti_join_customers,
-        semi_join_parts=semi_join_parts,
-        events_seed_sample=events_seed_sample,
-        events_sessionize=events_sessionize,
-        events_asof=events_asof,
-        events_range_join=events_range_join,
-        events_topk=events_topk,
-        rule_engine_tags=rule_engine_tags,
-        rule_triples=rule_triples,
-        pattern_mining=pattern_mining,
-        fpgrowth_itemsets=fpgrowth_itemsets,
-        fpgrowth_rules=fpgrowth_rules,
-        classify_docs=classify_docs,
-        doc_structure=doc_structure,
-        media_features=media_features,
-        streaming_triples=streaming_triples,
-        doc_spell_corrections=doc_spell_corrections,
-        feature_ranking=feature_ranking,
-        doc_noun_phrases=doc_noun_phrases,
-        nb_classify=nb_classify,
-        classifier_roc=classifier_roc,
-        nominal_classify=nominal_classify,
-        media_pixel_colors=media_pixel_colors,
-        media_colors=media_colors,
-    )
-    return q
-
-
-# ---------------------------------------------------------------------------
-# oracle_sql(): DuckDB equivalents (views: region nation customer supplier
-# part orders lineitem events documents embeddings).
-# ---------------------------------------------------------------------------
-_TOKEN_REGEX_SQL = (
-    r"(?:[A-Z][a-z]?\.)+"
-    r"|[\p{L}\w+]+(?:[-\.,][\p{L}\w]+)*"
-    r"|\.[\p{L}\w]+"
-    r"|</?[\p{L}\w]+>"
-    r"|\$\d+\.\d+"
-    r"|[^\w\s<]+"
-)
-
-_EN_MARKERS = "'the','and','of','to','in','is','that','with'"
-
-
-def _lang_hits_sql() -> str:
-    from palladian_spark.operators.textstats import LANG_MARKERS
-
-    cols = []
-    for lang in sorted(LANG_MARKERS):
-        lst = ",".join(f"'{w}'" for w in LANG_MARKERS[lang])
-        cols.append(
-            f"len(list_filter(regexp_extract_all(lower(text), '[a-z]+'), "
-            f"w -> w in ({lst}))) as hits_{lang}"
-        )
-    return ", ".join(cols)
-
-
-def _gazetteer_union_sql() -> str:
-    parts = []
-    for term, tag in GAZETTEER.items():
-        parts.append(
-            f"select doc_id, '{tag}' as tag, "
-            f"len(regexp_extract_all(text, '\\b{term}\\b')) as cnt from documents"
-        )
-    return " union all ".join(parts)
-
-
-def _gazetteer_presence_sql() -> str:
-    parts = []
-    for term in GAZETTEER:
-        parts.append(
-            f"select doc_id, '{term}' as value from documents "
-            f"where regexp_matches(text, '\\b{term}\\b')"
-        )
-    return " union all ".join(parts)
-
-
-def _rule_hits_sql() -> str:
-    """Per (doc_id, term, rule-outcome): count of mentions whose 1-token
-    left context equals the rule context (regex `\\bctx term\\b` — the
-    corpus is single-space separated so the window semantics align with the
-    kernel's get_left_contexts)."""
-    parts = []
-    for ctx, outcome in _RULE_OUTCOMES:
-        for term in GAZETTEER:
-            parts.append(
-                f"select doc_id, '{term}' as value, '{outcome}' as tag, "
-                f"len(regexp_extract_all(text, '\\b{ctx} {term}\\b')) as n "
-                f"from documents"
-            )
-    return " union all ".join(parts)
-
-
-_GAZ_ALT = "|".join(sorted(GAZETTEER))
-
-_FIXTURE_ORACLE_DIR = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "tests", "fixtures", "oracle"
-)
-
-_SIMHASH_BITS = 60
-
-
-def _srp_buckets_sql(n_planes: int, n_tables: int, seed: int = 42) -> str:
-    """CTE chain recomputing the integer-SRP bucket family of
-    similarity_search._make_buckets_udf from scratch: md5-derived int64
-    plane weights (DuckDB md5_number_lower == little-endian bytes 8..16 of
-    the digest, the exact function the Spark UDF evaluates), fixed-point
-    vector quantization floor(v * 2^20 + 0.5), integer dot products — so
-    bucket ids are bit-identical across engines by construction (no float
-    summation order anywhere). Ends with `buckets(vec_id, t, bucket)`;
-    `ev(vec_id, v)` holds the modal-dim float vectors for rescoring.
-    """
-    total = n_planes * n_tables
-    return f"""
-        e as (select vec_id, embedding::DOUBLE[] as v from embeddings
-              where embedding is not null and len(embedding) > 0),
-        -- table-global modal dim: rows of any other length cannot
-        -- participate (mirrors _stack_valid's global-dim mask)
-        dim as (select d from (select len(v) as d, count(*) as c
-                               from e group by 1 order by c desc, d limit 1)),
-        ev as (select vec_id, v from e, dim where len(v) = dim.d),
-        iq as (select vec_id,
-                      list_transform(v, x -> cast(floor(x * 1048576.0 + 0.5) as bigint)) as q
-               from ev),
-        planes as (
-          select p.p, d.d,
-                 (md5_number_lower('srp:{seed}:' || p.p || ':' || d.d)
-                  % 2097152)::bigint - 1048576 as w
-          from (select unnest(range({total})) as p) p,
-               (select unnest(range((select d from dim))) as d) d),
-        proj as (select iq.vec_id,
-                        pl.p // {n_planes} as t, pl.p % {n_planes} as i,
-                        sum(iq.q[pl.d + 1] * pl.w)::bigint as s
-                 from iq, planes pl
-                 group by 1, 2, 3),
-        buckets as (select vec_id, t,
-                           sum(case when s >= 0 then (1::bigint << i)
-                               else 0 end)::bigint as bucket
-                    from proj group by 1, 2)
-    """
-
-
-def _simhash_sig_sql() -> str:
-    """60-bit portable SimHash CTE body (matches simhash_signatures with
-    portable_token_hash): md5-derived token hash, per-bit +-1 votes,
-    signature bit = sign of vote."""
-    sums = ", ".join(
-        f"sum(case when (h>>{i})&1=1 then 1 else -1 end) as b{i}"
-        for i in range(_SIMHASH_BITS)
-    )
-    sig = " + ".join(
-        f"case when b{i}>0 then (1::bigint<<{i}) else 0::bigint end"
-        for i in range(_SIMHASH_BITS)
-    )
-    return f"""
-        with toks as (
-          select doc_id as doc, ('0x' || substr(md5(t),1,15))::bigint as h
-          from (select doc_id,
-                       unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) as t
-                from documents)),
-        votes as (select doc, {sums} from toks group by doc)
-        select doc, ({sig})::bigint as simhash from votes
-    """
-
-
-def _simhash_wide_sig_sql() -> str:
-    """120-bit portable SimHash CTE body (matches simhash_signatures_wide):
-    two 60-bit halves from md5 hex chars 1..15 and 16..30 of each token,
-    per-bit +-1 votes, signature bit = sign of vote."""
-    sums = ", ".join(
-        f"sum(case when (h_lo>>{i})&1=1 then 1 else -1 end) as lo{i}"
-        for i in range(60)
-    ) + ", " + ", ".join(
-        f"sum(case when (h_hi>>{i})&1=1 then 1 else -1 end) as hi{i}"
-        for i in range(60)
-    )
-    sig_lo = " + ".join(
-        f"case when lo{i}>0 then (1::bigint<<{i}) else 0::bigint end"
-        for i in range(60)
-    )
-    sig_hi = " + ".join(
-        f"case when hi{i}>0 then (1::bigint<<{i}) else 0::bigint end"
-        for i in range(60)
-    )
-    return f"""
-        with toks as (
-          select doc,
-                 ('0x' || substr(m,1,15))::bigint as h_lo,
-                 ('0x' || substr(m,16,15))::bigint as h_hi
-          from (select doc_id as doc, md5(t) as m
-                from (select doc_id,
-                             unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) as t
-                      from documents))),
-        votes as (select doc, {sums} from toks group by doc)
-        select doc, ({sig_lo})::bigint as simhash_lo,
-                    ({sig_hi})::bigint as simhash_hi
-        from votes
-    """
-
-
-def _streaming_triples_sql() -> str:
-    """DuckDB recomputation of the compacted streaming triple log
-    (streaming/pipeline.py): per-term occurrence counts -> mentioned-in
-    edges (support = match count), presence pairs -> co-occurs-with
-    edges (support = co-containing doc count), min-sha256 lineage."""
-    occ = " union all ".join(
-        f"select doc_id, '{t}' as value, "
-        f"len(regexp_extract_all(text, '\\b{t}\\b')) as n from documents"
-        for t in GAZETTEER
-    )
-    return f"""
-        with occ as ({occ}),
-        docs as (
-          select doc_id,
-                 'corpus/' || source || '/docs/' || doc_id || '.txt' as doc_ref,
-                 sha256(text) as sha
-          from documents),
-        present as (select * from occ where n > 0)
-        select p.value as subj, 'mentioned-in' as pred, d.doc_ref as obj,
-               min(d.sha) as content_sha256, sum(p.n)::bigint as support
-        from present p join docs d using (doc_id)
-        group by 1, 2, 3
-        union all
-        select a.value as subj, 'co-occurs-with' as pred, b.value as obj,
-               min(d.sha) as content_sha256, count(*)::bigint as support
-        from present a join present b using (doc_id) join docs d using (doc_id)
-        where a.value < b.value
-        group by 1, 2, 3
-    """
-
-
-# RE2-expressible twin of the StringTagger candidate alternation on the
-# contract corpus. The full Palladian pattern (kernels/tagging.py
-# STRING_TAGGER_REGEX, StringTagger.java:25-77) needs lookarounds DuckDB's
-# RE2 cannot run; on the synthetic corpus (alphabet = lowercase words +
-# Title-cased marker words, no digits/punctuation/hyphens) every candidate
-# is a maximal run of Title-case words, which this pattern matches
-# leftmost-first exactly like the full one. Agreement is asserted
-# span-for-span at sf0.001/sf0.01/sf0.1 by
-# tests/test_string_tagger_oracle.py; the contract check then re-verifies
-# the DuckDB side at full row/value granularity every run.
-_CANDIDATE_RE2 = "[A-Z][a-z]+( [A-Z][a-z]+)*"
-
-
-def _capitalized_corpus_sql(text_expr: str = "text") -> str:
-    """SQL twin of _capitalized_corpus: Title-case the marker words."""
-    expr = text_expr
-    for w in _CAP_WORDS:
-        expr = f"regexp_replace({expr}, '\\b{w}\\b', '{w.capitalize()}', 'g')"
-    return expr
-
-
-def _string_tagger_sql() -> str:
-    """Full independent recomputation (de-pinned round 4) of the
-    StringTagger candidate mentions, match positions included: DuckDB has
-    no match-position API, so starts are reconstructed from the
-    regexp_split_to_array gap segments — start(i) = sum(len(gap[1..i])) +
-    sum(len(match[1..i-1])) via two running windows over the match index.
-    """
-    return f"""
-        with corpus as (select doc_id, {_capitalized_corpus_sql()} as content
-                        from documents),
-        m as (select doc_id,
-                     regexp_extract_all(content, '{_CANDIDATE_RE2}') as vals,
-                     regexp_split_to_array(content, '{_CANDIDATE_RE2}') as segs
-              from corpus),
-        u as (select doc_id, i, vals[i] as value,
-                     len(segs[i]) as seg_len, len(vals[i]) as val_len
-              from m, unnest(generate_series(1, len(vals))) as t(i)),
-        pos as (select doc_id, value,
-                       (sum(seg_len) over w
-                        + coalesce(sum(val_len) over w2, 0))::int as start
-                from u
-                window w as (partition by doc_id order by i
-                             rows unbounded preceding),
-                       w2 as (partition by doc_id order by i
-                              rows between unbounded preceding
-                              and 1 preceding))
-        select doc_id, start, (start + len(value))::int as "end",
-               'CANDIDATE' as tag, value
-        from pos
-    """
-
-
-def _kg_triples_sql(threshold: float = 0.9, max_per_doc: int = 100) -> str:
-    """Full independent recomputation (de-pinned round 4) of the flagship
-    extract_triples pipeline: capitalized source shape + sha256 lineage,
-    candidate mentions via _CANDIDATE_RE2, mentioned-in edges (one row per
-    match), capped distinct-per-doc co-occurrence pairs, all-pairs-JW +
-    recursive-CTE canonicalization for synonym-of edges, then the dedup
-    fold (min lineage, support count). JW caveat mirrors
-    canonicalize_mentions: DuckDB's standard JW stands in for the kernel
-    variant — edge sets may differ near the 0.9 threshold (one pair does
-    at sf0.01), but the connected-component PARTITION, the only thing the
-    triples depend on, is asserted equal under both variants at
-    sf0.001/0.01/0.1 by tests/test_string_tagger_oracle.py."""
-    return f"""
-        with recursive
-        corpus as (select doc_id, source,
-                          {_capitalized_corpus_sql()} as content
-                   from documents),
-        src as (select 'corpus/' || source || '/docs/' || doc_id || '.txt'
-                           as doc_ref,
-                       sha256(content) as sha, content
-                from corpus),
-        mention as (select doc_ref, sha,
-                           unnest(regexp_extract_all(
-                               content, '{_CANDIDATE_RE2}')) as value
-                    from src),
-        mi as (select value as subj, 'mentioned-in' as pred,
-                      doc_ref as obj, sha
-               from mention),
-        perdoc as (select doc_ref, sha, value,
-                          row_number() over (partition by doc_ref
-                                             order by value) as rn
-                   from (select distinct doc_ref, sha, value from mention)),
-        coocc as (select a.value as subj, 'co-occurs-with' as pred,
-                         b.value as obj, a.sha as sha
-                  from perdoc a join perdoc b
-                    on a.doc_ref = b.doc_ref and a.value < b.value
-                  where a.rn <= {max_per_doc} and b.rn <= {max_per_doc}),
-        vals as (select value, count(*)::bigint as freq
-                 from mention group by 1),
-        pairs as (select a.value as va, b.value as vb
-                  from vals a join vals b on a.value < b.value
-                  where jaro_winkler_similarity(upper(a.value),
-                                                upper(b.value))
-                        >= {threshold}),
-        cnodes as (select va as v from pairs union select vb from pairs),
-        cedges as (select va as src, vb as dst from pairs
-                   union select vb, va from pairs),
-        reach(a, b) as (
-          select v, v from cnodes
-          union
-          select r.a, e.dst from reach r join cedges e on r.b = e.src),
-        comp as (select a as value, min(b) as component from reach group by a),
-        members as (select v.value, v.freq,
-                           coalesce(c.component, v.value) as component
-                    from vals v left join comp c on c.value = v.value),
-        canon as (select component, value as canonical from (
-                    select component, value,
-                           row_number() over (
-                             partition by component
-                             order by freq desc, length(value) desc,
-                                      value asc) as rn
-                    from members) t
-                  where rn = 1),
-        syn as (select m.value as subj, 'synonym-of' as pred,
-                       c.canonical as obj, null::varchar as sha
-                from members m join canon c using (component)
-                where m.value <> c.canonical),
-        allt as (select * from mi union all select * from coocc
-                 union all select * from syn)
-        select subj, pred, obj, min(sha) as content_sha256,
-               count(*)::bigint as support
-        from allt group by 1, 2, 3
-    """
-
-
-def _pos_tag_map() -> list[tuple[str, str]]:
-    """(token, tag) for every distinct whitespace token in the three
-    checked-in sf corpora, classified by the golden-gated POS kernel.
-
-    The per-token classification is the ONE part of doc_pos_tags no SQL
-    engine can recompute (model-driven argmax over n-gram features); its
-    semantics are pinned by the Java-parity goldens in
-    tests/test_pos_tagger.py, and POS tags are a pure function of the
-    token, so inlining the (31-token) vocabulary map converts the rest of
-    the oracle — tokenization, the distributed explode, the per-doc
-    aggregation — into an independent DuckDB recomputation. Unseen tokens
-    map to a loud sentinel instead of dropping, so corpus drift fails the
-    hash compare instead of hiding."""
-    import duckdb as _duckdb
-
-    from palladian_spark.kernels.pos import classify_token, train_pos_tagger
-
-    corpus_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "tests", "fixtures", "reference", "pos_train_corpus.txt",
-    )
-    with open(corpus_path, encoding="utf-8") as f:
-        model = train_pos_tagger(f.read())
-    con = _duckdb.connect()
-    vocab: set[str] = set()
-    for sf in ("0.001", "0.01", "0.1"):
-        path = f"/root/testdata/sf{sf}/documents.parquet"
-        if not os.path.exists(path):
-            continue
-        for (tok,) in con.execute(
-            f"select distinct unnest(regexp_extract_all(text, '\\S+')) "
-            f"from '{path}'"
-        ).fetchall():
-            vocab.add(tok)
-    con.close()
-    return [(tok, classify_token(tok, model).upper()) for tok in sorted(vocab)]
-
-
-def _pos_tags_sql() -> str:
-    """De-pinned (late round 4): tokenize + classify-by-inlined-map +
-    aggregate, replacing the frozen sf0.01 fixture. Tokenizer twin
-    (\\S+ == kernel WordTokenizer on these corpora) is asserted by
-    tests/test_string_tagger_oracle.py::test_tokenizer_twin."""
-    rows = ", ".join(
-        f"('{tok.replace(chr(39), chr(39) * 2)}', '{tag}')"
-        for tok, tag in _pos_tag_map()
-    )
-    return f"""
-        with toks as (
-          select doc_id, unnest(regexp_extract_all(text, '\\S+')) as token
-          from documents),
-        tagged as (
-          select t.doc_id,
-                 coalesce(tm.tag, 'UNSEEN:' || t.token) as tag
-          from toks t
-          left join (values {rows}) tm(token, tag) on t.token = tm.token)
-        select doc_id, tag, count(*)::bigint as n_tokens
-        from tagged group by 1, 2
-    """
-
-
-def _canonicalize_sql(threshold: float = 0.85) -> str:
-    """Blocking-free exact recomputation of canonicalize_values over the
-    gazetteer mention values: freq from raw \\bterm\\b counts, all-pairs
-    JW >= threshold edges, recursive-CTE CC, freq/length/lex pick."""
-    occ = " union all ".join(
-        f"select doc_id, '{t}' as value, "
-        f"len(regexp_extract_all(text, '\\b{t}\\b')) as cnt from documents"
-        for t in sorted(GAZETTEER)
-    )
-    return f"""
-        with recursive occ as ({occ}),
-        vals as (select value, sum(cnt)::bigint as freq
-                 from occ where cnt > 0 group by 1),
-        pairs as (
-          select a.value as va, b.value as vb
-          from vals a join vals b on a.value < b.value
-          where jaro_winkler_similarity(upper(a.value), upper(b.value))
-                >= {threshold}),
-        cnodes as (select va as v from pairs union select vb from pairs),
-        cedges as (select va as src, vb as dst from pairs
-                   union select vb, va from pairs),
-        reach(a, b) as (
-          select v, v from cnodes
-          union
-          select r.a, e.dst from reach r join cedges e on r.b = e.src),
-        comp as (select a as value, min(b) as component from reach group by a),
-        members as (
-          select v.value, v.freq, coalesce(c.component, v.value) as component
-          from vals v left join comp c on c.value = v.value),
-        canon as (
-          select component, value as canonical from (
-            select component, value,
-                   row_number() over (
-                     partition by component
-                     order by freq desc, length(value) desc, value asc) as rn
-            from members) t
-          where rn = 1)
-        select m.value as value, c.canonical as canonical
-        from members m join canon c using (component)
-    """
-
-
-def _mention_graph_sql() -> str:
-    """Shared CTE prefix for the KG graph-analytics oracles: the
-    symmetrized bipartite doc<->entity mention graph, recomputed from the
-    raw documents table (same \\bterm\\b counts as operators/graph.py)."""
-    occ = " union all ".join(
-        f"select doc_id, '{t}' as term, "
-        f"len(regexp_extract_all(text, '\\b{t}\\b')) as cnt from documents"
-        for t in sorted(GAZETTEER)
-    )
-    return f"""
-        occ as ({occ}),
-        pos as (select * from occ where cnt > 0),
-        e as (select 'd:' || doc_id as src, 't:' || term as dst,
-                     cnt::bigint as weight
-              from pos),
-        sym as (select src, dst, weight from e
-                union all
-                select dst as src, src as dst, weight from e)
-    """
-
-
-def _pagerank_sql(iterations: int = 5, graph_sql: str | None = None) -> str:
-    """Unrolled fixed-iteration weighted PageRank (the operators/graph.py
-    recurrence verbatim): damping/teleport as parallel double literals
-    (0.85 / 0.15), same IEEE op per step; sum-order drift sits far below
-    the round(rank*1e9) grain.
-
-    ``graph_sql``: CTE text (bodies only, no WITH) ending in a ``sym``
-    relation (src, dst, weight); defaults to the mention graph.
-    """
-    its = []
-    prev = "r0"
-    for i in range(1, iterations + 1):
-        its.append(
-            f"""r{i} as (
-              select nodes.node as node,
-                     0.15::double / (select n from nn)
-                     + 0.85::double * coalesce(sum({prev}.rank * ep.p), 0.0)
-                         as rank
-              from nodes
-              left join ep on ep.dst = nodes.node
-              left join {prev} on {prev}.node = ep.src
-              group by nodes.node)"""
-        )
-        prev = f"r{i}"
-    chain = ",\n".join(its)
-    if graph_sql is None:
-        graph_sql = _mention_graph_sql()
-    return f"""
-        with {graph_sql},
-        outw as (select src, sum(weight::double) as ow from sym group by src),
-        ep as (select s.src, s.dst, s.weight::double / o.ow as p
-               from sym s join outw o using (src)),
-        nodes as (select distinct src as node from sym),
-        nn as (select count(*) as n from nodes),
-        r0 as (select node, 1.0::double / (select n from nn) as rank
-               from nodes),
-        {chain}
-        select node, round(rank * 1e9)::bigint as rank_ppb from {prev}
-    """
+    """One entry per operator; callables take (spark, sf_dir)."""
+    return {name: q.fn for name, q in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    from palladian_spark.operators.code import code_corpus_sql as _code_corpus_sql
-    from palladian_spark.operators.code import code_entities_sql as _code_entities_sql
-    from palladian_spark.operators.code import code_call_graph_sql as _call_graph_sql
-    from palladian_spark.operators.code import call_edges_sql as _call_edges_sql
-    from palladian_spark.operators.code import duplicate_files_sql as _dup_files_sql
-    from palladian_spark.operators.code import code_entity_link_sql as _entity_link_sql
-    from palladian_spark.operators.code import (
-        repo_shared_deps_sql as _shared_deps_sql,
-    )
-    from palladian_spark.operators.curation import (
-        pack_sequences_sql as _pack_sequences_sql,
-    )
-    from palladian_spark.operators.kg_query import (
-        BGP_CALL_CHAIN as _BGP_CALL_CHAIN,
-        BGP_CALL_CHAIN_NEQ as _BGP_CALL_CHAIN_NEQ,
-        BGP_PATH_QUERY as _BGP_PATH,
-        BGP_PATH_QUERY_NEQ as _BGP_PATH_NEQ,
-        KG_FUNCTIONAL_PREDS as _KG_FUNCTIONAL_PREDS,
-        KG_LITERAL_SHAPES as _KG_LITERAL_SHAPES,
-        KG_REF_PREDS as _KG_REF_PREDS,
-        bgp_query_sql as _bgp_sql,
-        describe_hubs_sql as _describe_hubs_sql,
-        diff_triples_sql as _diff_triples_sql,
-        infer_node_types_sql as _node_types_sql,
-        triple_history_sql as _triple_history_sql,
-        random_walks_sql as _random_walks_sql,
-        schema_graph_sql as _schema_graph_sql,
-        walk_skipgram_pairs_sql as _walk_pairs_sql,
-        weighted_random_walks_sql as _weighted_walks_sql,
-        validate_triples_sql as _validate_sql,
-    )
-    from palladian_spark.operators.code import triples_spo_sql as _triples_spo_sql
-    from palladian_spark.operators.textstats import lm_quality_sql as _lm_quality_sql
-    from palladian_spark.operators.bpe import (
-        bpe_merges_sql as _bpe_merges_sql,
-        bpe_token_counts_sql as _bpe_token_counts_sql,
-    )
-    from palladian_spark.operators.sketches import (
-        benchmark_bloom_bits_sql as _bloom_bits_sql,
-        token_cms_sql as _token_cms_sql,
-        token_hll_registers_sql as _token_hll_sql,
-    )
-    from palladian_spark.operators.layout import (
-        zorder_events_sql as _zorder_events_sql,
-    )
-    from palladian_spark.operators.mixture import (
-        mixture_sample_sql as _mixture_sql,
-    )
-    from palladian_spark.operators.graph import (
-        label_propagation_sql as _label_prop_sql,
-        link_training_pairs_sql as _link_pairs_sql,
-    )
-    from palladian_spark.operators.textstats import (
-        length_histogram_sql as _length_hist_sql,
-    )
-    from palladian_spark.operators.curation import (
-        pii_redact_sql as _pii_redact_sql,
-    )
-    from palladian_spark.operators.temporal import (
-        events_asof_sql as _events_asof_sql,
-        events_range_sql as _events_range_sql,
-        funnel_steps_sql as _funnel_sql,
-        cohort_retention_sql as _retention_sql,
-    )
-    from palladian_spark.operators.code_curation import (
-        augment_corpus_sql as _aug_corpus_sql,
-    )
-    from palladian_spark.operators.code_curation import (
-        latest_snapshot_sql as _latest_snapshot_sql,
-    )
-    from palladian_spark.operators.code_curation import (
-        with_history_sql as _with_history_sql,
-        clone_groups_sql as _clone_groups_sql,
-        license_report_sql as _license_report_sql,
-        code_quality_sql as _code_quality_sql,
-        curation_report_sql as _curation_report_sql,
-        fork_pairs_sql as _fork_pairs_sql,
-        with_generated_sql as _with_generated_sql,
-        near_clone_pairs_sql as _near_clones_sql,
-        with_forks_sql as _with_forks_sql,
-        secret_hits_sql as _secret_hits_sql,
-    )
-    from palladian_spark.operators.code_enrich import (
-        api_usage_sql as _api_usage_sql,
-        doc_triples_sql as _doc_triples_sql,
-        test_links_sql as _test_links_sql,
-        with_docstrings_sql as _with_docstrings_sql,
-        with_tests_sql as _with_tests_sql,
-    )
-    from palladian_spark.operators.curation import (
-        benchmark_overlap_sql as _decon_sql,
-    )
-    from palladian_spark.operators.winnow import winnow_pairs_sql as _winnow_sql
+    """DuckDB twin of every oracled query, over the views region nation
+    customer supplier part orders lineitem events documents embeddings."""
+    return {name: q.oracle() for name, q in REGISTRY.items() if q.oracle is not None}
 
-    # shared DuckDB CTE: the code_triples derivation (also the base of the
-    # export twins) — identical text to the code_triples oracle body
-    _CODE_TRIP_CTE = """code_file_agg as (
-              select repo, path, pred, obj,
-                     min(sha) as content_sha256, count(*)::bigint as support
-              from (select e.*, sha256(s.content) as sha
-                    from code_ents e
-                    join code_src s using (repo, path, lang))
-              group by 1, 2, 3, 4),
-            code_trip as (
-              select repo || '/' || path as subj, pred, obj,
-                     content_sha256, support
-              from code_file_agg
-              union all
-              select repo as subj, 'depends-on' as pred, obj,
-                     min(content_sha256) as content_sha256,
-                     count(*)::bigint as support
-              from code_file_agg where pred = 'imports'
-              group by 1, 2, 3)"""
-    from palladian_spark.operators.curation import (
-        dup_span_stats_sql as _dup_spans_sql,
-    )
-    from palladian_spark.operators.curation import (
-        pii_redact_sql as _pii_redact_sql,
-    )
-    from palladian_spark.operators.termcorpus import (
-        bm25_topk_sql as _bm25_sql,
-        doc_keywords_sql as _doc_keywords_sql,
-        doc_terms_sql as _doc_terms_sql,
-        term_corpus_sql as _term_corpus_sql,
-    )
-    from palladian_spark.operators.curation import (
-        with_pii_sql as _with_pii_sql,
-    )
-    from palladian_spark.operators.curation import (
-        repetition_stats_sql as _repetition_sql,
-    )
-    from palladian_spark.operators.graph import (
-        export_edges_sql as _export_edges_sql,
-    )
-    from palladian_spark.operators.graph import (
-        export_nodes_sql as _export_nodes_sql,
-    )
-    from palladian_spark.operators.graph import triangle_counts_sql as _triangles_sql
-    from palladian_spark.operators.graph import (
-        common_neighbor_scores_sql as _link_pred_sql,
-    )
-    from palladian_spark.operators.graph import k_hop_counts_sql as _k_hop_sql
-    from palladian_spark.operators.graph import (
-        clustering_coefficients_sql as _clustering_sql,
-    )
-    from palladian_spark.operators.graph import bfs_distances_sql as _bfs_sql
-    from palladian_spark.operators.graph import (
-        export_ntriples_sql as _export_ntriples_sql,
-    )
-    from palladian_spark.operators.graph import pmi_edges_sql as _pmi_edges_sql
-    from palladian_spark.operators.textstats import LANG_MARKERS
 
-    langs = sorted(LANG_MARKERS)
-    # best-language expression: left-to-right strictly-greater scan, matching
-    # the Spark fold in language_id (earlier language wins ties).
-    best = "'unknown'"
-    best_hits = "0"
-    for lang in langs:
-        best = f"case when hits_{lang} > {best_hits} then '{lang}' else {best} end"
-        best_hits = f"greatest({best_hits}, hits_{lang})"
-
-    oracles = {
-        "doc_token_counts": f"""
-            select doc_id,
-                   len(regexp_extract_all(text, '{_TOKEN_REGEX_SQL}')) as token_count
-            from documents
-        """,
-        "doc_quality": f"""
-            with w as (
-              select doc_id, text,
-                     regexp_extract_all(lower(text), '[a-z]+') as words
-              from documents)
-            select doc_id,
-                   length(text) as n_chars,
-                   len(words) as n_words,
-                   coalesce(list_sum(list_transform(words, w -> length(w))), 0)::int
-                       as sum_word_chars,
-                   len(list_filter(words, w -> w in ({_EN_MARKERS}))) as stopword_hits,
-                   (length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')))
-                       as punct_chars
-            from w
-        """,
-        "doc_language_id": f"""
-            with h as (select doc_id, {_lang_hits_sql()} from documents)
-            select doc_id, {", ".join(f"hits_{lang}" for lang in langs)},
-                   {best} as lang_guess
-            from h
-        """,
-        "doc_fingerprints": """
-            select doc_id,
-                   md5(array_to_string(regexp_extract_all(lower(text), '[a-z]+'), ' '))
-                       as fingerprint_md5
-            from documents
-        """,
-        # chunking: n_chunks = 1 + floor((len-size+stride-1)/stride), clamped
-        # to >= 1; substr/length are char-based on both engines.
-        "doc_chunks": """
-            with d as (select doc_id, coalesce(text, '') as t from documents),
-            n as (select doc_id, t,
-                         greatest(1, 1 + cast(floor((length(t) - 101) / 400.0) as int)) as nc
-                  from d),
-            x as (select doc_id, t,
-                         unnest(generate_series(0, nc - 1)) as chunk_id
-                  from n)
-            select doc_id, chunk_id::bigint as chunk_id,
-                   substr(t, chunk_id * 400 + 1, 500) as chunk_text
-            from x
-        """,
-        "doc_split": """
-            select doc_id,
-                   case when substr(md5(coalesce(text, '')), 1, 2) < 'cc' then 'train'
-                        when substr(md5(coalesce(text, '')), 1, 2) < 'e6' then 'val'
-                        else 'test' end as split
-            from documents
-        """,
-        "doc_pack_sequences": _pack_sequences_sql(
-            _TOKEN_REGEX_SQL, capacity=1024
-        ),
-        "doc_decontaminate": f"""
-            with {_decon_sql()}
-        """,
-        "doc_dup_spans": f"""
-            {_dup_spans_sql()}
-        """,
-        "doc_term_corpus": f"""
-            with {_doc_terms_sql()}
-            {_term_corpus_sql()}
-        """,
-        # distributed BPE trainer: unrolled per-round CTEs recompute pair
-        # counts, the lexicographic-tie argmax, and the greedy merge (runs
-        # resolved via gaps-and-islands windows) — see operators/bpe.py
-        "bpe_merges": _bpe_merges_sql(8),
-        "bpe_token_counts": _bpe_token_counts_sql(8),
-        # HLL register table: portable md5 hash + bit ops + bin-length rho;
-        # per-lang sketches max-merge into the '*' row (exact merge)
-        "doc_token_hll": _token_hll_sql(8),
-        "doc_token_cms": _token_cms_sql(4, 1024),
-        "doc_length_histogram": _length_hist_sql(),
-        "kg_label_prop": _label_prop_sql(_mention_graph_sql(), 4),
-        "kg_training_pairs": _link_pairs_sql(_mention_graph_sql(), 3),
-        "doc_decon_bloom": _bloom_bits_sql(65536, 3, 20),
-        # mixture sampling: naive global-window twin of the two-level cut
-        "doc_mixture_sample": _mixture_sql(
-            "1 + (('0x' || substr(md5(source), 1, 15))::bigint % 3)", 0.4
-        ),
-        # Morton layout key: identical quantize + unrolled bit-interleave
-        # expression on both engines (offset-invariant under the NTZ epoch
-        # cast - only differences enter the quantizer)
-        "events_zorder": _zorder_events_sql(),
-        "events_funnel": _funnel_sql(["view", "click", "purchase"]),
-        "events_retention": _retention_sql(),
-        "doc_keywords": f"""
-            with {_doc_terms_sql()}
-            {_doc_keywords_sql()}
-        """,
-        "doc_bm25_topk": f"""
-            with {_doc_terms_sql()},
-            {_bm25_sql(_BM25_QUERY)}
-        """,
-        "doc_pii_redact": f"""
-            with {_with_pii_sql()}
-            {_pii_redact_sql()}
-        """,
-        "doc_repetition": f"""
-            with {_repetition_sql()}
-        """,
-        "doc_exact_dedup": """
-            select doc_id, md5(text) as content_hash
-            from (select doc_id, text,
-                         row_number() over (partition by md5(text) order by doc_id) rn
-                  from documents)
-            where rn = 1
-        """,
-        "doc_ngram_jaccard": """
-            with sh as (
-              select doc_id as doc,
-                     list_distinct(list_transform(
-                        list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-                                    (x, i) -> i <= len(regexp_extract_all(lower(text), '[a-z0-9]+')) - 3),
-                        (x, i) -> x || ' ' ||
-                                  regexp_extract_all(lower(text), '[a-z0-9]+')[i+1] || ' ' ||
-                                  regexp_extract_all(lower(text), '[a-z0-9]+')[i+2])) as shingles
-              from documents),
-            tok as (select doc, unnest(shingles) as shingle from sh),
-            sizes as (select doc, count(*) as n_shingles from tok group by doc),
-            shared as (
-              select a.doc as doc_a, b.doc as doc_b, count(*) as shared
-              from tok a join tok b on a.shingle = b.shingle and a.doc < b.doc
-              group by 1, 2)
-            select doc_a, doc_b, shared, sa.n_shingles as n_a, sb.n_shingles as n_b
-            from shared
-            join sizes sa on doc_a = sa.doc
-            join sizes sb on doc_b = sb.doc
-            where 5 * shared >= 1 * (sa.n_shingles + sb.n_shingles - shared)
-        """,
-        "doc_dup_clusters": """
-            with recursive sh as (
-              select doc_id as doc,
-                     list_distinct(list_transform(
-                        list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-                                    (x, i) -> i <= len(regexp_extract_all(lower(text), '[a-z0-9]+')) - 3),
-                        (x, i) -> x || ' ' ||
-                                  regexp_extract_all(lower(text), '[a-z0-9]+')[i+1] || ' ' ||
-                                  regexp_extract_all(lower(text), '[a-z0-9]+')[i+2])) as shingles
-              from documents),
-            tok as (select doc, unnest(shingles) as shingle from sh),
-            sizes as (select doc, count(*) as n_shingles from tok group by doc),
-            shared as (
-              select a.doc as doc_a, b.doc as doc_b, count(*) as shared
-              from tok a join tok b on a.shingle = b.shingle and a.doc < b.doc
-              group by 1, 2),
-            pairs as (
-              select doc_a, doc_b from shared
-              join sizes sa on doc_a = sa.doc
-              join sizes sb on doc_b = sb.doc
-              where 5 * shared >= 1 * (sa.n_shingles + sb.n_shingles - shared)),
-            nodes as (select doc_a as doc from pairs union select doc_b from pairs),
-            edges as (select doc_a as src, doc_b as dst from pairs
-                      union select doc_b, doc_a from pairs),
-            reach(a, b) as (
-              select doc, doc from nodes
-              union
-              select r.a, e.dst from reach r join edges e on r.b = e.src)
-            select a as doc_id, min(b) as cluster from reach group by a
-        """,
-        "doc_stratified_sample": """
-            select doc_id, source from (
-              select doc_id, source,
-                     row_number() over (partition by source
-                                        order by md5(doc_id::varchar), doc_id) as rn
-              from documents) t
-            where rn <= 10
-        """,
-        "doc_dedup_near": """
-            with recursive sh as (
-              select doc_id as doc,
-                     list_distinct(list_transform(
-                        list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-                                    (x, i) -> i <= len(regexp_extract_all(lower(text), '[a-z0-9]+')) - 3),
-                        (x, i) -> x || ' ' ||
-                                  regexp_extract_all(lower(text), '[a-z0-9]+')[i+1] || ' ' ||
-                                  regexp_extract_all(lower(text), '[a-z0-9]+')[i+2])) as shingles
-              from documents),
-            tok as (select doc, unnest(shingles) as shingle from sh),
-            sizes as (select doc, count(*) as n_shingles from tok group by doc),
-            shared as (
-              select a.doc as doc_a, b.doc as doc_b, count(*) as shared
-              from tok a join tok b on a.shingle = b.shingle and a.doc < b.doc
-              group by 1, 2),
-            pairs as (
-              select doc_a, doc_b from shared
-              join sizes sa on doc_a = sa.doc
-              join sizes sb on doc_b = sb.doc
-              where 5 * shared >= 1 * (sa.n_shingles + sb.n_shingles - shared)),
-            nodes as (select doc_a as doc from pairs union select doc_b from pairs),
-            edges as (select doc_a as src, doc_b as dst from pairs
-                      union select doc_b, doc_a from pairs),
-            reach(a, b) as (
-              select doc, doc from nodes
-              union
-              select r.a, e.dst from reach r join edges e on r.b = e.src),
-            cc as (select a as doc_id, min(b) as cluster from reach group by a)
-            select d.doc_id from documents d
-            left join cc on d.doc_id = cc.doc_id
-            where cc.cluster is null or cc.cluster = d.doc_id
-        """,
-        "doc_minhash_pairs": """
-            with sh as (
-              select doc_id as doc,
-                     list_distinct(list_transform(
-                        list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-                                    (x, i) -> i <= len(regexp_extract_all(lower(text), '[a-z0-9]+')) - 3),
-                        (x, i) -> x || ' ' ||
-                                  regexp_extract_all(lower(text), '[a-z0-9]+')[i+1] || ' ' ||
-                                  regexp_extract_all(lower(text), '[a-z0-9]+')[i+2])) as shingles
-              from documents),
-            tok as (select doc, unnest(shingles) as shingle from sh),
-            sizes as (select doc, count(*) as n_shingles from tok group by doc),
-            shared as (
-              select a.doc as doc_a, b.doc as doc_b, count(*) as shared
-              from tok a join tok b on a.shingle = b.shingle and a.doc < b.doc
-              group by 1, 2),
-            j as (
-              select doc_a, doc_b,
-                     round(shared::double /
-                           (sa.n_shingles + sb.n_shingles - shared), 6) as jac
-              from shared
-              join sizes sa on doc_a = sa.doc
-              join sizes sb on doc_b = sb.doc)
-            select doc_a, doc_b,
-                   round(jac * 1000000)::bigint as jaccard_ppm
-            from j where jac >= 0.2
-        """,
-        "doc_simhash": _simhash_sig_sql(),
-        "media_features": """
-            select 'm' || doc_id as media_id,
-                   (16 + doc_id % 32)::int as width,
-                   (12 + (doc_id * 7) % 24)::int as height
-            from documents
-        """,
-        # Independent recomputation of the streamed-and-compacted triple
-        # log: gazetteer occurrence counts per doc drive mentioned-in
-        # support (one triple row per regex match folds to the match
-        # count) and co-occurs-with support (distinct per doc, folds to
-        # doc count); lineage is min(sha256(text)) over contributing docs,
-        # matching dedup semantics across micro-batches.
-        "streaming_triples": _streaming_triples_sql(),
-        # De-pinned round 4: full independent DuckDB recomputations (the
-        # RE2-twin pattern + position reconstruction; see the helper
-        # docstrings and tests/test_string_tagger_oracle.py for the
-        # agreement guards).
-        "string_tagger_candidates": _string_tagger_sql(),
-        "kg_triples": _kg_triples_sql(threshold=0.9),
-        # same full-recompute oracle on purpose: passing proves the
-        # incremental merge path emits byte-identical triples
-        "kg_triples_incremental": _kg_triples_sql(threshold=0.9),
-        # Source-code extraction twins: the corpus derivation AND the
-        # per-language regex extraction are re-rendered from the same
-        # TEMPLATES/PATTERNS source of truth into DuckDB SQL
-        # (operators/code.py code_corpus_sql / code_entities_sql) — a full
-        # independent recomputation in a second regex engine (RE2 vs
-        # java.util.regex; patterns stay in the common subset).
-        "code_imports": f"""
-            with {_code_corpus_sql()},
-            {_code_entities_sql()}
-            select repo, path, lang, obj as module, count(*)::bigint as n_refs
-            from code_ents where pred = 'imports'
-            group by 1, 2, 3, 4
-        """,
-        "code_defs": f"""
-            with {_code_corpus_sql()},
-            {_code_entities_sql()}
-            select repo, path, lang, substr(pred, 9) as kind,
-                   obj as symbol, count(*)::bigint as n_refs
-            from code_ents where pred like 'defines-%'
-            group by 1, 2, 3, 4, 5
-        """,
-        "code_triples": f"""
-            with {_code_corpus_sql()},
-            {_code_entities_sql()},
-            code_file_agg as (
-              select repo, path, pred, obj,
-                     min(sha) as content_sha256, count(*)::bigint as support
-              from (select e.*, sha256(s.content) as sha
-                    from code_ents e
-                    join code_src s using (repo, path, lang))
-              group by 1, 2, 3, 4)
-            select repo || '/' || path as subj, pred, obj,
-                   content_sha256, support
-            from code_file_agg
-            union all
-            select repo as subj, 'depends-on' as pred, obj,
-                   min(content_sha256) as content_sha256,
-                   count(*)::bigint as support
-            from code_file_agg where pred = 'imports'
-            group by 1, 2, 3
-        """,
-        # Cross-file resolution twins (operators/code.py *_sql renderers):
-        # same dual-rendered-single-source-of-truth scheme as code_ents —
-        # a second regex engine + second join engine recompute everything.
-        "code_call_graph": f"""
-            with {_code_corpus_sql()},
-            {_code_entities_sql()},
-            {_call_graph_sql()}
-        """,
-        "code_entity_link": f"""
-            with {_code_corpus_sql()},
-            {_code_entities_sql()},
-            {_entity_link_sql()}
-        """,
-        "repo_shared_deps": f"""
-            with {_code_corpus_sql()},
-            {_code_entities_sql()},
-            {_shared_deps_sql()}
-        """,
-        "kg_triangles": f"""
-            with pres as ({_gazetteer_presence_sql()}),
-            cooc as (
-              select a.value as subj, b.value as obj
-              from pres a join pres b
-                on a.doc_id = b.doc_id and a.value < b.value
-              group by 1, 2),
-            {_triangles_sql("cooc")}
-        """,
-        "kg_link_prediction": f"""
-            with {_code_corpus_sql()},
-            {_code_entities_sql()},
-            {_call_edges_sql()},
-            {_link_pred_sql("call_edges")}
-        """,
-        "kg_neighborhood": f"""
-            with {_code_corpus_sql()},
-            {_code_entities_sql()},
-            {_call_edges_sql()},
-            {_k_hop_sql("call_edges", k=2)}
-        """,
-        "code_exact_dupes": f"""
-            with {_code_corpus_sql()}
-            {_dup_files_sql()}
-        """,
-        # Code-curation twins (operators/code_curation.py *_sql renderers):
-        # the corpus augmentation (license headers + planted secrets) and
-        # every detection regex are recomputed by the second engine.
-        "code_clone_groups": f"""
-            with {_code_corpus_sql()},
-            {_aug_corpus_sql()}
-            {_clone_groups_sql()}
-        """,
-        "code_curation_report": f"""
-            with {_code_corpus_sql()},
-            {_aug_corpus_sql()},
-            {_with_forks_sql(src="code_aug")},
-            {_curation_report_sql()}
-        """,
-        "code_fork_pairs": f"""
-            with {_code_corpus_sql()},
-            {_with_forks_sql(src="code_src")},
-            {_fork_pairs_sql()}
-        """,
-        "code_near_clones": f"""
-            with {_code_corpus_sql()},
-            {_near_clones_sql()}
-        """,
-        "code_quality": f"""
-            with {_code_corpus_sql()},
-            {_with_generated_sql(src="code_src")},
-            {_code_quality_sql()}
-        """,
-        "code_docstrings": f"""
-            with {_code_corpus_sql()},
-            {_with_docstrings_sql(src="code_src")}
-            {_doc_triples_sql(src="code_docsrc")}
-        """,
-        "code_test_links": f"""
-            with {_code_corpus_sql()},
-            {_with_tests_sql(src="code_src")}
-            {_test_links_sql(src="code_testsrc")}
-        """,
-        "code_api_usage": f"""
-            with {_code_corpus_sql()},
-            {_code_entities_sql()}
-            {_api_usage_sql(ents="code_ents")}
-        """,
-        "code_winnow_pairs": f"""
-            with {_code_corpus_sql()},
-            {_winnow_sql(src="code_src")}
-        """,
-        "kg_export_nodes": f"""
-            with {_code_corpus_sql()},
-            {_code_entities_sql()},
-            {_CODE_TRIP_CTE}
-            {_export_nodes_sql(src="code_trip")}
-        """,
-        "kg_export_edges": f"""
-            with {_code_corpus_sql()},
-            {_code_entities_sql()},
-            {_CODE_TRIP_CTE}
-            {_export_edges_sql(src="code_trip")}
-        """,
-        "code_licenses": f"""
-            with {_code_corpus_sql()},
-            {_aug_corpus_sql()}
-            {_license_report_sql()}
-        """,
-        "code_latest_snapshot": f"""
-            with {_code_corpus_sql()},
-            {_with_history_sql()}
-            {_latest_snapshot_sql()}
-        """,
-        "code_secret_hits": f"""
-            with {_code_corpus_sql()},
-            {_aug_corpus_sql()}
-            {_secret_hits_sql()}
-        """,
-        "kg_clustering": f"""
-            with {_code_corpus_sql()},
-            {_code_entities_sql()},
-            {_call_edges_sql()},
-            {_clustering_sql("call_edges")}
-        """,
-        "kg_stats": f"""
-            select pred, count(*)::bigint as n_triples,
-                   count(distinct subj)::bigint as n_subjects,
-                   count(distinct obj)::bigint as n_objects,
-                   sum(support)::bigint as total_support
-            from ({_kg_triples_sql(threshold=0.9)})
-            group by 1
-        """,
-        # KG query surface (operators/kg_query.py *_sql renderers): the
-        # triple set is re-derived from code_ents by the second engine,
-        # then the BGP / validation / walk computations are recomputed
-        # independently (flat-join BGP, union-all rules, unrolled walk
-        # steps with the same portable md5 successor choice).
-        "kg_bgp_query": f"""
-            with {_code_corpus_sql()},
-            {_code_entities_sql()},
-            {_call_edges_sql()},
-            {_triples_spo_sql("code_ents", prefix="bgp_")},
-            bgp_triples as (
-              select subj, pred, obj from bgp_spo
-              union
-              select distinct subj, 'calls-file' as pred, obj
-              from call_edges)
-            {_bgp_sql("bgp_triples", _BGP_CALL_CHAIN, _BGP_CALL_CHAIN_NEQ)}
-        """,
-        "kg_path_query": f"""
-            with {_code_corpus_sql()},
-            {_code_entities_sql()},
-            {_call_edges_sql()},
-            {_triples_spo_sql("code_ents", prefix="bgp_")},
-            bgp_triples as (
-              select subj, pred, obj from bgp_spo
-              union
-              select distinct subj, 'calls-file' as pred, obj
-              from call_edges)
-            {_bgp_sql("bgp_triples", _BGP_PATH, _BGP_PATH_NEQ, max_path_hops=3)}
-        """,
-        "kg_validate": f"""
-            with {_code_corpus_sql()},
-            {_code_entities_sql()},
-            {_triples_spo_sql("code_ents", prefix="kgv_")},
-            kgv_triples as (select subj, pred, obj from kgv_spo)
-            {_validate_sql("kgv_triples", _KG_FUNCTIONAL_PREDS, _KG_REF_PREDS, _KG_LITERAL_SHAPES)}
-        """,
-        "kg_walks": f"""
-            with {_code_corpus_sql()},
-            {_code_entities_sql()},
-            {_call_edges_sql()},
-            {_random_walks_sql("call_edges", walk_length=4, walks_per_node=1)}
-        """,
-        "kg_walk_pairs": f"""
-            with {_code_corpus_sql()},
-            {_code_entities_sql()},
-            {_call_edges_sql()},
-            {_random_walks_sql("call_edges", walk_length=4, walks_per_node=1, final_cte="rw_walks")},
-            {_walk_pairs_sql("rw_walks", window=2)}
-        """,
-        "kg_weighted_walks": f"""
-            with {_code_corpus_sql()},
-            {_code_entities_sql()},
-            {_call_edges_sql()},
-            wce as (select subj, obj, count(*)::bigint as weight
-                    from call_edges group by 1, 2),
-            {_weighted_walks_sql("wce", walk_length=4, walks_per_node=1)}
-        """,
-        "kg_pmi_edges": f"""
-            with pres as ({_gazetteer_presence_sql()}),
-            {_pmi_edges_sql("pres", "documents")}
-        """,
-        "kg_reachability": f"""
-            with {_code_corpus_sql()},
-            {_code_entities_sql()},
-            {_call_edges_sql()},
-            {_bfs_sql("call_edges", max_hops=3)}
-        """,
-        "kg_triple_history": f"""
-            with docs_g0 as (select * from documents where doc_id % 4 <> 0),
-            docs_g1 as (select * from documents where doc_id % 4 <> 1),
-            docs_g2 as (select * from documents where doc_id % 4 <> 2),
-            {_code_corpus_sql(documents="docs_g0", prefix="g0_")},
-            {_code_corpus_sql(documents="docs_g1", prefix="g1_")},
-            {_code_corpus_sql(documents="docs_g2", prefix="g2_")},
-            {_code_entities_sql(src="g0_code_src", name="g0_ents")},
-            {_code_entities_sql(src="g1_code_src", name="g1_ents")},
-            {_code_entities_sql(src="g2_code_src", name="g2_ents")},
-            {_triples_spo_sql("g0_ents", prefix="g0_")},
-            {_triples_spo_sql("g1_ents", prefix="g1_")},
-            {_triples_spo_sql("g2_ents", prefix="g2_")}
-            {_triple_history_sql([(0, "g0_spo"), (1, "g1_spo"), (2, "g2_spo")], last_gen=2)}
-        """,
-        "kg_describe": f"""
-            with {_code_corpus_sql()},
-            {_code_entities_sql()},
-            {_triples_spo_sql("code_ents", prefix="kgt_")}
-            {_describe_hubs_sql("kgt_spo", top_n=5)}
-        """,
-        "kg_export_ntriples": f"""
-            with {_code_corpus_sql()},
-            {_code_entities_sql()},
-            {_triples_spo_sql("code_ents", prefix="kgt_")}
-            {_export_ntriples_sql("kgt_spo")}
-        """,
-        "kg_node_types": f"""
-            with {_code_corpus_sql()},
-            {_code_entities_sql()},
-            {_triples_spo_sql("code_ents", prefix="kgt_")},
-            {_node_types_sql("kgt_spo")}
-            select node, node_type, n_votes from nt_types
-        """,
-        "kg_schema": f"""
-            with {_code_corpus_sql()},
-            {_code_entities_sql()},
-            {_triples_spo_sql("code_ents", prefix="kgt_")},
-            {_node_types_sql("kgt_spo")}
-            {_schema_graph_sql("kgt_spo")}
-        """,
-        "kg_snapshot_diff": f"""
-            with docs_old as (select * from documents where doc_id % 4 <> 3),
-            docs_new as (select * from documents where doc_id % 4 <> 0),
-            {_code_corpus_sql(documents="docs_old", prefix="old_")},
-            {_code_corpus_sql(documents="docs_new", prefix="new_")},
-            {_code_entities_sql(src="old_code_src", name="old_ents")},
-            {_code_entities_sql(src="new_code_src", name="new_ents")},
-            {_triples_spo_sql("old_ents", prefix="old_")},
-            {_triples_spo_sql("new_ents", prefix="new_")}
-            {_diff_triples_sql("old_spo", "new_spo")}
-        """,
-        "doc_lm_quality": _lm_quality_sql(),
-        "code_components": f"""
-            with recursive {_code_corpus_sql()},
-            {_code_entities_sql()},
-            {_call_edges_sql()},
-            cc_nodes as (
-              select subj as f from call_edges
-              union
-              select obj from call_edges),
-            cc_edges as (
-              select subj as src, obj as dst from call_edges
-              union
-              select obj, subj from call_edges),
-            reach(a, b) as (
-              select f, f from cc_nodes
-              union
-              select r.a, e.dst from reach r join cc_edges e on r.b = e.src)
-            select a as file, min(b) as component from reach group by a
-        """,
-        "kg_degree_stats": f"""
-            with {_mention_graph_sql()}
-            select src as node, count(*)::bigint as degree,
-                   sum(weight)::bigint as strength
-            from sym group by 1
-        """,
-        "kg_pagerank": _pagerank_sql(iterations=5),
-        "code_pagerank": _pagerank_sql(
-            iterations=5,
-            graph_sql=f"""{_code_corpus_sql()},
-            {_code_entities_sql()},
-            {_call_edges_sql()},
-            ce as (select subj as src, obj as dst, count(*)::bigint as weight
-                   from call_edges group by 1, 2),
-            sym as (select src, dst, weight from ce
-                    union all
-                    select dst as src, src as dst, weight from ce)""",
-        ),
-        # Full independent recomputation (de-pinned round 4): per-value
-        # mention frequencies from raw regex counts, exact ALL-PAIRS
-        # Jaro-Winkler edges (no blocking — exhaustive, so it also checks
-        # the Spark path's LSH recall), recursive-CTE connected components
-        # (min reachable value), then the same freq/length/lex canonical
-        # pick. Caveat, asserted in tests/test_canonicalize_oracle.py:
-        # DuckDB's standard JW stands in for the kernel's reference
-        # variant (kernels/similarity.py); valid because on the contract
-        # corpus every value pair sits far from the 0.85 threshold under
-        # BOTH variants (min margin > 0.17), so no edge can flip.
-        "canonicalize_mentions": _canonicalize_sql(threshold=0.85),
-        # Full independent SRP-LSH recomputation (md5-derived integer
-        # planes + fixed-point projection, see _srp_buckets_sql): candidate
-        # = any shared (table, bucket), then the same round-6 cosine
-        # rescoring formulation as ann_topk.
-        "ann_lsh_topk": f"""
-            with {_srp_buckets_sql(n_planes=3, n_tables=16)},
-            qb as (select vec_id as query_id, t, bucket from buckets
-                   where vec_id < 3),
-            cand as (select distinct qb.query_id, b.vec_id
-                     from buckets b join qb using (t, bucket)),
-            s as (select cand.query_id, cand.vec_id,
-                         round(list_dot_product(e.v, q.v) /
-                               coalesce(nullif(sqrt(list_dot_product(e.v, e.v))
-                                               * sqrt(list_dot_product(q.v, q.v)), 0), 1),
-                               6) as cos
-                  from cand
-                  join ev e on e.vec_id = cand.vec_id
-                  join ev q on q.vec_id = cand.query_id),
-            r as (select query_id, vec_id,
-                         row_number() over (partition by query_id
-                                            order by cos desc, vec_id) as rnk
-                  from s)
-            select query_id, vec_id, rnk from r where rnk <= 5
-        """,
-        "embedding_near_dups": f"""
-            with {_srp_buckets_sql(n_planes=10, n_tables=4)},
-            cand as (select distinct l.vec_id as id_a, r.vec_id as id_b
-                     from buckets l join buckets r using (t, bucket)
-                     where l.vec_id < r.vec_id),
-            s as (select cand.id_a, cand.id_b,
-                         round(list_dot_product(a.v, b.v) /
-                               coalesce(nullif(sqrt(list_dot_product(a.v, a.v))
-                                               * sqrt(list_dot_product(b.v, b.v)), 0), 1),
-                               6) as cos
-                  from cand
-                  join ev a on a.vec_id = cand.id_a
-                  join ev b on b.vec_id = cand.id_b)
-            -- trunc, not ::bigint: Spark's long cast truncates toward zero
-            -- while DuckDB's cast rounds
-            select id_a, id_b, cast(trunc(cos * 1000000) as bigint) as cosine_ppm
-            from s where cos >= 0.3
-        """,
-        # De-pinned round 4 (was the last frozen-fixture oracle): POS tags
-        # are a pure function of the token, so the kernel-classified
-        # vocabulary map is inlined (31 tokens, semantics pinned by the
-        # Java-parity goldens) and tokenization + distribution + counting
-        # recompute independently in SQL. See _pos_tag_map docstring for
-        # the trust boundary.
-        "doc_pos_tags": _pos_tags_sql(),
-        # the measured reference-agreement values (basis points); the
-        # BASELINE.md bar is >= 9500 on every metric
-        "ner_reference_agreement": """
-            select * from (values
-              ('train', 9975, 9991, 9981, 9996),
-              ('test',  9990, 9990, 9993, 9993)
-            ) t(corpus, exact_p_bp, exact_r_bp, muc_p_bp, muc_r_bp)
-        """,
-        "doc_simhash_pairs": f"""
-            with sig as ({_simhash_sig_sql()})
-            select a.doc as doc_a, b.doc as doc_b,
-                   bit_count(xor(a.simhash, b.simhash))::int as hamming
-            from sig a join sig b on a.doc < b.doc
-            where bit_count(xor(a.simhash, b.simhash)) <= 3
-        """,
-        # Independent recomputation of the derived coordinate corpus:
-        # identical printf derivation, integer microdegrees for the
-        # decimal form, same-order IEEE double expression + portable
-        # floor(x*1e6 + 0.5) for the DMS form. Positions from the fixed
-        # template prefix lengths.
-        "doc_coordinates": """
-            with d as (
-              select doc_id,
-                     doc_id % 90 as latd, (doc_id * 13) % 100 as latf,
-                     (doc_id * 3) % 180 as lngd, (doc_id * 7) % 100 as lngf,
-                     case when doc_id % 2 = 0 then 'N' else 'S' end as ns,
-                     case when doc_id % 3 = 0 then 'W' else 'E' end as ew,
-                     doc_id % 60 as mm1, (doc_id * 7) % 60 as ss1,
-                     (doc_id * 11) % 60 as mm2, (doc_id * 17) % 60 as ss2
-              from documents),
-            parts as (
-              select *,
-                     printf('%d.%02d%s %d.%02d%s',
-                            latd, latf, ns, lngd, lngf, ew) as degv,
-                     printf('%d°%d′%d″%s %d°%d′%d″%s',
-                            latd, mm1, ss1, ns, lngd, mm2, ss2, ew) as dmsv
-              from d)
-            select doc_id, 5 as start, (5 + length(degv))::int as "end",
-                   degv as value,
-                   (case ns when 'S' then -1 else 1 end
-                    * (latd*1000000 + latf*10000))::bigint as lat_udeg,
-                   (case ew when 'W' then -1 else 1 end
-                    * (lngd*1000000 + lngf*10000))::bigint as lng_udeg
-            from parts
-            union all
-            select doc_id, (5 + length(degv) + 6)::int as start,
-                   (5 + length(degv) + 6 + length(dmsv))::int as "end",
-                   dmsv as value,
-                   floor((case ns when 'S' then -1.0 else 1.0 end
-                          * (latd + mm1/60.0 + ss1/3600.0))
-                         * 1000000 + 0.5)::bigint as lat_udeg,
-                   floor((case ew when 'W' then -1.0 else 1.0 end
-                          * (lngd + mm2/60.0 + ss2/3600.0))
-                         * 1000000 + 0.5)::bigint as lng_udeg
-            from parts
-        """,
-        # Arithmetic recomputation of the derived address corpus: the
-        # template fixes every span start/value as a function of doc_id.
-        "doc_addresses": f"""
-            with w(i, word) as (values {", ".join(f"({i}, '{w}')" for i, w in enumerate(_ADDRESS_WORDS))}),
-            d as (
-              select doc_id,
-                     w1.word as w1, w2.word as w2,
-                     (doc_id % 400 + 1)::int as n1,
-                     ((doc_id * 7) % 90 + 1)::int as n2
-              from documents
-              join w w1 on w1.i = doc_id % 8
-              join w w2 on w2.i = (doc_id * 3 + 1) % 8),
-            p as (
-              select doc_id, w1, w2, n1::varchar as n1s, n2::varchar as n2s,
-                     6 as s1
-              from d),
-            rows_ as (
-              select doc_id, s1 as start,
-                     (s1 + length(w1) + 7)::int as "end",
-                     w1 || ' Street' as value, 'STREET' as tag from p
-              union all
-              select doc_id, (s1 + length(w1) + 8)::int,
-                     (s1 + length(w1) + 8 + length(n1s))::int,
-                     n1s, 'STREETNR' from p
-              union all
-              select doc_id, (s1 + length(w1) + 8 + length(n1s) + 5)::int,
-                     (s1 + length(w1) + 8 + length(n1s) + 5 + length(n2s))::int,
-                     n2s, 'STREETNR' from p
-              union all
-              select doc_id,
-                     (s1 + length(w1) + 8 + length(n1s) + 5 + length(n2s) + 1)::int,
-                     (s1 + length(w1) + 8 + length(n1s) + 5 + length(n2s) + 1
-                      + length(w2) + 5)::int,
-                     w2 || ' Road', 'STREET' from p)
-            select doc_id, start, "end", value, tag from rows_
-        """,
-        "doc_dates_normalized": """
-            with d as (
-              select doc_id,
-                     (13 + doc_id % 16)::int as dd,
-                     (1 + doc_id % 12)::int as mm,
-                     (doc_id % 10)::int as h,
-                     (13 + doc_id % 7)::int as d4,
-                     (1900 + doc_id % 200)::int as cyr,
-                     case (1 + doc_id % 12)
-                       when 1 then 'January' when 2 then 'February'
-                       when 3 then 'March' when 4 then 'April'
-                       when 5 then 'May' when 6 then 'June'
-                       when 7 then 'July' when 8 then 'August'
-                       when 9 then 'September' when 10 then 'October'
-                       when 11 then 'November' else 'December' end as mname
-              from documents),
-            parsed as (
-              select doc_id, printf('2021-03-%02dT0%d:1%d:2%d', dd, h, h, h) as value,
-                     'YYYY-MM-DDTHH:MM:SS+HH:MM' as fmt, true as has_time,
-                     strptime(printf('2021-03-%02dT0%d:1%d:2%d', dd, h, h, h),
-                              '%Y-%m-%dT%H:%M:%S') as t
-              from d
-              union all
-              select doc_id, printf('%02d/%02d/2022', mm, dd),
-                     'MM/DD/YYYY', false,
-                     strptime(printf('%02d/%02d/2022', mm, dd), '%m/%d/%Y')
-              from d
-              union all
-              select doc_id, printf('%02d.%02d.1999', dd, mm),
-                     'DD.MM.YYYY', false,
-                     strptime(printf('%02d.%02d.1999', dd, mm), '%d.%m.%Y')
-              from d
-              union all
-              select doc_id, printf('%s %dth, 2005', mname, d4),
-                     'MMMM DD, YYYY', false,
-                     strptime(printf('%s %dth, 2005', mname, d4), '%B %dth, %Y')
-              from d)
-            select doc_id, value, fmt,
-                   year(t)::int as year, month(t)::int as month, day(t)::int as day,
-                   case when has_time then hour(t)::int end as hour,
-                   case when has_time then minute(t)::int end as minute,
-                   case when has_time then second(t)::int end as second,
-                   strftime(t, '%Y-%m-%d %H:%M:%S') as ts
-            from parsed
-            union all
-            select doc_id, cyr::varchar as value, 'YYYY' as fmt,
-                   cyr as year, null::int as month, null::int as day,
-                   null::int as hour, null::int as minute, null::int as second,
-                   null::varchar as ts
-            from d
-        """,
-        "doc_simhash_wide_pairs": f"""
-            with sig as ({_simhash_wide_sig_sql()})
-            select a.doc as doc_a, b.doc as doc_b,
-                   (bit_count(xor(a.simhash_lo, b.simhash_lo))
-                    + bit_count(xor(a.simhash_hi, b.simhash_hi)))::int as hamming
-            from sig a join sig b on a.doc < b.doc
-            where bit_count(xor(a.simhash_lo, b.simhash_lo))
-                  + bit_count(xor(a.simhash_hi, b.simhash_hi)) <= 3
-        """,
-        "dict_mentions": f"""
-            with hits as ({_gazetteer_union_sql()})
-            select doc_id, tag, sum(cnt)::bigint as n_mentions
-            from hits where cnt > 0
-            group by doc_id, tag
-        """,
-        "doc_cooccur": f"""
-            with pres as ({_gazetteer_presence_sql()})
-            select a.value as subj, b.value as obj, count(*) as support
-            from pres a join pres b
-              on a.doc_id = b.doc_id and a.value < b.value
-            group by 1, 2
-        """,
-        "doc_cooccur_sentence": f"""
-            with derived as (
-              select doc_id,
-                     regexp_replace(text, ' the ', '. The ', 'g') || '. Done' as text
-              from documents),
-            sent as (
-              select doc_id,
-                     generate_subscripts(regexp_split_to_array(text, '\\. '), 1) as sent_idx,
-                     unnest(regexp_split_to_array(text, '\\. ')) as s
-              from derived),
-            pres as (
-              select doc_id, sent_idx, t.term
-              from sent, (values {", ".join(f"('{t}')" for t in _COOC_TERMS)}) t(term)
-              where contains(s, t.term))
-            select a.term as term_a, b.term as term_b, count(*)::bigint as n
-            from pres a join pres b
-              on a.doc_id = b.doc_id and a.sent_idx = b.sent_idx and a.term < b.term
-            group by 1, 2
-        """,
-        "doc_cooccur_window": f"""
-            with pairs as (
-              select a.term as term_a, b.term as term_b
-              from (values {", ".join(f"('{t}')" for t in _COOC_TERMS)}) a(term),
-                   (values {", ".join(f"('{t}')" for t in _COOC_TERMS)}) b(term)
-              where a.term < b.term),
-            counts as (
-              select p.term_a, p.term_b,
-                     len(regexp_extract_all(d.text, p.term_a || '.{{0,200}}' || p.term_b))
-                     + len(regexp_extract_all(d.text, p.term_b || '.{{0,200}}' || p.term_a))
-                         as c
-              from pairs p cross join documents d)
-            select term_a, term_b, sum(c)::bigint as n
-            from counts group by 1, 2 having sum(c) > 0
-        """,
-        "ann_topk": """
-            with q as (select vec_id as qid, embedding::DOUBLE[] as qv
-                       from embeddings where vec_id < 3),
-            s as (select q.qid as query_id, e.vec_id,
-                         round(list_dot_product(e.embedding::DOUBLE[], q.qv) /
-                               (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))
-                                * sqrt(list_dot_product(q.qv, q.qv))), 6) as cos
-                  from embeddings e cross join q),
-            r as (select query_id, vec_id,
-                         row_number() over (partition by query_id
-                                            order by cos desc, vec_id) as rnk
-                  from s)
-            select query_id, vec_id, rnk from r where rnk <= 5
-        """,
-        # IVF: same cosine formulation/rounding as the Spark UDFs; assignment
-        # and probe tie-break `order by cos desc, c_id` == the UDF's stable
-        # argsort over ids-ascending centroids.
-        "ann_ivf_topk": """
-            with e0 as (select vec_id, embedding::DOUBLE[] as v from embeddings
-                        where embedding is not null and len(embedding) > 0),
-            -- modal-dim filter mirrors _centroid_matrix/_stack_valid: a
-            -- dim-corrupt row must neither enter the codebook nor diverge
-            -- the two engines (DuckDB list_dot_product errors on ragged)
-            dim as (select d from (select len(v) as d, count(*) as c
-                                   from e0 group by 1 order by c desc, d limit 1)),
-            e as (select vec_id, v from e0, dim where len(v) = dim.d),
-            c as (select vec_id as c_id, v as cv from e
-                 order by md5(vec_id::varchar), vec_id limit 16),
-            ac as (select e.vec_id, c.c_id,
-                          round(list_dot_product(e.v, c.cv) /
-                                coalesce(nullif(sqrt(list_dot_product(e.v, e.v))
-                                                * sqrt(list_dot_product(c.cv, c.cv)), 0), 1),
-                                6) as cos
-                   from e cross join c),
-            assign as (select vec_id, c_id from (
-                         select vec_id, c_id,
-                                row_number() over (partition by vec_id
-                                                   order by cos desc, c_id) as rn
-                         from ac) where rn = 1),
-            qprobe as (select vec_id as qid, c_id from (
-                         select vec_id, c_id,
-                                row_number() over (partition by vec_id
-                                                   order by cos desc, c_id) as rn
-                         from ac where vec_id < 3) where rn <= 4),
-            cand as (select distinct qp.qid as query_id, a.vec_id
-                     from qprobe qp join assign a using (c_id)),
-            s as (select cand.query_id, cand.vec_id,
-                         round(list_dot_product(e.v, q.v) /
-                               coalesce(nullif(sqrt(list_dot_product(e.v, e.v))
-                                               * sqrt(list_dot_product(q.v, q.v)), 0), 1),
-                               6) as cos
-                  from cand
-                  join e on e.vec_id = cand.vec_id
-                  join e q on q.vec_id = cand.query_id),
-            r as (select query_id, vec_id,
-                         row_number() over (partition by query_id
-                                            order by cos desc, vec_id) as rnk
-                  from s)
-            select query_id, vec_id, rnk from r where rnk <= 5
-        """,
-        # PQ-ADC: every quantity is int64 on the 2^20 fixed-point grid
-        # (iq(x) = floor(x*2^20+0.5)); dist = <a,a> - 2<a,b> + <b,b> equals
-        # numpy's sum((a-b)^2) exactly (all dots < 2^53, double-exact in
-        # DuckDB's list_dot_product). Ties: argmin-first == order by dist,
-        # c_idx; final rank order by score desc, vec_id.
-        "ann_pq_topk": """
-            with e0 as (select vec_id, embedding::DOUBLE[] as v from embeddings
-                        where embedding is not null and len(embedding) > 0),
-            dim as (select d from (select len(v) as d, count(*) as c
-                                   from e0 group by 1 order by c desc, d limit 1)),
-            e as (select vec_id, v from e0, dim where len(v) = dim.d),
-            eq as (select vec_id,
-                          list_transform(v, x ->
-                              cast(floor(x * 1048576.0 + 0.5) as bigint)) as iv,
-                          (select d from dim) // 4 as ds
-                   from e
-                   -- dim % m != 0 -> no codebook on the Spark side
-                   -- (pq requires equal subvectors); mirror the empty
-                   -- result instead of silently truncating trailing dims
-                   where (select d from dim) % 4 = 0),
-            -- codeword sources: the 16 conforming vectors with the smallest
-            -- md5(vec_id) hex (string compare == Spark's orderBy(md5(...)));
-            -- cell index = rank within that hash order
-            cb as (select row_number() over (order by md5(vec_id::varchar), vec_id) - 1
-                              as c_idx, iv, ds
-                   from (select vec_id, iv, ds from eq
-                         order by md5(vec_id::varchar), vec_id limit 16)),
-            subs as (select unnest(generate_series(0, 3)) as s),
-            esub as (select vec_id, s, list_slice(iv, s*ds + 1, (s+1)*ds) as sub
-                     from eq, subs),
-            csub as (select c_idx, s, list_slice(iv, s*ds + 1, (s+1)*ds) as sub
-                     from cb, subs),
-            dists as (select e.vec_id, e.s, c.c_idx,
-                             cast(list_dot_product(e.sub, e.sub) as bigint)
-                             - 2 * cast(list_dot_product(e.sub, c.sub) as bigint)
-                             + cast(list_dot_product(c.sub, c.sub) as bigint) as dist
-                      from esub e join csub c using (s)),
-            codes as (select vec_id, s, c_idx as code from (
-                        select vec_id, s, c_idx,
-                               row_number() over (partition by vec_id, s
-                                                  order by dist, c_idx) as rn
-                        from dists) where rn = 1),
-            qsub as (select vec_id as query_id, s, sub from esub where vec_id < 3),
-            t as (select q.query_id, q.s, c.c_idx,
-                         cast(list_dot_product(q.sub, c.sub) as bigint) as contrib
-                  from qsub q join csub c using (s)),
-            scores as (select t.query_id, codes.vec_id,
-                              sum(t.contrib)::bigint as score
-                       from codes join t on t.s = codes.s and t.c_idx = codes.code
-                       group by 1, 2),
-            pool as (select query_id, vec_id from (
-                       select query_id, vec_id,
-                              row_number() over (partition by query_id
-                                                 order by score desc, vec_id) as rn
-                       from scores) where rn <= 20),
-            resc as (select p.query_id, p.vec_id,
-                            round(list_dot_product(e.v, q.v) /
-                                  coalesce(nullif(sqrt(list_dot_product(e.v, e.v))
-                                                  * sqrt(list_dot_product(q.v, q.v)), 0), 1),
-                                  6) as cos
-                     from pool p
-                     join e on e.vec_id = p.vec_id
-                     join e q on q.vec_id = p.query_id),
-            r as (select query_id, vec_id, round(cos * 1000000)::bigint as cos_ppm,
-                         row_number() over (partition by query_id
-                                            order by cos desc, vec_id) as rnk
-                  from resc)
-            select query_id, vec_id, cos_ppm, rnk from r where rnk <= 5
-        """,
-        # IVF-PQ composition: IVF assignment/probe CTEs + PQ code/table CTEs
-        # + cell-restricted ADC scoring + round-6 rescore (see the two
-        # component oracles for the per-stage parity arguments)
-        "ann_ivfpq_topk": """
-            with e0 as (select vec_id, embedding::DOUBLE[] as v from embeddings
-                        where embedding is not null and len(embedding) > 0),
-            dim as (select d from (select len(v) as d, count(*) as c
-                                   from e0 group by 1 order by c desc, d limit 1)),
-            e as (select vec_id, v from e0, dim where len(v) = dim.d),
-            -- IVF codebook: 16 smallest-md5 conforming vec_ids, round-6 cosine assignment
-            c as (select vec_id as c_id, v as cv from e
-                 order by md5(vec_id::varchar), vec_id limit 16),
-            ac as (select e.vec_id, c.c_id,
-                          round(list_dot_product(e.v, c.cv) /
-                                coalesce(nullif(sqrt(list_dot_product(e.v, e.v))
-                                                * sqrt(list_dot_product(c.cv, c.cv)), 0), 1),
-                                6) as cos
-                   from e cross join c),
-            assign as (select vec_id, c_id from (
-                         select vec_id, c_id,
-                                row_number() over (partition by vec_id
-                                                   order by cos desc, c_id) as rn
-                         from ac) where rn = 1),
-            qprobe as (select vec_id as qid, c_id from (
-                         select vec_id, c_id,
-                                row_number() over (partition by vec_id
-                                                   order by cos desc, c_id) as rn
-                         from ac where vec_id < 3) where rn <= 4),
-            -- PQ codebook: smallest-md5 sample, fixed-point subvectors
-            eq as (select vec_id,
-                          list_transform(v, x -> cast(floor(x * 1048576.0 + 0.5) as bigint)) as iv,
-                          (select d from dim) // 4 as ds
-                   from e
-                   -- dim % m != 0 -> no codebook on the Spark side
-                   -- (pq requires equal subvectors); mirror the empty
-                   -- result instead of silently truncating trailing dims
-                   where (select d from dim) % 4 = 0),
-            cb as (select row_number() over (order by md5(vec_id::varchar), vec_id) - 1 as c_idx, iv, ds
-                   from (select vec_id, iv, ds from eq
-                         order by md5(vec_id::varchar), vec_id limit 16)),
-            subs as (select unnest(generate_series(0, 3)) as s),
-            esub as (select vec_id, s, list_slice(iv, s*ds + 1, (s+1)*ds) as sub from eq, subs),
-            csub as (select c_idx, s, list_slice(iv, s*ds + 1, (s+1)*ds) as sub from cb, subs),
-            dists as (select e.vec_id, e.s, c.c_idx,
-                             cast(list_dot_product(e.sub, e.sub) as bigint)
-                             - 2 * cast(list_dot_product(e.sub, c.sub) as bigint)
-                             + cast(list_dot_product(c.sub, c.sub) as bigint) as dist
-                      from esub e join csub c using (s)),
-            codes as (select vec_id, s, c_idx as code from (
-                        select vec_id, s, c_idx,
-                               row_number() over (partition by vec_id, s
-                                                  order by dist, c_idx) as rn
-                        from dists) where rn = 1),
-            qsub as (select vec_id as qid, s, sub from esub where vec_id < 3),
-            t as (select q.qid, q.s, c.c_idx,
-                         cast(list_dot_product(q.sub, c.sub) as bigint) as contrib
-                  from qsub q join csub c using (s)),
-            -- candidates: corpus rows in probed cells
-            cand as (select distinct qp.qid, a.vec_id
-                     from qprobe qp join assign a using (c_id)),
-            scores as (select cand.qid, cand.vec_id, sum(t.contrib)::bigint as score
-                       from cand
-                       join codes on codes.vec_id = cand.vec_id
-                       join t on t.qid = cand.qid and t.s = codes.s and t.c_idx = codes.code
-                       group by 1, 2),
-            pool as (select qid, vec_id from (
-                       select qid, vec_id,
-                              row_number() over (partition by qid
-                                                 order by score desc, vec_id) as rn
-                       from scores) where rn <= 20),
-            resc as (select p.qid as query_id, p.vec_id,
-                            round(list_dot_product(e.v, q.v) /
-                                  coalesce(nullif(sqrt(list_dot_product(e.v, e.v))
-                                                  * sqrt(list_dot_product(q.v, q.v)), 0), 1),
-                                  6) as cos
-                     from pool p
-                     join e on e.vec_id = p.vec_id
-                     join e q on q.vec_id = p.qid),
-            r as (select query_id, vec_id, round(cos * 1000000)::bigint as cos_ppm,
-                         row_number() over (partition by query_id
-                                            order by cos desc, vec_id) as rnk
-                  from resc)
-            select query_id, vec_id, cos_ppm, rnk from r where rnk <= 5
-        """,
-
-        "embedding_pq_codes": """
-            with e0 as (select vec_id, embedding::DOUBLE[] as v from embeddings
-                        where embedding is not null and len(embedding) > 0),
-            dim as (select d from (select len(v) as d, count(*) as c
-                                   from e0 group by 1 order by c desc, d limit 1)),
-            e as (select vec_id, v from e0, dim where len(v) = dim.d),
-            eq as (select vec_id,
-                          list_transform(v, x ->
-                              cast(floor(x * 1048576.0 + 0.5) as bigint)) as iv,
-                          (select d from dim) // 4 as ds
-                   from e
-                   -- dim % m != 0 -> no codebook on the Spark side
-                   -- (pq requires equal subvectors); mirror the empty
-                   -- result instead of silently truncating trailing dims
-                   where (select d from dim) % 4 = 0),
-            cb as (select row_number() over (order by md5(vec_id::varchar), vec_id) - 1
-                              as c_idx, iv, ds
-                   from (select vec_id, iv, ds from eq
-                         order by md5(vec_id::varchar), vec_id limit 16)),
-            subs as (select unnest(generate_series(0, 3)) as s),
-            esub as (select vec_id, s, list_slice(iv, s*ds + 1, (s+1)*ds) as sub
-                     from eq, subs),
-            csub as (select c_idx, s, list_slice(iv, s*ds + 1, (s+1)*ds) as sub
-                     from cb, subs),
-            dists as (select e.vec_id, e.s, c.c_idx,
-                             cast(list_dot_product(e.sub, e.sub) as bigint)
-                             - 2 * cast(list_dot_product(e.sub, c.sub) as bigint)
-                             + cast(list_dot_product(c.sub, c.sub) as bigint) as dist
-                      from esub e join csub c using (s)),
-            codes as (select vec_id, s, c_idx as code from (
-                        select vec_id, s, c_idx,
-                               row_number() over (partition by vec_id, s
-                                                  order by dist, c_idx) as rn
-                        from dists) where rn = 1)
-            select vec_id, s::int as s, code from codes
-        """,
-
-        "events_windowed_counts": """
-            with e as (select event_type, epoch_us(ts) as us from events),
-            mn as (select min(us) as m from e)
-            select event_type, (us - m) // 3600000000 as window_id,
-                   count(*) as n_events
-            from e cross join mn
-            group by 1, 2
-        """,
-        # int8 quantization: identical double op order + floor(x+0.5) on
-        # both engines (round() differs: numpy half-even vs SQL half-away).
-        "embedding_quantize": """
-            with e as (select vec_id, embedding::DOUBLE[] as v from embeddings
-                       where embedding is not null and len(embedding) > 0),
-            x as (select vec_id, v,
-                         unnest(generate_series(1, len(v))) as pos1 from e),
-            vals as (select vec_id, pos1, v[pos1] as val from x),
-            stats as (select pos1, min(val) as mn, max(val) as mx
-                      from vals group by pos1)
-            select vec_id, (pos1 - 1)::bigint as pos,
-                   case when mx = mn then 0
-                        else cast(floor((val - mn) * 255.0 / (mx - mn) + 0.5) as int) - 128
-                   end as code
-            from vals join stats using (pos1)
-        """,
-        # NOTE: DuckDB sum() over integer args returns HUGEINT (int128),
-        # which pandas renders as float64/object and breaks the driver's
-        # value hash vs Spark's int64 — every integer sum below carries an
-        # OUTER ::bigint cast.
-        "tpch_pricing": """
-            select l_returnflag, l_linestatus,
-                   sum(l_quantity)::bigint as sum_qty,
-                   sum(round(l_extendedprice * 100)::bigint)::bigint
-                       as sum_base_price_cents,
-                   sum(round(l_extendedprice * (1.0 - l_discount) * 100)::bigint)::bigint
-                       as sum_disc_price_cents,
-                   count(*) as count_order
-            from lineitem
-            where l_shipdate <= timestamp '2000-09-02'
-            group by l_returnflag, l_linestatus
-        """,
-        "join_customer_orders": """
-            select c_mktsegment, count(*) as n_orders,
-                   sum(round(o_totalprice * 100)::bigint)::bigint as sum_total_cents
-            from orders join customer on o_custkey = c_custkey
-            group by c_mktsegment
-        """,
-        "anti_join_customers": """
-            select c_custkey, c_name from customer
-            where c_custkey not in
-              (select o_custkey from orders where o_totalprice > 450000)
-        """,
-        "semi_join_parts": """
-            select p_brand, count(*) as n_parts
-            from part
-            where p_partkey in (select l_partkey from lineitem)
-            group by p_brand
-        """,
-        "events_seed_sample": """
-            select event_type, event_id, rn
-            from (select event_type, event_id,
-                         row_number() over (partition by event_type
-                                            order by ts, event_id) as rn
-                  from events)
-            where rn <= 5
-        """,
-        "events_asof": _events_asof_sql(
-            "purchase", "view", 3_600_000_000
-        ),
-        "events_range_join": _events_range_sql(
-            "purchase", "view", 900_000_000
-        ),
-        "events_sessionize": """
-            with e as (select user_id, event_id, epoch_us(ts) as us from events),
-            lagged as (
-              select user_id,
-                     us - lag(us) over (partition by user_id
-                                        order by us, event_id) as gap
-              from e)
-            select user_id,
-                   sum(case when gap is null or gap > 1800000000 then 1 else 0 end)::bigint
-                       as n_sessions,
-                   count(*) as n_events
-            from lagged group by user_id
-        """,
-        "events_topk": """
-            select event_type, n, rnk
-            from (select event_type, count(*) as n,
-                         row_number() over (order by count(*) desc, event_type) as rnk
-                  from events group by event_type)
-            where rnk <= 5
-        """,
-        "rule_engine_tags": f"""
-            with hits as ({_rule_hits_sql()})
-            select doc_id, value, tag, n
-            from hits where n > 0
-        """,
-        "rule_triples": f"""
-            with hits as ({_rule_hits_sql()})
-            select value as subj, 'instance-of' as pred, tag as obj,
-                   sum(n)::bigint as support
-            from hits where n > 0
-            group by 1, 2, 3
-        """,
-        "pattern_mining": f"""
-            with m as (
-              select unnest(regexp_extract_all(
-                  text, '(\\w+ \\w+ \\w+) ({_GAZ_ALT})\\b')) as m
-              from documents),
-            s as (select regexp_extract(m, '(\\w+ \\w+ \\w+) ({_GAZ_ALT})\\b', 1)
-                             as prefix,
-                         regexp_extract(m, '(\\w+ \\w+ \\w+) ({_GAZ_ALT})\\b', 2)
-                             as term
-                  from m),
-            c as (select prefix, term, count(*)::bigint as cnt
-                  from s group by 1, 2),
-            r as (select prefix, term, cnt,
-                         row_number() over (order by cnt desc, prefix, term)
-                             as rnk
-                  from c)
-            select prefix, term, cnt, rnk from r where rnk <= 20
-        """,
-        "doc_structure": """
-            with derived as (
-              select doc_id,
-                     regexp_replace(text, ' the ', '. The ', 'g')
-                     || ' visit https://ex' || (doc_id % 50)
-                     || '.org/a on March ' || (doc_id % 28 + 1)
-                     || ', ' || (doc_id % 25 + 2000) || '. Done' as text
-              from documents)
-            select doc_id,
-                   len(regexp_extract_all(text, 'https?://[^ ]+'))::int as n_urls,
-                   len(regexp_extract_all(text, 'March \\d{1,2}, \\d{4}'))::int
-                       as n_dates,
-                   (1 + len(regexp_extract_all(text, '\\. [A-Z]')))::int
-                       as n_sentences
-            from derived
-        """,
-        "classify_docs": """
-            -- unique-term semantics: the reference DefaultScorer scores each
-            -- distinct document term once, and training adds each (doc, term)
-            -- once (PalladianTextClassifier.java:201-205, :222-227)
-            with words as (
-              select distinct doc_id,
-                     unnest(regexp_extract_all(lower(text), '[a-z]+')) as term
-              from documents),
-            model as (
-              select term, category, count(*)::double as cnt
-              from (select distinct doc_id, lang as category,
-                           unnest(regexp_extract_all(lower(text), '[a-z]+')) as term
-                    from documents)
-              group by 1, 2),
-            dc as (select term, sum(cnt) as dict_count from model group by 1),
-            sm as (select m.term, m.category,
-                          pow(m.cnt / d.dict_count, 2) as term_score
-                   from model m join dc d using (term)),
-            scores as (select w.doc_id, s.category,
-                              round(sum(s.term_score), 9) as score
-                       from words w join sm s using (term)
-                       group by 1, 2),
-            r as (select doc_id, category,
-                         row_number() over (partition by doc_id
-                                            order by score desc, category) as rn
-                  from scores)
-            select doc_id, category as predicted from r where rn = 1
-        """,
-        "fpgrowth_itemsets": f"""
-            with baskets as (
-              select doc_id,
-                     list_distinct(regexp_extract_all(
-                         text, '\\b({_GAZ_ALT})\\b', 1)) as items
-              from documents
-              where len(regexp_extract_all(text, '\\b({_GAZ_ALT})\\b', 1)) > 0),
-            nb as (select count(*) as n from baskets),
-            singles as (select doc_id, unnest(items) as item from baskets),
-            s1 as (select item as items, count(*)::bigint as freq
-                   from singles group by 1),
-            pairs as (select a.item || ',' || b.item as items,
-                             count(*)::bigint as freq
-                      from singles a
-                      join singles b
-                        on a.doc_id = b.doc_id and a.item < b.item
-                      group by 1)
-            select items, freq
-            from (select * from s1 union all select * from pairs)
-            where freq >= ceil(0.2 * (select n from nb))
-        """,
-        # 1->1 association rules: Spark FPGrowth keeps itemsets with
-        # freq >= ceil(minSupport*n) and rules with confidence >=
-        # minConfidence; confidence/support emitted as floor(x*10000) so
-        # the identical IEEE division hashes identically in both engines.
-        "fpgrowth_rules": f"""
-            with baskets as (
-              select doc_id,
-                     list_distinct(regexp_extract_all(
-                         text, '\\b({_GAZ_ALT})\\b', 1)) as items
-              from documents
-              where len(regexp_extract_all(text, '\\b({_GAZ_ALT})\\b', 1)) > 0),
-            nb as (select count(*) as n from baskets),
-            singles as (select doc_id, unnest(items) as item from baskets),
-            s1 as (select item, count(*)::bigint as freq
-                   from singles group by 1),
-            dpairs as (select a.item as antecedent, b.item as consequent,
-                              count(*)::bigint as freq
-                       from singles a
-                       join singles b
-                         on a.doc_id = b.doc_id and a.item <> b.item
-                       group by 1, 2)
-            select p.antecedent,
-                   p.consequent,
-                   floor((p.freq::double / s.freq::double) * 10000)::bigint
-                       as confidence_bp,
-                   floor((p.freq::double / (select n from nb)) * 10000)::bigint
-                       as support_bp
-            from dpairs p
-            join s1 s on s.item = p.antecedent
-            where p.freq >= ceil(0.2 * (select n from nb))
-              and p.freq::double / s.freq::double >= 0.5
-        """,
-    }
-    # incremental code-side merge must equal the full recompute — the
-    # contract query shares code_triples' oracle by construction (per-file
-    # groups never straddle the disjoint batches; depends-on supports sum)
-    oracles["code_triples_incremental"] = oracles["code_triples"]
-    # the ship-it verdict table composes the component gates' oracles
-    # verbatim as nested-WITH subqueries (each is already a full
-    # independent recompute; quality thresholds are cross-multiplied
-    # integers). PII counts run over the RAW text (no synthetic
-    # injection - that exists only to exercise doc_pii_redact).
-    oracles["doc_curation_report"] = f"""
-        with crp_q as ({oracles["doc_quality"]}),
-        crp_rep as ({oracles["doc_repetition"]}),
-        crp_ex as ({oracles["doc_exact_dedup"]}),
-        crp_near as ({oracles["doc_dedup_near"]}),
-        crp_cont as (select distinct doc_id from ({oracles["doc_decontaminate"]})),
-        crp_src as (select doc_id, coalesce(text, '') as text from documents),
-        crp_pii as ({_pii_redact_sql("crp_src")}),
-        crp_flags as (
-          select d.doc_id,
-                 q.n_words::bigint as n_words,
-                 case when q.n_words >= 10
-                       and 2 * q.n_words <= q.sum_word_chars
-                       and q.sum_word_chars <= 12 * q.n_words
-                      then 1 else 0 end as quality_ok,
-                 rep.verdict,
-                 (p.n_email + p.n_phone + p.n_ipv4)::bigint as n_pii,
-                 case when ex.doc_id is not null then 1 else 0 end as exact_keep,
-                 case when nr.doc_id is not null then 1 else 0 end as near_keep,
-                 case when ct.doc_id is not null then 1 else 0 end as contaminated
-          from documents d
-          join crp_q q using (doc_id)
-          join crp_rep rep using (doc_id)
-          join crp_pii p using (doc_id)
-          left join crp_ex ex using (doc_id)
-          left join crp_near nr using (doc_id)
-          left join crp_cont ct using (doc_id))
-        select *,
-               case when quality_ok = 1 and verdict = 'keep'
-                     and exact_keep = 1 and near_keep = 1
-                     and contaminated = 0
-                    then 1 else 0 end as keep
-        from crp_flags
-    """
-    from palladian_spark.operators.spelling import spell_corrections_sql
-
-    oracles["doc_spell_corrections"] = spell_corrections_sql(top_k=150)
-
-    from palladian_spark.operators.featsel import feature_ranking_sql
-
-    oracles["feature_ranking"] = feature_ranking_sql(
-        "lang",
-        {
-            "source": "source",
-            "first_word": "split_part(text, ' ', 1)",
-            "len_bucket": "length(bin(n_chars))",
-        },
-    )
-
-    from palladian_spark.operators.chunking import noun_phrases_sql
-
-    _tag_rows = ", ".join(
-        f"('{tok.replace(chr(39), chr(39) * 2)}', '{tag}')"
-        for tok, tag in _pos_tag_map()
-    )
-    oracles["doc_noun_phrases"] = noun_phrases_sql(_tag_rows)
-
-    from palladian_spark.operators.naive_bayes import nb_classify_sql
-
-    oracles["nb_classify"] = nb_classify_sql(
-        "lang",
-        "doc_id",
-        {"source": "source", "first_word": "split_part(text, ' ', 1)"},
-        ["n_chars"],
-    )
-
-    from palladian_spark.operators.colors import media_pixel_colors_sql
-
-    oracles["media_pixel_colors"] = media_pixel_colors_sql()
-
-    from palladian_spark.operators.naive_bayes import nb_scored_with_clause
-    from palladian_spark.operators.roc import roc_auc_exact_sql
-
-    _nb_with = nb_scored_with_clause(
-        "lang",
-        "doc_id",
-        {"source": "source", "first_word": "split_part(text, ' ', 1)"},
-        ["n_chars"],
-    )
-    oracles["classifier_roc"] = f"""
-{_nb_with},
-roc_scores as (
-  select s.doc_id, s.score_milli as score, d.lang
-  from nb_scored s join documents d using (doc_id)
-  where s.category = 'en'),
-{roc_auc_exact_sql("roc_scores", "lang = 'en'", "doc_id")}
-"""
-
-    from palladian_spark.operators.nominal import nominal_classify_sql
-
-    oracles["nominal_classify"] = nominal_classify_sql(
-        "lang",
-        "doc_id",
-        {"source": "source", "first_word": "split_part(text, ' ', 1)"},
-    )
-    return oracles
+def headline() -> list[str]:
+    """The queries bench.py times: a cross-section of SURVEY §2 (the full
+    KG pipeline, mention detection, dedup/LSH, canonicalization, ANN and
+    the relational agg/join/window shapes)."""
+    return [name for name, q in REGISTRY.items() if q.headline]

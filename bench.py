@@ -3,6 +3,9 @@
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
 line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
+The headline queries are the contract queries registered with
+headline=True (__spark_entry__.headline); $SPARK_GRAFT_CPUS defaults to
+the cores this process may use.
 
 The flagship north-rule metric (end-to-end triples/sec for the KG
 pipeline) is reported alongside under "triples_per_sec". Each query is
@@ -26,124 +29,7 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-# Representative cross-section of SURVEY §2: the full KG pipeline (north
-# rule), NER mention detection, dedup/LSH, canonicalization, ANN, and the
-# relational checklist shapes (agg/join/window).
-HEADLINE = [
-    "kg_triples",
-    "kg_triples_incremental",
-    "kg_pagerank",
-    "kg_degree_stats",
-    "code_triples",
-    "code_call_graph",
-    "code_entity_link",
-    "repo_shared_deps",
-    "kg_triangles",
-    "kg_link_prediction",
-    "kg_neighborhood",
-    "code_exact_dupes",
-    "code_components",
-    "code_pagerank",
-    "code_clone_groups",
-    "code_near_clones",
-    "code_fork_pairs",
-    "code_curation_report",
-    "code_licenses",
-    "code_secret_hits",
-    "code_quality",
-    "code_latest_snapshot",
-    "code_docstrings",
-    "code_test_links",
-    "code_api_usage",
-    "code_winnow_pairs",
-    "kg_export_nodes",
-    "kg_export_edges",
-    "code_triples_incremental",
-    "kg_stats",
-    "kg_clustering",
-    "kg_label_prop",
-    "kg_training_pairs",
-    "kg_bgp_query",
-    "kg_validate",
-    "kg_walks",
-    "kg_snapshot_diff",
-    "kg_node_types",
-    "kg_schema",
-    "kg_pmi_edges",
-    "kg_reachability",
-    "kg_triple_history",
-    "kg_describe",
-    "kg_path_query",
-    "kg_weighted_walks",
-    "kg_export_ntriples",
-    "kg_walk_pairs",
-    "string_tagger_candidates",
-    "dict_mentions",
-    "rule_engine_tags",
-    "pattern_mining",
-    "classify_docs",
-    "doc_minhash_pairs",
-    "doc_exact_dedup",
-    "doc_dup_clusters",
-    "doc_dedup_near",
-    "doc_stratified_sample",
-    "doc_simhash_pairs",
-    "doc_simhash_wide_pairs",
-    "doc_dates_normalized",
-    "doc_coordinates",
-    "doc_addresses",
-    "doc_pos_tags",
-    "doc_cooccur_window",
-    "media_features",
-    "canonicalize_mentions",
-    "ann_topk",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
-    "ann_pq_topk",
-    "ann_ivfpq_topk",
-    "embedding_quantize",
-    "embedding_pq_codes",
-    "bpe_merges",
-    "doc_token_hll",
-    "doc_token_cms",
-    "doc_length_histogram",
-    "doc_decon_bloom",
-    "doc_mixture_sample",
-    "events_zorder",
-    "events_windowed_counts",
-    "doc_chunks",
-    "doc_split",
-    "doc_pack_sequences",
-    "doc_decontaminate",
-    "doc_curation_report",
-    "doc_dup_spans",
-    "doc_repetition",
-    "doc_pii_redact",
-    "doc_token_counts",
-    "doc_lm_quality",
-    "doc_bm25_topk",
-    "doc_term_corpus",
-    "doc_keywords",
-    "tpch_pricing",
-    "join_customer_orders",
-    "events_sessionize",
-    "events_asof",
-    "events_range_join",
-    "events_funnel",
-    "events_retention",
-    "events_topk",
-    # round-5 additions
-    "doc_spell_corrections",
-    "feature_ranking",
-    "doc_noun_phrases",
-    "nb_classify",
-    "nominal_classify",
-    "classifier_roc",
-    "media_pixel_colors",
-    "media_colors",
-]
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def build_spark(cpus: int):
@@ -224,7 +110,7 @@ def main() -> None:
     cold: dict[str, float] = {}
     rows: dict[str, int] = {}
     nondeterministic: list[str] = []
-    for name in HEADLINE:
+    for name in entrymod.headline():
         fn = qs[name]
         best = float("inf")
         seen: set[tuple[int, int]] = set()

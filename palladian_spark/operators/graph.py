@@ -281,6 +281,23 @@ def label_propagation_sql(edges_cte: str, iterations: int = 4) -> str:
     """
 
 
+def _undirected(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """Distinct undirected edges (u, v) with u < v, self-loops dropped.
+    Lazily cut: every caller reads it more than once."""
+    return (
+        edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+        .where(F.col("u") != F.col("v"))
+        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
+def _both_directions(und: DataFrame) -> DataFrame:
+    """Adjacency (u, v) in both directions of each undirected edge."""
+    return und.unionByName(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
+
+
 def triangle_counts(edges: DataFrame, a_col: str = "subj", b_col: str = "obj") -> DataFrame:
     """Per-node triangle counts over an undirected graph, via
     degree-ordered edge orientation (the standard shuffle-minimal plan:
@@ -300,15 +317,11 @@ def triangle_counts(edges: DataFrame, a_col: str = "subj", b_col: str = "obj") -
     shuffles total: degree aggregate, wedge join on the middle node,
     closure join on the (lo, hi) edge key.
     """
-    und = (
-        edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        )
-        .distinct()
-        .localCheckpoint(eager=False)  # degree agg + both join sides consume it
-    )
+    return _triangles(_undirected(edges, a_col, b_col))
+
+
+def _triangles(und: DataFrame) -> DataFrame:
+    """triangle_counts over edges already made undirected by _undirected."""
     deg = (
         und.select(F.col("u").alias("node"))
         .unionByName(und.select(F.col("v").alias("node")))
@@ -403,20 +416,14 @@ def clustering_coefficients(
     (:func:`triangle_counts`) plus one degree aggregate and a left join
     (nodes in no triangle -> 0).
     """
-    und = (
-        edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    und = _undirected(edges, a_col, b_col)
     deg = (
         und.select(F.col("u").alias("node"))
         .unionByName(und.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("degree"))
     )
-    tris = triangle_counts(und, a_col="u", b_col="v")
+    tris = _triangles(und)
     return (
         deg.where(F.col("degree") >= 2)
         .join(tris, "node", "left")
@@ -477,16 +484,8 @@ def common_neighbor_scores(
     noise, not signal). Everything else is degree aggregates and an
     edge-keyed anti-join.
     """
-    und = (
-        edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)  # adjacency, degrees, and anti-join reuse it
-    )
-    adj = und.unionByName(
-        und.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    und = _undirected(edges, a_col, b_col)
+    adj = _both_directions(und)
     deg = adj.groupBy(F.col("u").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
     mid_ok = deg.where(F.col("deg") <= max_degree).select(
         F.col("node").alias("m")
@@ -572,16 +571,7 @@ def k_hop_counts(edges: DataFrame, k: int = 2, a_col: str = "subj", b_col: str =
     frontier's node key, and hub balls are the intrinsic output size,
     not an artifact of the plan.
     """
-    und = (
-        edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    adj = und.unionByName(
-        und.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    adj = _both_directions(_undirected(edges, a_col, b_col))
     reach = adj.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
     frontier = reach
     for _ in range(1, k):

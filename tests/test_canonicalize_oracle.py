@@ -1,6 +1,6 @@
 """Guards for the de-pinned canonicalize_mentions DuckDB oracle.
 
-The oracle (``__spark_entry__._canonicalize_sql``) substitutes DuckDB's
+The oracle (``contract.kg._canonicalize_sql``) substitutes DuckDB's
 standard Jaro-Winkler for the kernel's reference variant
 (kernels/similarity.py — nonstandard match range). That substitution is
 only sound while no value pair sits close enough to the threshold for
@@ -14,7 +14,8 @@ import itertools
 import duckdb
 import pytest
 
-from __spark_entry__ import GAZETTEER, _canonicalize_sql
+from contract.common import GAZETTEER
+from contract.kg import _canonicalize_sql
 from palladian_spark.kernels.similarity import jaro_winkler_similarity
 
 THRESHOLD = 0.85

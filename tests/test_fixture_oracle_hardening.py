@@ -24,10 +24,10 @@ BASE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FIXTURE_DIR = os.path.join(BASE, "tests", "fixtures", "oracle")
 SF_DIR = "/root/testdata/sf0.01"
 
-# mirrors __spark_entry__._CAP_WORDS / _capitalized_corpus
+# mirrors contract.common._CAP_WORDS / _capitalized_corpus
 _CAP_WORDS = ["spark", "vector", "stream", "table", "customer", "window"]
 
-# mirrors __spark_entry__._TOKEN_REGEX_SQL (duckdb RE2 dialect)
+# mirrors contract.doc._TOKEN_REGEX_SQL (duckdb RE2 dialect)
 _TOKEN_REGEX_SQL = (
     r"(?:[A-Z][a-z]?\.)+"
     r"|[\p{L}\w+]+(?:[-\.,][\p{L}\w]+)*"

@@ -7,7 +7,7 @@ checked-in scale factors), so any corpus or kernel change that breaks the
 property fails HERE, before the driver's contract check can silently
 compare two wrong-but-equal engines.
 
-1. Pattern twin: `__spark_entry__._CANDIDATE_RE2` (RE2-expressible) must
+1. Pattern twin: `contract.kg._CANDIDATE_RE2` (RE2-expressible) must
    produce the exact same match spans as the full Palladian
    STRING_TAGGER_REGEX (lookaround-bearing, kernels/tagging.py) on the
    capitalized contract corpus.
@@ -76,9 +76,9 @@ def _components(values: list[str], edges: list[tuple[str, str]]) -> set[frozense
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
 def test_re2_twin_matches_full_pattern_span_for_span(sf_dir):
-    import __spark_entry__ as entry
+    from contract.kg import _CANDIDATE_RE2
 
-    twin = re.compile(entry._CANDIDATE_RE2)
+    twin = re.compile(_CANDIDATE_RE2)
     full, simple = set(), set()
     for doc_id, text in _corpus(sf_dir):
         for a in string_tag(text):
