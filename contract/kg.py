@@ -133,9 +133,7 @@ def _string_tagger_sql() -> str:
 @query(headline=True, oracle=_string_tagger_sql)
 def string_tagger_candidates(spark, sf_dir):
     corpus = _capitalized_corpus(_read(spark, sf_dir, "documents"))
-    return detect_mentions(
-        corpus, text_col="content", tagger="candidates", keep_cols=["doc_id"]
-    )
+    return detect_mentions(corpus, text_col="content", keep_cols=["doc_id"])
 
 
 # the measured reference-agreement values (basis points); the

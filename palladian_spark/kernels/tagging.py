@@ -170,26 +170,6 @@ def url_tag(text: str) -> list[Annotation]:
     return regex_tag(text, _URL_PATTERN, URI_TAG)
 
 
-# Date/time tagger over common date shapes (reference: DateAndTimeTagger.java
-# :25-61 with RegExp.ALL_DATE_FORMATS; we compile the frequent textual+ISO
-# formats — sufficient for the NER pipeline, whose defaults leave
-# tagDates=false, PalladianNerTaggingSettings.java:38).
-_MONTH_LONG = (
-    "[Jj]anuary|[Ff]ebruary|[Mm]arch|[Aa]pril|[Mm]ay|[Jj]une|[Jj]uly|[Aa]ugust|"
-    "[Ss]eptember|[Oo]ctober|[Nn]ovember|[Dd]ecember"
-)
-_DATE_PATTERN = regex.compile(
-    r"\d{4}-\d{2}-\d{2}"
-    r"|(?:" + _MONTH_LONG + r")\s\d{1,2}(?:st|nd|rd|th)?,?\s\d{4}"
-    r"|\d{1,2}\s(?:" + _MONTH_LONG + r")\s\d{4}"
-    r"|\d{1,2}/\d{1,2}/\d{2,4}"
-)
-
-
-def date_tag(text: str) -> list[Annotation]:
-    return regex_tag(text, _DATE_PATTERN, DATETIME_TAG)
-
-
 from functools import lru_cache
 
 

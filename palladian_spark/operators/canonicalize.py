@@ -90,21 +90,12 @@ def candidate_pairs(values: DataFrame, value_col: str = "value") -> DataFrame:
     adds run over the distinct pairs, not over the raw collisions.
     """
     values = spread(values)  # single-split value tables: one-core key UDF
-    # posexplode_outer + null-guard: inner posexplode would double-evaluate
-    # the key UDF via InferFiltersFromGenerate (see operators/mentions.py);
-    # the UDF always returns a fixed-size key array, so no real row drops.
     # Materialized once before the self-join, which reads the keys twice:
     # without the cut the upstream plan would re-execute for each side
-    bands = (
-        values.select(
-            value_col,
-            F.posexplode_outer(_block_keys_udf(F.col(value_col))).alias(
-                "band_id", "band_hash"
-            ),
-        )
-        .where(F.col("band_hash").isNotNull())
-        .localCheckpoint()
-    )
+    bands = values.select(
+        value_col,
+        F.posexplode(_block_keys_udf(F.col(value_col))).alias("band_id", "band_hash"),
+    ).localCheckpoint()
     # bucket-size guard: shuffles on the same (band_id, band_hash) key as
     # the self-join below, so the extra aggregate reuses the partitioning
     sizes = bands.groupBy("band_id", "band_hash").agg(F.count("*").alias("_bn"))

@@ -281,9 +281,9 @@ def extract_code_entities(source: DataFrame, keep_cols: tuple = ()) -> DataFrame
     One codegen projection builds a fixed 4-element array of
     (pred, matches[]) structs; two explodes flatten it. No Python, no
     shuffle — Catalyst keeps the whole thing in the scan stage. (The
-    explodes sit over JVM expressions, not UDFs, so the
-    InferFiltersFromGenerate double-evaluation hazard documented in
-    operators/mentions.py does not apply.)
+    explodes sit over JVM expressions, not UDFs, so there is no Python
+    hop that a pushed-down filter could run twice; the generator rule the
+    UDF operators follow is in operators/mentions.py.)
     """
     matches = F.array(
         *[

@@ -323,9 +323,9 @@ SECRET_SCRUB_REPL = ":"
 def secret_hits(source: DataFrame) -> DataFrame:
     """(repo, kind, n_files, n_hits, sample_hit) — the redaction pass's
     work list. One projection builds a fixed 4-struct array (whole-match
-    extract_all per kind), two explodes flatten it (JVM expressions, so
-    the InferFiltersFromGenerate double-eval hazard does not apply), one
-    aggregate keyed (repo, kind)."""
+    extract_all per kind), two explodes flatten it (JVM expressions: no
+    Python hop to run twice, see operators/mentions.py), one aggregate
+    keyed (repo, kind)."""
     content = F.regexp_replace(
         F.coalesce(F.col("content"), F.lit("")),
         SCRUB_NON_ASCII,

@@ -115,11 +115,8 @@ def _decode_pixels(media_df: DataFrame, media_col: str, id_col: str) -> DataFram
 
     from .util import spread
 
-    return (
-        spread(media_df)
-        .select(F.col(id_col).alias("media_id"), sample_px(F.col(media_col)).alias("ps"))
-        .select("media_id", F.explode("ps").alias("p"))
-        .select("media_id", "p.px", "p.r", "p.g", "p.b")
+    return spread(media_df).select(
+        F.col(id_col).alias("media_id"), F.inline(sample_px(F.col(media_col)))
     )
 
 
@@ -195,18 +192,18 @@ def detect_media_colors(
 
     from .util import spread
 
-    out = (
+    return (
         spread(media_df)
-        .select(F.col(id_col).alias("media_id"), detect(F.col(media_col)).alias("cs"))
-        .select("media_id", F.posexplode_outer("cs").alias("rank0", "c"))
-        .where(F.col("c").isNotNull())
+        .select(
+            F.col(id_col).alias("media_id"),
+            F.posexplode(detect(F.col(media_col))).alias("rank0", "c"),
+        )
         .select(
             "media_id",
             (F.col("rank0") + 1).cast("long").alias("rank"),
             "c.hex", "c.specific_color", "c.main_color",
         )
     )
-    return out
 
 
 def media_pixel_colors_sql(documents: str = "documents") -> str:

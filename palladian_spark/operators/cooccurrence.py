@@ -112,11 +112,9 @@ def scoped_cooccurrences(
                 lambda t: [s for _, s in detect_sentences(t or "")]
             )
 
-        # posexplode_outer + null-guard: inner posexplode would
-        # double-evaluate the sentence UDF via InferFiltersFromGenerate
         sent = base.select(
-            "doc", F.posexplode_outer(_sentences(F.col("t"))).alias("sent_idx", "s")
-        ).where(F.col("s").isNotNull())
+            "doc", F.posexplode(_sentences(F.col("t"))).alias("sent_idx", "s")
+        )
         return _pair_counts(
             _presence(sent, terms, ["doc", "sent_idx"], "s"), ["doc", "sent_idx"]
         )

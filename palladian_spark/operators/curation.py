@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .util import spread
+
 
 def chunk_documents(
     df: DataFrame,
@@ -197,15 +199,14 @@ def benchmark_overlap(
     containment of the page's offending region; per-train-doc
     normalization also keeps the denominator local.
     """
-    from palladian_spark.operators.dedup import _word_shingles
+    from palladian_spark.operators.dedup import _shingles
 
+    # cut once: the bench side and the train side's size aggregate and
+    # join all read these rows, and each would otherwise re-run the UDF
     shingled = (
-        _word_shingles(docs, "text", n)
-        .select(
-            F.col("doc_id").alias("doc"),
-            F.explode_outer("_shingles").alias("shingle"),
-        )
-        .where(F.col("shingle").isNotNull())
+        spread(docs)
+        .select(F.col("doc_id").alias("doc"), F.explode(_shingles("text", n)).alias("shingle"))
+        .localCheckpoint(eager=False)
     )
     bench = shingled.where(F.col("doc") % bench_mod == 0).select(
         F.col("doc").alias("bench_doc"), "shingle"
@@ -278,8 +279,6 @@ def repetition_stats(
     the DuckDB oracle recomputes everything from raw text.
     """
     from pyspark.sql.types import LongType, StructField, StructType
-
-    from .util import spread
 
     out_t = StructType(
         [
@@ -794,7 +793,6 @@ def pack_sequences(
     import numpy as np
 
     from .textstats import TOKEN_REGEX_RE2, _extract_all
-    from .util import spread
 
     if capacity <= 0:
         raise ValueError("capacity must be positive")

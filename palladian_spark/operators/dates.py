@@ -81,20 +81,7 @@ def normalize_dates(
     DATETIME) and NULL otherwise."""
     keep_cols = keep_cols if keep_cols is not None else [c for c in df.columns if c != text_col]
     udf = _make_dates_udf(formats if formats is not None else DEFAULT_TAGGER_FORMATS)
-    exploded = (
-        spread(df)
-        .select(*keep_cols, udf(F.col(text_col)).alias("_dates"))
-        # explode_outer + null-guard: an inner explode would
-        # double-evaluate the UDF via InferFiltersFromGenerate (see
-        # operators/mentions.py detect_mentions)
-        .select(*keep_cols, F.explode_outer("_dates").alias("_d"))
-        .where(F.col("_d").isNotNull())
-        .select(
-            *keep_cols,
-            "_d.value", "_d.fmt", "_d.year", "_d.month", "_d.day",
-            "_d.hour", "_d.minute", "_d.second", "_d.timezone",
-        )
-    )
+    exploded = spread(df).select(*keep_cols, F.inline(udf(F.col(text_col))))
     ts = F.when(
         F.col("year").isNotNull() & F.col("month").isNotNull() & F.col("day").isNotNull(),
         F.format_string(

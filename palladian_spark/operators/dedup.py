@@ -9,7 +9,7 @@ expressions (xxhash64, md5, array ops) — no Python per row.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -73,79 +73,38 @@ def _make_shingle_udf(n: int):
     return _shingles
 
 
-def _word_shingles(df: DataFrame, text_col: str, n: int = 3):
-    """Distinct word n-gram shingles per document (regex JVM-side, shingle
-    assembly in one Arrow hop — see _make_shingle_udf).
-
-    spread() first: a small parquet arrives as ONE split, which would run
-    the regex + shingle stage (and every Arrow stage downstream of it) on
-    a single core; at real table sizes the split count already exceeds
-    parallelism and the repartition never fires."""
-    df = spread(df)
-    shingle_udf = _make_shingle_udf(n)
-    return df.withColumn(
-        "_words", F.expr(f"regexp_extract_all(lower({text_col}), '[a-z0-9]+', 0)")
-    ).withColumn("_shingles", shingle_udf(F.col("_words")))
+def _shingles(text_col: str, n: int = 3) -> Column:
+    """Distinct word n-gram shingles of a text column (regex JVM-side,
+    shingle assembly in one Arrow hop — see _make_shingle_udf). Callers
+    feed it straight to a generator over a spread() frame: a small parquet
+    arrives as ONE split, which would run the regex + shingle stage (and
+    every Arrow stage downstream of it) on a single core; at real table
+    sizes the split count already exceeds parallelism and the repartition
+    never fires."""
+    words = F.expr(f"regexp_extract_all(lower({text_col}), '[a-z0-9]+', 0)")
+    return _make_shingle_udf(n)(words)
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Near-duplicate pairs by word-n-gram Jaccard, exact within blocks.
+def _word_shingles(df: DataFrame, text_col: str, n: int = 3) -> DataFrame:
+    """df + a ``_shingles`` array column, for callers that need the whole
+    shingle set per document."""
+    return spread(df).withColumn("_shingles", _shingles(text_col, n))
 
-    Blocking = shared shingle (only docs sharing >=1 shingle are compared);
-    Jaccard computed from shared-shingle counts + per-doc shingle counts —
-    a join + two aggregates, fully relational (DuckDB-verifiable).
-    """
-    # explode_outer + null-guard: an inner explode would double-evaluate
-    # the shingle UDF via InferFiltersFromGenerate (see operators/mentions.py)
-    shingled = _word_shingles(df, text_col, n).select(
-        F.col(id_col).alias("doc"), F.explode_outer("_shingles").alias("shingle")
-    ).where(F.col("shingle").isNotNull())
-    sizes = shingled.groupBy("doc").agg(F.count("*").alias("n_shingles"))
-    a = shingled.alias("a")
-    b = shingled.alias("b")
-    shared = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .agg(F.count("*").alias("shared"))
+
+def _shingle_overlap(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """(doc_a, doc_b, shared, n_a, n_b) for every doc pair (doc_a < doc_b)
+    sharing at least one word n-gram shingle: shared = |A ∩ B|, n_a and
+    n_b the shingle-set sizes. Blocking = shared shingle, so only docs
+    sharing >=1 shingle are compared — a join + two aggregates, fully
+    relational (DuckDB-verifiable).
+
+    The shingle rows are cut once: the size aggregate and both sides of
+    the self-join read them, and each would otherwise re-run the UDF."""
+    shingled = (
+        spread(df)
+        .select(F.col(id_col).alias("doc"), F.explode(_shingles(text_col, n)).alias("shingle"))
+        .localCheckpoint(eager=False)
     )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    return (
-        shared.join(sa, F.col("doc_a") == F.col("sa.doc"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("shared")
-                / (F.col("sa.n_shingles") + F.col("sb.n_shingles") - F.col("shared")),
-                6,
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-
-
-def ngram_jaccard_pairs_exact(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold_num: int = 1,
-    threshold_den: int = 5,
-) -> DataFrame:
-    """ngram_jaccard_pairs with integer-only outputs and a rational
-    threshold filter (den*shared >= num*union), so the DuckDB oracle
-    compares exact integers with no float rounding in play."""
-    shingled = _word_shingles(df, text_col, n).select(
-        F.col(id_col).alias("doc"), F.explode_outer("_shingles").alias("shingle")
-    ).where(F.col("shingle").isNotNull())
     sizes = shingled.groupBy("doc").agg(F.count("*").alias("n_shingles"))
     a = shingled.alias("a")
     b = shingled.alias("b")
@@ -166,10 +125,45 @@ def ngram_jaccard_pairs_exact(
             F.col("sa.n_shingles").alias("n_a"),
             F.col("sb.n_shingles").alias("n_b"),
         )
-        .where(
-            F.lit(threshold_den) * F.col("shared")
-            >= F.lit(threshold_num) * (F.col("n_a") + F.col("n_b") - F.col("shared"))
+    )
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    threshold: float = 0.5,
+) -> DataFrame:
+    """Near-duplicate pairs by word-n-gram Jaccard, exact within blocks
+    (see _shingle_overlap)."""
+    return (
+        _shingle_overlap(df, text_col, id_col, n)
+        .select(
+            "doc_a",
+            "doc_b",
+            F.round(
+                F.col("shared") / (F.col("n_a") + F.col("n_b") - F.col("shared")), 6
+            ).alias("jaccard"),
         )
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
+def ngram_jaccard_pairs_exact(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    threshold_num: int = 1,
+    threshold_den: int = 5,
+) -> DataFrame:
+    """ngram_jaccard_pairs with integer-only outputs and a rational
+    threshold filter (den*shared >= num*union), so the DuckDB oracle
+    compares exact integers with no float rounding in play."""
+    return _shingle_overlap(df, text_col, id_col, n).where(
+        F.lit(threshold_den) * F.col("shared")
+        >= F.lit(threshold_num) * (F.col("n_a") + F.col("n_b") - F.col("shared"))
     )
 
 
@@ -215,11 +209,13 @@ def minhash_lsh_pairs(
             ]
         )
 
+    # the size filter sits above the cut: below it, Catalyst would push it
+    # through the projection and run the shingle UDF twice
     sigs = (
         _word_shingles(df, text_col, shingle_n)
         .select(F.col(id_col).alias("doc"), "_shingles")
-        .where(F.size("_shingles") > 0)
         .localCheckpoint(eager=False)
+        .where(F.size("_shingles") > 0)
     )
     # localCheckpoint: the bucket self-join consumes bands on both sides —
     # without it the band UDF would run twice over every document; blocks
@@ -230,12 +226,9 @@ def minhash_lsh_pairs(
     # recompute. For production stage boundaries use StageStore
     # (sources/checkpoint.py) — reliable parquet materialization with
     # resume; the local cuts here only dedupe work INSIDE one job
-    # posexplode_outer + null-guard: inner posexplode would double-evaluate
-    # the band UDF (InferFiltersFromGenerate); sigs is already size>0 filtered
-    # so the guard never drops a real row
     bands = sigs.select(
-        "doc", F.posexplode_outer(_doc_bands(F.col("_shingles"))).alias("band_id", "band_hash")
-    ).where(F.col("band_hash").isNotNull()).localCheckpoint(eager=False)
+        "doc", F.posexplode(_doc_bands(F.col("_shingles"))).alias("band_id", "band_hash")
+    ).localCheckpoint(eager=False)
 
     cand = (
         bands.alias("x")

@@ -53,17 +53,7 @@ def tag_coordinates(
             ]
         )
 
-    # explode_outer + null-guard: InferFiltersFromGenerate would otherwise
-    # double-evaluate the UDF (see operators/mentions.py detect_mentions)
-    return (
-        spread(df)
-        .select(*keep_cols, tag_series(F.col(text_col)).alias("_anns"))
-        .select(*keep_cols, F.explode_outer("_anns").alias("_a"))
-        .where(F.col("_a").isNotNull())
-        .select(
-            *keep_cols, "_a.start", "_a.end", "_a.value", "_a.lat_udeg", "_a.lng_udeg"
-        )
-    )
+    return spread(df).select(*keep_cols, F.inline(tag_series(F.col(text_col))))
 
 
 def tag_addresses(
@@ -88,10 +78,4 @@ def tag_addresses(
             lambda t: [(a.start, a.end, a.value, a.tag) for a in address_tag(t or "")]
         )
 
-    return (
-        spread(df)
-        .select(*keep_cols, tag_series(F.col(text_col)).alias("_anns"))
-        .select(*keep_cols, F.explode_outer("_anns").alias("_a"))
-        .where(F.col("_a").isNotNull())
-        .select(*keep_cols, "_a.start", "_a.end", "_a.value", "_a.tag")
-    )
+    return spread(df).select(*keep_cols, F.inline(tag_series(F.col(text_col))))

@@ -2,9 +2,19 @@
 
 Spark mapping of the reference taggers (SURVEY.md §2.2): one vectorized
 pandas-UDF pass per content blob returning an array of annotation structs,
-exploded into a mentions DataFrame. Regexes compile once per executor
-(module import time), the counterpart of the reference's static Pattern
-constants (StringTagger.java:17).
+flattened by an inline generator over the UDF call,
+``F.inline(udf(col))``. Regexes compile once per executor (module import
+time), the counterpart of the reference's static Pattern constants
+(StringTagger.java:17).
+
+Every per-row UDF in the package feeds its generator this way, never
+through an aliased column (``select(udf(c).alias("a"))`` then
+``explode("a")``). Catalyst's InferFiltersFromGenerate infers
+``Filter size(a) > 0`` only when the generator's input is a plain column;
+predicate pushdown then moves that filter, UDF included, below the
+``spread()`` repartition, and the UDF runs twice per row. With the call
+inline no filter is inferred, and the inner generator itself drops the
+rows whose array is null or empty (tests/test_udf_plans.py pins this).
 """
 
 from __future__ import annotations
@@ -21,7 +31,6 @@ from pyspark.sql.types import (
 )
 
 from ..kernels import tagging
-from ..kernels.dateformats import date_time_tag_full
 from .util import spread
 
 ANNOTATION_STRUCT = StructType(
@@ -33,62 +42,29 @@ ANNOTATION_STRUCT = StructType(
     ]
 )
 
-_TAGGERS = {
-    "candidates": tagging.string_tag,     # StringTagger.java:13-77
-    "urls": tagging.url_tag,              # UrlTagger.java:13-24
-    # full DateAndTimeTagger.DEFAULT surface (DateAndTimeTagger.java:25-61,
-    # RegExp.ALL_DATE_FORMATS + years-in-context), golden-gated vs the
-    # actual Java tagger in tests/test_date_url_taggers.py
-    "dates": date_time_tag_full,
-    "twitter": tagging.twitter_tag,       # TwitterTagger.java:16-23
-    "smileys": tagging.smiley_tag,        # SmileyTagger.java:15-49
-}
-
-
-def _make_tagger_udf(tagger_name: str):
-    tagger = _TAGGERS[tagger_name]
-
-    @F.pandas_udf(ArrayType(ANNOTATION_STRUCT))
-    def tag_series(texts: pd.Series) -> pd.Series:
-        return texts.map(
-            lambda t: [
-                (a.start, a.end, a.value, a.tag) for a in tagger(t or "")
-            ]
-        )
-
-    return tag_series
-
 
 def detect_mentions(
     df: DataFrame,
     text_col: str = "content",
-    tagger: str = "candidates",
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
-    """df -> one row per mention: (keep_cols..., start, end, value, tag).
+    """df -> one row per StringTagger candidate (StringTagger.java:13-77):
+    (keep_cols..., start, end, value, tag).
 
     The UDF is the only Python hop; everything downstream (explode, filters,
     joins) stays JVM-side so Catalyst prunes the scan to keep_cols + text.
     """
     keep_cols = keep_cols if keep_cols is not None else [c for c in df.columns if c != text_col]
-    udf = _make_tagger_udf(tagger)
-    df = spread(df)
-    # explode_outer, NOT explode: InferFiltersFromGenerate turns an inner
-    # generate over a UDF column into `Filter size(udf(..)) > 0` +
-    # `Generate udf(..)` and pushes the filter below the spread()
-    # repartition — the tagger UDF then runs TWICE, once of them on the
-    # SINGLE-partition pre-shuffle side (measured: the whole corpus
-    # serially). The outer variant infers no filter; the null-guard above
-    # the generate drops the empty-array rows the inner explode would
-    # have dropped, JVM-side. (Same pattern as similarity_search.
-    # _explode_tables.)
-    exploded = (
-        df.select(*keep_cols, udf(F.col(text_col)).alias("_anns"))
-        .select(*keep_cols, F.explode_outer("_anns").alias("_a"))
-        .where(F.col("_a").isNotNull())
-        .select(*keep_cols, "_a.start", "_a.end", "_a.value", "_a.tag")
-    )
-    return exploded
+
+    @F.pandas_udf(ArrayType(ANNOTATION_STRUCT))
+    def tag_series(texts: pd.Series) -> pd.Series:
+        return texts.map(
+            lambda t: [
+                (a.start, a.end, a.value, a.tag) for a in tagging.string_tag(t or "")
+            ]
+        )
+
+    return spread(df).select(*keep_cols, F.inline(tag_series(F.col(text_col))))
 
 
 def dictionary_mentions(
@@ -131,11 +107,4 @@ def dictionary_mentions(
             )
         return pd.Series(out)
 
-    return (
-        spread(df).select(*keep_cols, tag_series(F.col(text_col)).alias("_anns"))
-        # explode_outer + null-guard: see detect_mentions — an inner
-        # explode would double-evaluate the UDF via InferFiltersFromGenerate
-        .select(*keep_cols, F.explode_outer("_anns").alias("_a"))
-        .where(F.col("_a").isNotNull())
-        .select(*keep_cols, "_a.start", "_a.end", "_a.value", "_a.tag")
-    )
+    return spread(df).select(*keep_cols, F.inline(tag_series(F.col(text_col))))

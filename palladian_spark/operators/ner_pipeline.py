@@ -302,12 +302,7 @@ def train_ner(
     entity_dictionary.prune_min_count(min_count)
 
     # --- annotation dictionary: padded 5-gram counts (:335-346)
-    # explode_outer + null-guard here and below: inner explode over a UDF
-    # column double-evaluates the UDF via InferFiltersFromGenerate (see
-    # operators/mentions.py detect_mentions)
-    ann_grams = ann.select(
-        "tag", F.explode_outer(_annotation_grams("value", "tag")).alias("g")
-    ).where(F.col("g").isNotNull()).select(F.col("g.term").alias("term"), F.col("g.tag").alias("tag"))
+    ann_grams = ann.select(F.inline(_annotation_grams("value", "tag")))
     entries, term_counts = _collect_gram_dictionary(ann_grams, ANNOTATION_FEATURE_SETTING)
     annotation_dictionary = _dictionary_from_rows(
         entries, ann_per_tag, term_counts, ANNOTATION_FEATURE_SETTING
@@ -316,9 +311,7 @@ def train_ner(
 
     # --- context dictionary: unpadded 5-grams of ±40-char windows (:894-906)
     ctx = ann.withColumn("ctx", _char_context("text", "start", "value"))
-    ctx_grams = ctx.select(
-        "tag", F.explode_outer(_context_grams("ctx", "tag")).alias("g")
-    ).where(F.col("g").isNotNull()).select(F.col("g.term").alias("term"), F.col("g.tag").alias("tag"))
+    ctx_grams = ctx.select(F.inline(_context_grams("ctx", "tag")))
     entries, term_counts = _collect_gram_dictionary(ctx_grams, CONTEXT_FEATURE_SETTING)
     context_dictionary = _dictionary_from_rows(
         entries, ann_per_tag, term_counts, CONTEXT_FEATURE_SETTING
@@ -327,9 +320,7 @@ def train_ner(
 
     # --- case dictionary: mean lowercase ratio per token (:191-222)
     case_rows = (
-        gold_df.select(F.explode_outer(_case_tokens("text")).alias("t"))
-        .where(F.col("t").isNotNull())
-        .select(F.col("t.token").alias("token"), F.col("t.sig").alias("sig"))
+        gold_df.select(F.inline(_case_tokens("text")))
         .groupBy("token")
         .agg(
             F.sum(F.when(F.col("sig") == "a", 1).otherwise(0)).alias("lower_cnt"),
@@ -343,14 +334,12 @@ def train_ner(
 
     # --- left contexts: outside vs inside counts (:860-892)
     outside = (
-        gold_df.select(F.explode_outer(_left_context_tokens("text", "annotations")).alias("ctx"))
-        .where(F.col("ctx").isNotNull())
+        gold_df.select(F.explode(_left_context_tokens("text", "annotations")).alias("ctx"))
         .groupBy("ctx")
         .agg(F.count("*").alias("outside"))
     )
     inside = (
-        ann.select(F.explode_outer(_inside_parts("value")).alias("ctx"))
-        .where(F.col("ctx").isNotNull())
+        ann.select(F.explode(_inside_parts("value")).alias("ctx"))
         .groupBy("ctx")
         .agg(F.count("*").alias("inside"))
     )
@@ -399,9 +388,7 @@ def train_ner(
             neg_df = spark.createDataFrame(
                 [(a.value, a.tag) for a in negatives], ["value", "tag"]
             )
-            neg_grams = neg_df.select(
-                "tag", F.explode_outer(_annotation_grams("value", "tag")).alias("g")
-            ).where(F.col("g").isNotNull()).select(F.col("g.term").alias("term"), F.col("g.tag").alias("tag"))
+            neg_grams = neg_df.select(F.inline(_annotation_grams("value", "tag")))
             for r in neg_grams.groupBy("term", "tag").agg(F.count("*").alias("cnt")).collect():
                 cats = model.annotation_dictionary.entries.setdefault(r["term"], {})
                 cats[r["tag"]] = cats.get(r["tag"], 0) + r["cnt"]
@@ -446,13 +433,7 @@ def tag_documents(
             ]
         )
 
-    return (
-        spread(df).select(*keep_cols, tag_series(F.col(text_col)).alias("_anns"))
-        # explode_outer + null-guard: see operators/mentions.py detect_mentions
-        .select(*keep_cols, F.explode_outer("_anns").alias("_a"))
-        .where(F.col("_a").isNotNull())
-        .select(*keep_cols, "_a.start", "_a.end", "_a.value", "_a.tag")
-    )
+    return spread(df).select(*keep_cols, F.inline(tag_series(F.col(text_col))))
 
 
 # ---------------------------------------------------------------------------

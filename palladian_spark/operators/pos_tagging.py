@@ -63,11 +63,4 @@ def pos_tag_documents(
             ]
         )
 
-    return (
-        spread(df)
-        .select(*keep_cols, tag_series(F.col(text_col)).alias("_anns"))
-        # explode_outer + null-guard: see operators/mentions.py detect_mentions
-        .select(*keep_cols, F.explode_outer("_anns").alias("_a"))
-        .where(F.col("_a").isNotNull())
-        .select(*keep_cols, "_a.start", "_a.end", "_a.value", "_a.tag")
-    )
+    return spread(df).select(*keep_cols, F.inline(tag_series(F.col(text_col))))

@@ -74,14 +74,7 @@ def apply_rule_engine(
             )
         return pd.Series(out)
 
-    return (
-        spread(df)
-        .select(*keep_cols, tag_series(F.col(text_col)).alias("_anns"))
-        # explode_outer + null-guard: see operators/mentions.py detect_mentions
-        .select(*keep_cols, F.explode_outer("_anns").alias("_a"))
-        .where(F.col("_a").isNotNull())
-        .select(*keep_cols, "_a.start", "_a.end", "_a.value", "_a.tag")
-    )
+    return spread(df).select(*keep_cols, F.inline(tag_series(F.col(text_col))))
 
 
 def classified_mention_counts(
@@ -297,11 +290,4 @@ def wiktionary_triples(
             out.append(entry_triples(parse(title or "", text or "")))
         return pd.Series(out)
 
-    return (
-        spread(pages)
-        .select(_parse(F.col(title_col), F.col(text_col)).alias("_t"))
-        # explode_outer + null-guard: see operators/mentions.py detect_mentions
-        .select(F.explode_outer("_t").alias("t"))
-        .where(F.col("t").isNotNull())
-        .select("t.subj", "t.pred", "t.obj")
-    )
+    return spread(pages).select(F.inline(_parse(F.col(title_col), F.col(text_col))))

@@ -105,6 +105,14 @@ def _cosine_udf(left: pd.Series, right: pd.Series) -> pd.Series:
     )
 
 
+# Here and for the probe and PQ-code UDFs below: marked nondeterministic
+# only to pin the UDF in place (as canonicalize._jw_udf). A deterministic
+# one lets Catalyst push a predicate on its output (`cosine >= threshold`,
+# a join's inferred `isnotnull(_cell)`, `_codes IS NOT NULL`) through the
+# projection, and below the spread() repartition, so it runs twice per row.
+_cosine_udf = _cosine_udf.asNondeterministic()
+
+
 def brute_force_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -184,8 +192,8 @@ def _make_buckets_udf(n_planes: int, n_tables: int, seed: int = 42, dim: int | N
             buckets = (bits @ weights).astype(np.int64)  # (rows, n_tables)
             for row, i in zip(buckets, np.nonzero(ok)[0]):
                 out[i] = row
-        # dim-corrupt rows keep None -> posexplode_outer emits a null bucket
-        # -> dropped by the callers' isNotNull filter (cannot participate)
+        # dim-corrupt rows keep None -> the callers' posexplode drops them
+        # (cannot participate)
         return pd.Series(out, dtype="object")
 
     return _buckets
@@ -209,20 +217,9 @@ def _table_dim(df: DataFrame, vec_col: str, sample: int = 1000) -> int | None:
 
 
 def _explode_tables(df: DataFrame, bucket_udf, vec_col: str) -> DataFrame:
-    """(row, [b_0..b_L]) -> one row per (table_id, bucket).
-
-    posexplode_outer, NOT posexplode: Catalyst rewrites inner generate as
-    `Filter size(udf(..)) > 0` + `Generate udf(..)` after collapsing the
-    projection, which evaluates the Arrow bucket UDF TWICE per row. The
-    outer variant needs no size filter; the UDF always returns a full
-    n_tables array, so the null-guard below never drops real rows."""
-    return (
-        df.withColumn("_bs", bucket_udf(F.col(vec_col)))
-        .select(
-            *[c for c in df.columns],
-            F.posexplode_outer("_bs").alias("_t", "_bucket"),
-        )
-        .where(F.col("_bucket").isNotNull())
+    """(row, [b_0..b_L]) -> one row per (table_id, bucket)."""
+    return df.select(
+        *df.columns, F.posexplode(bucket_udf(F.col(vec_col))).alias("_t", "_bucket")
     )
 
 
@@ -358,7 +355,7 @@ def _make_probe_udf(cent_ids: np.ndarray, cent_vecs: np.ndarray, n_probe: int):
         # dim-corrupt rows keep None -> null cell -> equi-join drops them
         return pd.Series(out, dtype="object")
 
-    return _probe
+    return _probe.asNondeterministic()  # pinned: see _cosine_udf
 
 
 def refine_centroids(
@@ -460,13 +457,8 @@ def ivf_topk(
     q = _non_null_vectors(queries, vec_col).select(
         query_id_col, F.col(vec_col).alias("_qvec")
     )
-    # posexplode_outer (not posexplode): see _explode_tables — the inner
-    # variant re-evaluates the Arrow UDF behind Catalyst's size()>0 filter
     q_probe = F.broadcast(
-        q.withColumn("_cs", probe_n(F.col("_qvec")))
-        .select(query_id_col, "_qvec", F.posexplode_outer("_cs").alias("_p", "_cell"))
-        .where(F.col("_cell").isNotNull())
-        .drop("_p")
+        q.select(query_id_col, "_qvec", F.explode(probe_n(F.col("_qvec"))).alias("_cell"))
     )
 
     cand = corpus.join(q_probe, "_cell").dropDuplicates([query_id_col, id_col])
@@ -594,7 +586,7 @@ def _make_pq_codes_udf(codebook: np.ndarray, dim: int):
                 out[i] = row
         return pd.Series(out, dtype="object")
 
-    return _codes
+    return _codes.asNondeterministic()  # pinned: see _cosine_udf
 
 
 def pq_encode(
@@ -616,9 +608,12 @@ def pq_encode(
     if codebook is None:
         return src.select(id_col, F.lit(None).cast(ArrayType(LongType())).alias("codes")).where(F.lit(False))
     codes_udf = _make_pq_codes_udf(codebook, dim)
-    return src.select(id_col, codes_udf(F.col(vec_col)).alias("codes")).where(
-        F.col("codes").isNotNull()
-    )
+    # emitted by a one-element generator: no filter on `codes` (the null
+    # check here, the size filter a caller's posexplode infers) can pass
+    # below a generator, so none of them reaches the UDF
+    return src.select(
+        id_col, F.explode(F.array(codes_udf(F.col(vec_col)))).alias("codes")
+    ).where(F.col("codes").isNotNull())
 
 
 def pq_topk(
@@ -704,13 +699,8 @@ def pq_topk(
         return pd.Series(out, dtype="object")
 
     corpus = spread(_non_null_vectors(embeddings, vec_col)).select(id_col, vec_col)
-    scored = (
-        corpus.withColumn("_codes", codes_udf(F.col(vec_col)))
-        .withColumn("_sc", _scores(F.col("_codes")))
-        # posexplode_outer + null-guard: see _explode_tables (the inner
-        # variant re-evaluates the Arrow UDF behind a size()>0 filter)
-        .select(id_col, F.posexplode_outer("_sc").alias("_qi", "score"))
-        .where(F.col("score").isNotNull())
+    scored = corpus.select(
+        id_col, F.posexplode(_scores(codes_udf(F.col(vec_col)))).alias("_qi", "score")
     )
     qid_map = F.broadcast(
         spark.createDataFrame(
@@ -834,10 +824,7 @@ def ivfpq_topk(
         f"{query_id_col} long, _qvec array<double>",
     )
     q_probe = F.broadcast(
-        q_df.withColumn("_cs", probe_n(F.col("_qvec")))
-        .select(query_id_col, F.posexplode_outer("_cs").alias("_p", "_cell"))
-        .where(F.col("_cell").isNotNull())
-        .drop("_p")
+        q_df.select(query_id_col, F.explode(probe_n(F.col("_qvec"))).alias("_cell"))
     )
 
     n_q = len(q_ids)
@@ -929,11 +916,13 @@ def embedding_near_duplicates(
     bucket_udf = _make_buckets_udf(
         n_planes, n_tables, dim=_table_dim(embeddings, vec_col)
     )
+    # cut once: both sides of the bucket self-join read these rows, and
+    # each would otherwise re-run the bucket UDF
     b = _explode_tables(
         spread(_non_null_vectors(embeddings, vec_col).select(F.col(id_col), F.col(vec_col))),
         bucket_udf,
         vec_col,
-    )
+    ).localCheckpoint(eager=False)
     left = b.alias("l")
     right = b.alias("r")
     return (

@@ -247,15 +247,14 @@ def benchmark_bloom_bits(
     Same shingle definition as doc_decontaminate (space-joined [a-z0-9]+
     3-grams) and the portable md5 hash family, so the DuckDB oracle
     recomputes the exact bit set."""
-    from .dedup import _word_shingles
+    from .dedup import _shingles
 
     bench = docs.where(
         F.col(id_col).isNotNull() & (F.col(id_col) % bench_mod == 0)
     )
     shingles = (
-        _word_shingles(bench, text_col, n)
-        .select(F.explode_outer("_shingles").alias("shingle"))
-        .where(F.col("shingle").isNotNull())
+        spread(bench)
+        .select(F.explode(_shingles(text_col, n)).alias("shingle"))
         .distinct()
     )
     bits = F.array(

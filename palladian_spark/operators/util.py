@@ -104,7 +104,7 @@ def _already_spread(df: DataFrame, target: int) -> bool:
     return best >= target
 
 
-def spread(df: DataFrame, min_factor: int = 1) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Ensure a DataFrame has at least defaultParallelism partitions before
     an expensive per-row UDF scan.
 
@@ -122,7 +122,7 @@ def spread(df: DataFrame, min_factor: int = 1) -> DataFrame:
     below the leaf-scan file count, so inputFiles overstates parallelism)
     we always fall through to the precise ``df.rdd`` probe.
     """
-    target = df.sparkSession.sparkContext.defaultParallelism * min_factor
+    target = df.sparkSession.sparkContext.defaultParallelism
     n = 0
     if _is_bare_scan(df):
         try:

@@ -101,8 +101,8 @@ def winnow_fingerprints(
     max_chars: int = WINNOW_MAX_CHARS,
 ) -> DataFrame:
     """(repo, path, ..., content) -> distinct (f, fp) fingerprint rows.
-    One Arrow hop over the content scan (explode is *_outer +
-    null-guarded per the InferFiltersFromGenerate rule). winnow_select
+    One Arrow hop over the content scan, exploded inline (see
+    operators/mentions.py). winnow_select
     already returns a unique list per document, so the trailing
     distinct() is a no-op on well-formed corpora; it stays as the
     dedup guard for duplicated (repo, path) input rows, matching the
@@ -112,11 +112,10 @@ def winnow_fingerprints(
     def _fps(contents: pd.Series) -> pd.Series:
         return pd.Series([winnow_select(c, k, w, max_chars) for c in contents])
 
-    rows = source.select(
+    return source.select(
         F.concat_ws("/", "repo", "path").alias("f"),
-        F.explode_outer(_fps(F.col("content"))).alias("fp"),
-    )
-    return rows.where(F.col("fp").isNotNull()).distinct()
+        F.explode(_fps(F.col("content"))).alias("fp"),
+    ).distinct()
 
 
 def winnow_pairs(

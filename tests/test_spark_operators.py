@@ -103,16 +103,18 @@ def test_no_double_udf_evaluation_in_plans(spark):
     `Filter size(udf(col)) > 0` + `Generate udf(col)` and pushes the
     filter below the spread() repartition — evaluating every tagger /
     shingle / band UDF TWICE, once of them on the single-partition
-    pre-shuffle side (measured: the whole corpus serially). All
-    UDF-feeding generates now use *_outer + a null-guard; this pins the
-    physical plans free of the telltale inferred size-filter."""
+    pre-shuffle side (measured: the whole corpus serially). The rule fires
+    only when the generator's input is a plain column, so every UDF feeds
+    its generator inline; this pins the physical plans free of the
+    telltale inferred size-filter (tests/test_udf_plans.py checks each
+    operator's plans node by node)."""
     import __spark_entry__ as e
 
     sf = "/root/testdata/sf0.001"
     qs = e.queries()
     for name in ["string_tagger_candidates", "dict_mentions",
                  "doc_dates_normalized", "doc_ngram_jaccard",
-                 "doc_cooccur_sentence"]:
+                 "doc_cooccur_sentence", "embedding_pq_codes"]:
         plan = qs[name](spark, sf)._jdf.queryExecution().executedPlan().toString()
         assert "size(pythonUDF" not in plan, name
 
