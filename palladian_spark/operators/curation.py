@@ -201,12 +201,8 @@ def benchmark_overlap(
     """
     from palladian_spark.operators.dedup import _shingles
 
-    # cut once: the bench side and the train side's size aggregate and
-    # join all read these rows, and each would otherwise re-run the UDF
-    shingled = (
-        spread(docs)
-        .select(F.col("doc_id").alias("doc"), F.explode(_shingles("text", n)).alias("shingle"))
-        .localCheckpoint(eager=False)
+    shingled = spread(docs).select(
+        F.col("doc_id").alias("doc"), F.explode(_shingles("text", n)).alias("shingle")
     )
     bench = shingled.where(F.col("doc") % bench_mod == 0).select(
         F.col("doc").alias("bench_doc"), "shingle"

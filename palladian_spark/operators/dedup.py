@@ -85,25 +85,14 @@ def _shingles(text_col: str, n: int = 3) -> Column:
     return _make_shingle_udf(n)(words)
 
 
-def _word_shingles(df: DataFrame, text_col: str, n: int = 3) -> DataFrame:
-    """df + a ``_shingles`` array column, for callers that need the whole
-    shingle set per document."""
-    return spread(df).withColumn("_shingles", _shingles(text_col, n))
-
-
 def _shingle_overlap(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     """(doc_a, doc_b, shared, n_a, n_b) for every doc pair (doc_a < doc_b)
     sharing at least one word n-gram shingle: shared = |A ∩ B|, n_a and
     n_b the shingle-set sizes. Blocking = shared shingle, so only docs
     sharing >=1 shingle are compared — a join + two aggregates, fully
-    relational (DuckDB-verifiable).
-
-    The shingle rows are cut once: the size aggregate and both sides of
-    the self-join read them, and each would otherwise re-run the UDF."""
-    shingled = (
-        spread(df)
-        .select(F.col(id_col).alias("doc"), F.explode(_shingles(text_col, n)).alias("shingle"))
-        .localCheckpoint(eager=False)
+    relational (DuckDB-verifiable)."""
+    shingled = spread(df).select(
+        F.col(id_col).alias("doc"), F.explode(_shingles(text_col, n)).alias("shingle")
     )
     sizes = shingled.groupBy("doc").agg(F.count("*").alias("n_shingles"))
     a = shingled.alias("a")
@@ -212,8 +201,8 @@ def minhash_lsh_pairs(
     # the size filter sits above the cut: below it, Catalyst would push it
     # through the projection and run the shingle UDF twice
     sigs = (
-        _word_shingles(df, text_col, shingle_n)
-        .select(F.col(id_col).alias("doc"), "_shingles")
+        spread(df)
+        .select(F.col(id_col).alias("doc"), _shingles(text_col, shingle_n).alias("_shingles"))
         .localCheckpoint(eager=False)
         .where(F.size("_shingles") > 0)
     )

@@ -105,12 +105,14 @@ def _cosine_udf(left: pd.Series, right: pd.Series) -> pd.Series:
     )
 
 
-# Here and for the probe and PQ-code UDFs below: marked nondeterministic
-# only to pin the UDF in place (as canonicalize._jw_udf). A deterministic
-# one lets Catalyst push a predicate on its output (`cosine >= threshold`,
-# a join's inferred `isnotnull(_cell)`, `_codes IS NOT NULL`) through the
-# projection, and below the spread() repartition, so it runs twice per row.
-_cosine_udf = _cosine_udf.asNondeterministic()
+# Pinned: a UDF whose output a predicate reads (`cosine >= threshold`, a
+# join's inferred `isnotnull(_cell)`, ivfpq_topk's `_codes IS NOT NULL`)
+# is marked nondeterministic only to keep it in place, as
+# canonicalize._jw_udf. A deterministic one lets Catalyst push the
+# predicate through the projection, and below the spread() repartition,
+# so it runs twice per row. The top-k operators filter no cosine and use
+# the deterministic _cosine_udf.
+_pinned_cosine_udf = F.pandas_udf(_cosine_udf.func, DoubleType()).asNondeterministic()
 
 
 def brute_force_topk(
@@ -355,7 +357,7 @@ def _make_probe_udf(cent_ids: np.ndarray, cent_vecs: np.ndarray, n_probe: int):
         # dim-corrupt rows keep None -> null cell -> equi-join drops them
         return pd.Series(out, dtype="object")
 
-    return _probe.asNondeterministic()  # pinned: see _cosine_udf
+    return _probe.asNondeterministic()  # pinned: see _pinned_cosine_udf
 
 
 def refine_centroids(
@@ -586,7 +588,7 @@ def _make_pq_codes_udf(codebook: np.ndarray, dim: int):
                 out[i] = row
         return pd.Series(out, dtype="object")
 
-    return _codes.asNondeterministic()  # pinned: see _cosine_udf
+    return _codes
 
 
 def pq_encode(
@@ -608,9 +610,11 @@ def pq_encode(
     if codebook is None:
         return src.select(id_col, F.lit(None).cast(ArrayType(LongType())).alias("codes")).where(F.lit(False))
     codes_udf = _make_pq_codes_udf(codebook, dim)
-    # emitted by a one-element generator: no filter on `codes` (the null
-    # check here, the size filter a caller's posexplode infers) can pass
-    # below a generator, so none of them reaches the UDF
+    # emitted by a one-element generator, not pinned: a pin keeps the
+    # filters on `codes` above the UDF, but once Spark extracts the UDF
+    # they read its output as `size(pythonUDF0) > 0` (the null check here,
+    # the size filter a caller's posexplode infers). No filter on a
+    # generator's output passes below it, so the plan holds none of them.
     return src.select(
         id_col, F.explode(F.array(codes_udf(F.col(vec_col)))).alias("codes")
     ).where(F.col("codes").isNotNull())
@@ -808,7 +812,8 @@ def ivfpq_topk(
     # corpus pass: cell assignment + PQ codes in ONE stage (two Arrow UDFs
     # over the same scan — no shuffle between them)
     assign1 = _make_probe_udf(cent_ids, cent_vecs, 1)
-    codes_udf = _make_pq_codes_udf(pq_cb, dim)
+    # pinned: see _pinned_cosine_udf
+    codes_udf = _make_pq_codes_udf(pq_cb, dim).asNondeterministic()
     corpus = spread(_non_null_vectors(embeddings, vec_col)).select(id_col, vec_col)
     enc = (
         corpus.withColumn("_cell", F.element_at(assign1(F.col(vec_col)), 1))
@@ -916,13 +921,11 @@ def embedding_near_duplicates(
     bucket_udf = _make_buckets_udf(
         n_planes, n_tables, dim=_table_dim(embeddings, vec_col)
     )
-    # cut once: both sides of the bucket self-join read these rows, and
-    # each would otherwise re-run the bucket UDF
     b = _explode_tables(
         spread(_non_null_vectors(embeddings, vec_col).select(F.col(id_col), F.col(vec_col))),
         bucket_udf,
         vec_col,
-    ).localCheckpoint(eager=False)
+    )
     left = b.alias("l")
     right = b.alias("r")
     return (
@@ -942,7 +945,7 @@ def embedding_near_duplicates(
         .select(
             "id_a",
             "id_b",
-            _cosine_udf(F.col("_va"), F.col("_vb")).alias("cosine"),
+            _pinned_cosine_udf(F.col("_va"), F.col("_vb")).alias("cosine"),
         )
         .where(F.col("cosine") >= threshold)
     )

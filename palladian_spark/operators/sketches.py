@@ -218,7 +218,7 @@ def cms_estimate(counters: dict[tuple[int, int], int], token: str,
 
 
 # 3-word shingle construction shared with the decontamination gate
-# (curation.benchmark_overlap / dedup._word_shingles): space-joined
+# (curation.benchmark_overlap / dedup._shingles): space-joined
 # [a-z0-9]+ runs of the lowercased text, docs with <= 3 words have none
 _SHINGLE_TOKEN_RE = "[a-z0-9]+"
 

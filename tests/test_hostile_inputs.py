@@ -3,7 +3,7 @@
 At 10^12-row scale every pathological row shape occurs (null/empty/
 whitespace text, unicode case-fold edges, megabyte docs, null/zero
 embeddings). The driver data is uniformly clean — the round-3
-short-document crash in _word_shingles (sequence(0,-1) descending)
+short-document crash in the word shingler (sequence(0,-1) descending)
 proved that clean-data-only testing misses whole bug classes. This
 suite derives a hostile copy of the sf0.001 tables (tools/
 make_hostile_data.py) and executes EVERY queries() entry over it:

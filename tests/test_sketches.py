@@ -102,8 +102,9 @@ def test_bloom_no_false_negatives_and_low_fp(spark):
     shingles false-positive at roughly the theoretical rate."""
     import hashlib
 
-    from palladian_spark.operators.dedup import _word_shingles
+    from palladian_spark.operators.dedup import _shingles
     from palladian_spark.operators.sketches import benchmark_bloom_bits
+    from palladian_spark.operators.util import spread
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     bits = {r["bit"] for r in benchmark_bloom_bits(docs).collect()}
@@ -117,7 +118,7 @@ def test_bloom_no_false_negatives_and_low_fp(spark):
         ]
 
     sh = (
-        _word_shingles(docs, "text", 3)
+        spread(docs).withColumn("_shingles", _shingles("text", 3))
         .select("doc_id", F.explode_outer("_shingles").alias("s"))
         .where(F.col("s").isNotNull())
         .collect()

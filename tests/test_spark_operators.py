@@ -1034,10 +1034,14 @@ def test_heavy_scans_are_spread(spark, tmp_path):
     assert one_split.rdd.getNumPartitions() == 1
     target = spark.sparkContext.defaultParallelism
 
-    from palladian_spark.operators.dedup import _word_shingles, simhash_signatures
+    from palladian_spark.operators.dedup import _shingles, simhash_signatures
     from palladian_spark.operators.textstats import token_counts
+    from palladian_spark.operators.util import spread
 
-    assert _word_shingles(one_split, "text").rdd.getNumPartitions() >= target
+    assert (
+        spread(one_split).withColumn("_shingles", _shingles("text")).rdd.getNumPartitions()
+        >= target
+    )
     # aggregates shuffle anyway; assert on the pre-aggregation scan instead
     assert token_counts(one_split).rdd.getNumPartitions() >= target
     # simhash output is post-groupBy (shuffle.partitions); the guarded scan
@@ -1086,16 +1090,17 @@ def test_short_documents_do_not_crash_shingles(spark):
     feed slice() a zero start and kill the job. Shingle semantics: a doc
     with size <= n words has NO shingles (both engines agree)."""
     from palladian_spark.operators.dedup import (
-        _word_shingles,
+        _shingles,
         minhash_lsh_pairs,
         ngram_jaccard_pairs,
     )
+    from palladian_spark.operators.util import spread
 
     rows = [(1, ""), (2, "one"), (3, "one two three"),
             (4, "alpha beta gamma delta alpha beta gamma delta")]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     got = {r["doc_id"]: r["_shingles"] for r in
-           _word_shingles(df, "text").select("doc_id", "_shingles").collect()}
+           spread(df).select("doc_id", _shingles("text").alias("_shingles")).collect()}
     assert got[1] == [] and got[2] == [] and got[3] == []
     assert len(got[4]) == 4
     assert minhash_lsh_pairs(df, threshold=0.2).count() == 0
