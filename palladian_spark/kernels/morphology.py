@@ -17,6 +17,7 @@ from __future__ import annotations
 import regex
 
 from .irregular_nouns import IRREGULAR_NOUN_PAIRS
+from .snowball import longest_suffix, r1_r2
 from .stopwords_en import STOPWORDS_EN
 from .stopwords_en_small import STOPWORDS_EN_SMALL
 
@@ -356,34 +357,15 @@ def _de_prelude(word: str) -> str:
     return "".join(w)
 
 
-def _de_gopast_region(w: str, start: int) -> int:
-    """Cursor after the first non-vowel that follows a vowel, from `start`
-    (standard Snowball R1/R2 step); len(w) if the pattern never occurs."""
-    n = len(w)
-    i = start
-    while i < n and w[i] not in _DE_VOWELS:
-        i += 1
-    if i >= n:
-        return n
-    i += 1  # past the vowel
-    while i < n and w[i] in _DE_VOWELS:
-        i += 1
-    if i >= n:
-        return n
-    return i + 1  # past the non-vowel
-
-
 def german_stem(word: str) -> str:
     """Snowball German stemmer; lowercase input expected (the reference's
     snowball jar is case-preserving, but every caller lowercases first —
     Preprocessor lowercases unless case_sensitive)."""
     w = _de_prelude(word)
-    r1 = _de_gopast_region(w, 0)
     # p2 continues from the UNADJUSTED p1 cursor; the 3-letter floor
     # applies to the r1 variable only (german.sbl mark_regions)
-    r2 = _de_gopast_region(w, r1)
-    if r1 < 3 and len(w) >= 3:
-        r1 = 3
+    r1, r2 = r1_r2(w, _DE_VOWELS)
+    r1 = max(r1, min(3, len(w)))
 
     def in_r1(pos: int) -> bool:
         return pos >= r1
@@ -392,9 +374,8 @@ def german_stem(word: str) -> str:
         return pos >= r2
 
     # --- Step 1 (longest of: em ern er | e en es | s) ------------------
-    for suf in ("ern", "em", "er", "en", "es", "e", "s"):
-        if not w.endswith(suf):
-            continue
+    suf = longest_suffix(w, ("ern", "em", "er", "en", "es", "e", "s"))
+    if suf:
         pos = len(w) - len(suf)
         if suf in ("em", "ern", "er"):
             if in_r1(pos):
@@ -407,26 +388,23 @@ def german_stem(word: str) -> str:
         else:  # 's'
             if in_r1(pos) and pos > 0 and w[pos - 1] in _DE_S_ENDING:
                 w = w[:pos]
-        break  # among() commits to the longest match
 
     # --- Step 2 (longest of: en er est | st) ----------------------------
-    for suf in ("est", "en", "er", "st"):
-        if not w.endswith(suf):
-            continue
+    suf = longest_suffix(w, ("est", "en", "er", "st"))
+    if suf:
         pos = len(w) - len(suf)
         if suf == "st":
             # valid st-ending itself preceded by >= 3 letters
             if in_r1(pos) and pos > 3 and w[pos - 1] in _DE_ST_ENDING:
                 w = w[:pos]
-        else:
-            if in_r1(pos):
-                w = w[:pos]
-        break
+        elif in_r1(pos):
+            w = w[:pos]
 
     # --- Step 3 (d-suffixes) --------------------------------------------
-    for suf in ("isch", "lich", "heit", "keit", "end", "ung", "ig", "ik"):
-        if not w.endswith(suf):
-            continue
+    suf = longest_suffix(
+        w, ("isch", "lich", "heit", "keit", "end", "ung", "ig", "ik")
+    )
+    if suf:
         pos = len(w) - len(suf)
         if suf in ("end", "ung"):
             if in_r2(pos):
@@ -450,7 +428,6 @@ def german_stem(word: str) -> str:
                     if w.endswith(inner) and in_r2(len(w) - len(inner)):
                         w = w[: len(w) - len(inner)]
                         break
-        break
 
     # --- Postlude: unmark, fold umlauts ---------------------------------
     return (

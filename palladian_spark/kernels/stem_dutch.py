@@ -9,13 +9,11 @@ regenerated by tools/gen_snowball_goldens.py.
 
 from __future__ import annotations
 
-_NL_VOWELS = set("aeiouyè")
+from .snowball import longest_suffix, r1_r2
+
+_NL_VOWELS = set("aeiouyè")  # marked I/Y are uppercase -> non-vowels
 
 _ACCENT_MAP = str.maketrans("äëïöüáéíóú", "aeiouaeiou")
-
-
-def _nl_is_v(ch: str) -> bool:
-    return ch in _NL_VOWELS  # marked I/Y are uppercase -> non-vowels
 
 
 def _nl_prelude(w: str) -> str:
@@ -24,30 +22,16 @@ def _nl_prelude(w: str) -> str:
     n = len(chars)
     for i in range(n):
         c = chars[i]
-        if c == "y" and (i == 0 or _nl_is_v(chars[i - 1])):
+        if c == "y" and (i == 0 or chars[i - 1] in _NL_VOWELS):
             chars[i] = "Y"
         elif (
             c == "i"
             and 0 < i < n - 1
-            and _nl_is_v(chars[i - 1])
-            and _nl_is_v(chars[i + 1])
+            and chars[i - 1] in _NL_VOWELS
+            and chars[i + 1] in _NL_VOWELS
         ):
             chars[i] = "I"
     return "".join(chars)
-
-
-def _nl_r1_r2(w: str) -> tuple[int, int]:
-    n = len(w)
-
-    def _r_after(start: int) -> int:
-        for i in range(start + 1, n):
-            if not _nl_is_v(w[i]) and _nl_is_v(w[i - 1]):
-                return i + 1
-        return n
-
-    r1 = _r_after(0)
-    r2 = _r_after(r1) if r1 < n else n
-    return max(r1, min(3, n)), r2
 
 
 def _undouble(w: str) -> str:
@@ -59,7 +43,8 @@ def _undouble(w: str) -> str:
 
 def dutch_stem(word: str) -> str:
     w = _nl_prelude(word)
-    r1, r2 = _nl_r1_r2(w)
+    r1, r2 = r1_r2(w, _NL_VOWELS)
+    r1 = max(r1, min(3, len(w)))  # 3-letter floor; R2 keeps the raw R1
 
     def in_r1(pos: int) -> bool:
         return pos >= r1
@@ -76,7 +61,7 @@ def dutch_stem(word: str) -> str:
                 if (
                     in_r1(p)
                     and p > 0
-                    and not _nl_is_v(v[p - 1])
+                    and v[p - 1] not in _NL_VOWELS
                     and not v[:p].endswith("gem")
                 ):
                     return _undouble(v[:p])
@@ -84,11 +69,7 @@ def dutch_stem(word: str) -> str:
         return v
 
     # ---- step 1 ----
-    m = None
-    for suf in ("heden", "ene", "en", "se", "s"):
-        if w.endswith(suf):
-            m = suf
-            break
+    m = longest_suffix(w, ("heden", "ene", "en", "se", "s"))
     if m == "heden":
         p = len(w) - 5
         if in_r1(p):
@@ -98,12 +79,12 @@ def dutch_stem(word: str) -> str:
     elif m in ("se", "s"):
         p = len(w) - len(m)
         # valid s-ending: a non-vowel other than j
-        if in_r1(p) and p > 0 and not _nl_is_v(w[p - 1]) and w[p - 1] != "j":
+        if in_r1(p) and p > 0 and w[p - 1] not in _NL_VOWELS and w[p - 1] != "j":
             w = w[:p]
 
     # ---- step 2 ----
     e_found = False
-    if w.endswith("e") and in_r1(len(w) - 1) and len(w) >= 2 and not _nl_is_v(w[-2]):
+    if w.endswith("e") and in_r1(len(w) - 1) and len(w) >= 2 and w[-2] not in _NL_VOWELS:
         w = _undouble(w[:-1])
         e_found = True
 
@@ -113,11 +94,7 @@ def dutch_stem(word: str) -> str:
         w = en_delete(w)
 
     # ---- step 3b: derivational ----
-    m = None
-    for suf in ("lijk", "baar", "end", "ing", "bar", "ig"):
-        if w.endswith(suf):
-            if m is None or len(suf) > len(m):
-                m = suf
+    m = longest_suffix(w, ("lijk", "baar", "end", "ing", "bar", "ig"))
     if m in ("end", "ing"):
         p = len(w) - 3
         if in_r2(p):
@@ -139,7 +116,7 @@ def dutch_stem(word: str) -> str:
                 w.endswith("e")
                 and in_r1(len(w) - 1)
                 and len(w) >= 2
-                and not _nl_is_v(w[-2])
+                and w[-2] not in _NL_VOWELS
             ):
                 w = _undouble(w[:-1])
     elif m == "baar":
@@ -155,10 +132,10 @@ def dutch_stem(word: str) -> str:
     if len(w) >= 4:
         c, v1, v2, d = w[-4], w[-3], w[-2], w[-1]
         if (
-            not _nl_is_v(c)
+            c not in _NL_VOWELS
             and v1 == v2
             and v1 in ("a", "e", "o", "u")
-            and not _nl_is_v(d)
+            and d not in _NL_VOWELS
             and d != "I"
         ):
             w = w[:-2] + w[-1]

@@ -9,35 +9,10 @@ regenerated by tools/gen_snowball_goldens.py.
 
 from __future__ import annotations
 
+from .snowball import longest_suffix, r1_r2
+
 _FI_VOWELS = set("aeiouyäö")
 _FI_LV = ("aa", "ee", "ii", "oo", "uu", "ää", "öö")
-
-
-def _fi_is_v(ch: str) -> bool:
-    return ch in _FI_VOWELS
-
-
-def _fi_r1_r2(w: str) -> tuple[int, int]:
-    n = len(w)
-
-    def _r_after(start: int) -> int:
-        for i in range(start + 1, n):
-            if not _fi_is_v(w[i]) and _fi_is_v(w[i - 1]):
-                return i + 1
-        return n
-
-    r1 = _r_after(0)
-    r2 = _r_after(r1) if r1 < n else n
-    return r1, r2
-
-
-def _longest_in(w: str, suffixes, limit: int) -> str | None:
-    best = None
-    for suf in suffixes:
-        if w.endswith(suf) and len(w) - len(suf) >= limit:
-            if best is None or len(suf) > len(best):
-                best = suf
-    return best
 
 
 _STEP1_PARTICLES = ["kaan", "kään", "kin", "han", "hän", "ko", "kö", "pa", "pä"]
@@ -52,21 +27,21 @@ _STEP3_PLAIN = ["ta", "tä", "ssa", "ssä", "sta", "stä", "lla", "llä",
 
 def finnish_stem(word: str) -> str:
     w = word
-    r1, r2 = _fi_r1_r2(w)
+    r1, r2 = r1_r2(w, _FI_VOWELS)
 
     # ---- step 1: particle etc. ----
-    m = _longest_in(w, _STEP1_PARTICLES + ["sti"], r1)
+    m = longest_suffix(w, _STEP1_PARTICLES + ["sti"], r1)
     if m == "sti":
         if len(w) - 3 >= r2:
             w = w[:-3]
     elif m:
         p = len(w) - len(m)
-        if p > 0 and (w[p - 1] in ("n", "t") or _fi_is_v(w[p - 1])):
+        if p > 0 and (w[p - 1] in ("n", "t") or w[p - 1] in _FI_VOWELS):
             w = w[:p]
 
     # ---- step 2: possessive ----
-    m = _longest_in(w, ["si", "ni", "nsa", "nsä", "mme", "nne", "an",
-                        "än", "en"], r1)
+    m = longest_suffix(w, ["si", "ni", "nsa", "nsä", "mme", "nne", "an",
+                           "än", "en"], r1)
     if m:
         p = len(w) - len(m)
         if m == "si":
@@ -99,18 +74,18 @@ def finnish_stem(word: str) -> str:
         if m in _STEP3_H:
             return p > 0 and w[p - 1] == _STEP3_H[m]
         if m in ("siin", "den", "tten"):
-            return p >= 2 and w[p - 1] == "i" and _fi_is_v(w[p - 2])
+            return p >= 2 and w[p - 1] == "i" and w[p - 2] in _FI_VOWELS
         if m == "seen":
             return p >= 2 and w[p - 2 : p] in _FI_LV
         if m in ("a", "ä"):
             # preceded by consonant-then-vowel
-            return p >= 2 and _fi_is_v(w[p - 1]) and not _fi_is_v(w[p - 2])
+            return p >= 2 and w[p - 1] in _FI_VOWELS and w[p - 2] not in _FI_VOWELS
         if m in ("tta", "ttä"):
             return p > 0 and w[p - 1] == "e"
         return True  # plain list and 'n'
 
     ended3 = False
-    hbest = _longest_in(w, list(_STEP3_H), r1)
+    hbest = longest_suffix(w, list(_STEP3_H), r1)
     if hbest:
         p = len(w) - len(hbest)
         if p > 0 and w[p - 1] == _STEP3_H[hbest]:
@@ -136,7 +111,7 @@ def finnish_stem(word: str) -> str:
                 w = w[:-1]
 
     # ---- step 4: other endings (R2) ----
-    m = _longest_in(
+    m = longest_suffix(
         w,
         ["impi", "impa", "impä", "immi", "imma", "immä", "mpi", "mpa",
          "mpä", "mmi", "mma", "mmä", "eja", "ejä"],
@@ -159,10 +134,10 @@ def finnish_stem(word: str) -> str:
             w.endswith("t")
             and len(w) - 1 >= r1
             and len(w) >= 2
-            and _fi_is_v(w[-2])
+            and w[-2] in _FI_VOWELS
         ):
             w = w[:-1]
-            m = _longest_in(w, ["imma", "mma"], r2)
+            m = longest_suffix(w, ["imma", "mma"], r2)
             if m == "imma":
                 w = w[:-4]
             elif m == "mma" and not w[: len(w) - 3].endswith("po"):
@@ -177,7 +152,7 @@ def finnish_stem(word: str) -> str:
     if (
         len(w) >= 2
         and w[-1] in ("a", "ä", "e", "i")
-        and not _fi_is_v(w[-2])
+        and w[-2] not in _FI_VOWELS
         and len(w) - 2 >= r1
     ):
         w = w[:-1]
@@ -189,8 +164,8 @@ def finnish_stem(word: str) -> str:
         w = w[:-1]
     # (e) undouble: final double consonant, possibly followed by vowels
     i = len(w)
-    while i > 0 and _fi_is_v(w[i - 1]):
+    while i > 0 and w[i - 1] in _FI_VOWELS:
         i -= 1
-    if i >= 2 and not _fi_is_v(w[i - 1]) and w[i - 1] == w[i - 2]:
+    if i >= 2 and w[i - 1] not in _FI_VOWELS and w[i - 1] == w[i - 2]:
         w = w[: i - 1] + w[i:]
     return w

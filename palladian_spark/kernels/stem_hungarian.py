@@ -9,6 +9,8 @@ regenerated by tools/gen_snowball_goldens.py.
 
 from __future__ import annotations
 
+from .snowball import longest_suffix
+
 _HU_VOWELS = set("aáeéiíoóöőuúüű")
 _HU_DIGRAPHS = ("dzs", "cs", "dz", "gy", "ly", "ny", "sz", "ty", "zs")
 # doubled consonants incl. doubled digraphs (first letter repeated)
@@ -19,32 +21,26 @@ _HU_DOUBLES = (
 )
 
 
-def _hu_is_v(ch: str) -> bool:
-    return ch in _HU_VOWELS
-
-
 def _hu_r1(w: str) -> int:
     n = len(w)
-    if n and _hu_is_v(w[0]):
+    if n and w[0] in _HU_VOWELS:
         # region after the first consonant or digraph
         for i in range(1, n):
-            if not _hu_is_v(w[i]):
+            if w[i] not in _HU_VOWELS:
                 for dg in _HU_DIGRAPHS:
                     if w.startswith(dg, i):
                         return i + len(dg)
                 return i + 1
         return n
     for i in range(1, n):
-        if _hu_is_v(w[i]):
+        if w[i] in _HU_VOWELS:
             return i + 1
     return n
 
 
 def _undouble(w: str) -> str:
-    for dbl in sorted(_HU_DOUBLES, key=len, reverse=True):
-        if w.endswith(dbl):
-            return w[: len(w) - len(dbl)] + dbl[1:]
-    return w
+    dbl = longest_suffix(w, _HU_DOUBLES)
+    return w if dbl is None else w[: len(w) - len(dbl)] + dbl[1:]
 
 
 def _ends_double(w: str) -> bool:
@@ -52,16 +48,10 @@ def _ends_double(w: str) -> bool:
 
 
 def _match(w: str, suffixes, r1: int) -> str | None:
-    """Global longest match, then the R1 condition — a longer suffix
-    sitting outside R1 fails the whole step with no retry ('csak' keeps
-    its k because 'ak' matched before R1)."""
-    best = None
-    for suf in suffixes:
-        if w.endswith(suf) and (best is None or len(suf) > len(best)):
-            best = suf
-    if best is not None and len(w) - len(best) >= r1:
-        return best
-    return None
+    """`among` then the R1 condition: a longer suffix sitting outside R1
+    fails the whole step ('csak' keeps its k)."""
+    m = longest_suffix(w, suffixes)
+    return m if m is not None and len(w) - len(m) >= r1 else None
 
 
 _CASE = [

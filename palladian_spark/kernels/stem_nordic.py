@@ -16,30 +16,17 @@ derivational step.
 
 from __future__ import annotations
 
+from .snowball import longest_suffix, r1_r2
+
 _DA_VOWELS = set("aeiouyæåø")
 _NO_VOWELS = set("aeiouyæåø")
 _SV_VOWELS = set("aeiouyäåö")
 
 
 def _r1_min3(w: str, vowels: set) -> int:
-    """Standard R1 (after the first non-vowel following a vowel), clamped
-    so the region before it holds at least 3 characters."""
-    n = len(w)
-    r1 = n
-    for i in range(1, n):
-        if w[i] not in vowels and w[i - 1] in vowels:
-            r1 = i + 1
-            break
-    return max(r1, min(3, n))
-
-
-def _longest_in_r1(w: str, suffixes, r1: int) -> str | None:
-    best = None
-    for suf in suffixes:
-        if w.endswith(suf) and len(w) - len(suf) >= r1:
-            if best is None or len(suf) > len(best):
-                best = suf
-    return best
+    """Standard R1, clamped so the region before it holds at least 3
+    characters."""
+    return max(r1_r2(w, vowels)[0], min(3, len(w)))
 
 
 # ---------------------------------------------------------------------------
@@ -60,7 +47,7 @@ def danish_stem(word: str) -> str:
     r1 = _r1_min3(w, _DA_VOWELS)
 
     # step 1
-    m = _longest_in_r1(w, _DA_STEP1 + ["s"], r1)
+    m = longest_suffix(w, _DA_STEP1 + ["s"], r1)
     if m == "s":
         if len(w) >= 2 and w[-2] in _DA_S_ENDING:
             w = w[:-1]
@@ -80,7 +67,7 @@ def danish_stem(word: str) -> str:
     # step 3
     if w.endswith("igst") and len(w) - 2 >= r1:
         w = w[:-2]
-    m = _longest_in_r1(w, ["elig", "løst", "lig", "els", "ig"], r1)
+    m = longest_suffix(w, ["elig", "løst", "lig", "els", "ig"], r1)
     if m == "løst":
         w = w[:-1]
     elif m:
@@ -119,7 +106,7 @@ def norwegian_stem(word: str) -> str:
     w = word
     r1 = _r1_min3(w, _NO_VOWELS)
 
-    m = _longest_in_r1(w, _NO_STEP1 + ["s"], r1)
+    m = longest_suffix(w, _NO_STEP1 + ["s"], r1)
     if m == "s":
         # valid s-ending: the listed consonants, or k not after a vowel
         if len(w) >= 2 and (
@@ -138,7 +125,7 @@ def norwegian_stem(word: str) -> str:
             w = w[:-1]
             break
 
-    m = _longest_in_r1(w, _NO_STEP3, r1)
+    m = longest_suffix(w, _NO_STEP3, r1)
     if m:
         w = w[: len(w) - len(m)]
     return w
@@ -162,7 +149,7 @@ def swedish_stem(word: str) -> str:
     w = word
     r1 = _r1_min3(w, _SV_VOWELS)
 
-    m = _longest_in_r1(w, _SV_STEP1 + ["s"], r1)
+    m = longest_suffix(w, _SV_STEP1 + ["s"], r1)
     if m == "s":
         if len(w) >= 2 and w[-2] in _SV_S_ENDING:
             w = w[:-1]
@@ -176,7 +163,7 @@ def swedish_stem(word: str) -> str:
             w = w[:-1]
             break
 
-    m = _longest_in_r1(w, ["fullt", "löst", "lig", "els", "ig"], r1)
+    m = longest_suffix(w, ["fullt", "löst", "lig", "els", "ig"], r1)
     if m == "fullt":
         w = w[:-1]
     elif m == "löst":

@@ -17,15 +17,14 @@ lowercases, mirroring SnowballStemmer usage in the reference).
 
 from __future__ import annotations
 
+from .snowball import longest_suffix, r1_r2, rv as std_rv
+
 # ---------------------------------------------------------------------------
 # French
 # ---------------------------------------------------------------------------
 
+# markers U/I/Y/H are uppercase or H -> non-vowels
 _FR_VOWELS = set("aeiouyâàëéêèïîôûù")
-
-
-def _fr_is_v(ch: str) -> bool:
-    return ch in _FR_VOWELS  # markers U/I/Y/H are uppercase or H -> non-vowels
 
 
 def _fr_prelude(w: str) -> str:
@@ -36,13 +35,13 @@ def _fr_prelude(w: str) -> str:
     i, n = 0, len(w)
     while i < n:
         c = w[i]
-        if _fr_is_v(c) and i + 1 < n:
+        if c in _FR_VOWELS and i + 1 < n:
             d = w[i + 1]
-            if d == "u" and i + 2 < n and _fr_is_v(w[i + 2]):
+            if d == "u" and i + 2 < n and w[i + 2] in _FR_VOWELS:
                 out += [c, "U"]
                 i += 2
                 continue
-            if d == "i" and i + 2 < n and _fr_is_v(w[i + 2]):
+            if d == "i" and i + 2 < n and w[i + 2] in _FR_VOWELS:
                 out += [c, "I"]
                 i += 2
                 continue
@@ -58,7 +57,7 @@ def _fr_prelude(w: str) -> str:
             out += ["H", "i"]
             i += 1
             continue
-        if c == "y" and i + 1 < n and _fr_is_v(w[i + 1]):
+        if c == "y" and i + 1 < n and w[i + 1] in _FR_VOWELS:
             out.append("Y")
             i += 1
             continue
@@ -71,40 +70,15 @@ def _fr_prelude(w: str) -> str:
     return "".join(out)
 
 
-def _regions(w: str, is_v, rv_exceptions: tuple[str, ...] = ()) -> tuple[int, int, int]:
-    n = len(w)
-    if n >= 3 and is_v(w[0]) and is_v(w[1]):
-        rv = 3
-    elif w[:3] in rv_exceptions:
-        rv = 3
-    else:
-        rv = n
-        for i in range(1, n):
-            if is_v(w[i]):
-                rv = i + 1
-                break
-
-    def _r_after(start: int) -> int:
-        for i in range(start + 1, n):
-            if not is_v(w[i]) and is_v(w[i - 1]):
-                return i + 1
-        return n
-
-    r1 = _r_after(0)
-    r2 = _r_after(r1) if r1 < n else n
-    return rv, r1, r2
-
-
-def _longest_in_region(w: str, suffixes, start_limit: int) -> str | None:
-    """Snowball `setlimit tomark pV for ([substring] among(...))`: only
-    suffixes lying entirely inside [start_limit, end) can match at all;
-    among them the longest wins (and its rule is final — no backtracking)."""
-    best = None
-    for suf in suffixes:
-        if w.endswith(suf) and len(w) - len(suf) >= start_limit:
-            if best is None or len(suf) > len(best):
-                best = suf
-    return best
+def _fr_rv(w: str) -> int:
+    """French RV: after the third letter if the word starts with two
+    vowels or with par/col/tap; else after the first vowel that is not the
+    first letter."""
+    if (len(w) >= 3 and w[0] in _FR_VOWELS and w[1] in _FR_VOWELS) or (
+        w[:3] in ("par", "col", "tap")
+    ):
+        return 3
+    return next((i + 1 for i in range(1, len(w)) if w[i] in _FR_VOWELS), len(w))
 
 
 _FR_STEP1 = [
@@ -138,7 +112,8 @@ _FR_STEP2B_A = [
 
 def french_stem(word: str) -> str:
     w = _fr_prelude(word)
-    rv, r1, r2 = _regions(w, _fr_is_v, ("par", "col", "tap"))
+    rv = _fr_rv(w)
+    r1, r2 = r1_r2(w, _FR_VOWELS)
 
     def in_rv(pos: int) -> bool:
         return pos >= rv
@@ -151,13 +126,8 @@ def french_stem(word: str) -> str:
 
     step1_changed = False
     ment_family = False
-    matched1 = None
-    for suf in sorted(_FR_STEP1, key=len, reverse=True):
-        if w.endswith(suf):
-            matched1 = suf
-            break
-    if matched1:
-        suf = matched1
+    suf = longest_suffix(w, _FR_STEP1)
+    if suf:
         p = len(w) - len(suf)
         if suf in ("ance", "iqUe", "isme", "able", "iste", "eux",
                    "ances", "iqUes", "ismes", "ables", "istes"):
@@ -253,7 +223,7 @@ def french_stem(word: str) -> str:
                 w = w[:p] + "eux"
                 step1_changed = True
         elif suf in ("issement", "issements"):
-            if in_r1(p) and p > 0 and not _fr_is_v(w[p - 1]):
+            if in_r1(p) and p > 0 and w[p - 1] not in _FR_VOWELS:
                 w = w[:p]
                 step1_changed = True
         elif suf == "amment":
@@ -267,7 +237,7 @@ def french_stem(word: str) -> str:
                 step1_changed = True
                 ment_family = True
         elif suf in ("ment", "ments"):
-            if p > 0 and _fr_is_v(w[p - 1]) and in_rv(p - 1):
+            if p > 0 and w[p - 1] in _FR_VOWELS and in_rv(p - 1):
                 w = w[:p]
                 step1_changed = True
                 ment_family = True
@@ -275,18 +245,18 @@ def french_stem(word: str) -> str:
     do_step2 = (not step1_changed) or ment_family
     step2_changed = False
     if do_step2:
-        m2a = _longest_in_region(w, _FR_STEP2A, rv)
+        m2a = longest_suffix(w, _FR_STEP2A, rv)
         removed_2a = False
         if m2a:
             p = len(w) - len(m2a)
             # preceded (inside the RV limit) by a non-vowel that is not the
             # He/Hi placeholder H
-            if p - 1 >= rv and not _fr_is_v(w[p - 1]) and w[p - 1] != "H":
+            if p - 1 >= rv and w[p - 1] not in _FR_VOWELS and w[p - 1] != "H":
                 w = w[:p]
                 step2_changed = True
                 removed_2a = True
         if not removed_2a:
-            best = _longest_in_region(
+            best = longest_suffix(
                 w, ["ions"] + _FR_STEP2B_E + _FR_STEP2B_A, rv
             )
             if best:
@@ -317,7 +287,7 @@ def french_stem(word: str) -> str:
             prev = w[-2]
             if (prev == "i" and len(w) >= 3 and w[-3] == "H") or prev not in "aiouès":
                 w = w[:-1]
-        best = _longest_in_region(
+        best = longest_suffix(
             w, ["ière", "Ière", "ion", "ier", "Ier", "e"], rv
         )
         if best:
@@ -338,7 +308,7 @@ def french_stem(word: str) -> str:
     # step 6: un-accent (é/è followed by trailing non-vowels -> e)
     j = len(w)
     k = j
-    while k > 0 and not _fr_is_v(w[k - 1]):
+    while k > 0 and w[k - 1] not in _FR_VOWELS:
         k -= 1
     if 0 < k < j and w[k - 1] in ("é", "è"):
         w = w[: k - 1] + "e" + w[k:]
@@ -369,30 +339,7 @@ def french_stem(word: str) -> str:
 # ---------------------------------------------------------------------------
 
 _ES_VOWELS = set("aeiouáéíóúü")
-
-
-def _es_is_v(ch: str) -> bool:
-    return ch in _ES_VOWELS
-
-
-def _es_rv(w: str) -> int:
-    """Spanish RV: second letter consonant -> after the next vowel; first
-    two letters vowels -> after the next consonant; consonant+vowel ->
-    after the third letter; else end of word."""
-    n = len(w)
-    if n < 3:
-        return n
-    if not _es_is_v(w[1]):
-        for i in range(2, n):
-            if _es_is_v(w[i]):
-                return i + 1
-        return n
-    if _es_is_v(w[0]) and _es_is_v(w[1]):
-        for i in range(2, n):
-            if not _es_is_v(w[i]):
-                return i + 1
-        return n
-    return 3
+_ES_UNACUTE = str.maketrans("áéíóú", "aeiou")
 
 
 _ES_PRONOUNS = [
@@ -437,8 +384,8 @@ _ES_STEP2B = [
 
 def spanish_stem(word: str) -> str:
     w = word
-    rv = _es_rv(w)
-    _, r1, r2 = _regions(w, _es_is_v)
+    rv = std_rv(w, _ES_VOWELS)
+    r1, r2 = r1_r2(w, _ES_VOWELS)
 
     def in_rv(pos: int) -> bool:
         return pos >= rv
@@ -450,25 +397,16 @@ def spanish_stem(word: str) -> str:
         return pos >= r2
 
     # ---- step 0: attached pronoun ----
-    pron = _longest_in_region(w, _ES_PRONOUNS, rv)
+    pron = longest_suffix(w, _ES_PRONOUNS, rv)
     if pron:
-        stem_end = len(w) - len(pron)
-        head = w[:stem_end]
-        matched = False
-        for pre in sorted(_ES_PRE_A, key=len, reverse=True):
-            if head.endswith(pre) and stem_end - len(pre) >= rv:
-                # delete pronoun, remove the acute accent from the suffix
-                fixed = pre.replace("á", "a").replace("é", "e").replace("í", "i")
-                w = head[: len(head) - len(pre)] + fixed
-                matched = True
-                break
-        if not matched:
-            for pre in sorted(_ES_PRE_B, key=len, reverse=True):
-                if head.endswith(pre) and stem_end - len(pre) >= rv:
-                    w = head
-                    matched = True
-                    break
-        if not matched and head.endswith("yendo"):
+        head = w[: len(w) - len(pron)]
+        pre = longest_suffix(head, _ES_PRE_A, rv)
+        if pre:
+            # delete pronoun, remove the acute accent from the suffix
+            w = head[: len(head) - len(pre)] + pre.translate(_ES_UNACUTE)
+        elif longest_suffix(head, _ES_PRE_B, rv):
+            w = head
+        elif head.endswith("yendo"):
             p = len(head) - 5
             if p >= rv and p > 0 and w[p - 1] == "u":
                 w = head
@@ -481,11 +419,7 @@ def spanish_stem(word: str) -> str:
         + ["uciones", "ución"] + ["encias", "encia"] + ["amente", "mente"]
         + _ES_STEP1_IDAD + _ES_STEP1_IVA
     )
-    m1 = None
-    for suf in sorted(all1, key=len, reverse=True):
-        if w.endswith(suf):
-            m1 = suf
-            break
+    m1 = longest_suffix(w, all1)
     if m1:
         p = len(w) - len(m1)
         if m1 in _ES_STEP1_DELETE_R2:
@@ -563,14 +497,14 @@ def spanish_stem(word: str) -> str:
     # ---- step 2 (verbs), only if step 1 removed nothing ----
     if not step1_changed:
         removed_2a = False
-        m2a = _longest_in_region(w, _ES_STEP2A, rv)
+        m2a = longest_suffix(w, _ES_STEP2A, rv)
         if m2a:
             p = len(w) - len(m2a)
             if p > 0 and w[p - 1] == "u":  # the u need not be in RV
                 w = w[:p]
                 removed_2a = True
         if not removed_2a:
-            m2b = _longest_in_region(w, _ES_STEP2B_GU + _ES_STEP2B, rv)
+            m2b = longest_suffix(w, _ES_STEP2B_GU + _ES_STEP2B, rv)
             if m2b:
                 p = len(w) - len(m2b)
                 w = w[:p]
@@ -578,7 +512,7 @@ def spanish_stem(word: str) -> str:
                     w = w[:-1]  # the gu need not be in RV
 
     # ---- step 3: residual ----
-    m3 = _longest_in_region(w, ["os", "a", "o", "á", "í", "ó", "e", "é"], rv)
+    m3 = longest_suffix(w, ["os", "a", "o", "á", "í", "ó", "e", "é"], rv)
     if m3:
         p = len(w) - len(m3)
         if m3 in ("e", "é"):
@@ -589,7 +523,7 @@ def spanish_stem(word: str) -> str:
             w = w[:p]
 
     # ---- final: remove acute accents ----
-    return w.translate(str.maketrans("áéíóú", "aeiou"))
+    return w.translate(_ES_UNACUTE)
 
 
 # ---------------------------------------------------------------------------
@@ -597,10 +531,6 @@ def spanish_stem(word: str) -> str:
 # ---------------------------------------------------------------------------
 
 _IT_VOWELS = set("aeiouàèìòù")
-
-
-def _it_is_v(ch: str) -> bool:
-    return ch in _IT_VOWELS
 
 
 def _it_prelude(w: str) -> str:
@@ -618,27 +548,9 @@ def _it_prelude(w: str) -> str:
     w = "".join(out)
     chars = list(w)
     for i in range(1, len(chars) - 1):
-        if chars[i] in ("u", "i") and _it_is_v(chars[i - 1]) and _it_is_v(chars[i + 1]):
+        if chars[i] in "ui" and chars[i - 1] in _IT_VOWELS and chars[i + 1] in _IT_VOWELS:
             chars[i] = chars[i].upper()
     return "".join(chars)
-
-
-def _std_rv(w: str, is_v) -> int:
-    """Spanish/Italian/Portuguese RV definition."""
-    n = len(w)
-    if n < 3:
-        return n
-    if not is_v(w[1]):
-        for i in range(2, n):
-            if is_v(w[i]):
-                return i + 1
-        return n
-    if is_v(w[0]) and is_v(w[1]):
-        for i in range(2, n):
-            if not is_v(w[i]):
-                return i + 1
-        return n
-    return 3
 
 
 _IT_PRONOUNS = [
@@ -673,8 +585,8 @@ _IT_STEP2 = [
 
 def italian_stem(word: str) -> str:
     w = _it_prelude(word)
-    rv = _std_rv(w, _it_is_v)
-    _, r1, r2 = _regions(w, _it_is_v)
+    rv = std_rv(w, _IT_VOWELS)
+    r1, r2 = r1_r2(w, _IT_VOWELS)
 
     def in_rv(pos: int) -> bool:
         return pos >= rv
@@ -686,7 +598,7 @@ def italian_stem(word: str) -> str:
         return pos >= r2
 
     # ---- step 0: attached pronoun ----
-    pron = _longest_in_region(w, _IT_PRONOUNS, rv)
+    pron = longest_suffix(w, _IT_PRONOUNS, rv)
     if pron:
         head = w[: len(w) - len(pron)]
         stem_end = len(head)
@@ -705,11 +617,7 @@ def italian_stem(word: str) -> str:
                         "imenti", "amente", "ità", "ivo", "ivi", "iva",
                         "ive"]
     )
-    m1 = None
-    for suf in sorted(all1, key=len, reverse=True):
-        if w.endswith(suf):
-            m1 = suf
-            break
+    m1 = longest_suffix(w, all1)
     if m1:
         p = len(w) - len(m1)
         if m1 in _IT_STEP1_R2:
@@ -784,7 +692,7 @@ def italian_stem(word: str) -> str:
 
     # ---- step 2 (if step 1 removed nothing) ----
     if not step1_changed:
-        m2 = _longest_in_region(w, _IT_STEP2, rv)
+        m2 = longest_suffix(w, _IT_STEP2, rv)
         if m2:
             w = w[: len(w) - len(m2)]
 
@@ -807,10 +715,6 @@ def italian_stem(word: str) -> str:
 # ---------------------------------------------------------------------------
 
 _PT_VOWELS = set("aeiouáéíóúâêô")
-
-
-def _pt_is_v(ch: str) -> bool:
-    return ch in _PT_VOWELS
 
 
 _PT_STEP1_R2 = [
@@ -843,8 +747,8 @@ _PT_STEP2 = [
 def portuguese_stem(word: str) -> str:
     # prelude: nasal vowels to two-char forms so they count as vowel+cons
     w = word.replace("ã", "a~").replace("õ", "o~")
-    rv = _std_rv(w, _pt_is_v)
-    _, r1, r2 = _regions(w, _pt_is_v)
+    rv = std_rv(w, _PT_VOWELS)
+    r1, r2 = r1_r2(w, _PT_VOWELS)
 
     def in_rv(pos: int) -> bool:
         return pos >= rv
@@ -864,11 +768,7 @@ def portuguese_stem(word: str) -> str:
            "amente", "mente", "idade", "idades", "iva", "ivo", "ivas",
            "ivos", "ira", "iras"]
     )
-    m1 = None
-    for suf in sorted(all1, key=len, reverse=True):
-        if w.endswith(suf):
-            m1 = suf
-            break
+    m1 = longest_suffix(w, all1)
     step1_changed = False
     if m1:
         p = len(w) - len(m1)
@@ -944,7 +844,7 @@ def portuguese_stem(word: str) -> str:
 
     # ---- step 2 (verbs), only if step 1 did not alter ----
     if not step1_changed:
-        m2 = _longest_in_region(w, _PT_STEP2, rv)
+        m2 = longest_suffix(w, _PT_STEP2, rv)
         if m2:
             w = w[: len(w) - len(m2)]
             altered = True
@@ -955,7 +855,7 @@ def portuguese_stem(word: str) -> str:
             w = w[:-1]
     else:
         # ---- step 4: residual suffix ----
-        m4 = _longest_in_region(w, ["os", "a", "i", "o", "á", "í", "ó"], rv)
+        m4 = longest_suffix(w, ["os", "a", "i", "o", "á", "í", "ó"], rv)
         if m4:
             w = w[: len(w) - len(m4)]
 

@@ -11,11 +11,9 @@ way Snowball 2.x does.
 
 from __future__ import annotations
 
+from .snowball import longest_suffix, r1_r2, rv as std_rv
+
 _RO_VOWELS = set("aăâeiîou")
-
-
-def _ro_is_v(ch: str) -> bool:
-    return ch in _RO_VOWELS
 
 
 def _ro_prelude(w: str) -> str:
@@ -23,62 +21,9 @@ def _ro_prelude(w: str) -> str:
     chars = list(w)
     n = len(chars)
     for i in range(1, n - 1):
-        if chars[i] in ("u", "i") and _ro_is_v(chars[i - 1]) and _ro_is_v(chars[i + 1]):
+        if chars[i] in "ui" and chars[i - 1] in _RO_VOWELS and chars[i + 1] in _RO_VOWELS:
             chars[i] = chars[i].upper()
     return "".join(chars)
-
-
-def _ro_regions(w: str) -> tuple[int, int, int]:
-    n = len(w)
-    # standard Romance RV
-    if n < 3:
-        rv = n
-    elif not _ro_is_v(w[1]):
-        rv = n
-        for i in range(2, n):
-            if _ro_is_v(w[i]):
-                rv = i + 1
-                break
-    elif _ro_is_v(w[0]) and _ro_is_v(w[1]):
-        rv = n
-        for i in range(2, n):
-            if not _ro_is_v(w[i]):
-                rv = i + 1
-                break
-    else:
-        rv = 3
-
-    def _r_after(start: int) -> int:
-        for i in range(start + 1, n):
-            if not _ro_is_v(w[i]) and _ro_is_v(w[i - 1]):
-                return i + 1
-        return n
-
-    r1 = _r_after(0)
-    r2 = _r_after(r1) if r1 < n else n
-    return rv, r1, r2
-
-
-def _longest(w: str, suffixes, limit: int) -> str | None:
-    """setlimit-style matching (verb and final-vowel steps): only suffixes
-    fully inside [limit, end) can match."""
-    best = None
-    for suf in suffixes:
-        if w.endswith(suf) and len(w) - len(suf) >= limit:
-            if best is None or len(suf) > len(best):
-                best = suf
-    return best
-
-
-def _longest_global(w: str, suffixes) -> str | None:
-    """among()-style matching (steps 0/1/2): the longest suffix matches
-    regardless of region; its region CONDITION may then fail, which fails
-    the whole step — no retry with a shorter suffix."""
-    best = None
-    for suf in suffixes:
-        if w.endswith(suf) and (best is None or len(suf) > len(best)):
-            best = suf
-    return best
 
 
 _STEP0 = [
@@ -140,10 +85,11 @@ _VERB_2 = [
 
 def romanian_stem(word: str) -> str:
     w = _ro_prelude(word)
-    rv, r1, r2 = _ro_regions(w)
+    rv = std_rv(w, _RO_VOWELS)
+    r1, r2 = r1_r2(w, _RO_VOWELS)
 
     # ---- step 0: plural / article removal (R1 condition) ----
-    m = _longest_global(w, _STEP0)
+    m = longest_suffix(w, _STEP0)
     if m and len(w) - len(m) >= r1:
         p = len(w) - len(m)
         if m in ("ul", "ului"):
@@ -165,14 +111,14 @@ def romanian_stem(word: str) -> str:
     # ---- step 1: combining suffixes, repeated (R1 condition) ----
     step12_removed = False
     while True:
-        m = _longest_global(w, _STEP1_ALL)
+        m = longest_suffix(w, _STEP1_ALL)
         if not m or len(w) - len(m) < r1:
             break
         w = w[: len(w) - len(m)] + _STEP1_REPL[m]
         step12_removed = True
 
     # ---- step 2: standard suffixes (R2 condition) ----
-    m = _longest_global(w, _STEP2_DELETE + _STEP2_IUNE + _STEP2_IST)
+    m = longest_suffix(w, _STEP2_DELETE + _STEP2_IUNE + _STEP2_IST)
     if m and len(w) - len(m) >= r2:
         p = len(w) - len(m)
         if m in _STEP2_IUNE:
@@ -188,7 +134,7 @@ def romanian_stem(word: str) -> str:
 
     # ---- step 3: verb suffixes, only if steps 1-2 removed nothing (RV) --
     if not step12_removed:
-        best = _longest(w, _VERB_1 + _VERB_2, rv)
+        best = longest_suffix(w, _VERB_1 + _VERB_2, rv)
         if best:
             p = len(w) - len(best)
             if best in _VERB_2:
@@ -196,13 +142,13 @@ def romanian_stem(word: str) -> str:
             else:
                 # preceded INSIDE RV by a consonant or u (maream/marare
                 # keep theirs: the r sits at rv-1, outside the limit)
-                if p - 1 >= rv and (not _ro_is_v(w[p - 1]) or w[p - 1] in ("u", "U")):
+                if p - 1 >= rv and (w[p - 1] not in _RO_VOWELS or w[p - 1] in ("u", "U")):
                     w = w[:p]
 
     # ---- step 4: final vowel (among is global; RV is the condition —
     # 'scrie' keeps its e because the longer 'ie' matches outside RV and
     # among() never retries) ----
-    m = _longest_global(w, ["ie", "a", "e", "i", "ă"])
+    m = longest_suffix(w, ["ie", "a", "e", "i", "ă"])
     if m and len(w) - len(m) >= rv:
         w = w[: len(w) - len(m)]
 

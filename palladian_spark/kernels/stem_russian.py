@@ -13,40 +13,9 @@ the preceding а/я in the word.
 
 from __future__ import annotations
 
+from .snowball import longest_suffix, r1_r2
+
 _RU_VOWELS = set("аеиоуыэюя")
-
-
-def _ru_is_v(ch: str) -> bool:
-    return ch in _RU_VOWELS
-
-
-def _ru_regions(w: str) -> tuple[int, int]:
-    n = len(w)
-    rv = n
-    for i in range(n):
-        if _ru_is_v(w[i]):
-            rv = i + 1
-            break
-    r1 = n
-    for i in range(1, n):
-        if not _ru_is_v(w[i]) and _ru_is_v(w[i - 1]):
-            r1 = i + 1
-            break
-    r2 = n
-    for i in range(r1 + 1, n):
-        if not _ru_is_v(w[i]) and _ru_is_v(w[i - 1]):
-            r2 = i + 1
-            break
-    return rv, r2
-
-
-def _longest(w: str, suffixes, rv: int) -> str | None:
-    best = None
-    for suf in suffixes:
-        if w.endswith(suf) and len(w) - len(suf) >= rv:
-            if best is None or len(suf) > len(best):
-                best = suf
-    return best
 
 
 _PERF_GERUND_1 = ["вшись", "вши", "в"]
@@ -78,7 +47,7 @@ _NOUN = [
 def _grouped_delete(w: str, group1, group2, rv: int) -> tuple[str, bool]:
     """One among over both groups, longest wins; group-1 entries require a
     preceding а/я inside RV (which stays in the word)."""
-    best = _longest(w, group1 + group2, rv)
+    best = longest_suffix(w, group1 + group2, rv)
     if not best:
         return w, False
     p = len(w) - len(best)
@@ -91,18 +60,20 @@ def _grouped_delete(w: str, group1, group2, rv: int) -> tuple[str, bool]:
 
 def russian_stem(word: str) -> str:
     w = word.replace("ё", "е")
-    rv, r2 = _ru_regions(w)
+    # RV: the region after the first vowel
+    rv = next((i + 1 for i, c in enumerate(w) if c in _RU_VOWELS), len(w))
+    r2 = r1_r2(w, _RU_VOWELS)[1]
 
     # ---- step 1 ----
     w2, done = _grouped_delete(w, _PERF_GERUND_1, _PERF_GERUND_2, rv)
     if done:
         w = w2
     else:
-        m = _longest(w, ["ся", "сь"], rv)
+        m = longest_suffix(w, ["ся", "сь"], rv)
         if m:
             w = w[: len(w) - len(m)]
         # adjectival, else verb, else noun — first success stops
-        m = _longest(w, _ADJECTIVE, rv)
+        m = longest_suffix(w, _ADJECTIVE, rv)
         if m:
             w = w[: len(w) - len(m)]
             w, _ = _grouped_delete(w, _PARTICIPLE_1, _PARTICIPLE_2, rv)
@@ -111,7 +82,7 @@ def russian_stem(word: str) -> str:
             if done:
                 w = w2
             else:
-                m = _longest(w, _NOUN, rv)
+                m = longest_suffix(w, _NOUN, rv)
                 if m:
                     w = w[: len(w) - len(m)]
 
@@ -126,7 +97,7 @@ def russian_stem(word: str) -> str:
             break
 
     # ---- step 4: tidy up ----
-    m = _longest(w, ["ейше", "ейш"], rv)
+    m = longest_suffix(w, ["ейше", "ейш"], rv)
     if m:
         w = w[: len(w) - len(m)]
     if w.endswith("нн") and len(w) - 2 >= rv:

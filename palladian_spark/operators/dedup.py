@@ -2,8 +2,10 @@
 
 Scale notes: every variant avoids O(n²) — exact dedup is one hash
 aggregate; near-dup variants bound the pair space by blocking (LSH bands /
-shared shingles) before any pairwise math. All hot paths are built-in
-expressions (xxhash64, md5, array ops) — no Python per row.
+shared shingles) before any pairwise math. Hashing, voting and joins are
+built-in expressions (xxhash64, md5, array ops). Python runs per row in
+two Arrow-batched pandas UDFs: shingle assembly (_make_shingle_udf) and
+minhash banding (minhash_lsh_pairs).
 """
 
 from __future__ import annotations
@@ -167,8 +169,9 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """MinHash + banded LSH near-dup candidates, verified by exact Jaccard.
 
-    shingle -> per-permutation minhash (xxhash64 affine family, JVM-side) ->
-    band buckets -> bucket join -> exact Jaccard re-check on candidates only.
+    shingle -> per-permutation minhash (crc32 affine family, one numpy
+    pandas-UDF call per document; util.band_hashes_for_shingles) -> band
+    buckets -> bucket join -> exact Jaccard re-check on candidates only.
     This is the 100 TB-scale path: the full-corpus work is linear scans +
     one bucket-key shuffle; exact verification touches only candidates.
 
@@ -329,16 +332,11 @@ def simhash_signatures_wide(
     text_col: str = "text",
     id_col: str = "doc_id",
     bits_per_half: int = 60,
-    portable: bool = True,
 ) -> DataFrame:
     """120-bit SimHash per document as two 60-bit longs (simhash_lo,
-    simhash_hi). portable=True (default, the oracle-checked contract
-    shape) derives both halves from md5 hex slices so DuckDB recomputes
-    them bit-identically; portable=False uses two seeded xxhash64 halves —
-    same distribution and banding semantics, ~2x faster signature stage
-    (no hex string + base conversion per token; measured 370 s -> cf.
-    BENCH.md 1000x probe), for production corpora where no second engine
-    needs to replay the exact bits.
+    simhash_hi). Both halves come from md5 hex slices of each token
+    (:func:`portable_token_hash` and :func:`portable_token_hash_hi`), so
+    DuckDB recomputes them bit-identically.
 
     Why wide: a 60-bit signature at hamming<=3 forces 4 bands x 15 bits,
     so band buckets hold ~n/2^15 docs — linear only while n << 32k per
@@ -353,19 +351,11 @@ def simhash_signatures_wide(
             F.expr(f"regexp_extract_all(lower({text_col}), '[a-z0-9]+', 0)")
         ).alias("token"),
     )
-    mask60 = (1 << bits_per_half) - 1
-    if portable:
-        tokens = tokens.withColumn("_md5", F.md5(F.col("token"))).select(
-            "doc",
-            F.conv(F.substring("_md5", 1, 15), 16, 10).cast("long").alias("h_lo"),
-            F.conv(F.substring("_md5", 16, 15), 16, 10).cast("long").alias("h_hi"),
-        )
-    else:
-        tokens = tokens.select(
-            "doc",
-            F.expr(f"xxhash64(token) & {mask60}L").alias("h_lo"),
-            F.expr(f"xxhash64(token, 1) & {mask60}L").alias("h_hi"),
-        )
+    tokens = tokens.withColumn("_md5", F.md5(F.col("token"))).select(
+        "doc",
+        F.conv(F.substring("_md5", 1, 15), 16, 10).cast("long").alias("h_lo"),
+        F.conv(F.substring("_md5", 16, 15), 16, 10).cast("long").alias("h_hi"),
+    )
     bit_votes = [
         F.sum(
             F.when(F.expr(f"(h_lo >> {i}) & 1") == 1, F.lit(1)).otherwise(F.lit(-1))

@@ -66,46 +66,27 @@ _TERM_TAG = ArrayType(
 )
 
 
-@F.pandas_udf(_TERM_TAG)
-def _annotation_grams(values: pd.Series, tags: pd.Series) -> pd.Series:
-    """Distinct (first-seen-capped) padded char-5-grams per entity value.
+def _gram_udf(fs):
+    """UDF (text, tag) -> the text's distinct terms under `fs`, first-seen
+    and capped at fs.max_terms, each paired with the tag."""
 
-    Distributed twin of buildAnnotationDictionary (PalladianNer.java:335-346).
-    """
-    fs = ANNOTATION_FEATURE_SETTING
-    out = []
-    for value, tag in zip(values, tags):
-        terms: list[str] = []
-        seen: set[str] = set()
-        for term in preprocess(value or "", fs):
-            if len(seen) >= fs.max_terms:
-                break
-            if term not in seen:
-                seen.add(term)
-                terms.append(term)
-        out.append([(t, tag) for t in terms])
-    return pd.Series(out)
+    @F.pandas_udf(_TERM_TAG)
+    def grams(texts: pd.Series, tags: pd.Series) -> pd.Series:
+        out = []
+        for text, tag in zip(texts, tags):
+            terms = list(dict.fromkeys(preprocess(text or "", fs)))[: fs.max_terms]
+            out.append([(t, tag) for t in terms])
+        return pd.Series(out)
+
+    return grams
 
 
-@F.pandas_udf(_TERM_TAG)
-def _context_grams(contexts: pd.Series, tags: pd.Series) -> pd.Series:
-    """Distinct unpadded char-5-grams of the ±40-char window per annotation.
-
-    Distributed twin of buildContextDictionary (PalladianNer.java:894-906).
-    """
-    fs = CONTEXT_FEATURE_SETTING
-    out = []
-    for ctx, tag in zip(contexts, tags):
-        terms: list[str] = []
-        seen: set[str] = set()
-        for term in preprocess(ctx or "", fs):
-            if len(seen) >= fs.max_terms:
-                break
-            if term not in seen:
-                seen.add(term)
-                terms.append(term)
-        out.append([(t, tag) for t in terms])
-    return pd.Series(out)
+# padded char-5-grams per entity value: distributed twin of
+# buildAnnotationDictionary (PalladianNer.java:335-346)
+_annotation_grams = _gram_udf(ANNOTATION_FEATURE_SETTING)
+# unpadded char-5-grams of the ±40-char window per annotation: distributed
+# twin of buildContextDictionary (PalladianNer.java:894-906)
+_context_grams = _gram_udf(CONTEXT_FEATURE_SETTING)
 
 
 _TOKEN_SIG = ArrayType(

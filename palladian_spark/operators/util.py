@@ -26,8 +26,8 @@ def banding_params(num_hashes: int):
 def band_hashes_for_shingles(shingles, a, b, band_size: int) -> list[int]:
     """Banded minhash of a shingle set -> one hash per band.
 
-    Pure function shared by the LSH operators (value canonicalization,
-    document dedup) and their driver-local fast paths, so every caller
+    Pure function shared by the LSH operators (value canonicalization, on
+    the driver and on executors, and document dedup), so every caller
     blocks identically. numpy beats Catalyst higher-order functions here:
     HOF lambda bodies are interpreted per element (no codegen) and a
     nested-lambda expression per permutation costs seconds of analysis
@@ -49,10 +49,14 @@ def band_hashes_for_shingles(shingles, a, b, band_size: int) -> list[int]:
     ]
 
 
-_SCAN_ONLY_NODES = ("Project", "Filter", "Relation", "SubqueryAlias", "View")
-# leaves (Range/LocalRelation/LogicalRDD) + narrow unary ops: all preserve
-# the width of an upstream explicit Repartition
-_NARROW_NODES = _SCAN_ONLY_NODES + (
+# leaves (Relation/Range/LocalRelation/LogicalRDD) + narrow unary ops: all
+# preserve the width of an upstream explicit Repartition
+_NARROW_NODES = (
+    "Project",
+    "Filter",
+    "Relation",
+    "SubqueryAlias",
+    "View",
     "Repartition",
     "Range",
     "LocalRelation",
@@ -68,18 +72,6 @@ def _analyzed_lines(df: DataFrame) -> list[str] | None:
     except Exception:
         return None
     return [ln.lstrip(" +-:") for ln in plan.splitlines() if ln.strip(" +-:")]
-
-
-def _is_bare_scan(df: DataFrame) -> bool:
-    """True when the analyzed logical plan is only Project/Filter over a
-    file Relation — the one shape where leaf file count equals current
-    parallelism. Any other node (Aggregate, Join, Repartition, ...) means
-    the partitioning downstream of the scan may differ from the file count.
-    """
-    lines = _analyzed_lines(df)
-    if lines is None:
-        return False
-    return all(node.startswith(_SCAN_ONLY_NODES) for node in lines)
 
 
 def _already_spread(df: DataFrame, target: int) -> bool:
@@ -114,28 +106,12 @@ def spread(df: DataFrame) -> DataFrame:
     repartition only fires when the input is under-parallel, so it never
     adds a shuffle at scale.
 
-    Parallelism probe: ``df.inputFiles()`` (logical file-index resolution
-    only) when the plan is a bare file scan (Project/Filter over a
-    Relation) — a TB-scale table has >> cores files and short-circuits
-    without ever touching the physical plan. For any derived plan (a
-    shuffle/aggregate/join upstream may have AQE-coalesced the output far
-    below the leaf-scan file count, so inputFiles overstates parallelism)
-    we always fall through to the precise ``df.rdd`` probe.
+    Parallelism probe: ``df.rdd.getNumPartitions()``. On a file scan it is
+    exact (large files split, small ones pack) and runs no job: AQE only
+    wraps plans that have an exchange. Plans that narrow an explicit
+    ``Repartition`` wide enough skip it (see ``_already_spread``).
     """
     target = df.sparkSession.sparkContext.defaultParallelism
-    n = 0
-    if _is_bare_scan(df):
-        try:
-            n = len(df.inputFiles())
-        except Exception:
-            n = 0
-    if n >= target:
+    if _already_spread(df, target) or df.rdd.getNumPartitions() >= target:
         return df
-    if _already_spread(df, target):
-        return df
-    # few/no files: large files may still split into many scan partitions,
-    # so fall back to the precise (physical-planning) probe before paying
-    # a repartition shuffle
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+    return df.repartition(target)

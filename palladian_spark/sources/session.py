@@ -6,6 +6,11 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the palladian_spark package
+_PACKAGE_ROOT = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
+
 
 def get_spark(
     app_name: str = "palladian-spark",
@@ -24,7 +29,9 @@ def get_spark(
     on a cluster) asks for one. Under plain ``python`` the JVM launches
     at getOrCreate and the builder conf — including driver memory, which
     only works pre-launch — feeds the launch command, so the local
-    defaults apply there.
+    defaults apply there. A local master also puts the package root on
+    the Python workers' path, so UDFs import it from any working directory
+    (on a cluster, shipping the package is spark-submit's job).
 
     The unconditional knobs (AQE, skew-join handling, Arrow batching) are
     the ones that matter at 100 TB as much as on local[*]. ``extra_conf``
@@ -41,6 +48,8 @@ def get_spark(
     )
     if master:
         builder = builder.master(master)
+        if master.startswith("local") and not under_submit:
+            builder = builder.config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
 
     if shuffle_partitions is None and not under_submit:
         shuffle_partitions = int(cpus) if cpus else 32

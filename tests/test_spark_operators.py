@@ -147,33 +147,6 @@ def test_simhash_wide_pairs_complete(docs):
         assert got == want, f"max_hamming={k}"
 
 
-def test_simhash_wide_nonportable_variant(docs):
-    """portable=False (seeded-xxhash halves, the fast production path)
-    must keep the exact banding contract: 60-bit halves, identical docs
-    collide, and the banded join equals brute force."""
-    from palladian_spark.operators.dedup import (
-        simhash_pairs_wide,
-        simhash_signatures_wide,
-    )
-
-    sigs = simhash_signatures_wide(docs, portable=False)
-    rows = {r["doc"]: (r["simhash_lo"], r["simhash_hi"]) for r in sigs.collect()}
-    for lo, hi in rows.values():
-        assert 0 <= lo < (1 << 60) and 0 <= hi < (1 << 60)
-    assert rows[1] == rows[2]
-    got = {(r["doc_a"], r["doc_b"], r["hamming"])
-           for r in simhash_pairs_wide(sigs, max_hamming=3).collect()}
-    want = set()
-    for a in rows:
-        for b in rows:
-            if a < b:
-                hd = (bin(rows[a][0] ^ rows[b][0]).count("1")
-                      + bin(rows[a][1] ^ rows[b][1]).count("1"))
-                if hd <= 3:
-                    want.add((a, b, hd))
-    assert got == want
-
-
 def test_textstats(docs):
     from palladian_spark.operators.textstats import (
         fingerprints,
@@ -1047,6 +1020,14 @@ def test_heavy_scans_are_spread(spark, tmp_path):
     # simhash output is post-groupBy (shuffle.partitions); the guarded scan
     # is inside — assert the operator still computes correctly end-to-end
     assert simhash_signatures(one_split).count() == 64
+    # a table of >= defaultParallelism files is already spread: no shuffle
+    many_path = str(tmp_path / "many_files.parquet")
+    spark.createDataFrame(rows, ["doc_id", "text"]).repartition(target).write.parquet(
+        many_path
+    )
+    many_files = spark.read.parquet(many_path)
+    assert len(many_files.inputFiles()) >= target
+    assert spread(many_files) is many_files
 
     emb_path = str(tmp_path / "emb.parquet")
     emb_rows = [(i, [float(i % 7), float((i * 3) % 5), 1.0]) for i in range(32)]
