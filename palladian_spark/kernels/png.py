@@ -112,9 +112,9 @@ def decode_png(data: bytes) -> np.ndarray:
         line = np.frombuffer(raw, dtype=np.uint8, count=stride, offset=offset + 1).copy()
         if ftype == 0:
             pass
-        elif ftype == 1:  # Sub
-            for x in range(bpp, stride):
-                line[x] = (line[x] + line[x - bpp]) & 0xFF
+        elif ftype == 1:  # Sub: a per-channel running sum, mod 256
+            run = np.cumsum(line.reshape(-1, bpp), axis=0, dtype=np.int64)
+            line = (run % 256).astype(np.uint8).ravel()
         elif ftype == 2:  # Up
             line = (line.astype(np.int16) + prev).astype(np.uint8)
         elif ftype == 3:  # Average

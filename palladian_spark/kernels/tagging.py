@@ -231,6 +231,14 @@ def dictionary_tag(
     pattern, lookup = dictionary_matcher(
         tuple(dictionary.items()), case_sensitive
     )
+    return dictionary_scan(text, pattern, lookup, case_sensitive)
+
+
+def dictionary_scan(
+    text: str, pattern, lookup: dict[str, str], case_sensitive: bool = False
+) -> list[Annotation]:
+    """One scan of a compiled gazetteer (``dictionary_matcher``'s pattern
+    and lookup) over ``text``: the one gazetteer tag resolution."""
     if pattern is None:
         return []
     # Tag resolution: exact/lower key first, then the casefold key (Unicode

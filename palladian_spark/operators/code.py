@@ -283,7 +283,7 @@ def extract_code_entities(source: DataFrame, keep_cols: tuple = ()) -> DataFrame
     shuffle — Catalyst keeps the whole thing in the scan stage. (The
     explodes sit over JVM expressions, not UDFs, so there is no Python
     hop that a pushed-down filter could run twice; the generator rule the
-    UDF operators follow is in operators/mentions.py.)
+    UDF operators follow is in operators/util.annotate.)
     """
     matches = F.array(
         *[

@@ -324,7 +324,7 @@ def secret_hits(source: DataFrame) -> DataFrame:
     """(repo, kind, n_files, n_hits, sample_hit) — the redaction pass's
     work list. One projection builds a fixed 4-struct array (whole-match
     extract_all per kind), two explodes flatten it (JVM expressions: no
-    Python hop to run twice, see operators/mentions.py), one aggregate
+    Python hop to run twice, see operators/util.annotate), one aggregate
     keyed (repo, kind)."""
     content = F.regexp_replace(
         F.coalesce(F.col("content"), F.lit("")),

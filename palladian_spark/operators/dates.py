@@ -10,28 +10,26 @@ per document, emitting one row per found date with nullable
 year/month/day/hour/minute/second parts plus a canonical timestamp
 string for fully-dated values.
 
-Scale shape: identical to mention detection — a single Arrow hop over
-the content column (regexes compile once per worker process at module
-import), then pure JVM explode/projection; no shuffle at all. The KG
-side joins these rows as typed date nodes on (doc, value).
+Scale shape: the ``util.annotate`` step of mention detection — a single
+Arrow hop over the content column (regexes compile once per worker
+process at module import), then pure JVM explode/projection; no shuffle
+at all. The KG side joins these rows as typed date nodes on (doc, value).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     IntegerType,
     StringType,
     StructField,
     StructType,
 )
 
-from ..kernels.dateformats import DEFAULT_TAGGER_FORMATS
+from ..kernels.dateformats import DEFAULT_TAGGER_FORMATS, find_dates_with_format
 from ..kernels.dateparse import parse_date
-from .util import spread
+from .util import annotate
 
 DATE_STRUCT = StructType(
     [
@@ -48,26 +46,6 @@ DATE_STRUCT = StructType(
 )
 
 
-def _make_dates_udf(formats):
-    @F.pandas_udf(ArrayType(DATE_STRUCT))
-    def extract_dates(texts: pd.Series) -> pd.Series:
-        from ..kernels.dateformats import find_dates_with_format
-
-        out = []
-        for t in texts:
-            rows = []
-            for value, fmt in find_dates_with_format(t or "", formats):
-                d = parse_date(value, fmt)
-                rows.append(
-                    (value, fmt, d["year"], d["month"], d["day"],
-                     d["hour"], d["minute"], d["second"], d["timezone"])
-                )
-            out.append(rows)
-        return pd.Series(out)
-
-    return extract_dates
-
-
 def normalize_dates(
     df: DataFrame,
     text_col: str = "content",
@@ -79,9 +57,22 @@ def normalize_dates(
     canonical 'YYYY-MM-DD HH:MM:SS' string when year+month+day are all
     present (missing time parts default to 0, like a midnight-anchored
     DATETIME) and NULL otherwise."""
-    keep_cols = keep_cols if keep_cols is not None else [c for c in df.columns if c != text_col]
-    udf = _make_dates_udf(formats if formats is not None else DEFAULT_TAGGER_FORMATS)
-    exploded = spread(df).select(*keep_cols, F.inline(udf(F.col(text_col))))
+    formats = formats if formats is not None else DEFAULT_TAGGER_FORMATS
+
+    def make_rows():
+        def rows(t):
+            out = []
+            for value, fmt in find_dates_with_format(t, formats):
+                d = parse_date(value, fmt)
+                out.append(
+                    (value, fmt, d["year"], d["month"], d["day"],
+                     d["hour"], d["minute"], d["second"], d["timezone"])
+                )
+            return out
+
+        return rows
+
+    exploded = annotate(df, text_col, keep_cols, DATE_STRUCT, make_rows)
     ts = F.when(
         F.col("year").isNotNull() & F.col("month").isNotNull() & F.col("day").isNotNull(),
         F.format_string(

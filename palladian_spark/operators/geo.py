@@ -6,11 +6,8 @@ output so two engines can compare values exactly.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     IntegerType,
     LongType,
     StringType,
@@ -18,7 +15,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .util import spread
+from .util import ANNOTATION_STRUCT, annotate
 
 GEO_STRUCT = StructType(
     [
@@ -38,22 +35,16 @@ def tag_coordinates(
 ) -> DataFrame:
     """df -> one row per coordinate mention:
     (keep_cols..., start, end, value, lat_udeg, lng_udeg)."""
-    keep_cols = (
-        keep_cols if keep_cols is not None else [c for c in df.columns if c != text_col]
-    )
 
-    @F.pandas_udf(ArrayType(GEO_STRUCT))
-    def tag_series(texts: pd.Series) -> pd.Series:
+    def make_rows():
         from ..kernels.geo import coordinate_tag, to_microdegrees
 
-        return texts.map(
-            lambda t: [
-                (a.start, a.end, a.value, to_microdegrees(a.lat), to_microdegrees(a.lng))
-                for a in coordinate_tag(t or "")
-            ]
-        )
+        return lambda t: [
+            (a.start, a.end, a.value, to_microdegrees(a.lat), to_microdegrees(a.lng))
+            for a in coordinate_tag(t)
+        ]
 
-    return spread(df).select(*keep_cols, F.inline(tag_series(F.col(text_col))))
+    return annotate(df, text_col, keep_cols, GEO_STRUCT, make_rows)
 
 
 def tag_addresses(
@@ -64,18 +55,10 @@ def tag_addresses(
     """df -> one row per street / street-number annotation:
     (keep_cols..., start, end, value, tag). Kernel: kernels/geo.address_tag
     (reference extraction/location/AddressTagger.java, golden-pinned)."""
-    from .mentions import ANNOTATION_STRUCT
 
-    keep_cols = (
-        keep_cols if keep_cols is not None else [c for c in df.columns if c != text_col]
-    )
-
-    @F.pandas_udf(ArrayType(ANNOTATION_STRUCT))
-    def tag_series(texts: pd.Series) -> pd.Series:
+    def make_rows():
         from ..kernels.geo import address_tag
 
-        return texts.map(
-            lambda t: [(a.start, a.end, a.value, a.tag) for a in address_tag(t or "")]
-        )
+        return lambda t: [(a.start, a.end, a.value, a.tag) for a in address_tag(t)]
 
-    return spread(df).select(*keep_cols, F.inline(tag_series(F.col(text_col))))
+    return annotate(df, text_col, keep_cols, ANNOTATION_STRUCT, make_rows)

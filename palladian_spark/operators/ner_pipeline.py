@@ -21,8 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BooleanType,
-    IntegerType,
     StringType,
     StructField,
     StructType,
@@ -38,8 +36,7 @@ from ..kernels.classifier import (
 )
 from ..kernels.ner import NerModel, TaggingSettings, get_character_context, get_left_contexts
 from ..kernels.tagging import Annotation
-from .mentions import ANNOTATION_STRUCT
-from .util import spread
+from .util import ANNOTATION_STRUCT, annotate
 
 GOLD_SCHEMA = StructType(
     [
@@ -399,22 +396,16 @@ def tag_documents(
     executor via a Spark broadcast; all per-document logic stays in one
     Arrow batch pass (no shuffle until the caller aggregates).
     """
-    keep_cols = keep_cols if keep_cols is not None else [c for c in df.columns if c != text_col]
-    spark = df.sparkSession
-    model_bc = spark.sparkContext.broadcast(model)
+    model_bc = df.sparkSession.sparkContext.broadcast(model)
     settings = settings or TaggingSettings()
 
-    @F.pandas_udf(ArrayType(ANNOTATION_STRUCT))
-    def tag_series(texts: pd.Series) -> pd.Series:
+    def make_rows():
         m = model_bc.value
-        return texts.map(
-            lambda t: [
-                (a.start, a.end, a.value, a.tag)
-                for a in ner_kernels.tag_text(t or "", m, settings)
-            ]
-        )
+        return lambda t: [
+            (a.start, a.end, a.value, a.tag) for a in ner_kernels.tag_text(t, m, settings)
+        ]
 
-    return spread(df).select(*keep_cols, F.inline(tag_series(F.col(text_col))))
+    return annotate(df, text_col, keep_cols, ANNOTATION_STRUCT, make_rows)
 
 
 # ---------------------------------------------------------------------------

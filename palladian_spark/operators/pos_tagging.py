@@ -1,7 +1,7 @@
 """Distributed POS tagging: the PalladianPosTagger kernel applied per
 document via a broadcast model + one Arrow hop.
 
-Same Spark mapping as mention detection (operators/mentions.py): the
+Same Spark mapping as mention detection (the ``util.annotate`` step): the
 trained PosModel (a few dictionaries) ships once per executor as a
 broadcast variable; each Arrow batch runs the golden-tested kernel
 (kernels/pos.py, parity-gated against the compiled reference tagger) and
@@ -10,13 +10,10 @@ returns annotation structs exploded JVM-side.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..kernels.pos import PosModel
-from .mentions import ANNOTATION_STRUCT
-from .util import spread
+from .util import ANNOTATION_STRUCT, annotate
 
 
 def pos_tag_documents(
@@ -25,16 +22,9 @@ def pos_tag_documents(
     text_col: str = "text",
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
-    keep_cols = (
-        keep_cols if keep_cols is not None else [c for c in df.columns if c != text_col]
-    )
-    spark = df.sparkSession
-    model_bc = spark.sparkContext.broadcast(model)
+    model_bc = df.sparkSession.sparkContext.broadcast(model)
 
-    from pyspark.sql.types import ArrayType
-
-    @F.pandas_udf(ArrayType(ANNOTATION_STRUCT))
-    def tag_series(texts: pd.Series) -> pd.Series:
+    def make_rows():
         from ..kernels.pos import classify_token
         from ..kernels.text import iterate_tokens
 
@@ -56,11 +46,9 @@ def pos_tag_documents(
                     cache[token] = tag
             return tag
 
-        return texts.map(
-            lambda t: [
-                (start, start + len(value), value, tag_of(value))
-                for start, value in iterate_tokens(t or "")
-            ]
-        )
+        return lambda t: [
+            (start, start + len(value), value, tag_of(value))
+            for start, value in iterate_tokens(t)
+        ]
 
-    return spread(df).select(*keep_cols, F.inline(tag_series(F.col(text_col))))
+    return annotate(df, text_col, keep_cols, ANNOTATION_STRUCT, make_rows)

@@ -14,26 +14,11 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from ..kernels import tagging
 from ..kernels.rules import apply_rules, parse_rules
-from .util import spread
-
-TAGGED_STRUCT = StructType(
-    [
-        StructField("start", IntegerType()),
-        StructField("end", IntegerType()),
-        StructField("value", StringType()),
-        StructField("tag", StringType()),
-    ]
-)
+from .util import ANNOTATION_STRUCT, annotate, spread
 
 
 def apply_rule_engine(
@@ -51,30 +36,25 @@ def apply_rule_engine(
     one Arrow-batched pass with the dictionary + parsed rules shipped via
     broadcast — no shuffle until the caller aggregates.
     """
-    keep_cols = keep_cols if keep_cols is not None else [c for c in df.columns if c != text_col]
-    spark = df.sparkSession
-    dict_bc = spark.sparkContext.broadcast(dictionary)
-    rules_bc = spark.sparkContext.broadcast(rules_text)
+    sc = df.sparkSession.sparkContext
+    dict_bc = sc.broadcast(tuple(dictionary.items()))
+    rules_bc = sc.broadcast(rules_text)
 
-    @F.pandas_udf(ArrayType(TAGGED_STRUCT))
-    def tag_series(texts: pd.Series) -> pd.Series:
-        d = dict_bc.value
+    def make_rows():
+        pattern, lookup = tagging.dictionary_matcher(dict_bc.value, False)
         rules = parse_rules(rules_bc.value)
-        out = []
-        for t in texts:
-            t = t or ""
-            mentions = tagging.dictionary_tag(t, d, case_sensitive=False)
-            classified = apply_rules(t, mentions, rules)
-            out.append(
-                [
-                    (a.start, a.end, a.value, tag)
-                    for a, tag in classified
-                    if tag is not None
-                ]
-            )
-        return pd.Series(out)
 
-    return spread(df).select(*keep_cols, F.inline(tag_series(F.col(text_col))))
+        def rows(t):
+            mentions = tagging.dictionary_scan(t, pattern, lookup)
+            return [
+                (a.start, a.end, a.value, tag)
+                for a, tag in apply_rules(t, mentions, rules)
+                if tag is not None
+            ]
+
+        return rows
+
+    return annotate(df, text_col, keep_cols, ANNOTATION_STRUCT, make_rows)
 
 
 def classified_mention_counts(
@@ -265,14 +245,11 @@ def wiktionary_triples(
     (kernels/wiktionary.py) runs per page in one Arrow hop, emitting
     synonym/hypernym/hyponym/plural/word-type edges instead of DB rows.
     """
-    from pyspark.sql.types import ArrayType, StructField, StructType
-
     from ..kernels.wiktionary import (
         entry_triples,
         parse_page_english,
         parse_page_german,
     )
-    from .util import spread
 
     parse = parse_page_german if language.lower() in ("german", "de") else parse_page_english
     triple_t = StructType(

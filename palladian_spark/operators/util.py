@@ -1,10 +1,21 @@
-"""Shared physical-layout helpers for UDF-heavy operators."""
+"""Shared physical-layout helpers for UDF-heavy operators, and the one
+Spark step every text -> annotation-rows tagger runs through."""
 
 from __future__ import annotations
 
 import re as _re
+from typing import Callable
 
+import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 # 31-bit Mersenne prime: a*h'+b stays < 2^62 (no ANSI long overflow)
 MERSENNE = (1 << 31) - 1
@@ -115,3 +126,51 @@ def spread(df: DataFrame) -> DataFrame:
     if _already_spread(df, target) or df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+ANNOTATION_STRUCT = StructType(
+    [
+        StructField("start", IntegerType()),
+        StructField("end", IntegerType()),
+        StructField("value", StringType()),
+        StructField("tag", StringType()),
+    ]
+)
+
+
+def annotate(
+    df: DataFrame,
+    text_col: str,
+    keep_cols: list[str] | None,
+    struct: StructType,
+    make_rows: Callable[[], Callable[[str], list[tuple]]],
+) -> DataFrame:
+    """df -> one row per annotation a tagger finds in ``text_col``:
+    (keep_cols..., struct's fields); keep_cols defaults to every other
+    column.
+
+    ``make_rows()`` runs once per Arrow batch on the executor (read a
+    broadcast, compile a matcher, parse rules) and returns the function
+    from one text to that text's row tuples; a null text is read as "".
+    Everything else is this step: one pandas UDF over ``spread(df)``,
+    flattened by an inline generator over the UDF call,
+    ``F.inline(udf(col))``.
+
+    Feed a UDF's generator this way, never through an aliased column
+    (``select(udf(c).alias("a"))`` then ``explode("a")``). Catalyst's
+    InferFiltersFromGenerate infers ``Filter size(a) > 0`` only when the
+    generator's input is a plain column; predicate pushdown then moves
+    that filter, UDF included, below the ``spread()`` repartition, and the
+    UDF runs twice per row. With the call inline no filter is inferred,
+    and the generator itself drops the rows whose array is empty
+    (tests/test_udf_plans.py pins this for every caller).
+    """
+    if keep_cols is None:
+        keep_cols = [c for c in df.columns if c != text_col]
+
+    @F.pandas_udf(ArrayType(struct))
+    def annotations(texts: pd.Series) -> pd.Series:
+        rows = make_rows()
+        return texts.map(lambda t: rows(t or ""))
+
+    return spread(df).select(*keep_cols, F.inline(annotations(F.col(text_col))))

@@ -102,7 +102,7 @@ def winnow_fingerprints(
 ) -> DataFrame:
     """(repo, path, ..., content) -> distinct (f, fp) fingerprint rows.
     One Arrow hop over the content scan, exploded inline (see
-    operators/mentions.py). winnow_select
+    operators/util.annotate). winnow_select
     already returns a unique list per document, so the trailing
     distinct() is a no-op on well-formed corpora; it stays as the
     dedup guard for duplicated (repo, path) input rows, matching the

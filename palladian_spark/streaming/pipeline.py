@@ -62,10 +62,14 @@ def stream_triples(
     for the mention UDF, JVM-side lineage/explode/pair logic.
 
     With ``gazetteer`` the mention stage is the DictionaryTagger
-    (broadcast alternation) instead of the StringTagger candidate regex —
-    the contract query uses this so the compacted log has an independent
-    SQL oracle (gazetteer matching is SQL-expressible; the candidate
-    lookaround regex is not).
+    (``dictionary_mentions``, broadcast alternation) instead of the
+    StringTagger candidate regex — the contract query uses this so the
+    compacted log has an independent SQL oracle (gazetteer matching is
+    SQL-expressible; the candidate lookaround regex is not). That
+    operator resolves tags through the kernel's ``tagging.dictionary_scan``
+    (.lower() key, .casefold() key, then the first entry's tag), so a
+    case-insensitive match whose ``.lower()`` is no gazetteer key
+    (``ſound``, ``İstanbul``) cannot fail a micro-batch with a KeyError.
 
     Edges assemble through ``triples.mention_triples``, as in the batch
     ``extract_triples``; ``foreachBatch`` hands this function plain batch

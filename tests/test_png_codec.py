@@ -66,6 +66,7 @@ def _encode_with_filter(img: np.ndarray, ftype: int) -> bytes:
     )
 
 
+@pytest.mark.filterwarnings("error::RuntimeWarning")
 @pytest.mark.parametrize("ftype", [0, 1, 2, 3, 4], ids=["none", "sub", "up", "avg", "paeth"])
 def test_all_filter_types(ftype):
     rng = np.random.default_rng(ftype)

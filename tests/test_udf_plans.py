@@ -12,7 +12,7 @@ twice over the same rows:
   in the operators of _READ_TWICE.
 Nor may any plan hold the `size(pythonUDF..) > 0` filter that
 InferFiltersFromGenerate infers for a generator over an aliased UDF
-column (see operators/mentions.py).
+column (see operators/util.annotate).
 
 The second half checks the inline generator's row semantics at each
 tagger: null, empty and no-match texts give no rows, and a matching text
@@ -21,9 +21,11 @@ gives exactly the kernel's annotations.
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 from collections import Counter
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -142,18 +144,19 @@ def pos_model():
 
 
 _RULES = "to |\tCLASSIFY_THIS\tPLACE"
+_GAZETTEER = {"berlin": "LOC", "sound": "X", "istanbul": "LOC"}
 _KW = dict(text_col="text", keep_cols=["doc_id"])
 
 # name -> op(docs, pos_model): the per-row tagger operators
 _TAGGERS = {
     "detect_mentions": lambda d, _: mentions.detect_mentions(d, **_KW),
-    "dictionary_mentions": lambda d, _: mentions.dictionary_mentions(d, {"berlin": "LOC"}, **_KW),
+    "dictionary_mentions": lambda d, _: mentions.dictionary_mentions(d, _GAZETTEER, **_KW),
     "tag_coordinates": lambda d, _: geo.tag_coordinates(d, **_KW),
     "tag_addresses": lambda d, _: geo.tag_addresses(d, **_KW),
     "normalize_dates": lambda d, _: dates.normalize_dates(d, **_KW),
     "pos_tag_documents": lambda d, m: pos_tagging.pos_tag_documents(d, m, **_KW),
     "tag_documents": lambda d, _: ner_pipeline.tag_documents(d, NerModel(), **_KW),
-    "apply_rule_engine": lambda d, _: relations.apply_rule_engine(d, {"berlin": "LOC"}, _RULES, **_KW),
+    "apply_rule_engine": lambda d, _: relations.apply_rule_engine(d, _GAZETTEER, _RULES, **_KW),
 }
 
 
@@ -230,7 +233,7 @@ def _kernel_rows(name, text, pos_model):
         return [(a.start, a.end, a.value, a.tag) for a in tagging.string_tag(text)]
     if name == "dictionary_mentions":
         return [(a.start, a.end, a.value, a.tag)
-                for a in tagging.dictionary_tag(text, {"berlin": "LOC"}, case_sensitive=False)]
+                for a in tagging.dictionary_tag(text, _GAZETTEER, case_sensitive=False)]
     if name == "tag_coordinates":
         return [(a.start, a.end, a.value, to_microdegrees(a.lat), to_microdegrees(a.lng))
                 for a in coordinate_tag(text)]
@@ -250,7 +253,7 @@ def _kernel_rows(name, text, pos_model):
         return [(a.start, a.end, a.value, a.tag)
                 for a in ner.tag_text(text, NerModel(), ner.TaggingSettings())]
     if name == "apply_rule_engine":
-        found = tagging.dictionary_tag(text, {"berlin": "LOC"}, case_sensitive=False)
+        found = tagging.dictionary_tag(text, _GAZETTEER, case_sensitive=False)
         return [(a.start, a.end, a.value, tag)
                 for a, tag in apply_rules(text, found, parse_rules(_RULES))
                 if tag is not None]
@@ -258,6 +261,8 @@ def _kernel_rows(name, text, pos_model):
 
 
 _MATCH = {
+    # case-fold matches whose .lower() is not a gazetteer key
+    "dictionary_mentions": "Mary Smith heard the ſound of İstanbul in Berlin.",
     "tag_coordinates": "The summit at 40.446195, -79.948862 was reached.",
     "tag_addresses": "She lives at 123 Main Street now.",
     "normalize_dates": "Released on 2023-05-17 and again on May 3, 2024.",
@@ -280,3 +285,17 @@ def test_tagger_rows_match_kernel(spark, pos_model, name):
     assert {r["doc_id"] for r in got} == {4}
     ncols = len(want[0])
     assert sorted(tuple(r)[1 : 1 + ncols] for r in got) == sorted(want)
+
+
+def test_every_annotate_caller_is_a_covered_tagger():
+    """The operators that build rows through util.annotate are exactly
+    _TAGGERS, so a new tagger gets the plan and null-row checks above."""
+    callers = set()
+    for path in Path(mentions.__file__).parent.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.FunctionDef) and any(
+                isinstance(c, ast.Call) and ast.unparse(c.func).split(".")[-1] == "annotate"
+                for c in ast.walk(node)
+            ):
+                callers.add(node.name)
+    assert callers == set(_TAGGERS)
