@@ -53,6 +53,7 @@ from palladian_spark.operators.textstats import (
     LANG_MARKERS, fingerprints, language_id, length_histogram, length_histogram_sql,
     lm_quality, lm_quality_sql, quality_counts, structure_stats, token_counts,
 )
+from palladian_spark.operators.util import member_pairs
 
 from contract import query
 from contract.common import (
@@ -708,25 +709,12 @@ def doc_noun_phrases(spark, sf_dir):
             group by 1, 2
         """)
 def doc_cooccur(spark, sf_dir):
-    # localCheckpoint: both sides of the pair self-join consume the
-    # mention UDF scan — lineage is cut so the Arrow pass runs once,
-    # and blocks are GC-reclaimed (persist would leak in CacheManager
-    # until an unpersist this lazy API cannot place)
-    m = (
-        _doc_mentions(spark, sf_dir)
-        .select("doc_id", "value")
-        .dropDuplicates()
-        .localCheckpoint(eager=False)
-    )
-    a = m.alias("a")
-    b = m.alias("b")
+    # each document's distinct values paired once (util.member_pairs),
+    # so the mention UDF scan is read once
+    m = _doc_mentions(spark, sf_dir).select("doc_id", "value")
     return (
-        a.join(
-            b,
-            (F.col("a.doc_id") == F.col("b.doc_id"))
-            & (F.col("a.value") < F.col("b.value")),
-        )
-        .groupBy(F.col("a.value").alias("subj"), F.col("b.value").alias("obj"))
+        member_pairs(m, ["doc_id"], "value")
+        .groupBy(F.col("a").alias("subj"), F.col("b").alias("obj"))
         .agg(F.count("*").alias("support"))
     )
 

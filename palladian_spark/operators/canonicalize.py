@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 
 from ..kernels.similarity import jaro_winkler_similarity
-from .util import band_hashes_for_shingles, banding_params, spread
+from .util import band_hashes_for_shingles, banding_params, member_pairs, spread
 
 # blocking: 16 minhash permutations in bands of 4 over char 3-shingles;
 # a block larger than MAX_BUCKET is dropped before any pair is formed
@@ -83,47 +83,26 @@ _jw_udf = F.pandas_udf(_jw, DoubleType()).asNondeterministic()
 def candidate_pairs(values: DataFrame, value_col: str = "value") -> DataFrame:
     """Blocked candidate pairs (left < right), deduplicated: every pair of
     values sharing a _block_keys key in a block of at most MAX_BUCKET
-    values. The cap drops a skewed block (e.g. a hub 2-char prefix) before
-    the self-join, so the join never turns quadratic.
+    values (util.member_pairs). The cap drops a skewed block (e.g. a hub
+    2-char prefix) before any pair is formed, so pairing never turns
+    quadratic.
 
     The result is a lazy local checkpoint: whatever filters the caller
     adds run over the distinct pairs, not over the raw collisions.
     """
     values = spread(values)  # single-split value tables: one-core key UDF
-    # Materialized once before the self-join, which reads the keys twice:
-    # without the cut the upstream plan would re-execute for each side
     bands = values.select(
         value_col,
         F.posexplode(_block_keys_udf(F.col(value_col))).alias("band_id", "band_hash"),
-    ).localCheckpoint()
-    # bucket-size guard: shuffles on the same (band_id, band_hash) key as
-    # the self-join below, so the extra aggregate reuses the partitioning
-    sizes = bands.groupBy("band_id", "band_hash").agg(F.count("*").alias("_bn"))
-    bands = (
-        bands.join(
-            sizes.where((F.col("_bn") >= 2) & (F.col("_bn") <= MAX_BUCKET)),
-            ["band_id", "band_hash"],
-        )
-        .drop("_bn")
     )
-    left = bands.alias("l")
-    right = bands.alias("r")
     pairs = (
-        left.join(
-            right,
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col(f"l.{value_col}") < F.col(f"r.{value_col}")),
-        )
-        .select(
-            F.col(f"l.{value_col}").alias("left_value"),
-            F.col(f"r.{value_col}").alias("right_value"),
-        )
+        member_pairs(bands, ["band_id", "band_hash"], value_col, MAX_BUCKET)
+        .select(F.col("a").alias("left_value"), F.col("b").alias("right_value"))
         .dropDuplicates(["left_value", "right_value"])
     )
     # plan barrier: score_pairs' filters name only the dedup keys, so
     # Catalyst would push them (Jaro-Winkler UDF included) below the
-    # dedup into the self-join and score every raw band collision
+    # dedup into the pairing step and score every raw band collision
     return pairs.localCheckpoint(eager=False)
 
 
@@ -349,7 +328,7 @@ def canonicalize_values(
         freq = values.groupBy(value_col).agg(F.count("*").alias("freq"))
     # one pass over the (possibly expensive) upstream: the gate's count
     # materializes the lazy cut in one fully parallel job, and the collect
-    # or every distributed branch (LSH keys, self-join sides, final joins)
+    # or every distributed branch (LSH keys, pairing, final joins)
     # then reads the cut rows instead of re-running the mention scan.
     # Count, not a limit(k).collect() probe: CollectLimit escalates over
     # 1, 4, 16, ... partitions, each job recomputing the upstream

@@ -37,6 +37,8 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .util import member_pairs
+
 CODE_LANGS = ["python", "java", "go", "javascript", "rust", "c"]
 
 EXTENSIONS = {
@@ -739,11 +741,12 @@ def repo_shared_deps(
     n_shared) counts the distinct modules both repositories import.
 
     Scale: the input is the distinct (repo, module) dependency set (tiny
-    versus content). The self-join on module is quadratic in
-    repos-per-module, so ubiquitous modules (stdlib — imported by every
-    repo, which would make the join O(n_repos²)) are EXPLICITLY dropped
-    above ``max_fanout`` importing repos; the cap is the operator's
-    documented contract, mirrored in the oracle, not a silent truncation.
+    versus content). Pairing the repos of a module (util.member_pairs)
+    is quadratic in repos-per-module, so ubiquitous modules (stdlib —
+    imported by every repo, which would make it O(n_repos²)) are
+    EXPLICITLY dropped above ``max_fanout`` importing repos; the cap is
+    the operator's documented contract, mirrored in the oracle, not a
+    silent truncation.
     A shared-nothing alternative at extreme scale is min-hashing the
     dependency sets (operators/dedup.py machinery) — this exact variant
     is the oracle-able baseline.
@@ -752,24 +755,10 @@ def repo_shared_deps(
         extract_code_entities(source)
         .where(F.col("pred") == "imports")
         .select("repo", F.col("obj").alias("module"))
-        .distinct()
-        .localCheckpoint(eager=False)  # both sides of the self-join
     )
-    keep = (
-        deps.groupBy("module")
-        .agg(F.count(F.lit(1)).alias("n_repos"))
-        .where(F.col("n_repos") <= max_fanout)
-        .select("module")
-    )
-    d = deps.join(keep, "module")
-    a, b = d.alias("a"), d.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.module") == F.col("b.module"))
-            & (F.col("a.repo") < F.col("b.repo")),
-        )
-        .groupBy(F.col("a.repo").alias("repo_a"), F.col("b.repo").alias("repo_b"))
+        member_pairs(deps, ["module"], "repo", max_fanout)
+        .groupBy(F.col("a").alias("repo_a"), F.col("b").alias("repo_b"))
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
 

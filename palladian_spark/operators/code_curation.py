@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from palladian_spark.operators.code import _sql_str
+from palladian_spark.operators.util import member_pairs
 
 # ---------------------------------------------------------------------------
 # Type-2 clone normalization
@@ -591,10 +592,11 @@ def fork_pairs(
 
     Scale shape: (repo, sha) distinct is one aggregate with map-side
     combine (mega-duplicate blobs collapse before the shuffle); the
-    pair join keys on sha, with blobs appearing in > max_repos_per_blob
-    repos dropped FIRST (an oracle-mirrored parameter, not a silent
-    cap) — a vendored/empty file shared by a million repos would
-    otherwise fan out quadratically, and carries no fork signal.
+    pairing keys on sha (util.member_pairs), with blobs appearing in
+    > max_repos_per_blob repos dropped FIRST (an oracle-mirrored
+    parameter, not a silent cap) — a vendored/empty file shared by a
+    million repos would otherwise fan out quadratically, and carries no
+    fork signal.
     Ratio denominators use the UNCAPPED per-repo blob counts, so the
     cap can only lose pairs whose evidence is boilerplate blobs.
 
@@ -608,23 +610,9 @@ def fork_pairs(
         .distinct()
     )
     sizes = h.groupBy("repo").agg(F.count(F.lit(1)).alias("n_blobs"))
-    degree_ok = (
-        h.groupBy("sha")
-        .agg(F.count(F.lit(1)).alias("n_repos"))
-        .where(F.col("n_repos") <= max_repos_per_blob)
-        .select("sha")
-    )
-    hh = h.join(degree_ok, "sha")
     shared = (
-        hh.alias("a")
-        .join(
-            hh.alias("b"),
-            (F.col("a.sha") == F.col("b.sha"))
-            & (F.col("a.repo") < F.col("b.repo")),
-        )
-        .groupBy(
-            F.col("a.repo").alias("repo_a"), F.col("b.repo").alias("repo_b")
-        )
+        member_pairs(h, ["sha"], "repo", max_repos_per_blob)
+        .groupBy(F.col("a").alias("repo_a"), F.col("b").alias("repo_b"))
         .agg(F.count(F.lit(1)).alias("shared_blobs"))
     )
     sa = sizes.select(
@@ -706,9 +694,10 @@ def near_clone_pairs(
     and |B| >= o), so if a file's first ``n - ceil(t·n) + 1`` tokens
     under a global rarity order share nothing with the other file's
     prefix, the pair cannot qualify. Each file therefore indexes only
-    its rarest few tokens; the candidate join hits small blocks by
-    construction (rare tokens have small document frequency), while
-    plain token blocking would pay |block|^2 on boilerplate tokens.
+    its rarest few tokens; the candidate pairing (util.member_pairs)
+    hits small blocks by construction (rare tokens have small document
+    frequency), while plain token blocking would pay |block|^2 on
+    boilerplate tokens.
     ceil(t·n) is computed in pure integer arithmetic ((t1000·n + 999)
     div 1000) — a float 0.6·n would round differently per engine.
     Verification touches candidates only: one array_intersect over two
@@ -751,18 +740,8 @@ def near_clone_pairs(
         .select("lang", "tok", "file")
     )
     cand = (
-        pref.alias("a")
-        .join(
-            pref.alias("b"),
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.tok") == F.col("b.tok"))
-            & (F.col("a.file") < F.col("b.file")),
-        )
-        .select(
-            F.col("a.lang").alias("lang"),
-            F.col("a.file").alias("file_a"),
-            F.col("b.file").alias("file_b"),
-        )
+        member_pairs(pref, ["lang", "tok"], "file")
+        .select("lang", F.col("a").alias("file_a"), F.col("b").alias("file_b"))
         .distinct()
     )
     fa = files.select(

@@ -10,11 +10,12 @@ Term matching is SUBSTRING containment, faithful to the reference's
 String.contains / regex — not word-boundary gazetteer matching (that is
 operators/mentions.dictionary_mentions).
 
-Scale notes: document and sentence scopes are presence-table self-joins
-(one scan + one pair-key shuffle, term list broadcast as literal
-predicates). The window scope compiles |terms|^2 pair regexes into one
-projection — right for the reference's use case (a handful of candidate
-relation pairs), wrong for 10^5-term gazetteers; use sentence scope there.
+Scale notes: document and sentence scopes pair each unit's present terms
+(util.member_pairs: one scan + one unit-key shuffle, term list broadcast
+as literal predicates). The window scope compiles |terms|^2 pair regexes
+into one projection — right for the reference's use case (a handful of
+candidate relation pairs), wrong for 10^5-term gazetteers; use sentence
+scope there.
 """
 
 from __future__ import annotations
@@ -24,6 +25,8 @@ import re as _re
 import pandas as pd  # module-level: pandas-UDF string hints resolve here
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .util import member_pairs, spread
 
 DOCUMENT = "document"
 SENTENCE = "sentence"
@@ -37,14 +40,7 @@ def _presence(
 
     One pass over the units: the term list explodes as a literal array and
     filters JVM-side — a per-term union of filters would replay the whole
-    upstream subtree (including any sentence-explode UDF) once per term
-    per consumer. localCheckpoint (not persist) materializes it for the
-    two self-join sides: lineage is cut so the UDF subtree runs once, and
-    the blocks are reclaimed by the ContextCleaner when the checkpointed
-    RDD is garbage-collected — no unpersist bookkeeping leaks into callers
-    of this lazy API. (Cluster trade-off documented at the minhash cut in
-    operators/dedup.py: truncated lineage means executor loss fails the
-    job instead of recomputing; production stage boundaries use StageStore.)
+    upstream subtree (including any sentence-explode UDF) once per term.
     """
     return (
         unit_df.select(
@@ -54,21 +50,16 @@ def _presence(
         )
         .where(F.col(text_col).contains(F.col("term")))
         .select(*unit_cols, "term")
-        .localCheckpoint(eager=False)
     )
 
 
 def _pair_counts(presence: DataFrame, unit_cols: list[str]) -> DataFrame:
-    a = presence.alias("a")
-    b = presence.alias("b")
-    cond = F.col("a.term") < F.col("b.term")
-    for c in unit_cols:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
+    """(term_a, term_b, n): the units holding both terms, term_a < term_b;
+    each unit's terms are paired by util.member_pairs, so the presence
+    rows (and the sentence UDF under them) are read once."""
     return (
-        a.join(b, cond)
-        .groupBy(
-            F.col("a.term").alias("term_a"), F.col("b.term").alias("term_b")
-        )
+        member_pairs(presence, unit_cols, "term")
+        .groupBy(F.col("a").alias("term_a"), F.col("b").alias("term_b"))
         .agg(F.count("*").alias("n").cast("long").alias("n"))
     )
 
@@ -90,8 +81,6 @@ def scoped_cooccurrences(
     ``a.{0,window}b`` plus (for distinct terms) ``b.{0,window}a`` regex
     matches (:135-152).
     """
-    from .util import spread
-
     text = F.lower(F.col(text_col)) if case_insensitive else F.col(text_col)
     terms = sorted({t.lower() for t in terms} if case_insensitive else set(terms))
     # spread: a single-split documents table would run the contains-filter /

@@ -199,28 +199,26 @@ def benchmark_overlap(
     containment of the page's offending region; per-train-doc
     normalization also keeps the denominator local.
     """
-    from palladian_spark.operators.dedup import _shingles
+    from palladian_spark.operators.dedup import _sized_shingles
 
     shingled = spread(docs).select(
-        F.col("doc_id").alias("doc"), F.explode(_shingles("text", n)).alias("shingle")
+        F.col("doc_id").alias("doc"), F.inline(_sized_shingles("text", n))
     )
     bench = shingled.where(F.col("doc") % bench_mod == 0).select(
         F.col("doc").alias("bench_doc"), "shingle"
     )
+    # each train row carries its doc's shingle-set size: one read, no
+    # size aggregate joined back
     train = shingled.where(F.col("doc") % bench_mod != 0).select(
-        F.col("doc").alias("doc_id"), "shingle"
-    )
-    sizes = train.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_shingles")
+        F.col("doc").alias("doc_id"), "shingle", "n_shingles"
     )
     inter = (
         train.join(F.broadcast(bench), "shingle")
-        .groupBy("doc_id", "bench_doc")
+        .groupBy("doc_id", "bench_doc", "n_shingles")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
     return (
-        inter.join(sizes, "doc_id")
-        .where(F.col("inter") * 1000 >= F.col("n_shingles") * threshold_1000)
+        inter.where(F.col("inter") * 1000 >= F.col("n_shingles") * threshold_1000)
         .select(
             "doc_id",
             "bench_doc",

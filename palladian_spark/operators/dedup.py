@@ -2,10 +2,14 @@
 
 Scale notes: every variant avoids O(n²) — exact dedup is one hash
 aggregate; near-dup variants bound the pair space by blocking (LSH bands /
-shared shingles) before any pairwise math. Hashing, voting and joins are
-built-in expressions (xxhash64, md5, array ops). Python runs per row in
-two Arrow-batched pandas UDFs: shingle assembly (_make_shingle_udf) and
-minhash banding (minhash_lsh_pairs).
+shared shingles / simhash bands) before any pairwise math. Each block is
+paired by util.member_pairs: one aggregate collects a block's members and
+pairs them inside it, so the blocked rows are read once, with no self-join
+and no cut feeding its two sides; a member may carry its payload (shingle-set
+size, signature) so no size aggregate is joined back. Hashing, voting and
+joins are built-in expressions (xxhash64, md5, array ops). Python runs per
+row in two Arrow-batched pandas UDFs: shingle assembly (_make_shingle_udf)
+and minhash banding (minhash_lsh_pairs).
 """
 
 from __future__ import annotations
@@ -15,7 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .util import spread
+from .util import member_pairs, spread
 
 
 def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -46,7 +50,8 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 
 
 def _make_shingle_udf(n: int):
-    """words -> distinct word n-gram shingles, Arrow-batched.
+    """words -> distinct word n-gram shingles, each with the size of its
+    document's shingle set (n_shingles), Arrow-batched.
 
     The previous formulation was a Catalyst ``transform(sequence(...),
     i -> concat_ws(' ', slice(...)))`` — HOF lambda bodies are interpreted
@@ -55,67 +60,64 @@ def _make_shingle_udf(n: int):
     Arrow batch. dict.fromkeys preserves first-occurrence order exactly
     like array_distinct did, and a doc with <= n words has no shingles
     (the size > n semantics both engines pin)."""
-    from pyspark.sql.types import ArrayType, StringType
+    from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
-    @F.pandas_udf(ArrayType(StringType()))
+    sized = StructType(
+        [StructField("shingle", StringType()), StructField("n_shingles", LongType())]
+    )
+
+    @F.pandas_udf(ArrayType(sized))
     def _shingles(words: pd.Series) -> pd.Series:
         out = []
         for ws in words:
             ws = list(ws) if ws is not None else []
-            if len(ws) > n:
-                out.append(
-                    list(dict.fromkeys(
-                        " ".join(ws[i : i + n]) for i in range(len(ws) - n)
-                    ))
-                )
-            else:
-                out.append([])
+            sh = dict.fromkeys(" ".join(ws[i : i + n]) for i in range(len(ws) - n))
+            out.append([(s, len(sh)) for s in sh])
         return pd.Series(out)
 
     return _shingles
 
 
-def _shingles(text_col: str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a text column (regex JVM-side,
-    shingle assembly in one Arrow hop — see _make_shingle_udf). Callers
-    feed it straight to a generator over a spread() frame: a small parquet
-    arrives as ONE split, which would run the regex + shingle stage (and
-    every Arrow stage downstream of it) on a single core; at real table
-    sizes the split count already exceeds parallelism and the repartition
-    never fires."""
+def _sized_shingles(text_col: str, n: int = 3) -> Column:
+    """(shingle, n_shingles) structs of a text column's distinct word
+    n-gram shingles (regex JVM-side, shingle assembly in one Arrow hop —
+    see _make_shingle_udf): ``F.inline`` it to get one row per shingle
+    that already knows its set's size, with no size aggregate joined
+    back. Callers feed it straight to a generator over a spread() frame:
+    a small parquet arrives as ONE split, which would run the regex +
+    shingle stage (and every Arrow stage downstream of it) on a single
+    core; at real table sizes the split count already exceeds
+    parallelism and the repartition never fires."""
     words = F.expr(f"regexp_extract_all(lower({text_col}), '[a-z0-9]+', 0)")
     return _make_shingle_udf(n)(words)
+
+
+def _shingles(text_col: str, n: int = 3) -> Column:
+    """The distinct word n-gram shingles of a text column, as an array
+    (see _sized_shingles)."""
+    return _sized_shingles(text_col, n)["shingle"]
 
 
 def _shingle_overlap(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     """(doc_a, doc_b, shared, n_a, n_b) for every doc pair (doc_a < doc_b)
     sharing at least one word n-gram shingle: shared = |A ∩ B|, n_a and
     n_b the shingle-set sizes. Blocking = shared shingle, so only docs
-    sharing >=1 shingle are compared — a join + two aggregates, fully
-    relational (DuckDB-verifiable)."""
+    sharing >=1 shingle are compared: util.member_pairs per shingle, the
+    sizes riding on each row, then one pair aggregate — fully relational
+    (DuckDB-verifiable)."""
     shingled = spread(df).select(
-        F.col(id_col).alias("doc"), F.explode(_shingles(text_col, n)).alias("shingle")
+        F.col(id_col).alias("doc"), F.inline(_sized_shingles(text_col, n))
     )
-    sizes = shingled.groupBy("doc").agg(F.count("*").alias("n_shingles"))
-    a = shingled.alias("a")
-    b = shingled.alias("b")
-    shared = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .agg(F.count("*").alias("shared"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
     return (
-        shared.join(sa, F.col("doc_a") == F.col("sa.doc"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc"))
-        .select(
-            "doc_a",
-            "doc_b",
-            "shared",
-            F.col("sa.n_shingles").alias("n_a"),
-            F.col("sb.n_shingles").alias("n_b"),
+        member_pairs(shingled, ["shingle"], ["doc", "n_shingles"])
+        .groupBy(
+            F.col("a.doc").alias("doc_a"),
+            F.col("b.doc").alias("doc_b"),
+            F.col("a.n_shingles").alias("n_a"),
+            F.col("b.n_shingles").alias("n_b"),
         )
+        .agg(F.count("*").alias("shared"))
+        .select("doc_a", "doc_b", "shared", "n_a", "n_b")
     )
 
 
@@ -201,39 +203,31 @@ def minhash_lsh_pairs(
             ]
         )
 
-    # the size filter sits above the cut: below it, Catalyst would push it
-    # through the projection and run the shingle UDF twice
-    sigs = (
-        spread(df)
-        .select(F.col(id_col).alias("doc"), _shingles(text_col, shingle_n).alias("_shingles"))
-        .localCheckpoint(eager=False)
-        .where(F.size("_shingles") > 0)
-    )
-    # localCheckpoint: the bucket self-join consumes bands on both sides —
-    # without it the band UDF would run twice over every document; blocks
-    # are GC-reclaimed, unlike persist which leaks in a long-lived session.
+    # localCheckpoint: the bands, the sizes and the verify tokens all read
+    # the shingles; without the cut the shingle UDF would run three times.
+    # The size filter sits above the cut: below it, Catalyst would push it
+    # through the projection and run the shingle UDF twice.
     # Trade-off (applies to every localCheckpoint cut in this package):
     # lineage is truncated, so on a multi-executor cluster a lost executor
     # makes the block unrecoverable (fails the job) where persist would
     # recompute. For production stage boundaries use StageStore
     # (sources/checkpoint.py) — reliable parquet materialization with
     # resume; the local cuts here only dedupe work INSIDE one job
+    sigs = (
+        spread(df)
+        .select(F.col(id_col).alias("doc"), _shingles(text_col, shingle_n).alias("_shingles"))
+        .localCheckpoint(eager=False)
+        .where(F.size("_shingles") > 0)
+    )
     bands = sigs.select(
         "doc", F.posexplode(_doc_bands(F.col("_shingles"))).alias("band_id", "band_hash")
-    ).localCheckpoint(eager=False)
-
+    )
     cand = (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.band_id") == F.col("y.band_id"))
-            & (F.col("x.band_hash") == F.col("y.band_hash"))
-            & (F.col("x.doc") < F.col("y.doc")),
-        )
-        .select(F.col("x.doc").alias("doc_a"), F.col("y.doc").alias("doc_b"))
+        member_pairs(bands, ["band_id", "band_hash"], "doc")
+        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
         .dropDuplicates()
         # candidates are referenced 3x below (doc set + both join sides);
-        # materialize once instead of re-running the bucket self-join
+        # materialize once instead of re-running the bucket pairing
         .localCheckpoint()
     )
     sizes = sigs.select("doc", F.size("_shingles").alias("n_sh"))
@@ -403,7 +397,6 @@ def simhash_pairs_wide(
         raise ValueError("band width must divide bits_per_half")
     width = bits_per_half // per_half
     mask = (1 << width) - 1
-    signatures = signatures.localCheckpoint(eager=False)  # both join sides
     band_vals = []
     for col in (lo_col, hi_col):
         for b in range(per_half):
@@ -414,21 +407,14 @@ def simhash_pairs_wide(
         F.col(hi_col).alias("shi"),
         F.posexplode(F.array(*band_vals)).alias("band_id", "band_val"),
     )
-    x = banded.alias("x")
-    y = banded.alias("y")
     return (
-        x.join(
-            y,
-            (F.col("x.band_id") == F.col("y.band_id"))
-            & (F.col("x.band_val") == F.col("y.band_val"))
-            & (F.col("x.doc") < F.col("y.doc")),
-        )
+        member_pairs(banded, ["band_id", "band_val"], ["doc", "slo", "shi"])
         .select(
-            F.col("x.doc").alias("doc_a"),
-            F.col("y.doc").alias("doc_b"),
+            F.col("a.doc").alias("doc_a"),
+            F.col("b.doc").alias("doc_b"),
             (
-                F.bit_count(F.expr("x.slo ^ y.slo"))
-                + F.bit_count(F.expr("x.shi ^ y.shi"))
+                F.bit_count(F.col("a.slo").bitwiseXOR(F.col("b.slo")))
+                + F.bit_count(F.col("a.shi").bitwiseXOR(F.col("b.shi")))
             ).cast("int").alias("hamming"),
         )
         # filter BEFORE the dedup shuffle: hamming is determined by the
@@ -455,14 +441,11 @@ def simhash_pairs(
     one band — the candidate equi-join on (band_id, band_value) has recall
     1.0, no all-pairs comparison anywhere. Candidates then verify with
     ``bit_count(xor) <= max_hamming``. Pure JVM expressions end to end;
-    the only shuffles are the band-key self-join and the pair dedup.
+    the only shuffles are the band-key grouping (util.member_pairs, the
+    signature riding on each member) and the pair dedup.
     """
     n_bands = max_hamming + 1
     width = bits // n_bands
-    # both sides of the band self-join consume the signatures; without a
-    # materialization the upstream token-hash aggregation runs twice
-    # (localCheckpoint: GC-reclaimed, no unpersist bookkeeping)
-    signatures = signatures.localCheckpoint(eager=False)
     band_vals = []
     for b in range(n_bands):
         lo = b * width
@@ -476,19 +459,14 @@ def simhash_pairs(
         F.col(sig_col).alias("sig"),
         F.posexplode(F.array(*band_vals)).alias("band_id", "band_val"),
     )
-    x = banded.alias("x")
-    y = banded.alias("y")
     return (
-        x.join(
-            y,
-            (F.col("x.band_id") == F.col("y.band_id"))
-            & (F.col("x.band_val") == F.col("y.band_val"))
-            & (F.col("x.doc") < F.col("y.doc")),
-        )
+        member_pairs(banded, ["band_id", "band_val"], ["doc", "sig"])
         .select(
-            F.col("x.doc").alias("doc_a"),
-            F.col("y.doc").alias("doc_b"),
-            F.bit_count(F.expr("x.sig ^ y.sig")).cast("int").alias("hamming"),
+            F.col("a.doc").alias("doc_a"),
+            F.col("b.doc").alias("doc_b"),
+            F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig")))
+            .cast("int")
+            .alias("hamming"),
         )
         # same ordering rationale as simhash_pairs_wide: filter first,
         # dedup the (much smaller) true-pair set

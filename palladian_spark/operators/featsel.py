@@ -50,11 +50,10 @@ def chi_squared_scores(
     division by the category count; the feature score sums those.
     Output: (feature, n_values, chi2_avg_sum_micro)."""
     n_total = df.count()
-    melted = melt_features(df, category_col, feature_cols).localCheckpoint(
-        eager=False
-    )
-    cells = melted.groupBy("feature", "value", "category").agg(
-        F.count(F.lit(1)).alias("n_11")
+    cells = (
+        melt_features(df, category_col, feature_cols)
+        .groupBy("feature", "value", "category")
+        .agg(F.count(F.lit(1)).alias("n_11"))
     )
     row_tot = cells.groupBy("feature", "value").agg(F.sum("n_11").alias("row_sum"))
     cat_tot = (
@@ -116,25 +115,24 @@ def information_gain_scores(
     entropies summed as per-term micro integers.  Output: (feature,
     ig_micro)."""
     n_total = df.count()
-    melted = melt_features(df, category_col, feature_cols).localCheckpoint(
-        eager=False
-    )
     term = _ENT_TERM.format(n=n_total)
+    # the (feature, category, value) counts, from one pass over the melt;
+    # the value counts sum them up rather than re-reading the melt
+    joint = (
+        melt_features(df, category_col, feature_cols)
+        .groupBy("feature", "category", "value")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
 
     class_h = (
         df.groupBy(F.col(category_col).alias("category"))
         .agg(F.count(F.lit(1)).alias("c"))
         .agg(F.sum(F.expr(term)).alias("h_class_micro"))
     )
-    joint_h = (
-        melted.groupBy("feature", "category", "value")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy("feature")
-        .agg(F.sum(F.expr(term)).alias("h_joint_micro"))
-    )
+    joint_h = joint.groupBy("feature").agg(F.sum(F.expr(term)).alias("h_joint_micro"))
     value_h = (
-        melted.groupBy("feature", "value")
-        .agg(F.count(F.lit(1)).alias("c"))
+        joint.groupBy("feature", "value")
+        .agg(F.sum("c").alias("c"))
         .groupBy("feature")
         .agg(F.sum(F.expr(term)).alias("h_value_micro"))
     )

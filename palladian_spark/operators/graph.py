@@ -53,6 +53,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .util import member_pairs
+
 DAMPING = 0.85
 TELEPORT = 0.15  # literal, deliberately not 1 - DAMPING (see module doc)
 # rounds between localCheckpoint lineage cuts (see module doc)
@@ -475,51 +477,46 @@ def common_neighbor_scores(
     Output: (node_a, node_b, common_neighbors, jaccard_1000), node_a <
     node_b.
 
-    Scale: candidate pairs are generated by a wedge join through the
-    shared neighbor — cost sum(deg(m)^2) over middles m, inherently
-    quadratic in hub degree — so middles above ``max_degree`` are
+    Scale: candidate pairs are the wedges through each shared neighbor,
+    paired by util.member_pairs — cost sum(deg(m)^2) over middles m,
+    inherently quadratic in hub degree — so middles above ``max_degree`` are
     EXPLICITLY excluded (documented contract, mirrored in the oracle,
     same posture as repo_shared_deps' fanout cap: a 10^9-degree hub
     predicts an edge between every pair of its neighbors, which is
-    noise, not signal). Everything else is degree aggregates and an
-    edge-keyed anti-join.
+    noise, not signal). Endpoint degrees ride on each adjacency row (one
+    window); everything else is the pair aggregate and an edge-keyed
+    anti-join.
     """
     und = _undirected(edges, a_col, b_col)
-    adj = _both_directions(und)
-    deg = adj.groupBy(F.col("u").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
-    mid_ok = deg.where(F.col("deg") <= max_degree).select(
-        F.col("node").alias("m")
+    # each adjacency row (m, v) carries deg(v): the wedge a - m - c with
+    # a < c then knows both endpoint degrees, and the middle's degree is
+    # its member count, which member_pairs caps
+    adj = _both_directions(und).withColumn(
+        "deg", F.count(F.lit(1)).over(Window.partitionBy("v"))
     )
-    # wedges a - m - c with a < c, middle degree-capped
-    w1 = adj.select(F.col("u").alias("m"), F.col("v").alias("a"))
-    w2 = adj.select(F.col("u").alias("m"), F.col("v").alias("c"))
     cn = (
-        w1.join(mid_ok, "m")
-        .join(w2, "m")
-        .where(F.col("a") < F.col("c"))
-        .groupBy(F.col("a").alias("node_a"), F.col("c").alias("node_b"))
+        member_pairs(adj, ["u"], ["v", "deg"], max_degree)
+        .groupBy(
+            F.col("a.v").alias("node_a"),
+            F.col("b.v").alias("node_b"),
+            F.col("a.deg").alias("deg_a"),
+            F.col("b.deg").alias("deg_b"),
+        )
         .agg(F.count(F.lit(1)).alias("common_neighbors"))
         .where(F.col("common_neighbors") >= min_cn)
     )
-    non_adj = cn.join(
+    return cn.join(
         und.select(F.col("u").alias("node_a"), F.col("v").alias("node_b")),
         ["node_a", "node_b"],
         "left_anti",
-    )
-    da = deg.select(F.col("node").alias("node_a"), F.col("deg").alias("deg_a"))
-    db = deg.select(F.col("node").alias("node_b"), F.col("deg").alias("deg_b"))
-    return (
-        non_adj.join(da, "node_a")
-        .join(db, "node_b")
-        .select(
-            "node_a",
-            "node_b",
-            "common_neighbors",
-            F.expr(
-                "cast((1000 * common_neighbors)"
-                " div (deg_a + deg_b - common_neighbors) as bigint)"
-            ).alias("jaccard_1000"),
-        )
+    ).select(
+        "node_a",
+        "node_b",
+        "common_neighbors",
+        F.expr(
+            "cast((1000 * common_neighbors)"
+            " div (deg_a + deg_b - common_neighbors) as bigint)"
+        ).alias("jaccard_1000"),
     )
 
 
@@ -642,34 +639,26 @@ def pmi_edges(presence: DataFrame, total_docs: DataFrame) -> DataFrame:
     pmi_milli = floor(1000 * ln(n_ab * N / (n_a * n_b)) + 0.5) — the
     engine-portable integer idiom, so the DuckDB oracle matches exactly.
 
-    Scale shape: one distinct + one marginal aggregate (entity key), the
-    doc-keyed pair self-join (the doc_cooccur plan), the dictionary-sized
-    marginal table joined back twice (broadcast), totals as a 1-row
+    Scale shape: one distinct, the marginal counted by a window on the
+    entity key and carried on each row, the doc-keyed pairing
+    (util.member_pairs, the doc_cooccur plan), totals as a 1-row
     broadcast crossJoin. Output: (subj, obj, n_ab, pmi_milli)."""
     tot = total_docs.agg(F.count(F.lit(1)).alias("n_docs"))
+    # each distinct (doc, value) row carries its value's document count
     m = (
         presence.select("doc_id", "value")
         .dropDuplicates()
-        .localCheckpoint(eager=False)
+        .withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("value")))
     )
-    freq = m.groupBy("value").agg(F.count(F.lit(1)).alias("n"))
-    a, b = m.alias("a"), m.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.doc_id") == F.col("b.doc_id"))
-            & (F.col("a.value") < F.col("b.value")),
-        )
+    return (
+        member_pairs(m, ["doc_id"], ["value", "n"])
         .groupBy(
-            F.col("a.value").alias("subj"), F.col("b.value").alias("obj")
+            F.col("a.value").alias("subj"),
+            F.col("b.value").alias("obj"),
+            F.col("a.n").alias("n_a"),
+            F.col("b.n").alias("n_b"),
         )
         .agg(F.count(F.lit(1)).alias("n_ab"))
-    )
-    fa = freq.select(F.col("value").alias("subj"), F.col("n").alias("n_a"))
-    fb = freq.select(F.col("value").alias("obj"), F.col("n").alias("n_b"))
-    return (
-        pairs.join(F.broadcast(fa), "subj")
-        .join(F.broadcast(fb), "obj")
         .crossJoin(F.broadcast(tot))
         .select(
             "subj",

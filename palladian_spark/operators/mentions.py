@@ -45,7 +45,9 @@ def dictionary_mentions(
     variable pandas UDF — the dictionary ships once per executor, and the
     combined leftmost-longest alternation (tagging.dictionary_matcher)
     compiles once per executor process, so each document costs one regex
-    scan regardless of gazetteer size."""
+    scan. That scan still grows with the gazetteer (about 0.05 ms per
+    text at 20 entries, 68 ms at 100,000; see dictionary_matcher for the
+    trie / Aho-Corasick follow-up)."""
     dict_bc = df.sparkSession.sparkContext.broadcast(tuple(dictionary.items()))
 
     def make_rows():

@@ -29,7 +29,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 from pyspark.sql.window import Window
 
-from .util import spread
+from .util import member_pairs, spread
+
+
+def _top_k(
+    df: DataFrame, query_id_col: str, id_col: str, score_col: str, k: int
+) -> DataFrame:
+    """The best ``k`` rows of each query, by score descending then id,
+    numbered in a ``rank`` column."""
+    w = Window.partitionBy(query_id_col).orderBy(F.desc(score_col), F.asc(id_col))
+    return df.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def _non_null_vectors(df: DataFrame, vec_col: str) -> DataFrame:
@@ -137,11 +146,7 @@ def brute_force_topk(
         id_col,
         _cosine_udf(F.col(vec_col), F.col("_qvec")).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _top_k(scored, query_id_col, id_col, "cosine", k)
 
 
 # SRP fixed-point grain: embeddings quantize to floor(v * 2^20 + 0.5).
@@ -274,8 +279,7 @@ def lsh_topk(
         id_col,
         _cosine_udf(F.col(vec_col), F.col("_qvec")).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _top_k(scored, query_id_col, id_col, "cosine", k)
 
 
 def _centroid_matrix(
@@ -469,8 +473,7 @@ def ivf_topk(
         id_col,
         _cosine_udf(F.col(vec_col), F.col("_qvec")).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _top_k(scored, query_id_col, id_col, "cosine", k)
 
 
 def quantize_embeddings(
@@ -711,15 +714,10 @@ def pq_topk(
             [(i, qid) for i, qid in enumerate(q_ids)], ["_qi", query_id_col]
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
-    adc = (
-        scored.join(qid_map, "_qi")
-        .select(query_id_col, id_col, "score")
-        .withColumn("rank", F.row_number().over(w))
-    )
+    adc = scored.join(qid_map, "_qi").select(query_id_col, id_col, "score")
     if not rescore_factor:
-        return adc.where(F.col("rank") <= k)
-    pool = adc.where(F.col("rank") <= k * rescore_factor).select(
+        return _top_k(adc, query_id_col, id_col, "score", k)
+    pool = _top_k(adc, query_id_col, id_col, "score", k * rescore_factor).select(
         query_id_col, id_col
     )
     qvecs = F.broadcast(
@@ -737,10 +735,7 @@ def pq_topk(
             _cosine_udf(F.col(vec_col), F.col("_qvec")).alias("score"),
         )
     )
-    w2 = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
-    return rescored.withColumn("rank", F.row_number().over(w2)).where(
-        F.col("rank") <= k
-    )
+    return _top_k(rescored, query_id_col, id_col, "score", k)
 
 
 def ivfpq_topk(
@@ -864,11 +859,8 @@ def ivfpq_topk(
         .join(qi_map, query_id_col)
         .withColumn("_score", _adc(F.col("_qi"), F.col("_codes")))
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("_score"), F.asc(id_col))
-    pool = (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k * rescore_factor)
-        .select(query_id_col, id_col)
+    pool = _top_k(cand, query_id_col, id_col, "_score", k * rescore_factor).select(
+        query_id_col, id_col
     )
     qvecs = F.broadcast(q_df)
     rescored = (
@@ -880,14 +872,11 @@ def ivfpq_topk(
             _cosine_udf(F.col(vec_col), F.col("_qvec")).alias("score"),
         )
     )
-    w2 = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
-    return rescored.withColumn("rank", F.row_number().over(w2)).where(
-        F.col("rank") <= k
-    )
+    return _top_k(rescored, query_id_col, id_col, "score", k)
 
 
 def recommended_srp_planes(n_vectors: int, floor: int = 10) -> int:
-    """SRP plane count that keeps the bucket self-join linear: random
+    """SRP plane count that keeps the bucket pairing linear: random
     (cosine ~0) pairs collide per table at 0.5^planes, so the expected
     candidate count is ~C(n,2) * tables * 0.5^planes — planes must grow
     with log2(n) or the join goes quadratic. ceil(log2 n) + 2 keeps
@@ -909,13 +898,14 @@ def embedding_near_duplicates(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Embedding-cosine near-dup pairs via SRP bucket self-join,
+    """Embedding-cosine near-dup pairs via SRP buckets, each bucket's
+    vectors paired by util.member_pairs (the vector rides along),
     OR-amplified across ``n_tables`` tables (pairs deduped before the
     cosine filter). At threshold 0.95 a true pair collides per table with
     p^10 ~ 0.35, so 4 tables put recall near 0.82; raise n_tables for more.
 
     The defaults fit ~<=10^5 vectors; at larger corpora size ``n_planes``
-    with :func:`recommended_srp_planes` (the bucket join's candidate count
+    with :func:`recommended_srp_planes` (the bucket pairing's candidate count
     is what scales, not the verify) and raise ``n_tables`` to hold recall.
     """
     bucket_udf = _make_buckets_udf(
@@ -926,20 +916,13 @@ def embedding_near_duplicates(
         bucket_udf,
         vec_col,
     )
-    left = b.alias("l")
-    right = b.alias("r")
     return (
-        left.join(
-            right,
-            (F.col("l._t") == F.col("r._t"))
-            & (F.col("l._bucket") == F.col("r._bucket"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
+        member_pairs(b, ["_t", "_bucket"], [id_col, vec_col])
         .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            F.col(f"l.{vec_col}").alias("_va"),
-            F.col(f"r.{vec_col}").alias("_vb"),
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            F.col(f"a.{vec_col}").alias("_va"),
+            F.col(f"b.{vec_col}").alias("_vb"),
         )
         .dropDuplicates(["id_a", "id_b"])
         .select(

@@ -138,6 +138,14 @@ def hll_register_rho(hash_col, p: int = 6):
     return register, rho
 
 
+def lineage_register_rho(sha_col):
+    """(register, rho) of a sha256-hex lineage column, p=6: its first 15
+    hex digits read as the 60-bit hash. The one lineage sketch that
+    StageStore manifests and the streaming metrics rows both keep."""
+    h = F.conv(F.substring(sha_col, 1, 15), 16, 10).cast("long")
+    return hll_register_rho(h, p=6)
+
+
 def token_cms(
     docs: DataFrame,
     depth: int = 4,

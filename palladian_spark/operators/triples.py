@@ -10,8 +10,10 @@ co-occurrence, CoOccurrenceRetriever.java:27-110), `synonym-of`
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from .util import member_pairs
 
 N_SALT = 64  # salt fan-out for mega-repo skew (north rule requirement)
 # co-occurrence cap per document: a quadratic-blowup guard (see
@@ -49,37 +51,24 @@ def co_occurrence_triples(mentions: DataFrame) -> DataFrame:
     """(a, 'co-occurs-with', b) for entity pairs in the same document.
 
     Spark mapping of CoOccurrenceRetriever (DOCUMENT scope; SENTENCE and
-    200-char-window scopes live in operators/cooccurrence.py): distinct
-    (doc, value) pairs, self-join on doc with a < b ordering. MAX_PER_DOC
-    caps pathological documents — a quadratic-blowup guard, NOT a silent
-    semantic choice: docs whose distinct-mention count exceeds the cap
-    lose their excess pairs, so raise the cap (or pre-filter boilerplate
-    mentions) when a corpus legitimately has denser documents.
+    200-char-window scopes live in operators/cooccurrence.py): the
+    distinct values of each document, paired a < b by util.member_pairs;
+    a doc_ref names one content, so its lineage hash rides in the key.
+    MAX_PER_DOC caps pathological documents — a quadratic-blowup guard,
+    NOT a silent semantic choice: docs whose distinct-mention count
+    exceeds the cap keep only their first MAX_PER_DOC values in value
+    order, so raise the cap (or pre-filter boilerplate mentions) when a
+    corpus legitimately has denser documents.
     """
-    per_doc = (
-        mentions.select("doc_ref", "value", "content_sha256")
-        .dropDuplicates(["doc_ref", "value"])
-    )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("doc_ref").orderBy("value")
-    capped = per_doc.withColumn("_rn", F.row_number().over(w)).where(
-        F.col("_rn") <= MAX_PER_DOC
+    capped = mentions.withColumn("_rk", F.dense_rank().over(w)).where(
+        F.col("_rk") <= MAX_PER_DOC
     )
-    a = capped.alias("a")
-    b = capped.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.doc_ref") == F.col("b.doc_ref"))
-            & (F.col("a.value") < F.col("b.value")),
-        )
-        .select(
-            F.col("a.value").alias("subj"),
-            F.lit("co-occurs-with").alias("pred"),
-            F.col("b.value").alias("obj"),
-            F.col("a.content_sha256").alias("content_sha256"),
-        )
+    return member_pairs(capped, ["doc_ref", "content_sha256"], "value").select(
+        F.col("a").alias("subj"),
+        F.lit("co-occurs-with").alias("pred"),
+        F.col("b").alias("obj"),
+        "content_sha256",
     )
 
 

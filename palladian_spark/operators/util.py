@@ -1,5 +1,7 @@
-"""Shared physical-layout helpers for UDF-heavy operators, and the one
-Spark step every text -> annotation-rows tagger runs through."""
+"""Shared physical-layout helpers for UDF-heavy operators, the one Spark
+step every text -> annotation-rows tagger runs through (annotate), and the
+one step every operator pairing the members of a key runs through
+(member_pairs)."""
 
 from __future__ import annotations
 
@@ -174,3 +176,44 @@ def annotate(
         return texts.map(lambda t: rows(t or ""))
 
     return spread(df).select(*keep_cols, F.inline(annotations(F.col(text_col))))
+
+
+def member_pairs(
+    df: DataFrame,
+    key_cols: list[str],
+    member: str | list[str],
+    max_members: int | None = None,
+) -> DataFrame:
+    """(key_cols..., a, b) for every two distinct members sharing a key,
+    a < b: the blocked self-join ``a.key == b.key & a.m < b.m``, as
+    group-then-pair.
+
+    One aggregate collects each key's sorted distinct members; two
+    explodes over that array emit each pair once. ``df`` is read once,
+    so nothing upstream (a UDF, a scan) runs twice and no cut is needed
+    to feed two join sides. Rows with a null key or a null member are
+    dropped, as the equi-join drops them. Keys with fewer than 2
+    distinct members, or more than ``max_members``, pair nothing: the
+    cap guards the quadratic pair count of a hub key.
+
+    ``member`` is one column, or a list of columns whose first orders
+    the pairs and the rest ride along as payload; then ``a`` and ``b``
+    are structs of those columns, and two rows with the same first
+    column never pair. Duplicate (key, member) rows count once, where a
+    self-join would pair each copy.
+    """
+    fields = [member] if isinstance(member, str) else member
+    m = F.col(member) if isinstance(member, str) else F.struct(*member)
+    n = F.size("_m")
+    grouped = (
+        df.dropna(subset=[*key_cols, fields[0]])
+        .groupBy(*key_cols)
+        .agg(F.sort_array(F.collect_set(m)).alias("_m"))
+        .where((n >= 2) if max_members is None else n.between(2, max_members))
+    )
+    pairs = grouped.select(*key_cols, "_m", F.posexplode("_m").alias("_i", "a")).select(
+        *key_cols, "a", F.explode(F.slice("_m", F.col("_i") + 2, n)).alias("b")
+    )
+    if isinstance(member, str):
+        return pairs
+    return pairs.where(F.col(f"a.{fields[0]}") < F.col(f"b.{fields[0]}"))

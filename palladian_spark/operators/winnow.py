@@ -20,9 +20,9 @@ winnowing = shared *substrings* anywhere in the pair.
 Spark path: fingerprint selection is per-document local (the paper's
 point — no cross-row context), so it runs as ONE Arrow hop (numpy
 sliding-window minima over md5-based gram hashes); the only shuffles
-are the fingerprint-grain dedup/cap aggregates and the
-fingerprint-blocked pair join with an explicit ubiquitous-fingerprint
-cap (the minhash/fork posture). The
+are the fingerprint-grain dedup, the cap and size windows and the
+fingerprint-blocked pairing (util.member_pairs) with an explicit
+ubiquitous-fingerprint cap (the minhash/fork posture). The
 DuckDB oracle recomputes selection through an algorithmically
 INDEPENDENT formulation — positions unnested in SQL, `min() over
 (order by pos rows between current row and w-1 following)` — so a green
@@ -33,7 +33,7 @@ the portable md5-slice bigint (`('0x' || substr(md5(g),1,15))::bigint`
 Scale shape: normalization + fingerprinting is a linear map over the
 content scan (bounded by WINNOW_MAX_CHARS per file, oracle-mirrored);
 distinct (file, fp) rows are fingerprint-subsampled (~2/(w+1) of
-grams); the self-join is blocked on fp with `max_files_per_fp`
+grams); the pairing is blocked on fp with `max_files_per_fp`
 dropping boilerplate fingerprints (cap documented in the contract, the
 resolve_calls / fork_pairs posture); verification is arithmetic over
 the pair aggregate — content never crosses a shuffle.
@@ -47,8 +47,11 @@ import re
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
+
+from .util import member_pairs
 
 WINNOW_K = 8  # char k-gram length over normalized content
 WINNOW_W = 4  # window size; guarantee threshold t = WINNOW_W + WINNOW_K - 1
@@ -132,33 +135,29 @@ def winnow_pairs(
     jaccard_1000), file_a < file_b.
 
     Fingerprints selected by more than ``max_files_per_fp`` files are
-    dropped before the self-join (boilerplate headers select the same
+    dropped before pairing (boilerplate headers select the same
     minima everywhere; the cap is part of the contract and mirrored in
-    the oracle) — the fork_pairs / resolve_calls fan-out posture."""
-    fps = winnow_fingerprints(source, k, w, max_chars).localCheckpoint(eager=False)
-    # localCheckpoint: sizes + both self-join sides consume fps; without
-    # the cut the Arrow fingerprint hop runs three times per file.
-    good = (
-        fps.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("_nf"))
+    the oracle) — the fork_pairs / resolve_calls fan-out posture. Files
+    sharing a fingerprint are paired by util.member_pairs."""
+    # each (file, fp) row carries its fingerprint's file count (the cap)
+    # and its file's kept-fingerprint count, so the fingerprints are read
+    # once: no cut, no cap or size aggregate joined back
+    kept = (
+        winnow_fingerprints(source, k, w, max_chars)
+        .withColumn("_nf", F.count(F.lit(1)).over(Window.partitionBy("fp")))
         .where(F.col("_nf") <= max_files_per_fp)
-        .select("fp")
-    )
-    kept = fps.join(good, "fp", "left_semi").localCheckpoint(eager=False)
-    sizes = kept.groupBy("f").agg(F.count(F.lit(1)).alias("sz"))
-    shared = (
-        kept.alias("x")
-        .join(
-            kept.alias("y"),
-            (F.col("x.fp") == F.col("y.fp")) & (F.col("x.f") < F.col("y.f")),
-        )
-        .groupBy(F.col("x.f").alias("file_a"), F.col("y.f").alias("file_b"))
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared)
+        .withColumn("sz", F.count(F.lit(1)).over(Window.partitionBy("f")))
     )
     return (
-        shared.join(sizes.select(F.col("f").alias("file_a"), F.col("sz").alias("n_a")), "file_a")
-        .join(sizes.select(F.col("f").alias("file_b"), F.col("sz").alias("n_b")), "file_b")
+        member_pairs(kept, ["fp"], ["f", "sz"])
+        .groupBy(
+            F.col("a.f").alias("file_a"),
+            F.col("b.f").alias("file_b"),
+            F.col("a.sz").alias("n_a"),
+            F.col("b.sz").alias("n_b"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+        .where(F.col("n_shared") >= min_shared)
         .select(
             "file_a",
             "file_b",

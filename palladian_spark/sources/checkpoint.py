@@ -137,10 +137,9 @@ class StageStore:
             # manifest's approximate distinct-content count — duplicate-
             # content inflation between stages becomes visible without a
             # distinct() over a 10^12-row table.
-            from ..operators.sketches import hll_register_rho
+            from ..operators.sketches import lineage_register_rho
 
-            h = F.conv(F.substring(lineage_col, 1, 15), 16, 10).cast("long")
-            reg, rho = hll_register_rho(h, p=6)
+            reg, rho = lineage_register_rho(lineage_col)
             base_df = (
                 out.withColumn("_pid", F.spark_partition_id())
                 .withColumn("_reg", reg)

@@ -152,10 +152,9 @@ def start_triple_stream(
         # estimates fold from the tiny metrics rows (register-wise max)
         # without ever running a distinct over the full triple log (the
         # StageStore manifests' sketch, applied per micro-batch)
-        from ..operators.sketches import hll_register_rho
+        from ..operators.sketches import lineage_register_rho
 
-        h = F.conv(F.substring("content_sha256", 1, 15), 16, 10).cast("long")
-        reg, rho = hll_register_rho(h, p=6)
+        reg, rho = lineage_register_rho("content_sha256")
         regs = (
             committed.where(F.col("content_sha256").isNotNull())
             .select(reg.alias("r"), rho.alias("m"))

@@ -8,15 +8,16 @@ twice over the same rows:
 - no Python node may sit above another one with the same call (a filter
   pushed below a projection or the spread() repartition re-runs the UDF);
 - no two Python nodes may evaluate the same call over identical inputs (a
-  frame read twice without a cut, e.g. both sides of a self-join), except
-  in the operators of _READ_TWICE.
+  frame read twice without a cut, e.g. both sides of a self-join).
 Nor may any plan hold the `size(pythonUDF..) > 0` filter that
 InferFiltersFromGenerate infers for a generator over an aliased UDF
 column (see operators/util.annotate).
 
 The second half checks the inline generator's row semantics at each
 tagger: null, empty and no-match texts give no rows, and a matching text
-gives exactly the kernel's annotations.
+gives exactly the kernel's annotations. The last part checks that every
+operator pairing the members of a key does it through util.member_pairs
+(group, then pair), with no self-join left in its plans.
 """
 
 from __future__ import annotations
@@ -32,8 +33,9 @@ from pyspark.sql import functions as F
 
 from palladian_spark.kernels.ner import NerModel
 from palladian_spark.operators import (
-    canonicalize, colors, cooccurrence, curation, dates, dedup, geo, mentions,
-    ner_pipeline, pos_tagging, relations, similarity_search as ss, sketches, winnow,
+    canonicalize, code, code_curation, colors, cooccurrence, curation, dates, dedup,
+    geo, graph, mentions, ner_pipeline, pos_tagging, relations, similarity_search as ss,
+    sketches, triples, winnow,
 )
 from palladian_spark.operators.multimodal import synthesize_media_table
 
@@ -164,6 +166,22 @@ def _media(d):
     return synthesize_media_table(d.sparkSession, d.where(F.col("doc_id") < 4))
 
 
+def _code(d):
+    """The documents as a source-code table: three repos of python files
+    that share two imports."""
+    return d.select(
+        F.concat(F.lit("repo"), (F.col("doc_id") % 3).cast("string")).alias("repo"),
+        F.concat(F.col("doc_id").cast("string"), F.lit(".py")).alias("path"),
+        F.lit("python").alias("lang"),
+        F.concat(F.lit("import os\nimport sys\n"), F.coalesce("text", F.lit(""))).alias("content"),
+    )
+
+
+def _words(d):
+    """(doc_id, word) rows of the documents."""
+    return d.select("doc_id", F.explode(F.split("text", " ")).alias("value"))
+
+
 # name -> op(docs, (embeddings, queries)): the other per-row UDF operators
 _OPERATORS = {
     "media_pixel_colors": lambda d, v: colors.media_pixel_colors(_media(d)),
@@ -189,17 +207,7 @@ _OPERATORS = {
         d, ["alpha", "beta"], scope=cooccurrence.SENTENCE
     ),
     "wiktionary_triples": lambda d, v: relations.wiktionary_triples(d.withColumn("title", F.lit("Haus"))),
-}
-
-
-# Self-joins (and a size aggregate beside them) that read their UDF rows
-# more than once, with no cut: whether cutting beats the second UDF pass
-# is not yet measured (ROADMAP), so only the pushed-filter check applies.
-_READ_TWICE = {
-    "embedding_near_duplicates",
-    "ngram_jaccard_pairs",
-    "ngram_jaccard_pairs_exact",
-    "benchmark_overlap",
+    "winnow_pairs": lambda d, v: winnow.winnow_pairs(_code(d)),
 }
 
 
@@ -214,9 +222,7 @@ def test_each_udf_runs_once_per_row(docs, vectors, pos_model, cut_frames, name):
     twice_in_line = sorted({call for call, _, again in evals if again})
     assert not twice_in_line, f"{name}: evaluated again above itself: {twice_in_line}"
     same_input = [call for (call, _), n in Counter((c, b) for c, b, _ in evals).items() if n > 1]
-    assert name in _READ_TWICE or not same_input, (
-        f"{name}: evaluated twice over the same input: {same_input}"
-    )
+    assert not same_input, f"{name}: evaluated twice over the same input: {same_input}"
 
 
 def _kernel_rows(name, text, pos_model):
@@ -287,15 +293,68 @@ def test_tagger_rows_match_kernel(spark, pos_model, name):
     assert sorted(tuple(r)[1 : 1 + ncols] for r in got) == sorted(want)
 
 
-def test_every_annotate_caller_is_a_covered_tagger():
-    """The operators that build rows through util.annotate are exactly
-    _TAGGERS, so a new tagger gets the plan and null-row checks above."""
+def _callers(helper: str) -> set[str]:
+    """The functions in palladian_spark/operators that call ``helper``."""
     callers = set()
     for path in Path(mentions.__file__).parent.rglob("*.py"):
         for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
             if isinstance(node, ast.FunctionDef) and any(
-                isinstance(c, ast.Call) and ast.unparse(c.func).split(".")[-1] == "annotate"
+                isinstance(c, ast.Call) and ast.unparse(c.func).split(".")[-1] == helper
                 for c in ast.walk(node)
             ):
                 callers.add(node.name)
-    assert callers == set(_TAGGERS)
+    return callers
+
+
+def test_every_annotate_caller_is_a_covered_tagger():
+    """The operators that build rows through util.annotate are exactly
+    _TAGGERS, so a new tagger gets the plan and null-row checks above."""
+    assert _callers("annotate") == set(_TAGGERS)
+
+
+# caller of util.member_pairs -> op(docs, (embeddings, queries)) reaching it
+_PAIRERS = {
+    "co_occurrence_triples": lambda d, v: triples.co_occurrence_triples(
+        _words(d).select(
+            F.concat(F.lit("r/"), F.col("doc_id").cast("string")).alias("doc_ref"),
+            "value",
+            F.sha2(F.col("doc_id").cast("string"), 256).alias("content_sha256"),
+        )
+    ),
+    "candidate_pairs": _OPERATORS["candidate_pairs"],
+    "_shingle_overlap": _OPERATORS["ngram_jaccard_pairs_exact"],
+    "minhash_lsh_pairs": _OPERATORS["minhash_lsh_pairs"],
+    "simhash_pairs": lambda d, v: dedup.simhash_pairs(dedup.simhash_signatures(d)),
+    "simhash_pairs_wide": lambda d, v: dedup.simhash_pairs_wide(dedup.simhash_signatures_wide(d)),
+    "embedding_near_duplicates": _OPERATORS["embedding_near_duplicates"],
+    "_pair_counts": _OPERATORS["sentence_cooccurrences"],
+    "pmi_edges": lambda d, v: graph.pmi_edges(_words(d), d),
+    "common_neighbor_scores": lambda d, v: graph.common_neighbor_scores(
+        _words(d).select(F.col("doc_id").cast("string").alias("subj"), F.col("value").alias("obj"))
+    ),
+    "repo_shared_deps": lambda d, v: code.repo_shared_deps(_code(d)),
+    "fork_pairs": lambda d, v: code_curation.fork_pairs(_code(d)),
+    "near_clone_pairs": lambda d, v: code_curation.near_clone_pairs(_code(d)),
+    "winnow_pairs": _OPERATORS["winnow_pairs"],
+}
+
+
+@pytest.mark.parametrize("name", _PAIRERS)
+def test_pairs_come_from_member_pairs(docs, vectors, cut_frames, name):
+    """The pairs are emitted by member_pairs' explode over each key's
+    sorted members, and no plan joins a frame to itself on ``a.m < b.m``."""
+    out = _PAIRERS[name](docs, vectors)
+    nodes = [
+        ln.lstrip(" :+-")
+        for df in [out, *cut_frames]
+        for ln in _ID.sub("", _optimized(df)).splitlines()
+    ]
+    assert any(n.startswith("Generate explode(slice(") for n in nodes), name
+    self_joins = [n for n in nodes if n.startswith("Join ") and " < " in n]
+    assert not self_joins, f"{name}: {self_joins}"
+
+
+def test_every_member_pairs_caller_is_covered():
+    """The operators that pair through util.member_pairs are exactly
+    _PAIRERS, so a new one gets the plan check above."""
+    assert _callers("member_pairs") == set(_PAIRERS)
