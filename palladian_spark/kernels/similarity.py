@@ -57,33 +57,23 @@ def jaro_winkler_similarity(s1: str, s2: str) -> float:
         s1, s2 = s2, s1
         l1, l2 = l2, l1
 
-    s1_flag = [False] * l2
-    s2_flag = [False] * l2
-    m = 0
+    # each s1 char takes the first untaken equal s2 char in its window;
+    # transpositions pair the matched chars of both strings in order
+    taken = bytearray(l2)
+    matched = []
     rng = l2 // 2
-    for i in range(l1):
-        for j in range(max(0, i - rng), min(l2, i + rng)):
-            if not s2_flag[j] and s1[i] == s2[j]:
-                s2_flag[j] = True
-                s1_flag[i] = True
-                m += 1
-                break
+    for i, c in enumerate(s1):
+        hi = min(l2, i + rng)
+        j = s2.find(c, max(0, i - rng), hi)
+        while j != -1 and taken[j]:
+            j = s2.find(c, j + 1, hi)
+        if j != -1:
+            taken[j] = 1
+            matched.append(c)
+    m = len(matched)
     if m == 0:
         return 0.0
-
-    t = 0
-    k = 0
-    for i in range(l1):
-        if s1_flag[i]:
-            j = k
-            while j < l2:
-                if s2_flag[j]:
-                    k = j + 1
-                    break
-                j += 1
-            if s1[i] != s2[j]:
-                t += 1
-    t //= 2
+    t = sum(a != b for a, b in zip(matched, [c for c, f in zip(s2, taken) if f])) // 2
 
     jaro = (m / l1 + m / l2 + (m - t) / m) / 3
     l = 0

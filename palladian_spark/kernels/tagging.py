@@ -70,9 +70,24 @@ def remove_nested(annotations: list[Annotation]) -> list[Annotation]:
 # is semantically significant (leftmost-first) and is preserved exactly; the
 # only dialect changes are \p{Ll} (supported by the `regex` module) and
 # literal curly apostrophes.
+#
+# One pattern runs in both engines: this kernel (Python `regex`) and the
+# Spark scan (operators/mentions.detect_mentions, java.util.regex), so it
+# keeps to the syntax both read alike:
+# - five unbounded group loops are possessive (`*+`, `++`). Java recurses
+#   once per repetition of a backtrackable group loop, and a 30,000-char
+#   run of "Spark " overflowed the executor thread's stack. Each loop is
+#   followed by nothing it could give characters back to (a lookahead for
+#   "-", a required "of"/"de" after a trailing space, the end of the
+#   alternative, an optional "." after a letter), so giving none back
+#   changes no match.
+# - the X-of-Y lookahead spells `\s` as _WHITESPACE, the code points
+#   Python's Unicode `\s` matches; Java's `\s` is ASCII-only.
+# tests/test_mention_scan.py checks both engines against each other.
 # ---------------------------------------------------------------------------
 _CAMEL_CASE_WORDS = r"(GmbH|LLC)"
 _SUFFIXES = r"((?<=(Inc|Corp|Co|Ave))\.)?"
+_WHITESPACE = r"[\t\n\x0b\x0c\r\x20\x85\xa0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]"
 
 STRING_TAGGER_REGEX = (
     # dashes ("Ontario-based", "St. Louis-based")
@@ -88,21 +103,21 @@ STRING_TAGGER_REGEX = (
     r"([A-Z][a-z\p{Ll}]{0,2}\.) [A-Z]{1}[A-Za-z\p{Ll}]{1,100}( [A-Z]{1}[A-Za-z\p{Ll}]{1,100})?"
     r"|"
     # A.B.C. Anderson
-    r"([A-Z]\.)+( ([A-Z]{1}([A-Za-z-\p{Ll}0-9&]+))+(([ ])*[A-Z]+([A-Za-z-\p{Ll}0-9]*)){0,10})*"
+    r"([A-Z]\.)+( ([A-Z]{1}([A-Za-z-\p{Ll}0-9&]+))+(([ ])*[A-Z]+([A-Za-z-\p{Ll}0-9]*)){0,10})*+"
     r"|"
     # ending with dash ("Real- Rumble" should be two words)
-    r"([A-Z][A-Za-z\p{Ll}]+ )*[A-Z][A-Za-z\p{Ll}]+(?=-+? )"
+    r"[A-Z][A-Za-z\p{Ll}]+( [A-Z][A-Za-z\p{Ll}]+)*+(?=-+? )"
     r"|"
     # small with dash (ex-President)
     r"([A-Z][A-Za-z\p{Ll}]+ )?([a-z\p{Ll}]+-[A-Z][A-Za-z\p{Ll}0-9]+)"
     r"|"
     # X Y of Z / X of Y Z ("National Bank of Scotland", "L’Arc de Triomphe")
-    r"(([A-Z]{1}['’]?[A-Za-z\p{Ll}]+ )+(?:of|de) (([A-Z]{1}[A-Za-z-\p{Ll}]+)(?!([a-z-]{0,20}\s[A-Z]))))"
-    r"|([A-Z]{1}[A-Za-z-\p{Ll}]+ of( [A-Z]{1}[A-Za-z\p{Ll}]+){1,})"
+    r"(([A-Z]{1}['’]?[A-Za-z\p{Ll}]+ )++(?:of|de) (([A-Z]{1}[A-Za-z-\p{Ll}]+)(?!([a-z-]{0,20}" + _WHITESPACE + r"[A-Z]))))"
+    r"|([A-Z]{1}[A-Za-z-\p{Ll}]+ of( [A-Z]{1}[A-Za-z\p{Ll}]+)++)"
     r"|"
     # title-case sequences, GmbH/LLC, Inc./Corp./Co./Ave. suffixes
     r"([A-Z]{1}([a-z-\p{Ll}0-9®]+)(( " + _CAMEL_CASE_WORDS + r")?"
-    r"(([ &])*([A-Z]['’])?[A-Z]{1}([a-z-\p{Ll}0-9®]+))?)*)" + _SUFFIXES +
+    r"(([ &])*([A-Z]['’])?[A-Z]{1}([a-z-\p{Ll}0-9®]+))?)*+)" + _SUFFIXES +
     r"|"
     # O'Sullivan, D&G, all-caps runs
     r"((([A-Z]{1}([A-Za-z-\p{Ll}0-9&]+|['’][A-Z][A-Za-z]{2,20}))+"

@@ -147,6 +147,16 @@ def _closed_min(node: str, nbr: str, salt: int):
     return F.least(prio(node), F.min(prio(nbr)).over(Window.partitionBy(node)))["n"]
 
 
+def _driver_frame(spark, rows: list[tuple[str, str]], *names: str) -> DataFrame:
+    """Driver-local string pairs -> DataFrame through pandas and Arrow:
+    ``createDataFrame(list)`` hands the pickled rows to a Python worker to
+    decode, the Arrow batch goes straight to the JVM."""
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=list(names), dtype=object),
+        ", ".join(f"{n} string" for n in names),
+    )
+
+
 def connected_components(
     edges: DataFrame, small_graph_edges: int = 200_000
 ) -> DataFrame:
@@ -212,10 +222,10 @@ def connected_components(
             )
         )
 
-    roots = _union_find((r["src"], r["dst"]) for r in e.collect())
+    roots = list(_union_find((r["src"], r["dst"]) for r in e.collect()).items())
     if node_of is None:
-        return spark.createDataFrame(list(roots.items()), "value string, component string")
-    root_of = spark.createDataFrame(list(roots.items()), "node string, root string")
+        return _driver_frame(spark, roots, "value", "component")
+    root_of = _driver_frame(spark, roots, "node", "root")
     node_of = node_of.join(F.broadcast(root_of), "node", "left").select(
         "value", F.coalesce("root", "node").alias("node")
     )
@@ -336,7 +346,7 @@ def canonicalize_values(
     if freq.count() <= small_values:
         freq_rows = [(r[0], r[1]) for r in freq.collect()]
         mapping = _local_canonicalize(freq_rows, threshold, spark)
-        return spark.createDataFrame(mapping, f"{value_col} string, canonical string")
+        return _driver_frame(spark, mapping, value_col, "canonical")
 
     distinct = freq.select(value_col)
     edges = score_pairs(candidate_pairs(distinct, value_col), threshold).select(

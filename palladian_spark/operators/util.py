@@ -111,13 +111,13 @@ def _already_spread(df: DataFrame, target: int) -> bool:
 
 def spread(df: DataFrame) -> DataFrame:
     """Ensure a DataFrame has at least defaultParallelism partitions before
-    an expensive per-row UDF scan.
+    an expensive per-row scan (a UDF, or the StringTagger regex).
 
     Small parquet inputs arrive as a single split, which would serialize a
-    pandas-UDF pass onto one core. On a real cluster reading TB-scale tables
-    the split count already exceeds core count and this is a no-op — the
-    repartition only fires when the input is under-parallel, so it never
-    adds a shuffle at scale.
+    pandas-UDF or regex pass onto one core. On a real cluster reading
+    TB-scale tables the split count already exceeds core count and this is
+    a no-op — the repartition only fires when the input is under-parallel,
+    so it never adds a shuffle at scale.
 
     Parallelism probe: ``df.rdd.getNumPartitions()``. On a file scan it is
     exact (large files split, small ones pack) and runs no job: AQE only

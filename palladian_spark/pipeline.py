@@ -64,12 +64,12 @@ def extract_triples(
     mentions = stage("mentions", build_mentions, lineage_col="content_sha256")
     if store is None:
         # the mention edge families and canonicalization all consume
-        # mentions; without a cut each branch would re-run the regex-UDF
-        # scan over every content blob. localCheckpoint, not persist:
-        # repeated extract_triples calls in one session would otherwise pin
-        # mention caches forever (no unpersist placement exists — the
-        # returned plan is consumed lazily by the caller); checkpointed
-        # blocks are GC-reclaimed with the DataFrame.
+        # mentions; without a cut each branch would re-run the regex scan
+        # (and its offset window) over every content blob. localCheckpoint,
+        # not persist: repeated extract_triples calls in one session would
+        # otherwise pin mention caches forever (no unpersist placement
+        # exists — the returned plan is consumed lazily by the caller);
+        # checkpointed blocks are GC-reclaimed with the DataFrame.
         mentions = mentions.localCheckpoint(eager=False)
 
     all_triples = T.mention_triples(mentions, typed=model is not None)

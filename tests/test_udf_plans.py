@@ -11,7 +11,9 @@ twice over the same rows:
   frame read twice without a cut, e.g. both sides of a self-join).
 Nor may any plan hold the `size(pythonUDF..) > 0` filter that
 InferFiltersFromGenerate infers for a generator over an aliased UDF
-column (see operators/util.annotate).
+column (see operators/util.annotate). The StringTagger scan
+(mentions.detect_mentions) is a JVM regex, not a UDF; the same rule is
+checked on its regexp_replace.
 
 The second half checks the inline generator's row semantics at each
 tagger: null, empty and no-match texts give no rows, and a matching text
@@ -151,7 +153,6 @@ _KW = dict(text_col="text", keep_cols=["doc_id"])
 
 # name -> op(docs, pos_model): the per-row tagger operators
 _TAGGERS = {
-    "detect_mentions": lambda d, _: mentions.detect_mentions(d, **_KW),
     "dictionary_mentions": lambda d, _: mentions.dictionary_mentions(d, _GAZETTEER, **_KW),
     "tag_coordinates": lambda d, _: geo.tag_coordinates(d, **_KW),
     "tag_addresses": lambda d, _: geo.tag_addresses(d, **_KW),
@@ -225,6 +226,19 @@ def test_each_udf_runs_once_per_row(docs, vectors, pos_model, cut_frames, name):
     assert not same_input, f"{name}: evaluated twice over the same input: {same_input}"
 
 
+def test_detect_mentions_runs_the_regex_once(docs, cut_frames):
+    """The StringTagger scan is a JVM regex, no UDF, and the same rule
+    holds for it: its optimized plan evaluates the regexp_replace once, and
+    no inferred size(..) filter sinks below spread()'s repartition to run
+    it again."""
+    out = mentions.detect_mentions(docs, **_KW)
+    assert not cut_frames
+    plan = _ID.sub("", _optimized(out))
+    assert "Repartition" in plan and not any(n in plan for n in _PY_NODES), plan
+    assert plan.count("regexp_replace(") == 1, plan
+    assert "size(" not in plan, plan
+
+
 def _kernel_rows(name, text, pos_model):
     """The kernel's annotations for one text, in each operator's columns."""
     from palladian_spark.kernels import ner, tagging
@@ -235,8 +249,6 @@ def _kernel_rows(name, text, pos_model):
     from palladian_spark.kernels.rules import apply_rules, parse_rules
     from palladian_spark.kernels.text import iterate_tokens
 
-    if name == "detect_mentions":
-        return [(a.start, a.end, a.value, a.tag) for a in tagging.string_tag(text)]
     if name == "dictionary_mentions":
         return [(a.start, a.end, a.value, a.tag)
                 for a in tagging.dictionary_tag(text, _GAZETTEER, case_sensitive=False)]
