@@ -80,9 +80,9 @@ def _jw(left: pd.Series, right: pd.Series) -> pd.Series:
 _jw_udf = F.pandas_udf(_jw, DoubleType()).asNondeterministic()
 
 
-def candidate_pairs(values: DataFrame, value_col: str = "value") -> DataFrame:
+def candidate_pairs(values: DataFrame) -> DataFrame:
     """Blocked candidate pairs (left < right), deduplicated: every pair of
-    values sharing a _block_keys key in a block of at most MAX_BUCKET
+    ``value``s sharing a _block_keys key in a block of at most MAX_BUCKET
     values (util.member_pairs). The cap drops a skewed block (e.g. a hub
     2-char prefix) before any pair is formed, so pairing never turns
     quadratic.
@@ -92,11 +92,11 @@ def candidate_pairs(values: DataFrame, value_col: str = "value") -> DataFrame:
     """
     values = spread(values)  # single-split value tables: one-core key UDF
     bands = values.select(
-        value_col,
-        F.posexplode(_block_keys_udf(F.col(value_col))).alias("band_id", "band_hash"),
+        "value",
+        F.posexplode(_block_keys_udf(F.col("value"))).alias("band_id", "band_hash"),
     )
     pairs = (
-        member_pairs(bands, ["band_id", "band_hash"], value_col, MAX_BUCKET)
+        member_pairs(bands, ["band_id", "band_hash"], "value", MAX_BUCKET)
         .select(F.col("a").alias("left_value"), F.col("b").alias("right_value"))
         .dropDuplicates(["left_value", "right_value"])
     )
@@ -249,13 +249,17 @@ def _local_canonicalize(
     cores instead, and only the surviving edges return to the driver
     union-find.
 
-    Gate tuning (measured, sf0.1 32-core): serial JW runs ~28 us/pair, so
-    28k pairs score in 0.8 s while the parallel round trip costs 1.3 s
-    WARM (createDataFrame + repartition + UDF jobs + collect) and several
-    seconds cold — break-even is ~50k pairs warm, higher cold. 100k keeps
-    the serial path (< ~3 s worst case) for every corpus the local gate
-    admits, and only genuinely hot buckets (the 10x-bench case: 9 s
-    serial) pay the parallel fixed costs."""
+    Gate tuning (measured on 4 cores at load 1.9-3.1): the kg_triples
+    mention values of `tools/make_scaled_data.py --factor 10` are 1,304
+    values with 211,137 driver-local candidate pairs, above
+    PARALLEL_SCORE_OVER; the serial scoring step alone takes 6.1-7.7 s on
+    them. canonicalize_values over them, first call / later calls in one
+    session, all three with the same mapping:
+    - parallel-scored (this path): 7.7-9.6 s / 4.1-5.7 s
+    - the value set handed to the distributed path: 9.5-10.2 s / 4.9-6.2 s
+    - serial scoring only: 6.3-7.3 s / 5.3-7.7 s
+    The parallel round trip pays its worker start once per session and
+    then wins, so pair sets this hot keep it."""
     from collections import defaultdict
 
     values = [v for v, _ in freq_rows]
@@ -298,7 +302,7 @@ def _local_canonicalize(
     freq_d = dict(freq_rows)
     canonical: dict[str, str] = {}
     for members in comp_members.values():
-        rep = min(members, key=lambda m: (-freq_d.get(m, 1), -len(m), m))
+        rep = min(members, key=lambda m: (-freq_d[m], -len(m), m))
         for m in members:
             canonical[m] = rep
     return [(v, canonical.get(v, v)) for v in values]
@@ -306,7 +310,6 @@ def _local_canonicalize(
 
 def canonicalize_values(
     values: DataFrame,
-    value_col: str = "value",
     threshold: float = 0.9,
     small_values: int = 100_000,
     freq_col: str | None = None,
@@ -331,11 +334,11 @@ def canonicalize_values(
     runs — that is the 10^12-file shape.
     """
     spark = values.sparkSession
-    values = values.where(F.col(value_col).isNotNull())
+    values = values.where(F.col("value").isNotNull())
     if freq_col is not None:
-        freq = values.select(value_col, F.col(freq_col).cast("long").alias("freq"))
+        freq = values.select("value", F.col(freq_col).cast("long").alias("freq"))
     else:
-        freq = values.groupBy(value_col).agg(F.count("*").alias("freq"))
+        freq = values.groupBy("value").agg(F.count("*").alias("freq"))
     # one pass over the (possibly expensive) upstream: the gate's count
     # materializes the lazy cut in one fully parallel job, and the collect
     # or every distributed branch (LSH keys, pairing, final joins)
@@ -346,29 +349,24 @@ def canonicalize_values(
     if freq.count() <= small_values:
         freq_rows = [(r[0], r[1]) for r in freq.collect()]
         mapping = _local_canonicalize(freq_rows, threshold, spark)
-        return _driver_frame(spark, mapping, value_col, "canonical")
+        return _driver_frame(spark, mapping, "value", "canonical")
 
-    distinct = freq.select(value_col)
-    edges = score_pairs(candidate_pairs(distinct, value_col), threshold).select(
+    distinct = freq.select("value")
+    edges = score_pairs(candidate_pairs(distinct), threshold).select(
         "left_value", "right_value"
     )
     components = connected_components(edges)
-    member = components.join(freq, components.value == freq[value_col], "left").select(
-        components.value.alias("member"),
-        "component",
-        F.coalesce("freq", F.lit(1)).alias("freq"),
-    )
-    w = Window.partitionBy("component").orderBy(
-        F.desc("freq"), F.desc(F.length("member")), F.asc("member")
-    )
+    # every component member is a value of freq, so the inner join keeps
+    # them all; min over (-freq, -length, value) is the pick of the
+    # driver-local path, in one aggregate
+    pick = F.min(F.struct(-F.col("freq"), -F.length("value"), F.col("value")))
     canonical = (
-        member.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("component", F.col("member").alias("canonical"))
+        components.join(freq, "value")
+        .groupBy("component")
+        .agg(pick.alias("_pick"))
+        .select("component", F.col("_pick.value").alias("canonical"))
     )
-    mapping = components.join(canonical, "component").select(
-        F.col("value").alias(value_col), "canonical"
-    )
-    return distinct.join(mapping, value_col, "left").select(
-        value_col, F.coalesce("canonical", F.col(value_col)).alias("canonical")
+    mapping = components.join(canonical, "component").select("value", "canonical")
+    return distinct.join(mapping, "value", "left").select(
+        "value", F.coalesce("canonical", F.col("value")).alias("canonical")
     )

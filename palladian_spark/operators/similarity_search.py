@@ -75,6 +75,30 @@ def _stack_valid(vecs: list, dim: int | None = None):
     return mat, ok
 
 
+# Fixed-point grain of the SRP projection and the PQ codes and tables:
+# vectors quantize to floor(v * 2^20 + 0.5). 2^20 keeps the quantization
+# error (~1e-6 relative) far below any angle the sketch can resolve while
+# leaving int64 headroom: |dot| <= dim * |v| * 2^40, exact for
+# |v| * dim < 2^23.
+_SRP_SCALE = 1 << 20
+
+
+def _iq(mat: np.ndarray) -> np.ndarray:
+    """The fixed-point grid, int64: floor(x * 2^20 + 0.5) — the formulation
+    the DuckDB oracles replay (``floor(x * 1048576.0 + 0.5)``), so every
+    integer product built on it is bit-identical across engines."""
+    return np.floor(mat * _SRP_SCALE + 0.5).astype(np.int64)
+
+
+def _query_vectors(queries: DataFrame, query_id_col: str, vec_col: str) -> DataFrame:
+    """The query side every top-k operator scores against: (query id,
+    ``_qvec``) of the non-null query vectors. Callers broadcast it where
+    they join it (queries are a broadcast-sized set)."""
+    return _non_null_vectors(queries, vec_col).select(
+        query_id_col, F.col(vec_col).alias("_qvec")
+    )
+
+
 @F.pandas_udf(DoubleType())
 def _cosine_udf(left: pd.Series, right: pd.Series) -> pd.Series:
     """Pairwise cosine, rounded to 6 decimals (matches the DuckDB oracle's
@@ -124,6 +148,25 @@ def _cosine_udf(left: pd.Series, right: pd.Series) -> pd.Series:
 _pinned_cosine_udf = F.pandas_udf(_cosine_udf.func, DoubleType()).asNondeterministic()
 
 
+def _cosine_top_k(
+    cand: DataFrame,
+    k: int,
+    query_id_col: str,
+    id_col: str,
+    vec_col: str,
+    score_col: str = "cosine",
+) -> DataFrame:
+    """The cosine-rank tail of every top-k operator: exact cosine of each
+    (query, row) candidate's ``vec_col`` against its ``_qvec``, then each
+    query's best ``k``."""
+    scored = cand.select(
+        query_id_col,
+        id_col,
+        _cosine_udf(F.col(vec_col), F.col("_qvec")).alias(score_col),
+    )
+    return _top_k(scored, query_id_col, id_col, score_col, k)
+
+
 def brute_force_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -135,25 +178,11 @@ def brute_force_topk(
     """Exact cosine top-k per query. Queries must be small (broadcast):
     the corpus side streams once through the crossJoin; never use this for
     corpus-vs-corpus (that is lsh_topk / embedding_near_duplicates)."""
-    q = F.broadcast(_non_null_vectors(queries, vec_col).select(
-        F.col(query_id_col), F.col(vec_col).alias("_qvec")
-    ))
+    q = F.broadcast(_query_vectors(queries, query_id_col, vec_col))
     # single-split embedding tables would run every cosine batch on one
     # core; no-op when the scan already has >= parallelism splits
     embeddings = spread(_non_null_vectors(embeddings, vec_col))
-    scored = embeddings.crossJoin(q).select(
-        query_id_col,
-        id_col,
-        _cosine_udf(F.col(vec_col), F.col("_qvec")).alias("cosine"),
-    )
-    return _top_k(scored, query_id_col, id_col, "cosine", k)
-
-
-# SRP fixed-point grain: embeddings quantize to floor(v * 2^20 + 0.5).
-# 2^20 keeps the quantization error (~1e-6 relative) far below any angle
-# the sketch can resolve while leaving int64 headroom: |dot| <=
-# dim * |v| * 2^40, exact for |v| * dim < 2^23.
-_SRP_SCALE = 1 << 20
+    return _cosine_top_k(embeddings.crossJoin(q), k, query_id_col, id_col, vec_col)
 
 
 @lru_cache(maxsize=32)
@@ -192,8 +221,7 @@ def _make_buckets_udf(n_planes: int, n_tables: int, seed: int = 42, dim: int | N
         out: list = [None] * len(lists)
         if mat.shape[0]:
             planes = _srp_plane_ints(mat.shape[1], n_planes * n_tables, seed)
-            iq = np.floor(mat * _SRP_SCALE + 0.5).astype(np.int64)
-            bits = (iq @ planes.T) >= 0  # (rows, n_tables*n_planes)
+            bits = (_iq(mat) @ planes.T) >= 0  # (rows, n_tables*n_planes)
             bits = bits.reshape(mat.shape[0], n_tables, n_planes)
             weights = (np.int64(1) << np.arange(n_planes, dtype=np.int64))
             buckets = (bits @ weights).astype(np.int64)  # (rows, n_tables)
@@ -263,72 +291,68 @@ def lsh_topk(
         spread(_non_null_vectors(embeddings, vec_col)), bucket_udf, vec_col
     )
     q_b = F.broadcast(
-        _explode_tables(
-            _non_null_vectors(queries, vec_col).select(
-                query_id_col, F.col(vec_col).alias("_qvec")
-            ),
-            bucket_udf,
-            "_qvec",
-        )
+        _explode_tables(_query_vectors(queries, query_id_col, vec_col), bucket_udf, "_qvec")
     )
     cand = emb_b.join(q_b, ["_t", "_bucket"]).dropDuplicates(
         [query_id_col, id_col]
     )
-    scored = cand.select(
-        query_id_col,
-        id_col,
-        _cosine_udf(F.col(vec_col), F.col("_qvec")).alias("cosine"),
-    )
-    return _top_k(scored, query_id_col, id_col, "cosine", k)
+    return _cosine_top_k(cand, k, query_id_col, id_col, vec_col)
 
 
-def _centroid_matrix(
+def _seed_rows(
     embeddings: DataFrame,
-    n_centroids: int,
+    n: int,
     id_col: str,
     vec_col: str,
     dim: int | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Deterministic coarse-quantizer codebook: the ``n_centroids`` non-null
-    conforming vectors with the smallest md5(id) hex — a uniform sample. A
-    bounded collect (codebook size is a parameter, like a broadcast
-    dimension table — NOT data-sized). NOT lowest-id: at scale ids
-    correlate with ingest order/topic, so lowest-id seeds can all land in
-    one cluster and the quantizer degenerates (measured: IVF-PQ clustered
-    recall 0.76 -> 1.0 after this change; same finding as _pq_codebook).
-    Seeded selection keeps the quantizer a pure function of the table so
-    the DuckDB oracle can recompute the identical assignment; a production
-    build would Lloyd-refine these seeds (pure groupBy-mean iterations over
-    the same assignment join), which changes centroid VALUES but none of
-    the partition/probe plumbing measured here."""
-    # with a known table dim, keep only conforming rows BEFORE the limit
-    # (the codebook is "the n smallest-md5(id) conforming vectors" — the
-    # same set the DuckDB oracle's modal-dim-filtered `limit n` selects);
-    # without one, fall back to masking the collected rows to their modal
-    # length
+) -> list:
+    """The seed sample both codebooks are cut from: the ``n`` non-null
+    vectors with the smallest md5(id) hex (ties by id), of length ``dim``
+    when one is given, as (id, vector) rows in that order — so any prefix
+    is the sample of the smaller size, and ivfpq_topk cuts the IVF and the
+    PQ codebook from one collect.
+
+    A bounded collect (codebook size is a parameter, like a broadcast
+    dimension table — NOT data-sized). Seeded by hash, NOT lowest-id: at
+    scale ids correlate with ingest order and topic, so lowest-id seeds
+    can all land in one cluster and the codebook degenerates (measured:
+    clustered-corpus PQ recall 0.0 with lowest-id seeds, ~1.0 with hash
+    seeds; IVF-PQ 0.76 -> 1.0). The dim filter runs BEFORE the limit, the
+    same set the DuckDB oracles' modal-dim-filtered `order by md5(vec_id),
+    vec_id limit n` selects; md5 hex compares identically as a string on
+    both engines, and orderBy+limit runs as a TakeOrdered — no
+    global-window shuffle. A production build would Lloyd-refine these
+    seeds, which changes codeword VALUES but none of the assignment,
+    encode or ADC plumbing."""
     pool = _non_null_vectors(embeddings, vec_col)
     if dim is not None:
         pool = pool.where(F.size(F.col(vec_col)) == F.lit(dim))
-    rows = (
+    return (
         pool.select(id_col, vec_col)
         .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(n_centroids)
+        .limit(n)
         .collect()
     )
+
+
+def _centroid_matrix(rows: list) -> tuple[np.ndarray, np.ndarray]:
+    """Deterministic coarse-quantizer codebook over ``_seed_rows``: the
+    centroid ids and their (n, dim) float64 matrix."""
     # SELECTION is by hash (diversity); matrix ORDER is id-ascending —
     # _make_probe_udf ties by array position (stable argsort), and the
     # oracle ties by `order by cos desc, c_id`, so the positions must be
     # id-sorted or duplicate seed vectors assign divergent cells
     # (review-caught: two identical seeds tie at cosine 1.0 and each
     # engine picked a different one under md5 ordering)
-    rows.sort(key=lambda r: r[0])
+    rows = sorted(rows, key=lambda r: r[0])
     if not rows:
         # fully-null/empty embedding table: keep the codebook 2-D so the
         # eager norm in _make_probe_udf stays well-formed; the corpus side
         # is empty after the same filter, so no batch ever hits the matmul
         return np.zeros(0, dtype=np.int64), np.zeros((0, 1), dtype=np.float64)
-    # a dim-corrupt row among the selected ids must not enter (or ragged-crash)
-    # the codebook: keep only rows of the modal length
+    # seeds sampled without a table dim may hold a dim-corrupt row: it must
+    # not enter (or ragged-crash) the codebook, so keep only rows of the
+    # modal length
     lists = [list(r[1]) for r in rows]
     mat, ok = _stack_valid(lists)
     ids = np.array([r[0] for r, keep in zip(rows, ok) if keep], dtype=np.int64)
@@ -442,8 +466,7 @@ def ivf_topk(
     missed; recall vs the exact baseline is pytest-gated.
     """
     cent_ids, cent_vecs = _centroid_matrix(
-        embeddings, n_centroids, id_col, vec_col,
-        dim=_table_dim(embeddings, vec_col),
+        _seed_rows(embeddings, n_centroids, id_col, vec_col, _table_dim(embeddings, vec_col))
     )
     if lloyd_iters and cent_ids.size:
         cent_vecs = refine_centroids(
@@ -460,20 +483,14 @@ def ivf_topk(
     # single UDF family keeps tie-breaking provably identical on both sides
     corpus = corpus.withColumn("_cell", F.element_at(assign1(F.col(vec_col)), 1))
 
-    q = _non_null_vectors(queries, vec_col).select(
-        query_id_col, F.col(vec_col).alias("_qvec")
-    )
     q_probe = F.broadcast(
-        q.select(query_id_col, "_qvec", F.explode(probe_n(F.col("_qvec"))).alias("_cell"))
+        _query_vectors(queries, query_id_col, vec_col).select(
+            query_id_col, "_qvec", F.explode(probe_n(F.col("_qvec"))).alias("_cell")
+        )
     )
 
     cand = corpus.join(q_probe, "_cell").dropDuplicates([query_id_col, id_col])
-    scored = cand.select(
-        query_id_col,
-        id_col,
-        _cosine_udf(F.col(vec_col), F.col("_qvec")).alias("cosine"),
-    )
-    return _top_k(scored, query_id_col, id_col, "cosine", k)
+    return _cosine_top_k(cand, k, query_id_col, id_col, vec_col)
 
 
 def quantize_embeddings(
@@ -520,68 +537,38 @@ def quantize_embeddings(
     )
 
 
-def _pq_codebook(
-    embeddings: DataFrame,
-    n_cells: int,
-    m: int,
-    id_col: str,
-    vec_col: str,
-    dim: int | None,
-) -> np.ndarray | None:
-    """Product-quantization codebook: the ``n_cells`` smallest-md5(id)
-    conforming vectors, sliced into ``m`` subvectors and quantized to the fixed-point
-    grid iq(x) = floor(x * 2^20 + 0.5). Returns (m, n_cells, dim//m) int64,
-    or None when the table has no conforming rows. Seeded-deterministic
-    like the IVF codebook (`_centroid_matrix`) so a DuckDB oracle
-    regenerates the identical codewords from the table itself; a production
-    build would Lloyd-refine per subspace, which changes codeword VALUES
-    but none of the encode/ADC plumbing."""
-    if dim is None or dim % m != 0:
+def _pq_codebook(rows: list, m: int) -> np.ndarray | None:
+    """Product-quantization codebook over ``_seed_rows`` of the table dim:
+    the seed vectors on the fixed-point grid, sliced into ``m`` subvectors.
+    Returns (m, n_cells, dim//m) int64, or None when the table has no
+    conforming rows or its dim does not split into ``m`` equal subvectors.
+    Seeded-deterministic like the IVF codebook, so a DuckDB oracle
+    regenerates the identical codewords from the table itself."""
+    if not rows or len(rows[0][1]) % m:
         return None
-    # codeword sources are the n_cells conforming vectors with the SMALLEST
-    # md5(id) hex — a deterministic uniform sample. NOT lowest-id (the IVF
-    # seeding): at 10^12 rows ids correlate with ingest order and topic, so
-    # the lowest ids can all sit in one cluster and the codebook degenerates
-    # (measured: clustered-corpus recall 0.0 with lowest-id seeds, ~1.0 with
-    # hash seeds). md5 hex compares identically as a string on both engines,
-    # and orderBy+limit runs as a TakeOrdered — no global-window shuffle.
-    pool = _non_null_vectors(embeddings, vec_col).where(
-        F.size(F.col(vec_col)) == F.lit(dim)
-    )
-    rows = (
-        pool.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(n_cells)
-        .collect()
-    )
-    if not rows:
-        return None
-    cent = np.array([list(r[1]) for r in rows], dtype=np.float64)
-    iq = np.floor(cent * _SRP_SCALE + 0.5).astype(np.int64)  # (cells, dim)
-    ds = dim // m
+    iq = _iq(np.array([r[1] for r in rows], dtype=np.float64))  # (cells, dim)
     # (cells, m, ds) -> (m, cells, ds)
-    return iq.reshape(iq.shape[0], m, ds).transpose(1, 0, 2).copy()
+    return iq.reshape(len(rows), m, -1).transpose(1, 0, 2).copy()
 
 
-def _make_pq_codes_udf(codebook: np.ndarray, dim: int):
+def _make_pq_codes_udf(codebook: np.ndarray):
     """array<int> of ``m`` PQ codes per vector: code_s = argmin over cells
     of the integer squared L2 distance between the vector's s-th fixed-point
     subvector and the codeword. Ties break to the LOWEST cell index
     (np.argmin first-occurrence == the oracle's `order by dist, cell`).
     All arithmetic is int64 on a 2^20 fixed-point grid — |diff| <= 2^24 for
     |v| <= 16, so per-subspace distances stay < 2^53 and are bit-identical
-    across engines (no float summation order, ever). Non-conforming rows
-    code to null (masked, cannot participate)."""
+    across engines (no float summation order, ever). Rows not of the
+    codebook's dim code to null (masked, cannot participate)."""
     m, n_cells, ds = codebook.shape
 
     @F.pandas_udf(ArrayType(LongType()))
     def _codes(vecs: pd.Series) -> pd.Series:
         lists = vecs.tolist()
-        mat, ok = _stack_valid(lists, dim)
+        mat, ok = _stack_valid(lists, m * ds)
         out: list = [None] * len(lists)
         if mat.shape[0]:
-            iq = np.floor(mat * _SRP_SCALE + 0.5).astype(np.int64)
-            iq = iq.reshape(mat.shape[0], m, ds)
+            iq = _iq(mat).reshape(mat.shape[0], m, ds)
             codes = np.empty((mat.shape[0], m), dtype=np.int64)
             for s in range(m):  # loop keeps peak memory at rows*cells*ds
                 diff = iq[:, s, None, :] - codebook[s][None, :, :]
@@ -592,6 +579,56 @@ def _make_pq_codes_udf(codebook: np.ndarray, dim: int):
         return pd.Series(out, dtype="object")
 
     return _codes
+
+
+def _adc_query_side(
+    queries: DataFrame, codebook: np.ndarray, query_id_col: str, vec_col: str
+) -> tuple[np.ndarray, DataFrame] | None:
+    """The query side of both PQ operators: the queries of the codebook's
+    dim, sorted by id, as their ADC tables T[q, s, c] = <iq(q_sub_s),
+    codeword_{s,c}> — (n_q, m, n_cells) int64, exact — and the broadcast
+    map (``_qi``, query id) from a table row to its query. None when no
+    query has the codebook's dim."""
+    m, _, ds = codebook.shape
+    # bounded collect: queries are a broadcast-sized set (like brute force)
+    rows = _non_null_vectors(queries, vec_col).select(query_id_col, vec_col).collect()
+    q_rows = sorted((r for r in rows if len(r[1]) == m * ds), key=lambda r: r[0])
+    if not q_rows:
+        return None
+    q_mat = _iq(np.array([r[1] for r in q_rows], dtype=np.float64))
+    tables = np.einsum("qsd,scd->qsc", q_mat.reshape(len(q_rows), m, ds), codebook)
+    qi_map = queries.sparkSession.createDataFrame(
+        [(i, int(r[0])) for i, r in enumerate(q_rows)], f"_qi int, {query_id_col} long"
+    )
+    return tables, F.broadcast(qi_map)
+
+
+def _empty_topk(
+    embeddings: DataFrame, query_id_col: str, id_col: str, score_type: str
+) -> DataFrame:
+    """The PQ top-k result when the table or the query set has no vector
+    the codebook can encode: no rows, and the ``score_type`` the same call
+    returns when it finds neighbors."""
+    return embeddings.sparkSession.createDataFrame(
+        [], f"query_id long, vec_id long, score {score_type}, rank int"
+    ).toDF(query_id_col, id_col, "score", "rank")
+
+
+def _rescore(
+    pool: DataFrame,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    query_id_col: str,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Exact-cosine top ``k`` of an ADC candidate pool (query id, row id):
+    the floats are read only for the pool's rows."""
+    cand = pool.join(corpus, id_col).join(
+        F.broadcast(_query_vectors(queries, query_id_col, vec_col)), query_id_col
+    )
+    return _cosine_top_k(cand, k, query_id_col, id_col, vec_col, "score")
 
 
 def pq_encode(
@@ -608,11 +645,11 @@ def pq_encode(
     column only for final candidates. One Arrow matmul-shaped pass; the
     codebook is a bounded parameter-sized collect broadcast with the UDF."""
     dim = _table_dim(embeddings, vec_col)
-    codebook = _pq_codebook(embeddings, n_cells, m, id_col, vec_col, dim)
+    codebook = _pq_codebook(_seed_rows(embeddings, n_cells, id_col, vec_col, dim), m)
     src = spread(_non_null_vectors(embeddings, vec_col)).select(id_col, vec_col)
     if codebook is None:
         return src.select(id_col, F.lit(None).cast(ArrayType(LongType())).alias("codes")).where(F.lit(False))
-    codes_udf = _make_pq_codes_udf(codebook, dim)
+    codes_udf = _make_pq_codes_udf(codebook)
     # emitted by a one-element generator, not pinned: a pin keeps the
     # filters on `codes` above the UDF, but once Spark extracts the UDF
     # they read its output as `size(pythonUDF0) > 0` (the null check here,
@@ -660,36 +697,17 @@ def pq_topk(
     orders by it, ties broken by ascending id.
     """
     dim = _table_dim(embeddings, vec_col)
-    codebook = _pq_codebook(embeddings, n_cells, m, id_col, vec_col, dim)
-    spark = embeddings.sparkSession
-    out_schema = "query_id long, vec_id long, score long, rank int"
-    if codebook is None:
-        return spark.createDataFrame([], out_schema).toDF(
-            query_id_col, id_col, "score", "rank"
+    codebook = _pq_codebook(_seed_rows(embeddings, n_cells, id_col, vec_col, dim), m)
+    side = None if codebook is None else _adc_query_side(
+        queries, codebook, query_id_col, vec_col
+    )
+    if side is None:
+        return _empty_topk(
+            embeddings, query_id_col, id_col, "double" if rescore_factor else "long"
         )
-    ds = dim // m
-    # bounded collect: queries are a broadcast-sized set (like brute force)
-    q_rows = [
-        (r[0], list(r[1]))
-        for r in _non_null_vectors(queries, vec_col)
-        .select(query_id_col, vec_col)
-        .collect()
-        if len(r[1]) == dim
-    ]
-    if not q_rows:
-        return spark.createDataFrame([], out_schema).toDF(
-            query_id_col, id_col, "score", "rank"
-        )
-    q_rows.sort(key=lambda r: r[0])
-    q_ids = [int(r[0]) for r in q_rows]
-    q_mat = np.floor(
-        np.array([r[1] for r in q_rows], dtype=np.float64) * _SRP_SCALE + 0.5
-    ).astype(np.int64).reshape(len(q_rows), m, ds)
-    # ADC tables: T[q, s, c] = <iq(q_sub_s), codeword_{s,c}>  (int64, exact)
-    tables = np.einsum("qsd,scd->qsc", q_mat, codebook)
-
-    codes_udf = _make_pq_codes_udf(codebook, dim)
-    n_q = len(q_ids)
+    tables, qi_map = side
+    n_q = tables.shape[0]
+    codes_udf = _make_pq_codes_udf(codebook)
 
     @F.pandas_udf(ArrayType(LongType()))
     def _scores(codes: pd.Series) -> pd.Series:
@@ -709,33 +727,13 @@ def pq_topk(
     scored = corpus.select(
         id_col, F.posexplode(_scores(codes_udf(F.col(vec_col)))).alias("_qi", "score")
     )
-    qid_map = F.broadcast(
-        spark.createDataFrame(
-            [(i, qid) for i, qid in enumerate(q_ids)], ["_qi", query_id_col]
-        )
-    )
-    adc = scored.join(qid_map, "_qi").select(query_id_col, id_col, "score")
+    adc = scored.join(qi_map, "_qi").select(query_id_col, id_col, "score")
     if not rescore_factor:
         return _top_k(adc, query_id_col, id_col, "score", k)
     pool = _top_k(adc, query_id_col, id_col, "score", k * rescore_factor).select(
         query_id_col, id_col
     )
-    qvecs = F.broadcast(
-        spark.createDataFrame(
-            [(qid, vec) for (qid, vec) in q_rows],
-            f"{query_id_col} long, _qvec array<double>",
-        )
-    )
-    rescored = (
-        pool.join(corpus, id_col)
-        .join(qvecs, query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            _cosine_udf(F.col(vec_col), F.col("_qvec")).alias("score"),
-        )
-    )
-    return _top_k(rescored, query_id_col, id_col, "score", k)
+    return _rescore(pool, corpus, queries, k, query_id_col, id_col, vec_col)
 
 
 def ivfpq_topk(
@@ -760,11 +758,10 @@ def ivfpq_topk(
     (Jegou et al. 2011, public) on Spark joins.
 
     Both codebooks are the seeded-deterministic families the component
-    operators pin (both: the smallest-md5(id) conforming vectors — a
-    uniform sample; the IVF matrix is then id-ordered so assignment ties
-    break like the oracle's `order by cos desc, c_id`), so the DuckDB
-    oracle recomputes cell assignment, probe
-    lists, PQ codes, ADC scores, pool, and rescore bit-identically.
+    operators pin, cut from one ``_seed_rows`` collect (the IVF matrix is
+    then id-ordered so assignment ties break like the oracle's `order by
+    cos desc, c_id`), so the DuckDB oracle recomputes cell assignment,
+    probe lists, PQ codes, ADC scores, pool, and rescore bit-identically.
     Pool recall vs exact is pytest-gated on the clustered corpus.
     """
     if rescore_factor < 1:
@@ -772,43 +769,22 @@ def ivfpq_topk(
         # `rank <= 0` filter would read as "no neighbors" (review-caught)
         raise ValueError("ivfpq_topk requires rescore_factor >= 1")
     dim = _table_dim(embeddings, vec_col)
-    spark = embeddings.sparkSession
-    out_schema = "query_id long, vec_id long, score double, rank int"
-
-    cent_ids, cent_vecs = _centroid_matrix(
-        embeddings, n_centroids, id_col, vec_col, dim=dim
+    seeds = _seed_rows(embeddings, max(n_centroids, n_cells), id_col, vec_col, dim)
+    cent_ids, cent_vecs = _centroid_matrix(seeds[:n_centroids])
+    pq_cb = _pq_codebook(seeds[:n_cells], m)
+    side = None if pq_cb is None or not cent_ids.size else _adc_query_side(
+        queries, pq_cb, query_id_col, vec_col
     )
-    pq_cb = _pq_codebook(embeddings, n_cells, m, id_col, vec_col, dim)
-    if pq_cb is None or cent_ids.size == 0:
-        return spark.createDataFrame([], out_schema).toDF(
-            query_id_col, id_col, "score", "rank"
-        )
-    ds = dim // m
-
-    q_rows = [
-        (r[0], list(r[1]))
-        for r in _non_null_vectors(queries, vec_col)
-        .select(query_id_col, vec_col)
-        .collect()
-        if len(r[1]) == dim
-    ]
-    if not q_rows:
-        return spark.createDataFrame([], out_schema).toDF(
-            query_id_col, id_col, "score", "rank"
-        )
-    q_rows.sort(key=lambda r: r[0])
-    q_ids = [int(r[0]) for r in q_rows]
-    qi_of = {qid: i for i, qid in enumerate(q_ids)}
-    q_mat = np.floor(
-        np.array([r[1] for r in q_rows], dtype=np.float64) * _SRP_SCALE + 0.5
-    ).astype(np.int64).reshape(len(q_rows), m, ds)
-    tables = np.einsum("qsd,scd->qsc", q_mat, pq_cb)
+    if side is None:
+        return _empty_topk(embeddings, query_id_col, id_col, "double")
+    tables, qi_map = side
+    n_q = tables.shape[0]
 
     # corpus pass: cell assignment + PQ codes in ONE stage (two Arrow UDFs
     # over the same scan — no shuffle between them)
     assign1 = _make_probe_udf(cent_ids, cent_vecs, 1)
     # pinned: see _pinned_cosine_udf
-    codes_udf = _make_pq_codes_udf(pq_cb, dim).asNondeterministic()
+    codes_udf = _make_pq_codes_udf(pq_cb).asNondeterministic()
     corpus = spread(_non_null_vectors(embeddings, vec_col)).select(id_col, vec_col)
     enc = (
         corpus.withColumn("_cell", F.element_at(assign1(F.col(vec_col)), 1))
@@ -817,17 +793,14 @@ def ivfpq_topk(
         .select(id_col, "_cell", "_codes")
     )
 
-    # query probe lists, broadcast (bounded: n_q * n_probe rows)
+    # query probe lists, broadcast (bounded: n_q * n_probe rows); a query
+    # not of the table dim probes no cell
     probe_n = _make_probe_udf(cent_ids, cent_vecs, n_probe)
-    q_df = spark.createDataFrame(
-        [(qid, vec) for qid, vec in q_rows],
-        f"{query_id_col} long, _qvec array<double>",
-    )
     q_probe = F.broadcast(
-        q_df.select(query_id_col, F.explode(probe_n(F.col("_qvec"))).alias("_cell"))
+        _query_vectors(queries, query_id_col, vec_col).select(
+            query_id_col, F.explode(probe_n(F.col("_qvec"))).alias("_cell")
+        )
     )
-
-    n_q = len(q_ids)
 
     @F.pandas_udf(LongType())
     def _adc(qis: pd.Series, codes: pd.Series) -> pd.Series:
@@ -849,11 +822,6 @@ def ivfpq_topk(
             out[idx] = s
         return pd.Series(out)
 
-    qi_map = F.broadcast(
-        spark.createDataFrame(
-            [(qid, i) for qid, i in qi_of.items()], f"{query_id_col} long, _qi int"
-        )
-    )
     cand = (
         enc.join(q_probe, "_cell")
         .join(qi_map, query_id_col)
@@ -862,17 +830,7 @@ def ivfpq_topk(
     pool = _top_k(cand, query_id_col, id_col, "_score", k * rescore_factor).select(
         query_id_col, id_col
     )
-    qvecs = F.broadcast(q_df)
-    rescored = (
-        pool.join(corpus, id_col)
-        .join(qvecs, query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            _cosine_udf(F.col(vec_col), F.col("_qvec")).alias("score"),
-        )
-    )
-    return _top_k(rescored, query_id_col, id_col, "score", k)
+    return _rescore(pool, corpus, queries, k, query_id_col, id_col, vec_col)
 
 
 def recommended_srp_planes(n_vectors: int, floor: int = 10) -> int:

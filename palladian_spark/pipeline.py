@@ -91,11 +91,7 @@ def extract_triples(
     return result
 
 
-def merge_triples(
-    parts: list[DataFrame],
-    canonicalize: bool = True,
-    threshold: float = 0.9,
-) -> DataFrame:
+def merge_triples(parts: list[DataFrame], canonicalize: bool = True) -> DataFrame:
     """Incremental KG construction: merge per-batch triple tables (built
     with canonicalize=False over DISJOINT document sets) into the exact
     table a full recompute over the union would produce.
@@ -137,7 +133,7 @@ def merge_triples(
         .agg(F.sum("support").alias("freq"))
         .select(F.col("subj").alias("value"), "freq")
     )
-    canonical_map = canonicalize_values(freqs, threshold=threshold, freq_col="freq")
+    canonical_map = canonicalize_values(freqs, freq_col="freq")
     return merged.unionByName(T.dedup_triples(T.synonym_triples(canonical_map)))
 
 

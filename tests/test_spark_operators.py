@@ -612,6 +612,32 @@ def test_pq_encode_codes_and_hostile_rows(spark):
     assert pq_encode(bad, n_cells=4, m=2).count() == 0
 
 
+def test_pq_empty_results_keep_the_mode_schema(spark):
+    """An empty PQ top-k result has the column types of a non-empty one in
+    the same mode: score long for pq_topk's pure ADC, double (the cosine)
+    when it or ivfpq_topk rescores. The result is empty when the table or
+    the query set has no vector of the table dim."""
+    from palladian_spark.operators.similarity_search import ivfpq_topk, pq_topk
+
+    schema = "vec_id long, embedding array<double>"
+    rows = [(i, [float((i * 7 + j) % 5) - 2.0 for j in range(8)]) for i in range(30)]
+    df = spark.createDataFrame(rows, schema)
+    bad = spark.createDataFrame([(1, None), (2, [])], schema)
+    q = df.where(F.col("vec_id") < 2).withColumnRenamed("vec_id", "query_id")
+    q_bad = spark.createDataFrame([(7, [1.0, 2.0])], "query_id long, embedding array<double>")
+    ops = {
+        "pq_adc": lambda e, qs: pq_topk(e, qs, k=3, n_cells=4, m=2),
+        "pq_rescore": lambda e, qs: pq_topk(e, qs, k=3, n_cells=4, m=2, rescore_factor=2),
+        "ivfpq": lambda e, qs: ivfpq_topk(e, qs, k=3, n_centroids=4, n_probe=2, n_cells=4, m=2),
+    }
+    for name, op in ops.items():
+        full = op(df, q)
+        assert full.count() == 6, name
+        for empty in (op(bad, q), op(df, q_bad)):
+            assert empty.count() == 0, name
+            assert empty.dtypes == full.dtypes, name
+
+
 def test_ivfpq_recall_and_subset_property(spark):
     """IVF-PQ on the clustered corpus: the composed path must keep >= 0.8
     of the exact top-10 (cell restriction can only REMOVE candidates
@@ -671,12 +697,13 @@ def test_ivf_lloyd_refinement_matches_numpy_reference(spark):
     from palladian_spark.operators.similarity_search import (
         _centroid_matrix,
         _make_probe_udf,
+        _seed_rows,
         refine_centroids,
     )
 
     rows = [(i, [float((i * 3) % 7), float((i * 5) % 11), float(i % 4)]) for i in range(40)]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    cent_ids, cent_vecs = _centroid_matrix(df, 4, "vec_id", "embedding")
+    cent_ids, cent_vecs = _centroid_matrix(_seed_rows(df, 4, "vec_id", "embedding"))
     got = refine_centroids(df, cent_ids, cent_vecs, iters=1)
 
     mat = np.array([r[1] for r in rows], dtype=np.float64)
@@ -732,10 +759,10 @@ def test_dim_corrupt_vectors_are_masked_not_fatal(spark):
     dups = embedding_near_duplicates(df, threshold=-1.0, n_planes=2, n_tables=4).collect()
     assert all(r["id_a"] < 100 and r["id_b"] < 100 for r in dups)
     # corrupt-leading codebook: centroids skip the deviant row
-    from palladian_spark.operators.similarity_search import _centroid_matrix
+    from palladian_spark.operators.similarity_search import _centroid_matrix, _seed_rows
 
     df2 = spark.createDataFrame([(0, [7.0])] + good[1:] , ["vec_id", "embedding"])
-    ids, vecs = _centroid_matrix(df2, 4, "vec_id", "embedding")
+    ids, vecs = _centroid_matrix(_seed_rows(df2, 4, "vec_id", "embedding"))
     assert 0 not in ids and vecs.shape[1] == 3
 
 

@@ -67,7 +67,7 @@ def main() -> None:
     n_values = values.count()
 
     t0 = time.time()
-    pairs = candidate_pairs(values.distinct(), "value")
+    pairs = candidate_pairs(values.distinct())
     n_pairs = pairs.count()
     t_pairs = time.time() - t0
 
@@ -76,7 +76,7 @@ def main() -> None:
     t_score = time.time() - t0
 
     t0 = time.time()
-    mapping = canonicalize_values(values, "value", small_values=0)
+    mapping = canonicalize_values(values, small_values=0)
     rows = mapping.groupBy("canonical").count()
     stats = rows.agg(
         F.count(F.lit(1)).alias("n_components"),
